@@ -2,7 +2,11 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ..., "failed": {name: "<ExcType>: <msg>"}}.
+
+A query that raises (or is not registered) is recorded under "failed" by
+name and the rest of the run continues; after printing, the bench exits
+non-zero if any query failed.
 
 Each query is executed to completion (collect) so the number reflects scan +
 shuffle + agg work, not lazy plan construction. A warmup query first touches
@@ -270,16 +274,18 @@ class StderrCodegenGate:
 def main() -> None:
     gate = StderrCodegenGate()  # before get_spark: the JVM must inherit fd 2
     try:
-        _run(gate)
+        failed = _run(gate)
     finally:
         # always restore fd 2 and replay the capture — without this a
         # mid-bench exception's traceback lands in the capture file and the
         # run appears to die silently (ADVICE r10); on the success path
         # _run already called finish() and this is a no-op
         gate.finish()
+    if failed:
+        sys.exit(1)
 
 
-def _run(gate: StderrCodegenGate) -> None:
+def _run(gate: StderrCodegenGate) -> dict[str, str]:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("udlang_spark_bench")
@@ -314,34 +320,43 @@ def _run(gate: StderrCodegenGate) -> None:
     _llm.ivfpq_ensure_index(spark, sf_dir, force_rebuild=True)
     ivfpq_build_sec = round(time.perf_counter() - t0, 4)
 
+    failed: dict[str, str] = {}
+
     def run_set(names: list[str]) -> tuple[dict[str, float], dict[str, float]]:
         timings: dict[str, float] = {}
         cold: dict[str, float] = {}
         for name in names:
-            if name not in QUERIES:
-                continue
-            gate.mark(name)
-            # noop sink: fully materializes every row on the executors
-            # without driver-side collection — measures engine throughput,
-            # not Python deserialization of multi-million-row results.
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            cold[name] = round(time.perf_counter() - t0, 4)
-            # min of two timed runs: single-run numbers on a shared host
-            # swing up to 3× from GC/CPU contention; the min is the stable
-            # estimate of what the engine actually costs.
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            timings[name] = round(best, 4)
+            try:
+                timings[name], cold[name] = run_one(name)
+            except Exception as e:  # recorded by name; the run continues
+                failed[name] = _describe(e)
             # drop any intermediates the query persisted (shingle sets,
             # BM25 per-doc stats, ...) so cached blocks don't accumulate
             # across the sweep; within one query's warm runs the cache IS
             # reused (the CacheManager matches by logical plan), intended.
             release_caches()
         return timings, cold
+
+    def run_one(name: str) -> tuple[float, float]:
+        """(warm min-of-2, cold first run) seconds of one query."""
+        if name not in QUERIES:
+            raise KeyError(f"{name} is not registered")
+        gate.mark(name)
+        # noop sink: fully materializes every row on the executors
+        # without driver-side collection — measures engine throughput,
+        # not Python deserialization of multi-million-row results.
+        t0 = time.perf_counter()
+        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        cold = round(time.perf_counter() - t0, 4)
+        # min of two timed runs: single-run numbers on a shared host
+        # swing up to 3× from GC/CPU contention; the min is the stable
+        # estimate of what the engine actually costs.
+        best = float("inf")
+        for _ in range(2):
+            t0 = time.perf_counter()
+            QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            best = min(best, time.perf_counter() - t0)
+        return round(best, 4), cold
 
     timings, cold = run_set(HEADLINE)
     rotation, _rot_cold = run_set(ROTATION)
@@ -355,10 +370,9 @@ def _run(gate: StderrCodegenGate) -> None:
     # shows the fresh-exprId codegen cost a brand-new session pays once.
     from udlang_spark.session import plan_cache
 
-    plan_cached: dict[str, dict[str, float]] = {}
-    for name in PLAN_CACHED:
+    def construct_split(name: str) -> dict[str, float]:
         if name not in QUERIES:
-            continue
+            raise KeyError(f"{name} is not registered")
         gate.mark(f"{name}:construct")
         plan_cache.clear()
         release_caches()
@@ -368,12 +382,19 @@ def _run(gate: StderrCodegenGate) -> None:
         t0 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
         first_exec = round(time.perf_counter() - t0, 4)
-        release_caches()
-        plan_cached[name] = {
+        return {
             "construct_sec": construct,
             "first_exec_sec": first_exec,
             "exec_sec": timings.get(name, rotation.get(name)),
         }
+
+    plan_cached: dict[str, dict[str, float]] = {}
+    for name in PLAN_CACHED:
+        try:
+            plan_cached[name] = construct_split(name)
+        except Exception as e:  # recorded by name; the run continues
+            failed.setdefault(name, _describe(e))
+        release_caches()
     # Flush JVM log buffers before scanning: stop the session so log4j's
     # console appender has written everything it will write.
     spark.stop()
@@ -398,9 +419,18 @@ def _run(gate: StderrCodegenGate) -> None:
                 "plan_cached": plan_cached,
                 "codegen_fallbacks": codegen_fallbacks,
                 "codegen_gate": "fail" if unexpected else "pass",
+                "failed": failed,
             }
         )
     )
+    return failed
+
+
+def _describe(e: BaseException) -> str:
+    """'<ExcType>: <msg>' for the JSON line (whitespace collapsed, capped
+    at 300 chars — a py4j message carries the whole JVM stack trace)."""
+    msg = " ".join(str(e).split())
+    return f"{type(e).__name__}: {msg[:300]}"
 
 
 if __name__ == "__main__":

@@ -3,6 +3,7 @@ and layout invariants."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR_CORRECTNESS
@@ -393,35 +394,44 @@ def test_ivfpq_ensure_index_marker_crash_consistency(spark, tmp_path, monkeypatc
     assert os.path.exists(marker)
 
 
-def test_ivfpq_gc_retires_stale_generations(tmp_path):
+@pytest.mark.parametrize(
+    "prefix, layout",
+    [
+        ("udlang_spark_ivfpq", "cells=16|m=4|cb=(1,2)|fmt=3"),
+        ("udlang_spark_ndidx", "nh=8|br=2|pfx=2|fmt=3"),
+    ],
+    ids=["ivfpq", "ndidx"],
+)
+def test_index_gc_retires_stale_generations(tmp_path, prefix, layout):
     """A cache-miss build garbage-collects sibling index dirs of the SAME
     (sf_dir, variant) identity with a stale fingerprint — and ONLY those:
     other variants, other sf_dirs, and markerless dirs survive (ADVICE
-    r7: stranded /tmp/udlang_spark_ivfpq_* generations)."""
+    r7: stranded /tmp/udlang_spark_ivfpq_* generations). Both persisted
+    indexes (IVF-PQ and the near-dup ingest index) share the helper."""
     import os
     import shutil
     import tempfile
 
-    from udlang_spark.queries.llm import _ivfpq_gc_stale
+    from udlang_spark.sources.tables import gc_stale_artifacts
 
     td = tempfile.gettempdir()
 
     def mk(tag, key):
-        p = f"{td}/udlang_spark_ivfpq_gctest{tag}"
+        p = f"{td}/{prefix}_gctest{tag}"
         os.makedirs(p, exist_ok=True)
         with open(os.path.join(p, "_BUILT"), "w") as fh:
             fh.write(key)
         return p
 
-    cur_key = "/d/sf|fpA|cells=16|m=4|cb=(1,2)|fmt=3"
+    cur_key = f"/d/sf|fpA|{layout}"
     cur = mk("cur", cur_key)
-    stale = mk("stale", "/d/sf|fpOLD|cells=16|m=4|cb=(1,2)|fmt=3")
-    othervar = mk("var", "/d/sf|append|fpA|cells=16|m=4|cb=(1,2)|fmt=3")
-    otherdir = mk("dir", "/e/sf|fpA|cells=16|m=4|cb=(1,2)|fmt=3")
-    bare = f"{td}/udlang_spark_ivfpq_gctestbare"
+    stale = mk("stale", f"/d/sf|fpOLD|{layout}")
+    othervar = mk("var", f"/d/sf|append|fpA|{layout}")
+    otherdir = mk("dir", f"/e/sf|fpA|{layout}")
+    bare = f"{td}/{prefix}_gctestbare"
     os.makedirs(bare, exist_ok=True)
     try:
-        _ivfpq_gc_stale(cur_key, cur)
+        gc_stale_artifacts(prefix, cur_key, cur)
         assert os.path.exists(cur)
         assert not os.path.exists(stale)
         assert os.path.exists(othervar)

@@ -6,7 +6,9 @@ import pytest
 
 from tests.conftest import SF_DIR_CORRECTNESS
 from tests.oracle_harness import compare
+from udlang_spark.operators import similarity
 from udlang_spark.queries import llm
+from udlang_spark.session import plan_cache
 
 
 @pytest.mark.parametrize("name", sorted(llm.ORACLE))
@@ -58,20 +60,20 @@ def test_kmv_union_sketch_equals_full_union_bottom_k(spark):
     two per-set sketches (union-then-truncate) must equal the bottom-k of
     the FULL hash-set union — the KMV mergeability property the query now
     relies on instead of re-scanning both hash relations."""
-    from udlang_spark.queries.llm import _KMV_K, _kmv_hashes
+    from udlang_spark.operators.sketches import KMV_K, kmv_hashes
     from udlang_spark.sources.tables import load_table
 
     docs = load_table(spark, "documents", SF_DIR_CORRECTNESS)
-    a_h, b_h = _kmv_hashes(docs, "en"), _kmv_hashes(docs, "de")
+    a_h, b_h = kmv_hashes(docs, "en"), kmv_hashes(docs, "de")
     full = [
         r.h
-        for r in a_h.union(b_h).distinct().orderBy("h").limit(_KMV_K).collect()
+        for r in a_h.union(b_h).distinct().orderBy("h").limit(KMV_K).collect()
     ]
-    a_k = a_h.orderBy("h").limit(_KMV_K)
-    b_k = b_h.orderBy("h").limit(_KMV_K)
+    a_k = a_h.orderBy("h").limit(KMV_K)
+    b_k = b_h.orderBy("h").limit(KMV_K)
     merged = [
         r.h
-        for r in a_k.union(b_k).distinct().orderBy("h").limit(_KMV_K).collect()
+        for r in a_k.union(b_k).distinct().orderBy("h").limit(KMV_K).collect()
     ]
     assert merged == full
 
@@ -666,14 +668,15 @@ def test_hll_registers_merge_by_max(spark):
     or streams (the distinct-count analogue of the CMS sum-merge)."""
     from pyspark.sql import functions as F
 
-    from udlang_spark.queries import llm as llm_q
+    from udlang_spark.functions.text import ALNUM_WORDS_SQL
+    from udlang_spark.operators import sketches
     from udlang_spark.sources.tables import load_table
 
     docs = load_table(spark, "documents", SF_DIR_CORRECTNESS)
     toks = docs.select(
-        "doc_id", F.explode(F.expr(llm_q._WORDS)).alias("key")
+        "doc_id", F.explode(F.expr(ALNUM_WORDS_SQL)).alias("key")
     )
-    bucket, rank = llm_q._hll_bucket_rank(F.col("key"))
+    bucket, rank = sketches.hll_bucket_rank(F.col("key"))
     cells = toks.select("doc_id", bucket, rank)
 
     def regs(rel):
@@ -713,12 +716,12 @@ def test_quantile_histogram_merges_by_sum(spark):
     CMS; the HLL is the MAX-merge sibling)."""
     from pyspark.sql import functions as F
 
-    from udlang_spark.queries import llm as llm_q
+    from udlang_spark.operators import sketches
     from udlang_spark.sources.tables import load_table
 
     li = load_table(spark, "lineitem", SF_DIR_CORRECTNESS)
     b = F.floor(
-        F.col("l_extendedprice").cast("double") / F.lit(float(llm_q._QSK_WIDTH))
+        F.col("l_extendedprice").cast("double") / F.lit(float(sketches.QSK_WIDTH))
     ).cast("long")
 
     def hist(rel):
@@ -746,6 +749,7 @@ def test_kmv_estimates_near_exact(spark):
     from pyspark.sql import functions as F
 
     from udlang_spark.functions import text as TXT
+    from udlang_spark.operators import sketches
     from udlang_spark.queries import llm as llm_q
     from udlang_spark.sources.tables import load_table
 
@@ -762,7 +766,7 @@ def test_kmv_estimates_near_exact(spark):
 
     en, de = tokens("en"), tokens("de")
     row = llm_q.t_kmv_jaccard(spark, SF_DIR_CORRECTNESS).collect()[0]
-    rel_err = 3 * (llm_q._KMV_K - 1) ** -0.5
+    rel_err = 3 * (sketches.KMV_K - 1) ** -0.5
     assert abs(row["est_en"] - len(en)) <= rel_err * len(en), (
         row["est_en"],
         len(en),
@@ -785,19 +789,19 @@ def test_quantile_sketch_accuracy(spark):
     here (with_exact=True) and not in the oracled headline query."""
     from pyspark.sql import functions as F
 
-    from udlang_spark.queries import llm as llm_q
+    from udlang_spark.operators import sketches
     from udlang_spark.sources.tables import load_table
 
     li = load_table(spark, "lineitem", SF_DIR_CORRECTNESS)
     price = F.col("l_extendedprice").cast("double")
     hist = li.groupBy(
-        F.floor(price / F.lit(float(llm_q._QSK_WIDTH))).cast("long").alias("bucket")
+        F.floor(price / F.lit(float(sketches.QSK_WIDTH))).cast("long").alias("bucket")
     ).agg(F.count(F.lit(1)).alias("n"))
-    rep = llm_q.quantile_probe_report(spark, hist, li, with_exact=True)
+    rep = sketches.quantile_probe_report(spark, hist, li, with_exact=True)
     rows = rep.collect()
     assert len(rows) == 3
     for r in rows:
-        assert abs(r["err"]) <= llm_q._QSK_WIDTH / 2, (r["q"], r["err"])
+        assert abs(r["err"]) <= sketches.QSK_WIDTH / 2, (r["q"], r["err"])
 
 
 def test_weighted_sample_bias_and_partition_invariance(spark):
@@ -1344,14 +1348,15 @@ def test_maxsim_matches_python_replica(spark):
 
     tbl = pq.read_table(f"{SF_DIR_CORRECTNESS}/documents.parquet").to_pydict()
     qvecs = [
-        [llm._msim_qvec(t) for t in q.split()] for q in llm._MSIM_QUERIES
+        [similarity.maxsim_qvec(t) for t in q.split()]
+        for q in similarity.MAXSIM_QUERIES
     ]
     scores: dict[int, list[float]] = {}
     for doc_id, text in zip(tbl["doc_id"], tbl["text"]):
         toks = sorted(set(re.findall(r"[a-z0-9]+", text.lower())))
         if not toks:
             continue
-        dvs = [llm._msim_qvec(t) for t in toks]  # same family as doc side
+        dvs = [similarity.maxsim_qvec(t) for t in toks]  # same family as doc side
         per_q = []
         for qts in qvecs:
             total = 0.0
@@ -1373,8 +1378,10 @@ def test_maxsim_matches_python_replica(spark):
             per_q.append(total)
         scores[doc_id] = per_q
     expect = set()
-    for qi in range(len(llm._MSIM_QUERIES)):
-        ranked = sorted(scores, key=lambda d: (-scores[d][qi], d))[: llm._MSIM_TOPK]
+    for qi in range(len(similarity.MAXSIM_QUERIES)):
+        ranked = sorted(scores, key=lambda d: (-scores[d][qi], d))[
+            : similarity.MAXSIM_TOPK
+        ]
         for rnk, d in enumerate(ranked, 1):
             expect.add((qi, d, round(scores[d][qi], 6), rnk))
     got = {
@@ -1390,8 +1397,12 @@ def test_msim_embedding_golden_pin():
     to the digest/window scheme would make old artifacts disagree with
     new queries. Golden values pin the exact derivation (one md5 per
     token, 8 disjoint 16-bit hex windows, % 2001 - 1000)."""
-    assert llm._msim_qvec("hash") == [591, 50, 518, -833, 366, -769, -193, -312]
-    assert llm._msim_qvec("join") == [350, 6, 658, 107, -305, 609, -723, -562]
+    assert similarity.maxsim_qvec("hash") == [
+        591, 50, 518, -833, 366, -769, -193, -312
+    ]
+    assert similarity.maxsim_qvec("join") == [
+        350, 6, 658, 107, -305, 609, -723, -562
+    ]
 
 
 def test_e_ivfpq_recall_arms(spark):
@@ -1487,18 +1498,19 @@ def _maxsim_vocab_model(texts, min_df):
     import re
     from collections import Counter
 
-    from udlang_spark.queries import llm as L
-
     doc_toks = {
         i: sorted(set(re.findall(r"[a-z0-9]+", t.lower())))
         for i, t in enumerate(texts)
     }
     df = Counter(t for toks in doc_toks.values() for t in toks)
     vocab = {t for t, n in df.items() if n >= min_df}
-    qvecs = [[L._msim_qvec(t) for t in q.split()] for q in L._MSIM_QUERIES]
+    qvecs = [
+        [similarity.maxsim_qvec(t) for t in q.split()]
+        for q in similarity.MAXSIM_QUERIES
+    ]
     scores = {}
     for i, toks in doc_toks.items():
-        dvs = [L._msim_qvec(t) for t in toks if t in vocab]
+        dvs = [similarity.maxsim_qvec(t) for t in toks if t in vocab]
         if not dvs:
             continue  # all-OOV doc leaves the result (inner join)
         per_q = []
@@ -1523,9 +1535,9 @@ def _maxsim_vocab_model(texts, min_df):
             per_q.append(total)
         scores[i] = per_q
     expect = set()
-    for qi in range(len(L._MSIM_QUERIES)):
+    for qi in range(len(similarity.MAXSIM_QUERIES)):
         ranked = sorted(scores, key=lambda d: (-scores[d][qi], d))[
-            : L._MSIM_TOPK
+            : similarity.MAXSIM_TOPK
         ]
         for rnk, d in enumerate(ranked, 1):
             expect.add((qi, d, round(scores[d][qi], 6), rnk))
@@ -1596,11 +1608,11 @@ def test_maxsim_plan_cache_identity(spark):
     exprIds -> codegen-cache hits): same (session, corpus) must return
     the SAME DataFrame object; clearing the cache returns a fresh one
     with identical results."""
-    llm._MSIM_DF_CACHE.clear()
+    plan_cache.clear()
     a = llm.QUERIES["t_maxsim_topk"](spark, SF_DIR_CORRECTNESS)
     b = llm.QUERIES["t_maxsim_topk"](spark, SF_DIR_CORRECTNESS)
     assert a is b
-    llm._MSIM_DF_CACHE.clear()
+    plan_cache.clear()
     c = llm.QUERIES["t_maxsim_topk"](spark, SF_DIR_CORRECTNESS)
     assert c is not a
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, c.collect()))

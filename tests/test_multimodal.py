@@ -347,13 +347,13 @@ def test_ahash64_band_recall_equals_brute_force(spark):
     from pyspark.sql import functions as F
 
     from udlang_spark.operators import dedup
-    from udlang_spark.queries.llm import _synth_ppm
+    from udlang_spark.queries.llm import synth_ppm
     from udlang_spark.sources.tables import load_table
 
     docs = load_table(spark, "documents", "/root/testdata/sf0.001").select(
         "doc_id", "text"
     )
-    fp = multimodal.image_ahash64(_synth_ppm(docs)).select(
+    fp = multimodal.image_ahash64(synth_ppm(docs)).select(
         F.col("doc_id").alias("doc"), "ahash64"
     )
     rows = fp.collect()

@@ -43,7 +43,7 @@ WHITELIST: dict[str, str] = {
 
 def _put_sites() -> dict[str, list[str]]:
     """{enclosing function name: [file:line, ...]} for every
-    plan_cache.put / _MSIM_DF_CACHE.put call under udlang_spark/."""
+    plan_cache.put call under udlang_spark/."""
     sites: dict[str, list[str]] = {}
     for py in sorted(SRC.rglob("*.py")):
         tree = ast.parse(py.read_text(), filename=str(py))
@@ -59,7 +59,7 @@ def _put_sites() -> dict[str, list[str]]:
                     and isinstance(node.func, ast.Attribute)
                     and node.func.attr == "put"
                     and isinstance(node.func.value, ast.Name)
-                    and node.func.value.id in ("plan_cache", "_MSIM_DF_CACHE")
+                    and node.func.value.id == "plan_cache"
                 ):
                     sites.setdefault(func.name, []).append(
                         f"{py.relative_to(SRC.parent)}:{node.lineno}"

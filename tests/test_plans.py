@@ -982,8 +982,9 @@ def test_maxsim_topk_scored_dictionary_shape(spark):
     vocabulary once and broadcast back — same single-dictionary-join
     contract as the learned-vocab variant."""
     from udlang_spark.queries import llm
+    from udlang_spark.session import plan_cache
 
-    llm._MSIM_DF_CACHE.clear()
+    plan_cache.clear()
     plan = plan_of(llm.QUERIES["t_maxsim_topk"](spark, SF_DIR_CORRECTNESS))
     assert tree_node_count(plan, "BroadcastHashJoin") == 1
     assert "CartesianProduct" not in plan

@@ -547,7 +547,7 @@ def _docs_cells_replay(spark, tmp_path, n_files=3):
     (row, bucket) cell relation — shared by the CMS streaming tests."""
     from udlang_spark.functions import text as TXT
     from udlang_spark.kernel import ast as A
-    from udlang_spark.queries import llm as llm_q
+    from udlang_spark.operators import sketches
     from pyspark.sql import functions as F
 
     docs = load_table(spark, "documents", SF_DIR_SMOKE)
@@ -567,10 +567,10 @@ def _docs_cells_replay(spark, tmp_path, n_files=3):
         .option("maxFilesPerTrigger", 1)
         .json(rep)
     )
-    stream_cells = llm_q._cms_cells(
+    stream_cells = sketches.cms_cells(
         src.select(F.explode(TXT.words("text")).alias("tok")), "tok"
     )
-    batch_cells = llm_q._cms_cells(
+    batch_cells = sketches.cms_cells(
         docs.select(F.explode(TXT.words("text")).alias("tok")), "tok"
     )
     return stream_cells, batch_cells
@@ -698,7 +698,7 @@ def test_hll_delta_merge_equals_batch(spark, tmp_path):
 
     from udlang_spark.functions import text as TXT
     from udlang_spark.kernel import ast as A
-    from udlang_spark.queries import llm as llm_q
+    from udlang_spark.operators import sketches
 
     docs = load_table(spark, "documents", SF_DIR_SMOKE)
     rep = str(tmp_path / "docs_json")
@@ -714,7 +714,7 @@ def test_hll_delta_merge_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(rep)
     )
-    bucket, rank = llm_q._hll_bucket_rank(F.col("tok"))
+    bucket, rank = sketches.hll_bucket_rank(F.col("tok"))
     cells = src.select(F.explode(TXT.words("text")).alias("tok")).select(
         bucket, rank
     )
@@ -748,7 +748,7 @@ def test_kmv_delta_merge_equals_batch(spark, tmp_path):
 
     from udlang_spark.functions import text as TXT
     from udlang_spark.kernel import ast as A
-    from udlang_spark.queries import llm as llm_q
+    from udlang_spark.operators import sketches
 
     k = 32
     docs = load_table(spark, "documents", SF_DIR_SMOKE)
@@ -766,7 +766,7 @@ def test_kmv_delta_merge_equals_batch(spark, tmp_path):
         .json(rep)
     )
     cells = src.select(F.explode(TXT.words("text")).alias("tok")).select(
-        llm_q._kmv_hash_col(F.col("tok")).alias("h")
+        sketches.kmv_hash_col(F.col("tok")).alias("h")
     )
     target = str(tmp_path / "kmv_target")
     runner.run_sketch_merge_stream(
@@ -779,7 +779,7 @@ def test_kmv_delta_merge_equals_batch(spark, tmp_path):
     assert len(got) <= k
     bh = (
         docs.select(F.explode(TXT.words("text")).alias("tok"))
-        .select(llm_q._kmv_hash_col(F.col("tok")).alias("h"))
+        .select(sketches.kmv_hash_col(F.col("tok")).alias("h"))
         .distinct()
     )
     want = sorted(r["h"] for r in bh.orderBy("h").limit(k).collect())

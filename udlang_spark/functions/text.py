@@ -36,6 +36,11 @@ def words(col: Column | str) -> Column:
     return F.regexp_extract_all(F.lower(c), F.lit(r"\S+"), 0)
 
 
+# Spark SQL form of the oracles' alphanumeric-run tokenizer (lowercased
+# [a-z0-9]+ runs over a `text` column; 3-arg regexp_extract_all)
+ALNUM_WORDS_SQL = "regexp_extract_all(lower(text), '[a-z0-9]+', 0)"
+
+
 def token_count(col: Column | str) -> Column:
     return F.size(words(col))
 

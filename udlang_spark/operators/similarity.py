@@ -42,6 +42,8 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
+from udlang_spark.functions.text import ALNUM_WORDS_SQL
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ a[i]·b[i] in double, sequential left-to-right fold."""
@@ -1347,3 +1349,99 @@ def pca_project(
 
     sdf = emb.select(id_col, vec_col)
     return sdf.mapInPandas(project, f"{id_col} long, proj array<double>")
+
+
+# ---------------------------------------------------------------------------
+# late-interaction (MaxSim) scoring over deterministic md5-hash token
+# embeddings: the query panel, the query-token vectors, the row-local (HOF)
+# per-record maxima and the per-query top-k over a (doc_id, maxima)
+# relation — shared by the batch MaxSim queries and their streaming twin.
+# ---------------------------------------------------------------------------
+MAXSIM_QUERIES = ("fast hash join", "window agg stream", "sort merge table scan")
+MAXSIM_DIMS = 8
+MAXSIM_TOPK = 10
+
+
+def maxsim_qvec(tok: str) -> list[int]:
+    """Query-token embedding, derived driver-side: same md5 integer family
+    the engines compute for doc tokens (md5 is md5 — hashlib, Spark, and
+    DuckDB agree byte-for-byte on 'msim:<tok>'). ONE digest per token:
+    the 8 components are disjoint 16-bit hex windows of the single md5 —
+    8× less hashing than a per-(token, dim) digest, and at 100 TB the
+    hash is the scan's dominant CPU term."""
+    import hashlib
+
+    h = hashlib.md5(f"msim:{tok}".encode()).hexdigest()
+    return [
+        int(h[4 * d : 4 * d + 4], 16) % 2001 - 1000 for d in range(MAXSIM_DIMS)
+    ]
+
+
+def maxsim_terms():
+    """(qi, j, query-token vector) triples plus the per-query score
+    expressions over the max columns m{qi}_{j} (fixed-arity left-to-right
+    sums — the association order both engines share)."""
+    triples, score_exprs = [], []
+    for qi, q in enumerate(MAXSIM_QUERIES):
+        ts = q.split()
+        for j, qt in enumerate(ts):
+            triples.append((qi, j, maxsim_qvec(qt)))
+        score_exprs.append(
+            "(" + " + ".join(f"m{qi}_{j}" for j in range(len(ts))) + ")"
+        )
+    return triples, score_exprs
+
+
+def maxsim_tvn_sql() -> str:
+    """Row-local token-vector array: array_distinct tokens -> 8 md5
+    integer components each, paired with the exact int64 self-dot."""
+    comps = ", ".join(
+        f"(CAST(conv(substring(h, {1 + 4 * d}, 4), 16, 10)"
+        f" AS BIGINT) % 2001 - 1000)"
+        for d in range(MAXSIM_DIMS)
+    )
+    vn = " + ".join(f"v[{d}] * v[{d}]" for d in range(MAXSIM_DIMS))
+    return (
+        f"transform(transform(transform(array_distinct({ALNUM_WORDS_SQL}), "
+        f"t -> md5(concat('msim:', t))), h -> array({comps})), "
+        f"v -> named_struct('v', v, 'n', {vn}))"
+    )
+
+
+def maxsim_hof_max_cols() -> list:
+    """Row-local (HOF) MaxSim maxima — the STREAMING form: transform +
+    array_max over the record's own token list is a pure per-record map,
+    so scoring runs unchanged on a readStream with no state. The HOF
+    lambdas are interpreted (not whole-stage codegen), ~2x the scan cost
+    of the batch explode+groupBy shape at sf0.1 — the price of
+    statelessness; batch t_maxsim_topk uses the codegen shape. Columns
+    reference a bound `tvn` array column (projection-level subexpression
+    elimination computes it once per row)."""
+    cols = []
+    for qi, j, qv in maxsim_terms()[0]:
+        dot = " + ".join(f"x.v[{d}] * ({qv[d]})" for d in range(MAXSIM_DIMS))
+        nqq = sum(c * c for c in qv)
+        cols.append(
+            F.expr(
+                f"array_max(transform(tvn, x -> "
+                f"CASE WHEN x.n > 0 THEN round(({dot}) / "
+                f"(sqrt(x.n) * sqrt({nqq})), 6) ELSE 0.0 END))"
+            ).alias(f"m{qi}_{j}")
+        )
+    return cols
+
+
+def maxsim_topk_from_maxes(m: DataFrame) -> DataFrame:
+    """Per-query top-k over the reduced (doc_id, maxima) relation —
+    shared by the batch query and the streaming twin's drained read."""
+    _, score_exprs = maxsim_terms()
+    stack = ", ".join(f"{qi}, {se}" for qi, se in enumerate(score_exprs))
+    s = m.selectExpr(
+        "doc_id", f"stack({len(MAXSIM_QUERIES)}, {stack}) AS (qid, score)"
+    )
+    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("doc_id"))
+    return (
+        s.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= MAXSIM_TOPK)
+        .select("qid", "doc_id", "score", "rnk")
+    )

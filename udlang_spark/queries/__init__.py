@@ -36,7 +36,7 @@ for mod in (kernels, llm, streaming, relational, cleaning):
 # r9:9, r10:49, r11:50, r12:50, r13:50).
 # Round-14 window (optimization round 2: changed code first, then the
 # stalest blocks per r13 VERDICT #8):
-#   (a) the 25 queries whose code paths this round touched — the
+#   (a) the 27 queries whose code paths this round touched — the
 #       line-dedup positions-only rewrite, the banded-hamming gate that
 #       was landed then REVERTED after the 10× stress (d_simhash_neardup
 #       and m_ahash_neardup stay in-window to re-verify the revert), the
@@ -98,7 +98,7 @@ _PRIORITY: list[str] = [
     "k_comprehension",
     "q56_nation_trade_volume",
     "s_windowed_stream",
-    # -- (c) the 25 stalest (r10) rows --
+    # -- (c) the 15 stalest (r10) rows --
     "e_hamming_topk",
     "e_ivfpq_ann",
     "e_pq_adc",

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import math
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,28 +22,31 @@ from pyspark.sql.window import Window
 
 from udlang_spark.functions import text as TXT
 from udlang_spark.functions import url as URL
-from udlang_spark.operators import dedup, multimodal, similarity
+from udlang_spark.operators import ann_index, dedup, multimodal, similarity, sketches
+from udlang_spark.operators.similarity import (
+    MAXSIM_DIMS,
+    MAXSIM_QUERIES,
+    MAXSIM_TOPK,
+    maxsim_qvec,
+    maxsim_terms,
+    maxsim_topk_from_maxes,
+)
 from udlang_spark.session import persist_tracked, plan_cache
-from udlang_spark.sources.tables import load_table
+from udlang_spark.sources.tables import (
+    artifact_built,
+    artifact_path,
+    ensure_artifact,
+    fan_out,
+    generation,
+    load_table,
+    table_fingerprint,
+)
 
 _WL = "regexp_extract_all(lower(text), '\\S+')"  # non-empty tokens, = words()
-_WORDS = "regexp_extract_all(lower(text), '[a-z0-9]+', 0)"  # Spark (3-arg)
+_WORDS = TXT.ALNUM_WORDS_SQL  # Spark (3-arg)
 _WORDS_DUCK = "regexp_extract_all(lower(text), '[a-z0-9]+')"  # DuckDB (2-arg)
 _STOPS = "['" + "','".join(TXT.STOPWORDS) + "']"
 
-
-def _idx_gen(path: str) -> int:
-    """Index-GENERATION token for plan-cache keys (r13 ADVICE #2): the
-    build marker's mtime_ns. A cached probe plan snapshots the index
-    file listing at analysis time; an in-session rebuild at the SAME
-    path (ivfpq_ensure_index(force_rebuild=True), or a deleted marker
-    re-triggering the build) rewrites those files, so the key must
-    change with the build, not just the path. -1 (no marker yet) never
-    collides with a real mtime."""
-    try:
-        return os.stat(os.path.join(path, "_BUILT")).st_mtime_ns
-    except OSError:
-        return -1
 
 # shared DuckDB CTE: distinct 3-word shingles per doc (docs with <3 words drop)
 _SHINGLES_CTE = f"""
@@ -71,8 +75,6 @@ FROM documents GROUP BY 1
 
 
 def d_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from udlang_spark.sources.tables import fan_out
-
     docs = fan_out(load_table(spark, "documents", sf_dir))
     return docs.select(
         "doc_id",
@@ -318,8 +320,6 @@ def d_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (measured 0.78 s/call at sf0.1) and keeps exprIds stable for codegen
     cache hits; every run re-executes shingling, banding, the candidate
     join, and the exact-jaccard verify from parquet."""
-    from udlang_spark.sources.tables import table_fingerprint
-
     docs = load_table(spark, "documents", sf_dir)
     key = ("inc_neardup", sf_dir, table_fingerprint(sf_dir, "documents"))
     hit = plan_cache.get(spark, key)
@@ -385,50 +385,14 @@ WHERE s.doc_id % 5 = 0
 _NDIDX_FMT = 3  # bump on any layout change (2: dpfx shingles; 3: one file/dir)
 
 
-def _neardup_idx_cache(sf_dir: str) -> tuple[str, str, str]:
-    """(key, index path, marker path) for the cached near-dup ingest index
-    — the e_ivfpq cache idiom: the key folds in the documents file
-    fingerprint plus every layout parameter, so regenerated source data or
-    a layout change is a cache miss, never a silently stale index."""
-    import hashlib
-    import tempfile
-
-    from udlang_spark.operators.dedup import (
-        BAND_ROWS,
-        N_HASHES,
-        NEARDUP_IDX_PREFIXES,
-    )
-    from udlang_spark.sources.tables import table_fingerprint
-
+def _neardup_idx_key(sf_dir: str) -> str:
+    """Build key of the cached near-dup ingest index — the e_ivfpq cache
+    idiom: the documents file fingerprint plus every layout parameter."""
     fp = table_fingerprint(sf_dir, "documents")
-    key = (
-        f"{sf_dir}|{fp}|nh={N_HASHES}|br={BAND_ROWS}"
-        f"|pfx={NEARDUP_IDX_PREFIXES}|fmt={_NDIDX_FMT}"
+    return (
+        f"{sf_dir}|{fp}|nh={dedup.N_HASHES}|br={dedup.BAND_ROWS}"
+        f"|pfx={dedup.NEARDUP_IDX_PREFIXES}|fmt={_NDIDX_FMT}"
     )
-    tag = hashlib.md5(key.encode()).hexdigest()[:10]
-    path = f"{tempfile.gettempdir()}/udlang_spark_ndidx_{tag}"
-    return key, path, os.path.join(path, "_BUILT")
-
-
-def _neardup_idx_gc_stale(key: str, path: str) -> None:
-    """Retire stale generations of the same logical index (same sf_dir,
-    different fingerprint/layout) — mirrors _ivfpq_gc_stale; identity =
-    the key minus its trailing 5 parameter fields."""
-    import glob as _glob
-    import shutil as _shutil
-    import tempfile
-
-    ident = key.rsplit("|", 5)[0]
-    for sib in _glob.glob(f"{tempfile.gettempdir()}/udlang_spark_ndidx_*"):
-        if os.path.abspath(sib) == os.path.abspath(path):
-            continue
-        try:
-            with open(os.path.join(sib, "_BUILT")) as fh:
-                sib_key = fh.read()
-        except OSError:
-            continue  # unfinished/foreign dir: not ours to judge
-        if sib_key != key and sib_key.rsplit("|", 5)[0] == ident:
-            _shutil.rmtree(sib, ignore_errors=True)
 
 
 def d_neardup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -455,10 +419,10 @@ def d_neardup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch shingling, the pruned bands join, and the exact-jaccard verify
     (persisted relations are re-armed on hit, recomputed from parquet
     after any release_caches())."""
-    key, path, marker = _neardup_idx_cache(sf_dir)
+    key = _neardup_idx_key(sf_dir)
     docs = load_table(spark, "documents", sf_dir)
-    if not os.path.exists(marker):
-        _neardup_idx_gc_stale(key, path)
+
+    def build(path: str) -> None:
         dedup.write_neardup_index(
             docs.filter(F.col("doc_id") % 5 == 1), "text", "doc_id", path
         )
@@ -470,9 +434,9 @@ def d_neardup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             path,
         )
-        with open(marker, "w") as fh:
-            fh.write(key)
-    ckey = ("ndidx_probe", key, path, _idx_gen(path))
+
+    path = ensure_artifact("udlang_spark_ndidx", key, build)
+    ckey = ("ndidx_probe", key, path, generation(path))
     hit = plan_cache.get(spark, ckey)
     if hit is not None:
         res, pins = hit
@@ -755,8 +719,6 @@ def t_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     Column work: sequence → transform → posexplode, all codegen; row fan-out
     is ~|text|/150 per doc, crushed map-side by nothing downstream (the
     chunks ARE the output)."""
-    from udlang_spark.sources.tables import fan_out
-
     docs = fan_out(load_table(spark, "documents", sf_dir))
     starts = F.sequence(F.lit(1), F.greatest(F.length("text"), F.lit(1)), F.lit(150))
     return docs.select(
@@ -820,8 +782,6 @@ def t_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc's character trigrams taken by its single most frequent trigram.
     Shape: explode → (doc, gram) partial count → (doc) max/sum. Both
     shuffles key on doc_id, so the second reuses the first's partitioning."""
-    from udlang_spark.sources.tables import fan_out
-
     docs = fan_out(load_table(spark, "documents", sf_dir))
     grams = docs.filter(F.length("text") >= 3).select(
         "doc_id",
@@ -860,8 +820,6 @@ def t_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-(lang, gram) count is a partial aggregate (map-side combine crushes
     the fan-out before the shuffle); the top-k window then runs on the
     already-tiny count table partitioned by lang."""
-    from udlang_spark.sources.tables import fan_out
-
     docs = fan_out(load_table(spark, "documents", sf_dir))
     grams = docs.filter(F.length("text") >= 3).select(
         "lang",
@@ -1060,13 +1018,9 @@ GROUP BY tok ORDER BY n DESC, tok LIMIT 20
 """
 
 
-_CMS_D = 4  # hash rows
-_CMS_W = 128  # buckets per row
-
-
 def t_cms_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch frequency estimation (Cormode & Muthukrishnan
-    2005): build a d×w = _CMS_D×_CMS_W (4×128) sketch over the corpus
+    2005): build a d×w = CMS_D×CMS_W (4×128) sketch over the corpus
     token stream, then
     estimate the frequency of each probe word (the stopword list) as the
     min over rows of its bucket counts, alongside the exact count and the
@@ -1079,8 +1033,6 @@ def t_cms_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the thing you're avoiding. Probing broadcasts the tiny sketch.
     Buckets come from md5 (first 8 hex chars % w) — the LSH-plane
     convention, bit-reproducible in SQL."""
-    from udlang_spark.sources.tables import fan_out
-
     # fan_out: split + explode + per-token md5 are CPU-heavy per-row work
     # riding a single-row-group scan (one task at bench SF); no-op at real
     # scale where the scan already has splits (d_simhash precedent)
@@ -1100,7 +1052,7 @@ def t_cms_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("tok"),
     )
     lvl1 = persist_tracked(
-        _cms_cells(toks, "tok", extra=("tok",))
+        sketches.cms_cells(toks, "tok", extra=("tok",))
         .groupBy("row", "bucket", pw.alias("pw"))
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -1110,75 +1062,17 @@ def t_cms_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("pw").alias("word"))
         .agg(F.sum("c").alias("exact"))
     )
-    return _cms_probe_report(spark, sketch, exact)
+    return sketches.cms_probe_report(spark, sketch, exact)
 
 
-def _cms_bucket(col, i: int, w: int = _CMS_W):
-    """One md5 per key, four independent 32-bit buckets from disjoint
-    8-hex-char slices of the digest — 4× fewer hash evaluations than one
-    md5 per row (the digest's 128 bits fund all four hash functions)."""
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("cms:"), col)), 1 + 8 * i, 8),
-            16,
-            10,
-        ).cast("long")
-        % w
-    )
-
-
-def _cms_cells(rel: DataFrame, key_col: str, extra: tuple[str, ...] = ()):
-    """(row, bucket) cell per hash row per input key — the sketch's
-    pre-aggregation relation (works on batch AND streaming inputs)."""
-    return rel.select(
-        *extra,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("row"),
-                        _cms_bucket(F.col(key_col), i).alias("bucket"),
-                    )
-                    for i in range(_CMS_D)
-                ]
-            )
-        ).alias("rb"),
-    ).select(*extra, F.col("rb.row").alias("row"), F.col("rb.bucket").alias("bucket"))
-
-
-def _cms_probe_report(
-    spark: SparkSession, sketch: DataFrame, exact: DataFrame
-) -> DataFrame:
-    """Probe the (row, bucket, n) sketch with the stopword list: est = min
-    over rows of the probed bucket counts, beside the exact counts."""
-    probes = spark.createDataFrame(
-        [(w,) for w in sorted(TXT.STOPWORDS)], "word string"
-    )
-    probe_cells = _cms_cells(probes, "word", extra=("word",))
-    est = (
-        probe_cells.join(F.broadcast(sketch), ["row", "bucket"], "left")
-        .groupBy("word")
-        .agg(F.min(F.coalesce("n", F.lit(0))).alias("est"))
-    )
-    return (
-        est.join(exact, "word", "left")
-        .select(
-            "word",
-            "est",
-            F.coalesce("exact", F.lit(0)).alias("exact"),
-            (F.col("est") - F.coalesce("exact", F.lit(0))).alias("overest"),
-        )
-    )
-
-
-def _cms_bucket_sql(key: str, i: int, w: int = _CMS_W) -> str:
+def _cms_bucket_sql(key: str, i: int, w: int = sketches.CMS_W) -> str:
     return (
         f"CAST(CAST(concat('0x', substr(md5('cms:' || {key}), {1 + 8 * i}, 8)) "
         f"AS UBIGINT) % {w} AS BIGINT)"
     )
 
 
-def _cms_oracle(d: int = _CMS_D, w: int = _CMS_W) -> str:
+def _cms_oracle(d: int = sketches.CMS_D, w: int = sketches.CMS_W) -> str:
     stopvals = ", ".join(f"('{s}')" for s in sorted(TXT.STOPWORDS))
     tok_cells = " UNION ALL ".join(
         f"SELECT {i} AS row, {_cms_bucket_sql('tok', i, w)} AS bucket FROM t"
@@ -1210,52 +1104,10 @@ ORACLE_CMS_FREQ = _cms_oracle()
 
 
 # ---------------------------------------------------------------------------
-# HyperLogLog distinct sketch (Flajolet et al. 2007): the mergeable
-# DISTINCT-COUNT state, completing the sketch family beside the count-min
-# frequency sketch. m registers of one small int each; registers merge by
-# MAX, so partial sketches combine map-side and across streams exactly
-# like integer sums do.
+# HyperLogLog distinct sketch (Flajolet et al. 2007; operators/sketches):
+# the mergeable DISTINCT-COUNT state, completing the sketch family beside
+# the count-min frequency sketch.
 # ---------------------------------------------------------------------------
-_HLL_M = 64  # registers (p = 6 bucket bits from the first 2 md5 hex chars)
-_HLL_TAIL_BITS = 48  # rank domain: 12 md5 hex chars
-# α_64 · m² · 2^48, precomputed in Python so BOTH engines see one float
-# literal (α_64 = 0.709, Flajolet Fig. 3)
-_HLL_NUM = 0.709 * (_HLL_M * _HLL_M) * float(2**_HLL_TAIL_BITS)
-
-
-def _hll_bucket_rank(tok_col):
-    """(bucket, rank) for one key: bucket = first 2 md5 hex chars mod m;
-    rank = 1 + number of leading zero BITS in the 48-bit tail (hex chars
-    3..14), capped at 48 — derived via hex-digit string ops (4·leading
-    zero hex digits + a 15-way CASE on the first nonzero digit), NOT
-    via log2: transcendental-free, so DuckDB reproduces every register
-    exactly."""
-    h = F.md5(F.concat(F.lit("hll:"), tok_col))
-    bucket = (F.conv(F.substring(h, 1, 2), 16, 10).cast("long") % _HLL_M).alias(
-        "bucket"
-    )
-    tail = F.substring(h, 3, 12)
-    lz = F.length(F.regexp_extract(tail, "^(0*)", 1))
-    first = tail.substr(lz + 1, F.lit(1))
-    digit_lz = (
-        F.when(first == "1", 3)
-        .when(first.isin("2", "3"), 2)
-        .when(first.isin("4", "5", "6", "7"), 1)
-        .otherwise(0)
-    )
-    rank = F.least(lz * 4 + digit_lz + 1, F.lit(_HLL_TAIL_BITS)).alias("rank")
-    return bucket, rank
-
-
-# linear-counting estimates m·ln(m/V) for every possible empty-register
-# count V, PRECOMPUTED in Python and inlined as literals on both engines —
-# the correction stays transcendental-free at query time (§9 bans runtime
-# ln from oracle-checked outputs; a 64-entry literal table isn't runtime ln)
-_HLL_LC = [
-    round(_HLL_M * math.log(_HLL_M / v), 4) for v in range(1, _HLL_M + 1)
-]
-
-
 def t_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language distinct-count estimates via a 64-register HLL sketch,
     for two key domains at once — tokens (n≈31 « m: exercises the
@@ -1263,7 +1115,7 @@ def t_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the raw harmonic-mean regime) — beside the exact distinct counts and
     the sketch internals. Registers are a pure function of md5, so the
     DuckDB oracle reproduces the sketch REGISTER FOR REGISTER; the
-    correction's ln values are Python-precomputed literals (_HLL_LC), so
+    correction's ln values are Python-precomputed literals (HLL_LC), so
     the whole estimate is deterministic cross-engine.
 
     Scale shape: the register relation is |groups|·m rows built by one
@@ -1308,44 +1160,24 @@ def t_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     keys = toks.unionByName(bigrams)
     uniq = keys.distinct()
-    bucket, rank = _hll_bucket_rank(F.col("key"))
+    bucket, rank = sketches.hll_bucket_rank(F.col("key"))
     regs = (
         uniq.select("lang", "kind", bucket, rank)
         .groupBy("lang", "kind", "bucket")
         .agg(F.max("rank").alias("r"), F.count(F.lit(1)).alias("nd"))
     )
-    agg = regs.groupBy("lang", "kind").agg(
-        F.sum(
-            F.expr(f"shiftleft(CAST(1 AS BIGINT), {_HLL_TAIL_BITS} - r)")
-        ).alias("s_ne"),
-        F.count(F.lit(1)).alias("nb"),
-        F.sum("nd").alias("distinct_exact"),
-    )
-    s = (
-        F.col("s_ne")
-        + (F.lit(_HLL_M) - F.col("nb"))
-        * F.shiftleft(F.lit(1).cast("long"), _HLL_TAIL_BITS)
-    ).alias("s_scaled")
-    v = (F.lit(_HLL_M) - F.col("nb")).cast("long")
-    base = agg.select(
-        "lang", "kind", "distinct_exact", s, v.alias("zero_registers")
-    )
-    raw = F.round(F.lit(_HLL_NUM) / F.col("s_scaled").cast("double"), 4)
-    lc = F.element_at(
-        F.array(*[F.lit(x) for x in _HLL_LC]),
-        F.col("zero_registers").cast("int"),
-    )
-    est = F.when(
-        (raw <= F.lit(2.5 * _HLL_M)) & (F.col("zero_registers") > 0), lc
-    ).otherwise(raw)
-    return base.withColumn("hll_est", est).select(
+    # the exact witness counts distinct (lang, kind, key) rows, so it
+    # assumes non-NULL keys (count(1) would count a NULL key's row)
+    return sketches.hll_estimate(
+        regs, ("lang", "kind"), {"distinct_exact": F.sum("nd")}
+    ).select(
         "lang", "kind", "distinct_exact", "hll_est",
         "zero_registers", "s_scaled",
     )
 
 
-def _hll_oracle(m: int = _HLL_M, tb: int = _HLL_TAIL_BITS) -> str:
-    lc_list = "[" + ", ".join(repr(x) for x in _HLL_LC) + "]"
+def _hll_oracle(m: int = sketches.HLL_M, tb: int = sketches.HLL_TAIL_BITS) -> str:
+    lc_list = "[" + ", ".join(repr(x) for x in sketches.HLL_LC) + "]"
     return f"""
 WITH t AS (
   SELECT lang, 'token' AS kind, unnest({_WL}) AS key FROM documents
@@ -1383,7 +1215,7 @@ fin AS (
   SELECT lang, kind,
     s_ne + ({m} - nb) * (1::BIGINT << {tb}) AS s_scaled,
     CAST({m} - nb AS BIGINT) AS zero_registers,
-    round({_HLL_NUM!r} / CAST(s_ne + ({m} - nb) * (1::BIGINT << {tb}) AS DOUBLE),
+    round({sketches.HLL_NUM!r} / CAST(s_ne + ({m} - nb) * (1::BIGINT << {tb}) AS DOUBLE),
           4) AS raw_est
   FROM agg),
 exact AS (
@@ -1410,10 +1242,6 @@ ORACLE_HLL_DISTINCT = _hll_oracle()
 # deterministic under any partitioning, and the estimate is rational
 # arithmetic over exact integer counts.
 # ---------------------------------------------------------------------------
-_QSK_WIDTH = 1000  # price units per bucket (integer — keeps bucketing exact)
-_QSK_QUANTS = ((50, 100, "p50"), (90, 100, "p90"), (99, 100, "p99"))
-
-
 def t_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """p50/p90/p99 of l_extendedprice from a fixed-width histogram sketch.
 
@@ -1433,86 +1261,14 @@ def t_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_quantile_sketch_accuracy via with_exact=True, NOT here — the
     headline query costs what the production sketch costs (r6 verdict #5)."""
     li = load_table(spark, "lineitem", sf_dir)
-    price = F.col("l_extendedprice").cast("double")
-    hist = (
-        li.groupBy(
-            F.floor(price / F.lit(float(_QSK_WIDTH))).cast("long").alias("bucket")
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    return quantile_probe_report(spark, hist, li)
+    hist = li.groupBy(sketches.qsk_bucket()).agg(F.count(F.lit(1)).alias("n"))
+    return sketches.quantile_probe_report(spark, hist, li)
 
 
-def quantile_probe_report(
-    spark: SparkSession, hist: DataFrame, li: DataFrame, with_exact: bool = False
-) -> DataFrame:
-    """Shared probe over a (bucket, n) histogram — used by the batch
-    sketch above and the streaming delta-merged histogram
-    (queries/streaming.s_quantile_stream), so both answer quantiles
-    identically; `li` supplies the total. with_exact=True additionally
-    computes the exact interpolated percentile and the estimate's error
-    (pytest accuracy witness only — it is the full-sort the sketch
-    replaces, so it stays out of the oracled headline queries)."""
-    price = F.col("l_extendedprice").cast("double")
-    w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    cum = hist.withColumn("cum", F.sum("n").over(w))
-    # N = Σ bucket counts — a second count(*) scan of the source would
-    # double the heavy I/O (r7; `li` now funds only the optional witness)
-    total = hist.agg(F.sum("n").alias("n_total"))
-    quants = spark.createDataFrame(
-        [(name, num, den) for num, den, name in _QSK_QUANTS],
-        "q string, num long, den long",
-    )
-    # target = ceil(N·num/den), exactly: (N·num + den − 1) div den
-    targets = quants.crossJoin(F.broadcast(total)).select(
-        "q",
-        F.expr("(n_total * num + den - 1) div den").alias("target"),
-        "n_total",
-    )
-    probe = cum.join(
-        F.broadcast(targets),
-        (F.col("cum") >= F.col("target"))
-        & (F.col("cum") - F.col("n") < F.col("target")),
-    )
-    est = F.round(
-        F.col("bucket").cast("double") * _QSK_WIDTH
-        + F.lit(float(_QSK_WIDTH))
-        * (F.col("target") - (F.col("cum") - F.col("n"))).cast("double")
-        / F.col("n").cast("double"),
-        4,
-    )
-    report = probe.select("q", est.alias("est"), "n_total")
-    if not with_exact:
-        return report
-    # ONE array-argument percentile call: three separate F.percentile aggs
-    # each build their own value map (measured 4.8 s vs 2.3 s at sf0.1)
-    exact = li.agg(
-        F.percentile(price, [num / den for num, den, _ in _QSK_QUANTS]).alias(
-            "ps"
-        )
-    ).select(
-        *[
-            F.round(F.element_at("ps", i + 1), 4).alias(f"x_{name}")
-            for i, (_n, _d, name) in enumerate(_QSK_QUANTS)
-        ]
-    )
-    wide = report.crossJoin(F.broadcast(exact))
-    pick = F.when(F.col("q") == "p50", F.col("x_p50")).when(
-        F.col("q") == "p90", F.col("x_p90")
-    ).otherwise(F.col("x_p99"))
-    return wide.select(
-        "q",
-        "est",
-        pick.alias("exact"),
-        F.round(F.col("est") - pick, 4).alias("err"),
-        "n_total",
-    )
-
-
-def _quantile_sketch_oracle(width: int = _QSK_WIDTH) -> str:
+def _quantile_sketch_oracle(width: int = sketches.QSK_WIDTH) -> str:
     qrows = ", ".join(
         f"('{name}', {num}::BIGINT, {den}::BIGINT)"
-        for num, den, name in _QSK_QUANTS
+        for num, den, name in sketches.QSK_QUANTS
     )
     return f"""
 WITH hist AS (
@@ -1542,41 +1298,10 @@ ORACLE_QUANTILE_SKETCH = _quantile_sketch_oracle()
 
 
 # ---------------------------------------------------------------------------
-# KMV (k-minimum-values) distinct sketch + set algebra (Beyer et al. 2007,
-# "On Synopses for Distinct-Value Estimation Under Multiset Operations").
-# The fourth mergeable-sketch family member, and the one with SET ALGEBRA:
-# two KMV sketches union by "k smallest of the merged hash sets", and the
-# union sketch supports a Jaccard / intersection estimate that HLL cannot
-# give. State is k 48-bit hashes per set — constant, partition-mergeable,
-# redelivery-safe (pure function of the distinct keys).
+# KMV (k-minimum-values) distinct sketch + set algebra (Beyer et al. 2007;
+# operators/sketches): the fourth mergeable-sketch family member, and the
+# one with SET ALGEBRA.
 # ---------------------------------------------------------------------------
-_KMV_K = 128
-_KMV_BITS = 48  # 12 md5 hex chars: < 2^53, so int→double stays exact-ish
-# (k−1)·2^48 precomputed in Python so BOTH engines divide by one shared
-# double literal (the same no-transcendentals discipline as _HLL_NUM)
-_KMV_NUM = float((_KMV_K - 1) * 2**_KMV_BITS)
-
-
-def _kmv_hash_col(tok):
-    """48-bit KMV hash of one token — shared by the batch sketch and the
-    streaming min_k delta-merge twin (queries/streaming.s_kmv_stream)."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit("kmv:"), tok)), 1, 12), 16, 10
-    ).cast("long")
-
-
-def _kmv_hashes(docs: DataFrame, lang: str) -> DataFrame:
-    """Distinct 48-bit token hashes for one language slice — the sketch's
-    input domain. Distinct-by-hash (not by token) so the min-k boundary
-    can never tie across engines."""
-    return (
-        docs.where(F.col("lang") == lang)
-        .select(F.explode(TXT.words(F.col("text"))).alias("tok"))
-        .select(_kmv_hash_col(F.col("tok")).alias("h"))
-        .distinct()
-    )
-
-
 def t_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV sketches over the 'en' and 'de' token sets: per-set distinct
     estimates ((k−1)·2^48 / h_k, exact count when the set has < k
@@ -1603,18 +1328,10 @@ def t_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenize+distinct passes per run; now the corpus is scanned once per
     language and everything downstream is ≤ 2k-row arithmetic."""
     docs = load_table(spark, "documents", sf_dir)
-    a_k = persist_tracked(_kmv_hashes(docs, "en").orderBy("h").limit(_KMV_K))
-    b_k = persist_tracked(_kmv_hashes(docs, "de").orderBy("h").limit(_KMV_K))
-    u_k = a_k.union(b_k).distinct().orderBy("h").limit(_KMV_K)
-
-    def est(stats_n, stats_hk):
-        return F.round(
-            F.when(stats_n < _KMV_K, stats_n.cast("double")).otherwise(
-                F.lit(_KMV_NUM) / stats_hk.cast("double")
-            ),
-            4,
-        )
-
+    k = sketches.KMV_K
+    a_k = persist_tracked(sketches.kmv_hashes(docs, "en").orderBy("h").limit(k))
+    b_k = persist_tracked(sketches.kmv_hashes(docs, "de").orderBy("h").limit(k))
+    u_k = a_k.union(b_k).distinct().orderBy("h").limit(k)
     sa = a_k.agg(F.count("h").alias("n_a"), F.max("h").alias("hk_a"))
     sb = b_k.agg(F.count("h").alias("n_b"), F.max("h").alias("hk_b"))
     su = u_k.agg(F.count("h").alias("k_eff"))
@@ -1629,8 +1346,8 @@ def t_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(it)
         .select(
             F.col("k_eff").alias("k_eff"),
-            est(F.col("n_a"), F.col("hk_a")).alias("est_en"),
-            est(F.col("n_b"), F.col("hk_b")).alias("est_de"),
+            sketches.kmv_estimate(F.col("n_a"), F.col("hk_a")).alias("est_en"),
+            sketches.kmv_estimate(F.col("n_b"), F.col("hk_b")).alias("est_de"),
             F.col("inter_k"),
             F.round(
                 F.when(F.col("k_eff") == 0, F.lit(0.0)).otherwise(
@@ -1642,7 +1359,7 @@ def t_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kmv_oracle(k: int = _KMV_K) -> str:
+def _kmv_oracle(k: int = sketches.KMV_K) -> str:
     def hashes(lang: str) -> str:
         return f"""
   SELECT DISTINCT CAST(CAST(concat('0x', substr(md5('kmv:' || tok), 1, 12))
@@ -1653,7 +1370,7 @@ def _kmv_oracle(k: int = _KMV_K) -> str:
     def est(n: str, hk: str) -> str:
         return (
             f"round(CASE WHEN {n} < {k} THEN CAST({n} AS DOUBLE) "
-            f"ELSE {_KMV_NUM!r} / CAST({hk} AS DOUBLE) END, 4)"
+            f"ELSE {sketches.KMV_NUM!r} / CAST({hk} AS DOUBLE) END, 4)"
         )
 
     return f"""
@@ -1696,51 +1413,16 @@ def t_group_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     second pass. Histograms merge per group by integer sum, so daily /
     per-shard group histograms roll up exactly."""
     li = load_table(spark, "lineitem", sf_dir)
-    price = F.col("l_extendedprice").cast("double")
     hist = li.groupBy(
-        F.col("l_returnflag").alias("grp"),
-        F.floor(price / F.lit(float(_QSK_WIDTH))).cast("long").alias("bucket"),
+        F.col("l_returnflag").alias("grp"), sketches.qsk_bucket()
     ).agg(F.count(F.lit(1)).alias("n"))
-    w = Window.partitionBy("grp").orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = hist.withColumn("cum", F.sum("n").over(w))
-    # totals derive FROM the histogram (Σ bucket counts per group) — a
-    # second scan of the fact table for count(*) would double the heavy
-    # I/O; every post-histogram relation is bucket-bounded
-    totals = hist.groupBy("grp").agg(F.sum("n").alias("n_total"))
-    quants = spark.createDataFrame(
-        [(name, num, den) for num, den, name in _QSK_QUANTS],
-        "q string, num long, den long",
-    )
-    targets = totals.crossJoin(F.broadcast(quants)).select(
-        "grp",
-        "q",
-        F.expr("(n_total * num + den - 1) div den").alias("target"),
-        "n_total",
-    )
-    probe = cum.join(
-        F.broadcast(targets),
-        (cum["grp"] == targets["grp"])
-        & (F.col("cum") >= F.col("target"))
-        & (F.col("cum") - F.col("n") < F.col("target")),
-    ).drop(targets["grp"])
-    est = F.round(
-        F.col("bucket").cast("double") * _QSK_WIDTH
-        + F.lit(float(_QSK_WIDTH))
-        * (F.col("target") - (F.col("cum") - F.col("n"))).cast("double")
-        / F.col("n").cast("double"),
-        4,
-    )
-    return probe.select("grp", "q", est.alias("est"), "n_total").orderBy(
-        "grp", "q"
-    )
+    return sketches.group_quantile_report(spark, hist).orderBy("grp", "q")
 
 
-def _group_quantiles_oracle(width: int = _QSK_WIDTH) -> str:
+def _group_quantiles_oracle(width: int = sketches.QSK_WIDTH) -> str:
     qrows = ", ".join(
         f"('{name}', {num}::BIGINT, {den}::BIGINT)"
-        for num, den, name in _QSK_QUANTS
+        for num, den, name in sketches.QSK_QUANTS
     )
     return f"""
 WITH hist AS (
@@ -2321,6 +2003,7 @@ ORACLE_E_MMR_RERANK = _mmr_oracle()
 _PQ_M = 4  # subspaces over the 64-dim embeddings (16 dims each)
 _PQ_CB = tuple(range(16))  # codebook seed rows (16 codewords per subspace)
 _IVFPQ_FMT = 1  # persisted-index format version (bump on layout change)
+_IVFPQ = "udlang_spark_ivfpq"  # index artifact directory prefix
 
 
 def e_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2464,9 +2147,6 @@ def e_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     (data, layout) by ivfpq_ensure_index — the steady-state cost of this
     query is the probe, matching production where an index is built once
     and probed many times."""
-    from udlang_spark.operators import ann_index
-    from udlang_spark.sources.tables import table_fingerprint
-
     emb = load_table(spark, "embeddings", sf_dir)
     # the emptiness probe costs a Spark job — skip it when the index is
     # already built (marker present ⇒ the corpus was non-empty)
@@ -2489,7 +2169,7 @@ def e_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         table_fingerprint(sf_dir, "embeddings"),
         path,
-        _idx_gen(path),
+        generation(path),
     )
     hit = plan_cache.get(spark, key)
     if hit is not None:
@@ -2502,54 +2182,19 @@ def e_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res
 
 
-def _ivfpq_cache(sf_dir: str, variant: str = "") -> tuple[str, str, str]:
-    """(key, index path, marker path) for the cached IVF-PQ index. The key
-    carries the embeddings file fingerprint (size+mtime), so regenerated
-    source data is a cache miss — the index can never silently serve a
-    stale corpus."""
-    import hashlib
-    import tempfile
-
-    from udlang_spark.sources.tables import table_fingerprint
-
+def _ivfpq_key(sf_dir: str, variant: str = "") -> str:
+    """Build key of the cached IVF-PQ index. The key carries the
+    embeddings file fingerprint (size+mtime), so regenerated source data
+    is a cache miss — the index can never silently serve a stale
+    corpus."""
     v = f"|{variant}" if variant else ""
     fp = table_fingerprint(sf_dir, "embeddings")
-    key = f"{sf_dir}{v}|{fp}|cells=16|m={_PQ_M}|cb={_PQ_CB}|fmt={_IVFPQ_FMT}"
-    tag = hashlib.md5(key.encode()).hexdigest()[:10]
-    path = f"{tempfile.gettempdir()}/udlang_spark_ivfpq_{tag}"
-    return key, path, os.path.join(path, "_BUILT")
-
-
-def _ivfpq_gc_stale(key: str, path: str) -> None:
-    """Retire STALE GENERATIONS of the same logical index: sibling
-    udlang_spark_ivfpq_* dirs whose marker records the same (sf_dir,
-    variant) identity but a different fingerprint/layout key — i.e. the
-    index this build supersedes. Without this, every source-data
-    regeneration strands a dead index dir in tempdir forever (the q70
-    bucketed-table cache already does the equivalent cleanup). Identity =
-    the key minus its trailing 5 parameter fields (fp|cells|m|cb|fmt),
-    which no sf_dir path can fake since the fingerprint is fixed-format
-    hex. Unreadable/foreign dirs are left alone."""
-    import glob as _glob
-    import shutil as _shutil
-    import tempfile
-
-    ident = key.rsplit("|", 5)[0]
-    for sib in _glob.glob(f"{tempfile.gettempdir()}/udlang_spark_ivfpq_*"):
-        if os.path.abspath(sib) == os.path.abspath(path):
-            continue
-        try:
-            with open(os.path.join(sib, "_BUILT")) as fh:
-                sib_key = fh.read()
-        except OSError:
-            continue  # unfinished/foreign dir: not ours to judge
-        if sib_key != key and sib_key.rsplit("|", 5)[0] == ident:
-            _shutil.rmtree(sib, ignore_errors=True)
+    return f"{sf_dir}{v}|{fp}|cells=16|m={_PQ_M}|cb={_PQ_CB}|fmt={_IVFPQ_FMT}"
 
 
 def ivfpq_index_ready(sf_dir: str) -> bool:
     """True when the cached e_ivfpq_ann index for sf_dir is fully built."""
-    return os.path.exists(_ivfpq_cache(sf_dir)[2])
+    return artifact_built(artifact_path(_IVFPQ, _ivfpq_key(sf_dir)))
 
 
 def _empty_ivfpq_result(spark: SparkSession) -> DataFrame:
@@ -2591,9 +2236,6 @@ def e_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass plus an append-mode partitioned write into the touched cells;
     existing cell files are never rewritten. The daily-ingest pattern at
     100 TB: append each increment, rebuild only to re-balance."""
-    from udlang_spark.operators import ann_index
-    from udlang_spark.sources.tables import table_fingerprint
-
     emb = load_table(spark, "embeddings", sf_dir)
     path = _ivfpq_append_index(spark, emb, sf_dir)
     if path is None:
@@ -2606,7 +2248,7 @@ def e_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         table_fingerprint(sf_dir, "embeddings"),
         path,
-        _idx_gen(path),
+        generation(path),
     )
     hit = plan_cache.get(spark, key)
     if hit is not None:
@@ -2625,13 +2267,14 @@ def _ivfpq_append_index(
     """Build (once per corpus fingerprint) the half-build + append-grown
     IVF-PQ index e_ivfpq_append and e_ivfpq_append_recall probe. Returns
     None for an empty corpus (no index can exist)."""
-    from udlang_spark.operators import ann_index
-
-    key, path, marker = _ivfpq_cache(sf_dir, variant="append")
-    if not os.path.exists(marker) and len(emb.limit(1).collect()) == 0:
+    key = _ivfpq_key(sf_dir, variant="append")
+    if (
+        not artifact_built(artifact_path(_IVFPQ, key))
+        and len(emb.limit(1).collect()) == 0
+    ):
         return None
-    if not os.path.exists(marker):
-        _ivfpq_gc_stale(key, path)
+
+    def build(path: str) -> None:
         max_id = emb.agg(F.max("vec_id")).collect()[0][0]
         # base half must contain the quantizer/codebook seed rows (ids
         # 0..15) so the frozen artifacts equal the full build's
@@ -2648,9 +2291,8 @@ def _ivfpq_append_index(
         rest = emb.where(F.col("vec_id") >= cutoff)
         if len(rest.limit(1).collect()) > 0:
             ann_index.append_to_ivfpq_index(rest, "embedding", "vec_id", path)
-        with open(marker, "w") as fh:
-            fh.write(key)
-    return path
+
+    return ensure_artifact(_IVFPQ, key, build)
 
 
 def ivfpq_ensure_index(
@@ -2667,15 +2309,12 @@ def ivfpq_ensure_index(
     any layout change); the marker file is written only after
     write_ivfpq_index fully returns (sidecars last), so a crashed build
     is rebuilt, never probed."""
-    import shutil
-
-    from udlang_spark.operators import ann_index
-
-    key, path, marker = _ivfpq_cache(sf_dir)
+    key = _ivfpq_key(sf_dir)
+    path = artifact_path(_IVFPQ, key)
     if force_rebuild and os.path.exists(path):
         shutil.rmtree(path)
-    if not os.path.exists(marker):
-        _ivfpq_gc_stale(key, path)
+
+    def build(path: str) -> None:
         emb = load_table(spark, "embeddings", sf_dir)
         ann_index.write_ivfpq_index(
             emb,
@@ -2686,9 +2325,8 @@ def ivfpq_ensure_index(
             n_subspaces=_PQ_M,
             codebook_ids=_PQ_CB,
         )
-        with open(marker, "w") as fh:
-            fh.write(key)
-    return path
+
+    return ensure_artifact(_IVFPQ, key, build)
 
 
 def _ivfpq_ctes(
@@ -2854,8 +2492,6 @@ def _exact_panel_top5(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataF
     each call re-arms the persist so a release_caches() between queries
     never leaves the shared arm uncached while two histograms consume it
     (r12 VERDICT #1: the pair paid the exact arm twice)."""
-    from udlang_spark.sources.tables import table_fingerprint
-
     key = ("ann_panel_exact5", sf_dir, table_fingerprint(sf_dir, "embeddings"))
     hit = plan_cache.get(spark, key)
     if hit is None:
@@ -2879,15 +2515,12 @@ def _ivfpq_recall_arms(
     probe's bounded driver round-trips (routing, ADC tables) are
     per-corpus setup, while re-execution still pays the pruned code scan,
     ADC scoring, rerank, and both histogram joins."""
-    from udlang_spark.operators import ann_index
-    from udlang_spark.sources.tables import table_fingerprint
-
     key = (
         "ivfpq_recall_card",
         sf_dir,
         table_fingerprint(sf_dir, "embeddings"),
         path,
-        _idx_gen(path),
+        generation(path),
     )
     hit = plan_cache.get(spark, key)
     if hit is not None:
@@ -3058,8 +2691,6 @@ def e_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     query's cost) and keeps exprIds stable for codegen cache hits; every
     run re-executes the signature build, the broadcast join, xor+
     bit_count scoring, and the top-k window from parquet."""
-    from udlang_spark.sources.tables import table_fingerprint
-
     emb = load_table(spark, "embeddings", sf_dir)
     key = ("hamming", sf_dir, table_fingerprint(sf_dir, "embeddings"))
     hit = plan_cache.get(spark, key)
@@ -3149,7 +2780,7 @@ FROM documents
 """
 
 
-def _synth_ppm(docs: DataFrame) -> DataFrame:
+def synth_ppm(docs: DataFrame) -> DataFrame:
     """Worker-side synthetic PPM(P6) per document: dims from doc_id
     (w = id%13+1, h = id%7+1), pixel bytes = md5(text) digest cycled.
     Deterministic and arithmetically re-derivable in SQL, so queries over
@@ -3184,18 +2815,18 @@ def _synth_ppm(docs: DataFrame) -> DataFrame:
 
 def m_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image decode, oracle-checked end-to-end: workers synthesize a
-    binary PPM(P6) per document (_synth_ppm), then
+    binary PPM(P6) per document (synth_ppm), then
     decode_images(decode_mode="real") parses the bytes back with the
     stdlib codec (operators/codecs.py — no PIL in this container). The
     oracle recomputes the dims arithmetically, so a header-math or parser
     bug goes driver-red."""
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    return multimodal.decode_images(_synth_ppm(docs), decode_mode="real")
+    return multimodal.decode_images(synth_ppm(docs), decode_mode="real")
 
 
 def m_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual image dedup by average-hash over REAL decoded pixels:
-    synthesize a PPM per doc (_synth_ppm), decode and fingerprint it
+    synthesize a PPM per doc (synth_ppm), decode and fingerprint it
     (operators/multimodal.image_ahash — brightness·n > Σbrightness per
     pixel, exact integer arithmetic), then count perceptual duplicates by
     (width, height, ahash). The oracle re-derives EVERY pixel byte from
@@ -3208,7 +2839,7 @@ def m_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte volume. At 100 TB of images the shuffled bytes are ~1/1000th of
     the scanned bytes."""
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    hashed = multimodal.image_ahash(_synth_ppm(docs))
+    hashed = multimodal.image_ahash(synth_ppm(docs))
     w = Window.partitionBy("width", "height", "ahash")
     return hashed.select(
         "doc_id",
@@ -3261,7 +2892,7 @@ ORACLE_AHASH_DEDUP = _ahash_oracle()
 
 def m_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual image NEAR-dup (r7 VERDICT #4 — hamming ≤ 3, not just
-    exact hash equality): synthesize + decode the PPMs (_synth_ppm), take
+    exact hash equality): synthesize + decode the PPMs (synth_ppm), take
     the CANONICAL 64-bit aHash (8×8 nearest-neighbor downsample →
     threshold by mean, operators/multimodal.image_ahash64 — every image
     lands in the same 64-bit space regardless of dims), then find pairs
@@ -3280,7 +2911,7 @@ def m_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from udlang_spark.operators import dedup as _dedup
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    fp = multimodal.image_ahash64(_synth_ppm(docs)).select(
+    fp = multimodal.image_ahash64(synth_ppm(docs)).select(
         F.col("doc_id").alias("doc"), "ahash64"
     )
     return _dedup.banded_hamming_pairs(
@@ -3777,7 +3408,7 @@ FROM b
 
 
 # 1/log2(rank+1) discount table for nDCG, Python-precomputed literals
-# (the _HLL_LC trick — no runtime transcendentals in oracle-checked output)
+# (the HLL_LC trick — no runtime transcendentals in oracle-checked output)
 _EVAL_K = 5
 _EVAL_DISC = [round(1.0 / math.log2(r + 1), 10) for r in range(1, _EVAL_K + 1)]
 _EVAL_IDCG = round(sum(_EVAL_DISC), 10)
@@ -4650,8 +4281,6 @@ def t_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     (not the production-typical 8-13) because the synthetic vocabulary is
     ~30 words: at n=4 the benchmark overlap is non-trivial (incl. one
     near-duplicate doc), so the operator's counting paths are exercised."""
-    from udlang_spark.sources.tables import fan_out
-
     docs = fan_out(load_table(spark, "documents", sf_dir))
     bench = docs.filter(F.col("doc_id") % 37 == 0)
     train = docs.filter(F.col("doc_id") % 37 != 0)
@@ -5090,96 +4719,6 @@ FROM fused
 # real artifact, exactly like the LSH plane matrices in _plane_matrix).
 # ---------------------------------------------------------------------------
 
-_MSIM_QUERIES = ("fast hash join", "window agg stream", "sort merge table scan")
-_MSIM_DIMS = 8
-_MSIM_TOPK = 10
-
-
-def _msim_qvec(tok: str) -> list[int]:
-    """Query-token embedding, derived driver-side: same md5 integer family
-    the engines compute for doc tokens (md5 is md5 — hashlib, Spark, and
-    DuckDB agree byte-for-byte on 'msim:<tok>'). ONE digest per token:
-    the 8 components are disjoint 16-bit hex windows of the single md5 —
-    8× less hashing than a per-(token, dim) digest, and at 100 TB the
-    hash is the scan's dominant CPU term."""
-    import hashlib
-
-    h = hashlib.md5(f"msim:{tok}".encode()).hexdigest()
-    return [
-        int(h[4 * d : 4 * d + 4], 16) % 2001 - 1000 for d in range(_MSIM_DIMS)
-    ]
-
-
-def _msim_terms():
-    """(qi, j, query-token vector) triples plus the per-query score
-    expressions over the max columns m{qi}_{j} (fixed-arity left-to-right
-    sums — the association order both engines share)."""
-    triples, score_exprs = [], []
-    for qi, q in enumerate(_MSIM_QUERIES):
-        ts = q.split()
-        for j, qt in enumerate(ts):
-            triples.append((qi, j, _msim_qvec(qt)))
-        score_exprs.append(
-            "(" + " + ".join(f"m{qi}_{j}" for j in range(len(ts))) + ")"
-        )
-    return triples, score_exprs
-
-
-def _msim_tvn_sql() -> str:
-    """Row-local token-vector array: array_distinct tokens -> 8 md5
-    integer components each, paired with the exact int64 self-dot."""
-    comps = ", ".join(
-        f"(CAST(conv(substring(h, {1 + 4 * d}, 4), 16, 10)"
-        f" AS BIGINT) % 2001 - 1000)"
-        for d in range(_MSIM_DIMS)
-    )
-    vn = " + ".join(f"v[{d}] * v[{d}]" for d in range(_MSIM_DIMS))
-    return (
-        f"transform(transform(transform(array_distinct({_WORDS}), "
-        f"t -> md5(concat('msim:', t))), h -> array({comps})), "
-        f"v -> named_struct('v', v, 'n', {vn}))"
-    )
-
-
-def _msim_hof_max_cols() -> list:
-    """Row-local (HOF) MaxSim maxima — the STREAMING form: transform +
-    array_max over the record's own token list is a pure per-record map,
-    so scoring runs unchanged on a readStream with no state. The HOF
-    lambdas are interpreted (not whole-stage codegen), ~2x the scan cost
-    of the batch explode+groupBy shape at sf0.1 — the price of
-    statelessness; batch t_maxsim_topk uses the codegen shape. Columns
-    reference a bound `tvn` array column (projection-level subexpression
-    elimination computes it once per row)."""
-    cols = []
-    for qi, j, qv in _msim_terms()[0]:
-        dot = " + ".join(f"x.v[{d}] * ({qv[d]})" for d in range(_MSIM_DIMS))
-        nqq = sum(c * c for c in qv)
-        cols.append(
-            F.expr(
-                f"array_max(transform(tvn, x -> "
-                f"CASE WHEN x.n > 0 THEN round(({dot}) / "
-                f"(sqrt(x.n) * sqrt({nqq})), 6) ELSE 0.0 END))"
-            ).alias(f"m{qi}_{j}")
-        )
-    return cols
-
-
-def _msim_topk_from_maxes(m: DataFrame) -> DataFrame:
-    """Per-query top-k over the reduced (doc_id, maxima) relation —
-    shared by the batch query and the streaming twin's drained read."""
-    _, score_exprs = _msim_terms()
-    stack = ", ".join(f"{qi}, {se}" for qi, se in enumerate(score_exprs))
-    s = m.selectExpr(
-        "doc_id", f"stack({len(_MSIM_QUERIES)}, {stack}) AS (qid, score)"
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("doc_id"))
-    return (
-        s.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _MSIM_TOPK)
-        .select("qid", "doc_id", "score", "rnk")
-    )
-
-
 # Analyzed-plan cache for t_maxsim_topk, keyed by (session, corpus
 # identity). The scoring projection is ~10 wide codegen expressions over
 # 8 hash components; building it fresh per call allocates fresh exprIds,
@@ -5191,7 +4730,6 @@ def _msim_topk_from_maxes(m: DataFrame) -> DataFrame:
 # Keys fold in the source-file fingerprint so regenerated data is a miss;
 # session identity is the WeakKeyDictionary key inside plan_cache (r12
 # ADVICE #1/#2: per-session entries, FIFO eviction, dead sessions drop).
-_MSIM_DF_CACHE = plan_cache
 
 
 def t_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5229,7 +4767,7 @@ def t_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     QueryExecution, which skips re-planning AND reuses shuffle outputs:
     0.13 s). The dictionary derivation compiles two small classes instead
     (cosines over the vocab, probe+maxpool over occurrences): 1.0–1.1 s
-    fresh-plan, identical rows. The analyzed-plan cache (_MSIM_DF_CACHE)
+    fresh-plan, identical rows. The analyzed-plan cache (plan_cache)
     additionally keeps exprIds stable across bench runs.
 
     Determinism: integer token components (md5 mod 2001 − 1000), exact
@@ -5238,8 +4776,6 @@ def t_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum of the per-token maxima — written in the same association order in
     both engines, hence bit-identical.
     """
-    from udlang_spark.sources.tables import table_fingerprint
-
     key = ("msim_topk", sf_dir, table_fingerprint(sf_dir, "documents"))
     hit = plan_cache.get(spark, key)
     if hit is not None:
@@ -5258,10 +4794,10 @@ def _maxsim_topk_core(docs: DataFrame) -> DataFrame:
     )
     scored = _msim_scored_vocab(toks.select("tok").distinct())
     agg_cols = [
-        F.max(f"c{qi}_{j}").alias(f"m{qi}_{j}") for qi, j, _ in _msim_terms()[0]
+        F.max(f"c{qi}_{j}").alias(f"m{qi}_{j}") for qi, j, _ in maxsim_terms()[0]
     ]
     m = toks.join(F.broadcast(scored), "tok").groupBy("doc_id").agg(*agg_cols)
-    return _msim_topk_from_maxes(m)
+    return maxsim_topk_from_maxes(m)
 
 
 def _scored_token_vocab(
@@ -5274,15 +4810,15 @@ def _scored_token_vocab(
     comp = [
         f"(CAST(conv(substring(h, {1 + 4 * d}, 4), 16, 10)"
         f" AS BIGINT) % 2001 - 1000)"
-        for d in range(_MSIM_DIMS)
+        for d in range(MAXSIM_DIMS)
     ]
     v = vocab.select(
         "tok", F.expr("md5(concat('msim:', tok))").alias("h")
     ).select("tok", *[F.expr(e).alias(f"a{d}") for d, e in enumerate(comp)])
-    naa = " + ".join(f"a{d} * a{d}" for d in range(_MSIM_DIMS))
+    naa = " + ".join(f"a{d} * a{d}" for d in range(MAXSIM_DIMS))
     cos_cols = []
     for name, qv in named_qvecs:
-        dot = " + ".join(f"a{d} * ({qv[d]})" for d in range(_MSIM_DIMS))
+        dot = " + ".join(f"a{d} * ({qv[d]})" for d in range(MAXSIM_DIMS))
         nqq = sum(c * c for c in qv)
         cos_cols.append(
             F.expr(
@@ -5297,7 +4833,7 @@ def _msim_scored_vocab(vocab: DataFrame) -> DataFrame:
     """The full |Q·terms| scored dictionary both MaxSim batch queries
     broadcast (see _scored_token_vocab)."""
     return _scored_token_vocab(
-        vocab, [(f"c{qi}_{j}", qv) for qi, j, qv in _msim_terms()[0]]
+        vocab, [(f"c{qi}_{j}", qv) for qi, j, qv in maxsim_terms()[0]]
     )
 
 
@@ -5305,15 +4841,15 @@ def _maxsim_oracle() -> str:
     comp = ", ".join(
         f"CAST(CAST(concat('0x', substr(h, {1 + 4 * d}, 4))"
         f" AS UBIGINT) % 2001 AS BIGINT) - 1000 AS a{d}"
-        for d in range(_MSIM_DIMS)
+        for d in range(MAXSIM_DIMS)
     )
-    naa = " + ".join(f"a{d} * a{d}" for d in range(_MSIM_DIMS))
+    naa = " + ".join(f"a{d} * a{d}" for d in range(MAXSIM_DIMS))
     cos_cols, max_cols, score_rows = [], [], []
-    for qi, q in enumerate(_MSIM_QUERIES):
+    for qi, q in enumerate(MAXSIM_QUERIES):
         terms = q.split()
         for j, qt in enumerate(terms):
-            qv = _msim_qvec(qt)
-            dot = " + ".join(f"a{d} * ({qv[d]})" for d in range(_MSIM_DIMS))
+            qv = maxsim_qvec(qt)
+            dot = " + ".join(f"a{d} * ({qv[d]})" for d in range(MAXSIM_DIMS))
             nqq = sum(c * c for c in qv)
             cos_cols.append(
                 f"CASE WHEN ({naa}) > 0 THEN round(({dot}) / "
@@ -5335,7 +4871,7 @@ SELECT CAST(qid AS INTEGER) AS qid, doc_id, score, CAST(rnk AS INTEGER) AS rnk
 FROM (
   SELECT *, row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rnk
   FROM s
-) WHERE rnk <= {_MSIM_TOPK}
+) WHERE rnk <= {MAXSIM_TOPK}
 """
 
 
@@ -5391,7 +4927,7 @@ def _maxsim_vocab_core(
     comp = [
         f"(CAST(conv(substring(md5(concat('msim:', tok)), {1 + 4 * d}, 4),"
         f" 16, 10) AS BIGINT) % 2001 - 1000)"
-        for d in range(_MSIM_DIMS)
+        for d in range(MAXSIM_DIMS)
     ]
     vocab = (
         toks.groupBy("tok")
@@ -5399,10 +4935,10 @@ def _maxsim_vocab_core(
         .filter(F.col("df") >= min_df)
         .select("tok", F.expr(f"array({', '.join(comp)})").alias("vec"))
     )
-    naa = " + ".join(f"vec[{d}] * vec[{d}]" for d in range(_MSIM_DIMS))
+    naa = " + ".join(f"vec[{d}] * vec[{d}]" for d in range(MAXSIM_DIMS))
     cos_cols, agg_cols = [], []
-    for qi, j, qv in _msim_terms()[0]:
-        dot = " + ".join(f"vec[{d}] * ({qv[d]})" for d in range(_MSIM_DIMS))
+    for qi, j, qv in maxsim_terms()[0]:
+        dot = " + ".join(f"vec[{d}] * ({qv[d]})" for d in range(MAXSIM_DIMS))
         nqq = sum(c * c for c in qv)
         cos_cols.append(
             F.expr(
@@ -5413,22 +4949,22 @@ def _maxsim_vocab_core(
         agg_cols.append(F.max(f"c{qi}_{j}").alias(f"m{qi}_{j}"))
     scored = vocab.select("tok", *cos_cols)
     m = toks.join(F.broadcast(scored), "tok").groupBy("doc_id").agg(*agg_cols)
-    return _msim_topk_from_maxes(m)
+    return maxsim_topk_from_maxes(m)
 
 
 def _maxsim_vocab_oracle(min_df: int = _MSIM_VOCAB_MIN_DF) -> str:
     comp = ", ".join(
         f"CAST(CAST(concat('0x', substr(h, {1 + 4 * d}, 4))"
         f" AS UBIGINT) % 2001 AS BIGINT) - 1000 AS a{d}"
-        for d in range(_MSIM_DIMS)
+        for d in range(MAXSIM_DIMS)
     )
-    naa = " + ".join(f"a{d} * a{d}" for d in range(_MSIM_DIMS))
+    naa = " + ".join(f"a{d} * a{d}" for d in range(MAXSIM_DIMS))
     cos_cols, max_cols, score_rows, join_cols = [], [], [], []
-    for qi, q in enumerate(_MSIM_QUERIES):
+    for qi, q in enumerate(MAXSIM_QUERIES):
         terms = q.split()
         for j, qt in enumerate(terms):
-            qv = _msim_qvec(qt)
-            dot = " + ".join(f"a{d} * ({qv[d]})" for d in range(_MSIM_DIMS))
+            qv = maxsim_qvec(qt)
+            dot = " + ".join(f"a{d} * ({qv[d]})" for d in range(MAXSIM_DIMS))
             nqq = sum(c * c for c in qv)
             cos_cols.append(
                 f"CASE WHEN ({naa}) > 0 THEN round(({dot}) / "
@@ -5454,7 +4990,7 @@ SELECT CAST(qid AS INTEGER) AS qid, doc_id, score, CAST(rnk AS INTEGER) AS rnk
 FROM (
   SELECT *, row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rnk
   FROM s
-) WHERE rnk <= {_MSIM_TOPK}
+) WHERE rnk <= {MAXSIM_TOPK}
 """
 
 
@@ -5507,9 +5043,6 @@ def t_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-order IEEE sums of round-6 terms written identically in both
     engines; all orderings tie-break on id/chunk_idx.
     """
-    from udlang_spark.operators import ann_index
-    from udlang_spark.sources.tables import table_fingerprint
-
     key = (
         "retrieval_pipeline",
         sf_dir,
@@ -5517,7 +5050,7 @@ def t_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         table_fingerprint(sf_dir, "embeddings"),
         # the dense arm probes the shared IVF-PQ index: an in-session
         # rebuild at the same path must be a cache miss here too
-        _idx_gen(_ivfpq_cache(sf_dir)[1]),
+        generation(artifact_path(_IVFPQ, _ivfpq_key(sf_dir))),
     )
     hit = plan_cache.get(spark, key)
     if hit is not None:
@@ -5588,7 +5121,7 @@ def t_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("tok"),
     )
-    terms = [(f"r{j}", _msim_qvec(t)) for j, t in enumerate(_BM25_TERMS)]
+    terms = [(f"r{j}", maxsim_qvec(t)) for j, t in enumerate(_BM25_TERMS)]
     scored = _scored_token_vocab(toks.select("tok").distinct(), terms)
     m = (
         toks.join(F.broadcast(scored), "tok")
@@ -5646,13 +5179,13 @@ def _retrieval_pipeline_oracle() -> str:
     comp = ", ".join(
         f"CAST(CAST(concat('0x', substr(h, {1 + 4 * d}, 4))"
         f" AS UBIGINT) % 2001 AS BIGINT) - 1000 AS a{d}"
-        for d in range(_MSIM_DIMS)
+        for d in range(MAXSIM_DIMS)
     )
-    naa = " + ".join(f"a{d} * a{d}" for d in range(_MSIM_DIMS))
+    naa = " + ".join(f"a{d} * a{d}" for d in range(MAXSIM_DIMS))
     cos_cols, max_cols = [], []
     for j, t in enumerate(_BM25_TERMS):
-        qv = _msim_qvec(t)
-        dot = " + ".join(f"a{d} * ({qv[d]})" for d in range(_MSIM_DIMS))
+        qv = maxsim_qvec(t)
+        dot = " + ".join(f"a{d} * ({qv[d]})" for d in range(MAXSIM_DIMS))
         nqq = sum(c * c for c in qv)
         cos_cols.append(
             f"CASE WHEN ({naa}) > 0 THEN round(({dot}) / "

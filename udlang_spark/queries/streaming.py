@@ -26,18 +26,19 @@ from udlang_spark.functions import text as TXT
 from udlang_spark.functions import url as URL
 from udlang_spark.kernel import ast
 from udlang_spark.kernel.api import compile_kernel
+from udlang_spark.operators import similarity, sketches
 from udlang_spark.queries import llm as _llm
 from udlang_spark.sources import json_lift
-from udlang_spark.sources.tables import load_table
+from udlang_spark.sources.tables import load_table, table_fingerprint
 from udlang_spark.streaming import runner
 
-_EVENT_T = ast.TRecord(
-    (
-        ast.TRecordField("event_id", ast.T_INT),
-        ast.TRecordField("event_type", ast.T_STR),
-        ast.TRecordField("value", ast.T_FLOAT),
-    )
+_EVENT_FIELDS = (
+    ("event_id", ast.T_INT),
+    ("event_type", ast.T_STR),
+    ("value", ast.T_FLOAT),
 )
+_DOC_ID = ("doc_id", ast.T_INT)
+_DOC_TEXT = (_DOC_ID, ("text", ast.T_STR))
 
 _DOUBLER = """
 version 0.1-pre_mvp;
@@ -60,9 +61,9 @@ _REPLAY_MFT = _REPLAY_FILES // 2
 def _replay_dir(
     spark: SparkSession,
     sf_dir: str,
-    table: str = "events",
-    cols: tuple[str, ...] = ("event_id", "event_type", "value"),
-    prefix: str = "udlang_stream_replay",
+    table: str,
+    cols: tuple[str, ...],
+    prefix: str,
     select_exprs: tuple[str, ...] | None = None,
 ) -> str:
     """Write a table's rows as JSON files for a replayable file stream.
@@ -75,8 +76,6 @@ def _replay_dir(
     (tables.table_fingerprint), so regenerating the parquet under the
     same path is a cache MISS, never a stale replay. Checkpoint/state
     dirs are NOT cached; each query still clears its own."""
-    from udlang_spark.sources.tables import table_fingerprint
-
     tag = os.path.basename(sf_dir.rstrip("/"))
     tmp = os.path.join(tempfile.gettempdir(), f"{prefix}_{tag}")
     marker = os.path.join(tmp, "_REPLAY_OK")
@@ -114,13 +113,47 @@ def _replay_dir(
     return tmp
 
 
-def _stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    schema = json_lift.input_schema(_EVENT_T)
-    return (
-        spark.readStream.schema(schema)
-        .option("mode", "FAILFAST")
-        .json(_replay_dir(spark, sf_dir))
+def _replay_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    prefix: str,
+    fields: tuple[tuple[str, ast.Type], ...],
+    table: str = "documents",
+    mft: bool = False,
+    select_exprs: tuple[str, ...] | None = None,
+) -> DataFrame:
+    """FAILFAST file stream over a table's replay dir (_replay_dir) with
+    the typed (name, type) record `fields`; mft=True caps each micro-batch
+    at _REPLAY_MFT files, forcing >= 2 micro-batches per run."""
+    cols = tuple(name for name, _ in fields)
+    tmp = _replay_dir(
+        spark, sf_dir, table=table, cols=cols, prefix=prefix,
+        select_exprs=select_exprs,
     )
+    rec = ast.TRecord(tuple(ast.TRecordField(n, t) for n, t in fields))
+    reader = spark.readStream.schema(json_lift.input_schema(rec)).option(
+        "mode", "FAILFAST"
+    )
+    if mft:
+        reader = reader.option("maxFilesPerTrigger", _REPLAY_MFT)
+    return reader.json(tmp)
+
+
+def _stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _replay_stream(
+        spark, sf_dir, "udlang_stream_replay", _EVENT_FIELDS, table="events"
+    )
+
+
+def _fresh_sink(name: str, sf_dir: str) -> tuple[str, str]:
+    """(target, checkpoint) dirs of a stream sink, emptied so every run
+    drains the whole replay into a fresh target."""
+    tag = os.path.basename(sf_dir.rstrip("/"))
+    target = os.path.join(tempfile.gettempdir(), f"udlang_{name}_target_{tag}")
+    ckpt = os.path.join(tempfile.gettempdir(), f"udlang_{name}_ckpt_{tag}")
+    shutil.rmtree(target, ignore_errors=True)
+    shutil.rmtree(ckpt, ignore_errors=True)
+    return target, ckpt
 
 
 def s_kernel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -248,17 +281,8 @@ def s_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (at 100 TB/day the fp key space, not the corpus, is what the state
     store holds). Which ARRIVAL survives is racy across micro-batches, so
     the contract output is the deterministic surviving fingerprint set."""
-    tmp = _replay_dir(
-        spark, sf_dir, table="documents", cols=("doc_id", "text"),
-        prefix="udlang_stream_docs",
-    )
-    doc_t = ast.TRecord(
-        (ast.TRecordField("doc_id", ast.T_INT), ast.TRecordField("text", ast.T_STR))
-    )
     src = (
-        spark.readStream.schema(json_lift.input_schema(doc_t))
-        .option("mode", "FAILFAST")
-        .json(tmp)
+        _replay_stream(spark, sf_dir, "udlang_stream_docs", _DOC_TEXT)
         .withColumn(
             "ts", F.timestamp_seconds(F.lit(1700000000) + F.col("doc_id") * 60)
         )
@@ -283,22 +307,9 @@ def s_url_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     is racy across micro-batches, so the contract output is the
     deterministic surviving canonical-key set (= the batch dedup's key set,
     pytest-pinned)."""
-    tmp = _replay_dir(
-        spark, sf_dir, table="documents",
-        cols=("doc_id", "lang", "source"),
-        prefix="udlang_stream_url",
-    )
-    doc_t = ast.TRecord(
-        (
-            ast.TRecordField("doc_id", ast.T_INT),
-            ast.TRecordField("lang", ast.T_STR),
-            ast.TRecordField("source", ast.T_STR),
-        )
-    )
+    fields = (_DOC_ID, ("lang", ast.T_STR), ("source", ast.T_STR))
     src = (
-        spark.readStream.schema(json_lift.input_schema(doc_t))
-        .option("mode", "FAILFAST")
-        .json(tmp)
+        _replay_stream(spark, sf_dir, "udlang_stream_url", fields)
         .withColumn(
             "ts", F.timestamp_seconds(F.lit(1700000000) + F.col("doc_id") * 60)
         )
@@ -324,35 +335,18 @@ def s_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch EXACTLY, so this query shares its DuckDB oracle verbatim —
     mergeability demonstrated end-to-end, not asserted. Probing and the
     exact-count comparison run batch-side on the drained state."""
-    tmp = _replay_dir(
-        spark, sf_dir, table="documents", cols=("doc_id", "text"),
-        prefix="udlang_stream_cms",
-    )
-    doc_t = ast.TRecord(
-        (ast.TRecordField("doc_id", ast.T_INT), ast.TRecordField("text", ast.T_STR))
-    )
-    src = (
-        spark.readStream.schema(json_lift.input_schema(doc_t))
-        .option("mode", "FAILFAST")
-        .json(tmp)
-    )
+    src = _replay_stream(spark, sf_dir, "udlang_stream_cms", _DOC_TEXT)
     toks = src.select(F.explode(TXT.words("text")).alias("tok"))
     sketch_stream = (
-        _llm._cms_cells(toks, "tok")
+        sketches.cms_cells(toks, "tok")
         .groupBy("row", "bucket")
         .agg(F.count(F.lit(1)).alias("n"))
     )
     sketch = runner.run_stream_to_memory(
         sketch_stream, "q_s_cms_stream", spark, output_mode="complete"
     )
-    docs = load_table(spark, "documents", sf_dir)
-    btoks = docs.select(F.explode(TXT.words("text")).alias("tok"))
-    exact = (
-        btoks.filter(F.col("tok").isin(*sorted(TXT.STOPWORDS)))
-        .groupBy(F.col("tok").alias("word"))
-        .agg(F.count(F.lit(1)).alias("exact"))
-    )
-    return _llm._cms_probe_report(spark, sketch, exact)
+    exact = sketches.cms_exact_witness(load_table(spark, "documents", sf_dir))
+    return sketches.cms_probe_report(spark, sketch, exact)
 
 
 def s_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -370,36 +364,16 @@ def s_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     and this query shares its DuckDB oracle verbatim — the same
     mergeability statement as s_cms_stream, demonstrated through the
     update-shaped path instead of complete-mode re-emission."""
-    tmp = _replay_dir(
-        spark, sf_dir, table="documents", cols=("doc_id", "text"),
-        prefix="udlang_stream_cmsmerge",
-    )
-    doc_t = ast.TRecord(
-        (ast.TRecordField("doc_id", ast.T_INT), ast.TRecordField("text", ast.T_STR))
-    )
-    src = (
-        spark.readStream.schema(json_lift.input_schema(doc_t))
-        .option("mode", "FAILFAST")
-        .option("maxFilesPerTrigger", _REPLAY_MFT)
-        .json(tmp)
+    src = _replay_stream(
+        spark, sf_dir, "udlang_stream_cmsmerge", _DOC_TEXT, mft=True
     )
     toks = src.select(F.explode(TXT.words("text")).alias("tok"))
-    cells = _llm._cms_cells(toks, "tok")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    target = os.path.join(tempfile.gettempdir(), f"udlang_cms_target_{tag}")
-    ckpt = os.path.join(tempfile.gettempdir(), f"udlang_cms_ckpt_{tag}")
-    shutil.rmtree(target, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    cells = sketches.cms_cells(toks, "tok")
+    target, ckpt = _fresh_sink("cms", sf_dir)
     runner.run_sketch_merge_stream(spark, cells, target, ckpt)
     sketch = spark.read.parquet(target).drop("_last_batch")
-    docs = load_table(spark, "documents", sf_dir)
-    btoks = docs.select(F.explode(TXT.words("text")).alias("tok"))
-    exact = (
-        btoks.filter(F.col("tok").isin(*sorted(TXT.STOPWORDS)))
-        .groupBy(F.col("tok").alias("word"))
-        .agg(F.count(F.lit(1)).alias("exact"))
-    )
-    return _llm._cms_probe_report(spark, sketch, exact)
+    exact = sketches.cms_exact_witness(load_table(spark, "documents", sf_dir))
+    return sketches.cms_probe_report(spark, sketch, exact)
 
 
 def s_quantile_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -412,42 +386,18 @@ def s_quantile_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming demonstrations of all three sketch algebras: counts (CMS),
     registers (HLL), and histograms — every one micro-batching-invariant
     because the merge is associative."""
-    price_t = ast.TRecord(
-        (
-            ast.TRecordField("l_orderkey", ast.T_INT),
-            ast.TRecordField("l_extendedprice", ast.T_FLOAT),
-        )
+    fields = (("l_orderkey", ast.T_INT), ("l_extendedprice", ast.T_FLOAT))
+    src = _replay_stream(
+        spark, sf_dir, "udlang_stream_qsk", fields, table="lineitem", mft=True
     )
-    tmp = _replay_dir(
-        spark, sf_dir, table="lineitem",
-        cols=("l_orderkey", "l_extendedprice"),
-        prefix="udlang_stream_qsk",
-    )
-    src = (
-        spark.readStream.schema(json_lift.input_schema(price_t))
-        .option("mode", "FAILFAST")
-        .option("maxFilesPerTrigger", _REPLAY_MFT)
-        .json(tmp)
-    )
-    cells = src.select(
-        F.floor(
-            F.col("l_extendedprice").cast("double")
-            / F.lit(float(_llm._QSK_WIDTH))
-        )
-        .cast("long")
-        .alias("bucket")
-    )
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    target = os.path.join(tempfile.gettempdir(), f"udlang_qsk_target_{tag}")
-    ckpt = os.path.join(tempfile.gettempdir(), f"udlang_qsk_ckpt_{tag}")
-    shutil.rmtree(target, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    cells = src.select(sketches.qsk_bucket())
+    target, ckpt = _fresh_sink("qsk", sf_dir)
     runner.run_sketch_merge_stream(
         spark, cells, target, ckpt, cell_cols=("bucket",)
     )
     hist = spark.read.parquet(target).drop("_last_batch")
     li = load_table(spark, "lineitem", sf_dir)
-    return _llm.quantile_probe_report(spark, hist, li)
+    return sketches.quantile_probe_report(spark, hist, li)
 
 
 def s_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -496,67 +446,27 @@ def s_hll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     as s_cms_merge, in mode='max' — MAX-merge is the HLL register
     combine, so the drained table equals the batch sketch under any
     micro-batching (maxFilesPerTrigger=_REPLAY_MFT over the _REPLAY_FILES replay still forces ≥2 batches).
-    The estimate (shared _HLL formula + precomputed linear-counting
-    table) and the exact distinct witness run batch-side on the drained
+    The estimate (the shared sketches.hll_estimate + precomputed
+    linear-counting table) and the exact distinct witness run batch-side on the drained
     registers. Together with s_cms_merge this demonstrates both mergeable
     sketch algebras (SUM and MAX) through the streaming state path."""
-    tmp = _replay_dir(
-        spark, sf_dir, table="documents", cols=("doc_id", "text"),
-        prefix="udlang_stream_hll",
-    )
-    doc_t = ast.TRecord(
-        (ast.TRecordField("doc_id", ast.T_INT), ast.TRecordField("text", ast.T_STR))
-    )
-    src = (
-        spark.readStream.schema(json_lift.input_schema(doc_t))
-        .option("mode", "FAILFAST")
-        .option("maxFilesPerTrigger", _REPLAY_MFT)
-        .json(tmp)
-    )
-    bucket, rank = _llm._hll_bucket_rank(F.col("tok"))
+    src = _replay_stream(spark, sf_dir, "udlang_stream_hll", _DOC_TEXT, mft=True)
+    bucket, rank = sketches.hll_bucket_rank(F.col("tok"))
     cells = src.select(F.explode(TXT.words("text")).alias("tok")).select(
         bucket, rank
     )
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    target = os.path.join(tempfile.gettempdir(), f"udlang_hll_target_{tag}")
-    ckpt = os.path.join(tempfile.gettempdir(), f"udlang_hll_ckpt_{tag}")
-    shutil.rmtree(target, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    target, ckpt = _fresh_sink("hll", sf_dir)
     runner.run_sketch_merge_stream(
         spark, cells, target, ckpt,
         cell_cols=("bucket",), mode="max", value_col="rank", out_col="r",
     )
     regs = spark.read.parquet(target).drop("_last_batch")
-    agg = regs.agg(
-        F.sum(
-            F.expr(f"shiftleft(CAST(1 AS BIGINT), {_llm._HLL_TAIL_BITS} - r)")
-        ).alias("s_ne"),
-        F.count(F.lit(1)).alias("nb"),
-    )
-    s = (
-        F.col("s_ne")
-        + (F.lit(_llm._HLL_M) - F.col("nb"))
-        * F.shiftleft(F.lit(1).cast("long"), _llm._HLL_TAIL_BITS)
-    ).alias("s_scaled")
-    base = agg.select(
-        s, (F.lit(_llm._HLL_M) - F.col("nb")).cast("long").alias("zero_registers")
-    )
-    raw = F.round(
-        F.lit(_llm._HLL_NUM) / F.col("s_scaled").cast("double"), 4
-    )
-    lc = F.element_at(
-        F.array(*[F.lit(x) for x in _llm._HLL_LC]),
-        F.col("zero_registers").cast("int"),
-    )
-    est = F.when(
-        (raw <= F.lit(2.5 * _llm._HLL_M)) & (F.col("zero_registers") > 0), lc
-    ).otherwise(raw)
     docs = load_table(spark, "documents", sf_dir)
     exact = docs.select(F.explode(TXT.words("text")).alias("tok")).agg(
         F.countDistinct("tok").alias("distinct_exact")
     )
     return (
-        base.withColumn("hll_est", est)
+        sketches.hll_estimate(regs)
         .crossJoin(F.broadcast(exact))
         .select("distinct_exact", "hll_est", "zero_registers", "s_scaled")
     )
@@ -600,25 +510,10 @@ def s_interval_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: session-window state is per OPEN session per user,
     bounded by the watermark; the replay carries integer epoch seconds
     (no timestamp JSON parse surface)."""
-    tmp = _replay_dir(
-        spark,
-        sf_dir,
-        table="events",
-        cols=("event_id", "user_id", "ts_s"),
-        prefix="udlang_stream_interval",
+    fields = (("event_id", ast.T_INT), ("user_id", ast.T_INT), ("ts_s", ast.T_INT))
+    src = _replay_stream(
+        spark, sf_dir, "udlang_stream_interval", fields, table="events",
         select_exprs=("event_id", "user_id", "CAST(ts AS LONG) AS ts_s"),
-    )
-    ev_t = ast.TRecord(
-        (
-            ast.TRecordField("event_id", ast.T_INT),
-            ast.TRecordField("user_id", ast.T_INT),
-            ast.TRecordField("ts_s", ast.T_INT),
-        )
-    )
-    src = (
-        spark.readStream.schema(json_lift.input_schema(ev_t))
-        .option("mode", "FAILFAST")
-        .json(tmp)
     )
     iv = src.withColumn("ts", F.timestamp_seconds("ts_s")).withColumn(
         "gap",
@@ -687,11 +582,7 @@ def s_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("v"),
         F.col("event_id").alias("seq"),
     )
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    target = os.path.join(tempfile.gettempdir(), f"udlang_cdc_target_{tag}")
-    ckpt = os.path.join(tempfile.gettempdir(), f"udlang_cdc_ckpt_{tag}")
-    shutil.rmtree(target, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    target, ckpt = _fresh_sink("cdc", sf_dir)
     runner.run_cdc_apply_stream(
         spark, src, target, ckpt, key="k", seq_col="seq"
     )
@@ -708,8 +599,8 @@ ORDER BY k
 
 
 def _hll_stream_oracle() -> str:
-    m, tb = _llm._HLL_M, _llm._HLL_TAIL_BITS
-    lc_list = "[" + ", ".join(repr(x) for x in _llm._HLL_LC) + "]"
+    m, tb = sketches.HLL_M, sketches.HLL_TAIL_BITS
+    lc_list = "[" + ", ".join(repr(x) for x in sketches.HLL_LC) + "]"
     return f"""
 WITH t AS (
   SELECT unnest(regexp_extract_all(lower(text), '\\S+')) AS tok FROM documents
@@ -737,7 +628,7 @@ agg AS (
 fin AS (
   SELECT s_ne + ({m} - nb) * (1::BIGINT << {tb}) AS s_scaled,
     CAST({m} - nb AS BIGINT) AS zero_registers,
-    round({_llm._HLL_NUM!r}
+    round({sketches.HLL_NUM!r}
           / CAST(s_ne + ({m} - nb) * (1::BIGINT << {tb}) AS DOUBLE), 4)
       AS raw_est
   FROM agg),
@@ -763,44 +654,23 @@ def s_kmv_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same runner: SUM (s_cms_merge), MAX (s_hll_stream), MIN-K (this).
     The drained k-set answers the distinct estimate exactly as the batch
     KMV (t_kmv_jaccard) does: (k−1)·2^48 / h_k, exact count below k."""
-    tmp = _replay_dir(
-        spark, sf_dir, table="documents", cols=("doc_id", "text"),
-        prefix="udlang_stream_kmv",
-    )
-    doc_t = ast.TRecord(
-        (ast.TRecordField("doc_id", ast.T_INT), ast.TRecordField("text", ast.T_STR))
-    )
-    src = (
-        spark.readStream.schema(json_lift.input_schema(doc_t))
-        .option("mode", "FAILFAST")
-        .option("maxFilesPerTrigger", _REPLAY_MFT)
-        .json(tmp)
-    )
+    src = _replay_stream(spark, sf_dir, "udlang_stream_kmv", _DOC_TEXT, mft=True)
     cells = src.select(F.explode(TXT.words("text")).alias("tok")).select(
-        _llm._kmv_hash_col(F.col("tok")).alias("h")
+        sketches.kmv_hash_col(F.col("tok")).alias("h")
     )
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    target = os.path.join(tempfile.gettempdir(), f"udlang_kmv_target_{tag}")
-    ckpt = os.path.join(tempfile.gettempdir(), f"udlang_kmv_ckpt_{tag}")
-    shutil.rmtree(target, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    target, ckpt = _fresh_sink("kmv", sf_dir)
     runner.run_sketch_merge_stream(
         spark, cells, target, ckpt,
-        cell_cols=("h",), mode="min_k", k=_llm._KMV_K,
+        cell_cols=("h",), mode="min_k", k=sketches.KMV_K,
     )
     kset = spark.read.parquet(target).drop("_last_batch")
     agg = kset.agg(F.count("h").alias("k_eff"), F.max("h").alias("hk"))
-    est = F.round(
-        F.when(
-            F.col("k_eff") < _llm._KMV_K, F.col("k_eff").cast("double")
-        ).otherwise(F.lit(_llm._KMV_NUM) / F.col("hk").cast("double")),
-        4,
-    )
+    est = sketches.kmv_estimate(F.col("k_eff"), F.col("hk"))
     return agg.select("k_eff", est.alias("est_distinct"))
 
 
 def _kmv_stream_oracle() -> str:
-    k = _llm._KMV_K
+    k = sketches.KMV_K
     return f"""
 WITH t AS (
   SELECT DISTINCT CAST(CAST(concat('0x', substr(md5('kmv:' || tok), 1, 12))
@@ -810,7 +680,7 @@ WITH t AS (
 ak AS (SELECT h FROM t ORDER BY h LIMIT {k})
 SELECT count(*) AS k_eff,
   round(CASE WHEN count(*) < {k} THEN CAST(count(*) AS DOUBLE)
-             ELSE {_llm._KMV_NUM!r} / CAST(max(h) AS DOUBLE) END, 4)
+             ELSE {sketches.KMV_NUM!r} / CAST(max(h) AS DOUBLE) END, 4)
     AS est_distinct
 FROM ak
 """
@@ -837,23 +707,9 @@ def s_shard_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment row-for-row, through the real partitioned sink."""
     from udlang_spark.operators.indexing import shard_census, shard_plan
 
-    tmp = _replay_dir(
-        spark, sf_dir, table="documents", cols=("doc_id",),
-        prefix="udlang_stream_shard",
-    )
-    doc_t = ast.TRecord((ast.TRecordField("doc_id", ast.T_INT),))
-    src = (
-        spark.readStream.schema(json_lift.input_schema(doc_t))
-        .option("mode", "FAILFAST")
-        .option("maxFilesPerTrigger", _REPLAY_MFT)
-        .json(tmp)
-    )
+    src = _replay_stream(spark, sf_dir, "udlang_stream_shard", (_DOC_ID,), mft=True)
     assign = shard_plan(src, "doc_id", n_shards=64)
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    target = os.path.join(tempfile.gettempdir(), f"udlang_shard_target_{tag}")
-    ckpt = os.path.join(tempfile.gettempdir(), f"udlang_shard_ckpt_{tag}")
-    shutil.rmtree(target, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    target, ckpt = _fresh_sink("shard", sf_dir)
     runner.run_stream_to_parquet(assign, target, ckpt, partition_by=("shard",))
     # explicit read schema: a zero-row source commits batches but writes no
     # data files, which inference can't read (degenerate-sweep pin); shard
@@ -868,7 +724,7 @@ def s_shard_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s_maxsim_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Late-interaction scoring at INGEST — the streaming twin of
     t_maxsim_topk: the per-doc MaxSim maxima are computed by the row-local
-    HOF form (llm._msim_hof_max_cols — tokenize, per-query-token
+    HOF form (similarity.maxsim_hof_max_cols — tokenize, per-query-token
     max-cosine over the record's own token list), a pure per-record map
     with NO state, so the scoring runs unchanged on a readStream; the
     sink appends the reduced (doc_id, maxima) relation — the stored
@@ -878,32 +734,13 @@ def s_maxsim_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation, so this query shares ORACLE_T_MAXSIM verbatim: a green row
     proves stream scoring == batch scoring row-for-row through the real
     exactly-once parquet sink."""
-    tmp = _replay_dir(
-        spark, sf_dir, table="documents", cols=("doc_id", "text"),
-        prefix="udlang_stream_msim",
-    )
-    doc_t = ast.TRecord(
-        (
-            ast.TRecordField("doc_id", ast.T_INT),
-            ast.TRecordField("text", ast.T_STR),
-        )
-    )
-    src = (
-        spark.readStream.schema(json_lift.input_schema(doc_t))
-        .option("mode", "FAILFAST")
-        .option("maxFilesPerTrigger", _REPLAY_MFT)
-        .json(tmp)
-    )
+    src = _replay_stream(spark, sf_dir, "udlang_stream_msim", _DOC_TEXT, mft=True)
     scored = (
-        src.select("doc_id", F.expr(_llm._msim_tvn_sql()).alias("tvn"))
+        src.select("doc_id", F.expr(similarity.maxsim_tvn_sql()).alias("tvn"))
         .filter(F.expr("size(tvn) > 0"))
-        .select("doc_id", *_llm._msim_hof_max_cols())
+        .select("doc_id", *similarity.maxsim_hof_max_cols())
     )
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    target = os.path.join(tempfile.gettempdir(), f"udlang_msim_target_{tag}")
-    ckpt = os.path.join(tempfile.gettempdir(), f"udlang_msim_ckpt_{tag}")
-    shutil.rmtree(target, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    target, ckpt = _fresh_sink("msim", sf_dir)
     runner.run_stream_to_parquet(scored, target, ckpt)
     # explicit read schema (zero-row sources commit batches but write no
     # data files — the s_shard_stream degenerate-sweep pin)
@@ -913,7 +750,7 @@ def s_maxsim_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         if c != "doc_id"
     )
     maxes = spark.read.schema(schema).parquet(target)
-    return _llm._msim_topk_from_maxes(maxes)
+    return similarity.maxsim_topk_from_maxes(maxes)
 
 
 QUERIES = {
@@ -995,7 +832,7 @@ FROM events ORDER BY event_type, bucket
 """
 
 ORACLE_NEARDUP_STREAM = (
-    "WITH s AS (" + _llm._simhash_oracle() + ")\n"
+    "WITH s AS (" + _llm.ORACLE_SIMHASH + ")\n"
     "SELECT DISTINCT simhash FROM s ORDER BY simhash"
 )
 

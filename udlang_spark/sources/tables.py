@@ -128,3 +128,80 @@ def table_fingerprint(sf_dir: str, *names: str) -> str:
             st = os.stat(f)
             parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
     return hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
+
+
+# ---------------------------------------------------------------------------
+# on-disk index artifacts (persisted ANN / near-dup indexes): one directory
+# per build key under tempdir, completed by a marker file that holds the key
+# ---------------------------------------------------------------------------
+_BUILT = "_BUILT"
+
+
+def artifact_path(prefix: str, key: str) -> str:
+    """Directory of the artifact built for `key`: <tempdir>/<prefix>_<md5
+    tag>. Keys fold in table_fingerprint plus every layout parameter, so
+    regenerated source data or a layout change is a new directory, never a
+    silently stale index."""
+    import hashlib
+    import tempfile
+
+    tag = hashlib.md5(key.encode()).hexdigest()[:10]
+    return f"{tempfile.gettempdir()}/{prefix}_{tag}"
+
+
+def artifact_built(path: str) -> bool:
+    """True when the build at `path` completed (its marker exists)."""
+    return os.path.exists(os.path.join(path, _BUILT))
+
+
+def ensure_artifact(prefix: str, key: str, build) -> str:
+    """Build the artifact for `key` unless a completed build exists, and
+    return its path. A miss first retires stale generations, then calls
+    build(path), then writes the marker LAST — a crashed build leaves no
+    marker, so it is rebuilt, never read."""
+    path = artifact_path(prefix, key)
+    if not artifact_built(path):
+        gc_stale_artifacts(prefix, key, path)
+        build(path)
+        with open(os.path.join(path, _BUILT), "w") as fh:
+            fh.write(key)
+    return path
+
+
+def gc_stale_artifacts(prefix: str, key: str, path: str) -> None:
+    """Retire STALE GENERATIONS of the same logical artifact: sibling
+    <prefix>_* dirs whose marker records the same identity but a different
+    key — i.e. the build this one supersedes. Without this, every
+    source-data regeneration strands a dead index dir in tempdir forever.
+    Identity = the key minus its trailing 5 parameter fields (fingerprint
+    plus four layout fields), which no sf_dir path can fake since the
+    fingerprint is fixed-format hex. Unreadable/foreign dirs are left
+    alone."""
+    import glob
+    import shutil
+    import tempfile
+
+    ident = key.rsplit("|", 5)[0]
+    for sib in glob.glob(f"{tempfile.gettempdir()}/{prefix}_*"):
+        if os.path.abspath(sib) == os.path.abspath(path):
+            continue
+        try:
+            with open(os.path.join(sib, _BUILT)) as fh:
+                sib_key = fh.read()
+        except OSError:
+            continue  # unfinished/foreign dir: not ours to judge
+        if sib_key != key and sib_key.rsplit("|", 5)[0] == ident:
+            shutil.rmtree(sib, ignore_errors=True)
+
+
+def generation(path: str) -> int:
+    """Build-GENERATION token for plan-cache keys: the marker's mtime_ns.
+    A cached probe plan snapshots the index file listing at analysis
+    time; an in-session rebuild at the SAME path (a forced rebuild, or a
+    deleted marker re-triggering the build) rewrites those files, so the
+    key must change with the build, not just the path. -1 (no marker yet)
+    never collides with a real mtime."""
+    try:
+        return os.stat(os.path.join(path, _BUILT)).st_mtime_ns
+    except OSError:
+        return -1
