@@ -304,3 +304,109 @@ def test_bench_codegen_gate_attributes_errors_to_marked_query():
     finally:
         hits = gate.finish()
     assert hits == {"<session-setup>": 1, "q_alpha": 1, "q_beta": 2}
+
+
+# ---------------------------------------------------------------------------
+# parquet schema memo: a table's schema is inferred once per (files,
+# inference confs); every later read passes it and launches no Spark job
+# ---------------------------------------------------------------------------
+def _jobs_during(spark, fn):
+    """(fn(), number of Spark jobs fn launched), counted through a job
+    group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count construction jobs")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _copy_table(tmp_path, name):
+    shutil.copyfile(f"{SF_DIR_SMOKE}/{name}.parquet", tmp_path / f"{name}.parquet")
+    return str(tmp_path)
+
+
+@pytest.mark.parametrize("name", ["lineitem", "events"])
+def test_second_load_launches_no_job(spark, tmp_path, name):
+    sf = _copy_table(tmp_path, name)
+    first, n_first = _jobs_during(spark, lambda: load_table(spark, name, sf))
+    again, n_again = _jobs_during(spark, lambda: load_table(spark, name, sf))
+    assert n_first >= 1  # the inferring read
+    assert n_again == 0
+    assert again.schema == first.schema
+    if name == "events":
+        assert again.schema["ts"].dataType.typeName() == "timestamp"
+    assert sorted(again.collect()) == sorted(first.collect())
+
+
+def test_rewritten_table_reinfers(spark, tmp_path):
+    import pyarrow.parquet as pq
+
+    sf = _copy_table(tmp_path, "region")
+    assert load_table(spark, "region", sf).columns == ["r_regionkey", "r_name"]
+    path = tmp_path / "region.parquet"
+    t = pq.read_table(path)
+    pq.write_table(t.drop(["r_name"]).append_column("r_extra", t.column(0)), path)
+    after, n = _jobs_during(spark, lambda: load_table(spark, "region", sf))
+    assert n >= 1
+    assert after.columns == ["r_regionkey", "r_extra"]
+    assert after.count() == t.num_rows
+
+
+def test_inference_conf_flip_reinfers(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sf = _copy_table(tmp_path, "region")
+    path = tmp_path / "region.parquet"
+    t = pq.read_table(path)
+    i = t.schema.get_field_index("r_name")
+    # an un-annotated BINARY column: its Spark type follows binaryAsString
+    pq.write_table(t.set_column(i, "r_name", t.column(i).cast(pa.binary())), path)
+
+    conf = "spark.sql.parquet.binaryAsString"
+    old = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "false")
+        raw = load_table(spark, "region", sf)
+        assert raw.schema["r_name"].dataType.typeName() == "binary"
+        spark.conf.set(conf, "true")
+        text, n = _jobs_during(spark, lambda: load_table(spark, "region", sf))
+        assert n >= 1
+        assert text.schema["r_name"].dataType.typeName() == "string"
+    finally:
+        spark.conf.set(conf, old)
+    back, n = _jobs_during(spark, lambda: load_table(spark, "region", sf))
+    assert n >= 1  # the restored conf is a changed stamp again
+    assert back.schema["r_name"].dataType.typeName() == "binary"
+
+
+# The repository's own kernel queries; the ten k_* queries that read their
+# scripts from the external examples directory are left out.
+KERNEL_QUERIES = (
+    "k_filter", "k_mapiter", "k_match_lit", "k_match_union",
+    "k_comprehension", "k_cast", "k_tower", "k_generic", "k_builtins",
+    "k_modules", "k_methods", "k_pipeline", "k_spread", "k_attempt",
+    "k_point",
+)
+
+
+@pytest.mark.parametrize("name", KERNEL_QUERIES)
+def test_kernel_construction_launches_no_job(spark, name):
+    """With the table schemas known, building a kernel query — kernel
+    frontend, Column tree, analysis — runs no Spark job, even with the
+    compile cache and plan_cache cleared."""
+    from udlang_spark.kernel import api
+    from udlang_spark.queries import QUERIES
+    from udlang_spark.session import plan_cache
+
+    QUERIES[name](spark, SF_DIR_SMOKE)
+    api._compile_kernel_cached.cache_clear()
+    plan_cache.clear()
+    df, n = _jobs_during(spark, lambda: QUERIES[name](spark, SF_DIR_SMOKE))
+    assert n == 0
+    assert df.columns

@@ -9,6 +9,8 @@ Writes <out>/<query><suffix> with the formatted physical plan, the same
 capture the optimization-round plan claims are checked against. Streaming
 queries drain first (the dumped plan is the drained batch result's plan;
 the streaming micro-batch plans are pinned by tests/test_streaming.py).
+An unregistered name is named on stderr; the rest still dump, and the tool
+then exits non-zero.
 """
 
 from __future__ import annotations
@@ -36,9 +38,11 @@ def main() -> None:
     os.makedirs(args.out, exist_ok=True)
     spark = get_spark("udlang_spark_plan_dump")
     spark.sparkContext.setLogLevel("ERROR")
+    unknown = []
     for name in args.names:
         if name not in QUERIES:
-            print(f"SKIP {name}: not registered")
+            print(f"FAILED {name}: not a registered query", file=sys.stderr)
+            unknown.append(name)
             continue
         df = QUERIES[name](spark, args.sf)
         buf = io.StringIO()
@@ -49,6 +53,8 @@ def main() -> None:
             f.write(buf.getvalue())
         print(f"wrote {path} ({len(buf.getvalue())} chars)")
     spark.stop()
+    if unknown:
+        sys.exit(f"dump_plans: {len(unknown)} unregistered: {', '.join(unknown)}")
 
 
 if __name__ == "__main__":

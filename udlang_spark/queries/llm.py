@@ -320,7 +320,6 @@ def d_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (measured 0.78 s/call at sf0.1) and keeps exprIds stable for codegen
     cache hits; every run re-executes shingling, banding, the candidate
     join, and the exact-jaccard verify from parquet."""
-    docs = load_table(spark, "documents", sf_dir)
     key = ("inc_neardup", sf_dir, table_fingerprint(sf_dir, "documents"))
     hit = plan_cache.get(spark, key)
     if hit is not None:
@@ -328,6 +327,7 @@ def d_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         for df in pins:
             persist_tracked(df)  # re-arm shared-relation caching
         return res
+    docs = load_table(spark, "documents", sf_dir)
     pins: list = []
     res = dedup.incremental_neardup(
         docs.filter(F.col("doc_id") % 5 != 0),
@@ -420,9 +420,9 @@ def d_neardup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     (persisted relations are re-armed on hit, recomputed from parquet
     after any release_caches())."""
     key = _neardup_idx_key(sf_dir)
-    docs = load_table(spark, "documents", sf_dir)
 
     def build(path: str) -> None:
+        docs = load_table(spark, "documents", sf_dir)
         dedup.write_neardup_index(
             docs.filter(F.col("doc_id") % 5 == 1), "text", "doc_id", path
         )
@@ -444,6 +444,7 @@ def d_neardup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             persist_tracked(df)  # re-arm shared-relation caching
         return res
     pins: list = []
+    docs = load_table(spark, "documents", sf_dir)
     res = dedup.probe_neardup_index(
         spark,
         path,
@@ -2691,7 +2692,6 @@ def e_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     query's cost) and keeps exprIds stable for codegen cache hits; every
     run re-executes the signature build, the broadcast join, xor+
     bit_count scoring, and the top-k window from parquet."""
-    emb = load_table(spark, "embeddings", sf_dir)
     key = ("hamming", sf_dir, table_fingerprint(sf_dir, "embeddings"))
     hit = plan_cache.get(spark, key)
     if hit is not None:
@@ -2699,6 +2699,7 @@ def e_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         for df in pins:
             persist_tracked(df)  # re-arm shared-relation caching
         return res
+    emb = load_table(spark, "embeddings", sf_dir)
     pins: list = []
     res = similarity.hamming_topk(
         emb, "embedding", "vec_id", _MMR_QUERY_IDS, k=10, pins=pins

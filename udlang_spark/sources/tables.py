@@ -5,6 +5,14 @@ stdin/stdout only); file connectors are an engine extension (SURVEY.md §2.1).
 Here the batch source is parquet via ``spark.read`` — filter pushdown and
 column pruning reach the scan for free, which is the load-bearing property at
 100 TB (verified via .explain: PushedFilters / ReadSchema).
+
+A schema-less ``spark.read.parquet`` runs a Spark job that reads the file
+footers to infer the schema, on every call — one job per table per query
+construction. As Structured Streaming does for file sources, every read
+here passes a known schema instead: Spark's own inferred ``StructType`` is
+kept per table path, inferred once per (files, inference confs) — the
+files' ``table_fingerprint`` plus the values of the confs that change what
+parquet inference returns. Regenerated files or a flipped conf re-infer.
 """
 
 from __future__ import annotations
@@ -12,6 +20,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -58,9 +67,38 @@ def fan_out(df: DataFrame, target: int | None = None) -> DataFrame:
     return df
 
 
+# Confs whose values change the schema parquet inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# table path -> (stamp, inferred schema); one entry per path, replaced when
+# its stamp changes.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """spark.read.parquet with the schema Spark inferred for the same files
+    under the same inference confs; infers (one footer-reading job) only
+    on a first read or a changed stamp."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    stamp = (table_fingerprint(sf_dir, name),) + tuple(
+        spark.conf.get(c) for c in _INFERENCE_CONFS
+    )
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (stamp, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     sf_dir = sf_dir or DEFAULT_SF_DIR
-    path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         # events.ts has shipped as INT64 TIMESTAMP(NANOS) in some testdata
         # generations and TIMESTAMP(MICROS) in others; normalize both to
@@ -76,7 +114,7 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
         # events will also surface them as longs. None of this repo's
         # tables besides events carry nanos columns.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, sf_dir, name)
         from pyspark.sql import functions as F
         from pyspark.sql.types import LongType, TimestampNTZType
 
@@ -85,7 +123,7 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
         elif isinstance(df.schema["ts"].dataType, TimestampNTZType):
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     else:
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, sf_dir, name)
     return df
 
 
