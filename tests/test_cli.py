@@ -7,8 +7,10 @@ import os
 import subprocess
 import sys
 
+from udlang_spark.queries.kernels import EXAMPLES_DIR
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-HELLO = "/root/reference/examples/hello.us"
+HELLO = os.path.join(EXAMPLES_DIR, "hello.us")
 
 
 def _cli(*args: str, stdin: str | None = None) -> str:

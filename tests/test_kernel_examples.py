@@ -1,15 +1,14 @@
-"""Golden end-to-end outputs for all nine reference example kernels
-(SURVEY.md §5: examples/*.us are the reference's e2e suite; expected values
-derive from the documented semantics — e.g. examples/scopes.us:21,28 state
-their expected outputs in comments)."""
+"""Golden end-to-end outputs for the nine example kernels in
+udlang_spark/examples (SURVEY.md §5: one per script of the reference's e2e
+suite; expected values derive from the documented semantics, and each
+example states its expected outputs in comments)."""
 
 from __future__ import annotations
 
 import pytest
 
 from udlang_spark.kernel.api import compile_kernel_file
-
-EX = "/root/reference/examples"
+from udlang_spark.queries.kernels import EXAMPLES_DIR as EX
 
 
 def run_scalar(spark, path: str, rows: list, schema: str, max_depth: int = 48):
@@ -101,7 +100,7 @@ def test_conditional_out_is_filter(spark):
     assert out == [30, 40]
 
 
-def test_recursion_depth_poison(spark):
+def test_recursion_depth_poison_single_row(spark):
     from udlang_spark.kernel.api import compile_kernel_file
 
     k = compile_kernel_file(f"{EX}/count.us", max_depth=5)
@@ -143,7 +142,7 @@ def test_recursion_depth_poison(spark):
 
     from udlang_spark.kernel.api import compile_kernel_file
 
-    k = compile_kernel_file("/root/reference/examples/count.us", max_depth=4)
+    k = compile_kernel_file(f"{EX}/count.us", max_depth=4)
     ok = spark.createDataFrame([(3,)], "v long")
     assert len(k.apply(ok, input_col="v").collect()) == 5  # 3,2,1,0 + proc None
     deep = spark.createDataFrame([(10,)], "v long")

@@ -1,7 +1,7 @@
-"""uDLang kernel queries: the reference's example programs
-(/root/reference/examples/*.us) compiled by udlang_spark.kernel and applied
-to driver testdata tables, each with a DuckDB oracle expressing the same
-semantics in SQL.
+"""uDLang kernel queries: the repository's example programs
+(udlang_spark/examples/*.us, one per example in the reference's e2e suite)
+compiled by udlang_spark.kernel and applied to driver testdata tables, each
+with a DuckDB oracle expressing the same semantics in SQL.
 
 These exercise the full frontend: parse → analysis → inline → Column
 compile → posexplode (multi-`out`), including recursion unrolling (fact,
@@ -19,7 +19,9 @@ from pyspark.sql import functions as F
 from udlang_spark.kernel.api import compile_kernel, compile_kernel_file
 from udlang_spark.sources.tables import load_table
 
-EXAMPLES_DIR = "/root/reference/examples"
+EXAMPLES_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "examples"
+)
 
 
 def _example(name: str):
@@ -659,7 +661,7 @@ FROM lineitem
 """
 
 def k_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """reference examples/loop.us verbatim: a constant-list `for` loop
+    """examples/loop.us: a constant-list `for` loop
     calling a Float→Float func per element, with the declared Int output
     truncating each result (9c/5+32 for c=1,2,3 → 33.8, 35.6, 37.4 →
     33, 35, 37 per input record). Completes per-example parity: every
@@ -678,7 +680,7 @@ FROM events, (SELECT unnest([33, 35, 37]) AS out) u
 
 
 def k_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """reference examples/simple.us verbatim: nested function calls
+    """examples/simple.us: nested function calls
     foo(c) = 2·bar(c), bar(c) = c − 1 over the Float view of the input,
     truncated by the declared Int output — inlining depth 2, no loops."""
     ev = load_table(spark, "events", sf_dir)
