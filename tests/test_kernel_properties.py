@@ -2,9 +2,10 @@
 
 Two invariants:
 1. Constant folding ≡ column evaluation: for random constant expressions,
-   the compiler's Python fold (`fold_bin`) and Spark's evaluation of the
-   same expression over a column must agree — i.e. compile-time partial
-   evaluation never changes semantics (the stackfolder property).
+   the compiler's Python fold (the interpreter's value functions) and
+   Spark's evaluation of the same expression over a column must agree —
+   i.e. compile-time partial evaluation never changes semantics (the
+   stackfolder property).
 2. Type mapping round-trip: every constructible uDLang type lowers to a
    Spark DataType, and values of that type survive a Spark round-trip.
 """
@@ -954,6 +955,123 @@ def test_fold_bin_null_operand_still_validates_types():
 
     val, _ = compile_expr(A.Bin("+", null_int, A.Lit(3)))
     assert isinstance(val, SConst) and val.value is None
+
+
+# Operands for the mixed-type fold family: each literal next to a
+# Column of the same value over the input record "" (built from `in`, so
+# the compiler cannot fold it).
+MIXED_OPERANDS = {
+    "true": "(length(in) == 0)",
+    "false": "(length(in) > 0)",
+    "0": "(length(in) + 0)",
+    "1": "(length(in) + 1)",
+    "2": "(length(in) + 2)",
+    "-3": "(length(in) - 3)",
+    "1.5": "((length(in) as Float) + 1.5)",
+    '"a"': '(in + "a")',
+    '"b"': '(in + "b")',
+}
+MIXED_OPS = ("==", "<", ">", "<=", ">=", "and", "or", "xor")
+
+
+def test_mixed_constant_ops_fold_column_interp_agree(spark):
+    """fold ≡ Column ≡ interpreter for comparisons and logic over mixed
+    Bool/Int/Float/Str operands. An operand pair the Column arm rejects
+    must be rejected by the fold too; every accepted pair must give the
+    same value folded, as a Column and in the interpreter. The fold once
+    skipped the unify check of `==`, so `true == 1` folded to true while
+    the other two paths gave false."""
+    import itertools
+
+    from pyspark.sql import functions as F
+
+    from udlang_spark.kernel import ast as A
+    from udlang_spark.kernel.compiler import BUILTINS, Compiler, SCol, SConst
+    from udlang_spark.kernel.interp import Interp
+    from udlang_spark.kernel.parser import parse, parse_expr
+    from udlang_spark.kernel.types import KernelTypeError
+
+    comp = Compiler(
+        A.Program("script", "mixed", (), A.T_STR, A.T_BOOL, ())
+    )
+    env = {**BUILTINS, "in": SCol(F.col("value"), A.T_STR)}
+
+    def typed(src):
+        try:
+            return comp.compile_expr(parse_expr(src), env)[0]
+        except KernelTypeError:
+            return None
+
+    def program(out_t, exprs):
+        body = "".join(f"out {e};\n" for e in exprs)
+        return (
+            f'version 0.1-pre_mvp;\nscript "mixed";\ninput Str;\n'
+            f"output {out_t};\n{body}"
+        )
+
+    accepted: dict[str, list[tuple[str, str]]] = {}
+    rejected = 0
+    for op, (lit_a, col_a), (lit_b, col_b) in itertools.product(
+        MIXED_OPS, MIXED_OPERANDS.items(), MIXED_OPERANDS.items()
+    ):
+        f_src, c_src = f"{lit_a} {op} {lit_b}", f"{col_a} {op} {col_b}"
+        folded, column = typed(f_src), typed(c_src)
+        assert (folded is None) == (column is None), f_src
+        if folded is None:
+            rejected += 1
+            continue
+        assert isinstance(folded, SConst), f_src
+        assert folded.type == column.type, f_src
+        # repr: True and 1 compare equal in Python
+        want = Interp(parse(program(folded.type.name, [f_src]))).run("")
+        assert [repr(folded.value)] == [repr(v) for v in want], f_src
+        accepted.setdefault(folded.type.name, []).append((f_src, c_src))
+    assert rejected and set(accepted) == {"Bool", "Int"}
+
+    df = spark.createDataFrame([("",)], "value string")
+    for out_t, pairs in accepted.items():
+        src = program(out_t, [e for pair in pairs for e in pair])
+        rows = compile_kernel(src).apply(df, with_pos=True).collect()
+        compiled = [r.out for r in sorted(rows, key=lambda r: r.pos)]
+        interp = Interp(parse(src)).run("")
+        for i, (f, c) in enumerate(pairs):
+            assert compiled[2 * i] == compiled[2 * i + 1], (f, c)
+        assert compiled == interp
+
+
+def test_int_pow_negative_exponent_keeps_both_behaviours(spark, sdf):
+    """`Int ^ negative Int`: the fold and the Column arm compute pow() in
+    double and truncate (2 ^ -1 → 0); the interpreter rejects the negative
+    exponent (the reference casts it to u32)."""
+    from udlang_spark.kernel.interp import Interp, InterpError
+    from udlang_spark.kernel.parser import parse
+
+    def src(expr):
+        return (
+            'version 0.1-pre_mvp;\nscript "p";\ninput Int;\noutput Int;\n'
+            f"out {expr};\n"
+        )
+
+    for a in (2, -2, 1, -1):
+        folded = compile_kernel(src(f"({a}) ^ (0 - 1)"))
+        column = compile_kernel(src(f"(in * 0 + {a}) ^ (0 - 1)"))
+        got_f = folded.apply(sdf, input_col="v").collect()[0].out
+        got_c = column.apply(sdf, input_col="v").collect()[0].out
+        assert got_f == got_c == int(a**-1)
+        with pytest.raises(InterpError, match="negative"):
+            Interp(parse(src(f"({a}) ^ (0 - 1)"))).run(1)
+
+
+def test_builtin_names_and_arities_match_on_both_paths():
+    """The compiled path and the interpreter expose the same builtin
+    library: one name/arity table builds both."""
+    from udlang_spark.kernel.compiler import BUILTINS, METHOD_BUILTINS
+    from udlang_spark.kernel.interp import _NATIVES, BUILTIN_ARITY
+
+    compiled = {name: f.arity for name, f in BUILTINS.items()}
+    interp = {name: f.arity for name, f in _NATIVES.items()}
+    assert compiled == interp == BUILTIN_ARITY
+    assert METHOD_BUILTINS <= set(BUILTINS)
 
 
 def _attempt_source_strategy():

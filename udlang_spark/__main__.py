@@ -36,14 +36,13 @@ def _compile(path: str) -> int:
 
     from udlang_spark.kernel import ast
     from udlang_spark.kernel.api import compile_kernel_file
-    from udlang_spark.kernel.compiler import Compiler, SCol
+    from udlang_spark.kernel.compiler import SCol
     from udlang_spark.session import get_spark
 
     spark = get_spark("udlang_compile")  # Column exprs live on the JVM
     spark.sparkContext.setLogLevel("ERROR")
     k = compile_kernel_file(path)
-    comp = Compiler(k.program, k.max_depth, k.libs)
-    it = comp.resolve_type(k.program.input)
+    it = k.resolved_input
     if isinstance(it, ast.TRecord):
         in_val = SCol(F.struct(*[F.col(f.name) for f in it.fields]), it)
     else:

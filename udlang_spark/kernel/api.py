@@ -8,7 +8,7 @@ unchanged on `spark.readStream` inputs (see udlang_spark/streaming/).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from functools import lru_cache
+from functools import cached_property, lru_cache
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -23,7 +23,13 @@ from udlang_spark.kernel.compiler import (
     sized_range_check,
 )
 from udlang_spark.kernel.parser import parse
-from udlang_spark.kernel.types import KernelTypeError, is_sized_int, to_spark
+from udlang_spark.kernel.types import (
+    KernelTypeError,
+    collect_typedefs,
+    is_sized_int,
+    resolve_type,
+    to_spark,
+)
 
 
 @dataclass
@@ -48,6 +54,16 @@ class Kernel:
     def output_type(self) -> ast.Type:
         return self.program.output
 
+    # the declared types in structural form (aliases, generics and value
+    # types resolved), resolved once per kernel
+    @cached_property
+    def resolved_input(self) -> ast.Type:
+        return resolve_type(self.program.input, collect_typedefs(self.program))
+
+    @cached_property
+    def resolved_output(self) -> ast.Type:
+        return resolve_type(self.program.output, collect_typedefs(self.program))
+
     def outputs_column(self, in_val: SVal) -> Column:
         """array<output> Column for one input record symbol. Compiled with
         hoisting disabled so the result is a single self-contained
@@ -67,10 +83,9 @@ class Kernel:
         return outs, dbg, tuple(c.bindings)
 
     def _in_sval(self, df: DataFrame, input_col: str | None) -> SVal:
-        # resolve aliases/value-types so `in` carries a structural type
-        # (e.g. `input "Hello" | "Goodnight"` is Str; unions are tagged
-        # structs)
-        it = Compiler(self.program, self.max_depth, self.libs).resolve_type(self.program.input)
+        # the resolved type, so `in` carries a structural type (e.g.
+        # `input "Hello" | "Goodnight"` is Str; unions are tagged structs)
+        it = self.resolved_input
         if isinstance(it, ast.TRecord):
             struct = F.struct(
                 *[F.col(f.name).alias(f.name) for f in it.fields]
@@ -103,9 +118,7 @@ class Kernel:
         import pandas as pd
         from pyspark.sql.types import StructField, StructType
 
-        comp = Compiler(self.program, self.max_depth, self.libs)
-        it = comp.resolve_type(self.program.input)
-        if isinstance(it, ast.TRecord):
+        if isinstance(self.resolved_input, ast.TRecord):
             raise KernelTypeError(
                 "recursion='interp' supports scalar-input kernels "
                 "(record inputs: use the compiled path)"
@@ -116,9 +129,10 @@ class Kernel:
                     "scalar-input kernel on a multi-column DataFrame: pass input_col"
                 )
             input_col = df.columns[0]
-        ot = comp.resolve_type(self.program.output)
         fields = [df.schema[c] for c in keep]
-        schema = StructType(fields + [StructField(out_name, to_spark(ot), True)])
+        schema = StructType(
+            fields + [StructField(out_name, self.output_spark_type(), True)]
+        )
         prog = self.program
         in_col = input_col
 
@@ -164,10 +178,7 @@ class Kernel:
     def _resolved_input_col(self, df: DataFrame, input_col: str | None) -> str | None:
         """The column name `in` binds to — the only df-dependent part of
         expression construction (and only when input_col defaults)."""
-        it = Compiler(self.program, self.max_depth, self.libs).resolve_type(
-            self.program.input
-        )
-        if isinstance(it, ast.TRecord):
+        if isinstance(self.resolved_input, ast.TRecord):
             return None  # record inputs bind by field names, not input_col
         if input_col is None:
             if len(df.columns) != 1:
@@ -227,7 +238,7 @@ class Kernel:
                 val, outs = comp.compile_expr(stmt.value, env)
                 if outs is not None:
                     return ("none",)
-                out_col = comp.coerce_to(val, comp.resolve_type(self.program.output))
+                out_col = comp.coerce_to(val, self.resolved_output)
             return ("out", out_col, tuple(comp.bindings))
         if (
             isinstance(stmt, ast.ExprStmt)
@@ -247,7 +258,7 @@ class Kernel:
             oval, oouts = comp.compile_expr(block.stmts[0].value, env)
             if pouts is not None or oouts is not None:
                 return ("none",)
-            out_col = comp.coerce_to(oval, comp.resolve_type(self.program.output))
+            out_col = comp.coerce_to(oval, self.resolved_output)
             from udlang_spark.kernel.compiler import as_col
 
             return ("filter", as_col(pval), out_col)
@@ -318,7 +329,7 @@ class Kernel:
         return sel
 
     def output_spark_type(self):
-        return to_spark(Compiler(self.program, libs=self.libs).resolve_type(self.program.output))
+        return to_spark(self.resolved_output)
 
 
 @lru_cache(maxsize=256)

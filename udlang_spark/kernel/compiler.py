@@ -13,10 +13,15 @@ Recursion cannot inline; it unrolls to a configurable depth with a
 raise_error poison beyond (fact/count examples), keeping everything inside
 whole-stage codegen instead of falling back to Python UDFs.
 
-Constants fold at compile time with the reference's Int semantics (i64
-truncating div/mod — src/ir.rs:622-630); `for` over a constant list unrolls
-(the loop body is re-inlined per element); `for` over a runtime list lowers
-to flatten(transform(...)), i.e. stays a vectorized higher-order function.
+Constants fold at compile time by calling the interpreter's value
+functions (kernel/interp.py: binop, unop, cast_value, SCALAR_BUILTINS — the
+reference's i64 truncating div/mod, src/ir.rs:622-630, among them), so both
+execution paths and the fold share one copy of the value semantics; this
+module keeps only the type checks and result typing. Declared types resolve
+through types.resolve_type, the resolver the interpreter uses too. `for`
+over a constant list unrolls (the loop body is re-inlined per element);
+`for` over a runtime list lowers to flatten(transform(...)), i.e. stays a
+vectorized higher-order function.
 """
 
 from __future__ import annotations
@@ -29,13 +34,22 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from udlang_spark.kernel import ast
+from udlang_spark.kernel.interp import (
+    BUILTIN_ARITY,
+    SCALAR_BUILTINS,
+    InterpError,
+    binop,
+    cast_value,
+    unop,
+)
 from udlang_spark.kernel.types import (
-    NUMERIC_ALIASES,
     SIZED_INTS,
     KernelTypeError,
     collapse_sized,
+    collect_typedefs,
     is_sized_int,
     python_type_of,
+    resolve_type,
     to_spark,
     type_tag,
     unify,
@@ -197,6 +211,24 @@ def vtype(v: SVal) -> ast.Type:
     raise KernelCompileError("function value has no data type")
 
 
+def bin_type(op: str, t: ast.Type, ta: ast.Type, tb: ast.Type) -> ast.Type:
+    """Result type of `a op b` over operands unified to t (src/ir.rs:
+    607-695); raises where the reference op table has no arm."""
+    if op in ("+", "-", "*", "/", "%", "^") and t in (ast.T_INT, ast.T_FLOAT):
+        return t
+    if op == "+" and t is ast.T_STR:
+        return t
+    if op in ("and", "or", "xor") and t in (ast.T_BOOL, ast.T_INT):
+        return t
+    if op in ("<", ">", "<=", ">="):
+        if t not in (ast.T_INT, ast.T_FLOAT, ast.T_STR):
+            raise KernelTypeError(f"relational {op} on {t!r}")
+        return ast.T_BOOL
+    if op == "==":
+        return ast.T_BOOL
+    raise KernelTypeError(f"operator {op} not defined for {ta!r}, {tb!r}")
+
+
 # --------------------------------------------------------------------------
 # Compiler
 # --------------------------------------------------------------------------
@@ -253,11 +285,7 @@ class Compiler:
         self.libs = libs or {}
         self._module_cache: dict[str, tuple[dict, dict]] = {}
         # pre-scan type aliases so input/output decls may reference them
-        self.typedefs: dict[str, ast.Type] = {
-            d.name: d.type
-            for d in list(program.decls) + list(program.body)
-            if isinstance(d, ast.TypeDef)
-        }
+        self.typedefs = collect_typedefs(program)
         self.ctx = Ctx(
             out_spark_type=None,
             out_type=program.output,
@@ -364,84 +392,9 @@ class Compiler:
         self.bindings.append((name, col))
         return F.col(name)
 
-    # -- type aliases ----------------------------------------------------
-    # shared with the interpreter's pattern-type resolution (types.py) so
-    # the two execution paths alias the numeric tower identically
-    NUMERIC_ALIASES = NUMERIC_ALIASES
-
-    def resolve_type(self, t: ast.Type, _depth: int = 0) -> ast.Type:
-        from udlang_spark.kernel.types import (
-            MAX_TCONS_DEPTH,
-            apply_type_cons,
-        )
-
-        if _depth > MAX_TCONS_DEPTH:
-            raise KernelTypeError(
-                "type-constructor expansion exceeds depth "
-                f"{MAX_TCONS_DEPTH} (self-referential generic?)"
-            )
-        if isinstance(t, ast.TCons):
-            # generic application `Box<Int>` — monomorphize (SURVEY §2.11;
-            # the reference parses this form but never lowers it)
-            cons = t.cons
-            if not isinstance(cons, ast.TName):
-                raise KernelTypeError(f"cannot apply non-name type {cons!r}")
-            tf = self.typedefs.get(cons.name)
-            if not isinstance(tf, ast.TFunc):
-                raise KernelTypeError(
-                    f"{cons.name} is not a parameterized type (declare it "
-                    f"as `type {cons.name}<...>: ...;`)"
-                )
-            return self.resolve_type(
-                apply_type_cons(tf, cons.name, t.args), _depth + 1
-            )
-        if isinstance(t, ast.TName):
-            if t.name in self.typedefs:
-                td = self.typedefs[t.name]
-                if isinstance(td, ast.TFunc):
-                    raise KernelTypeError(
-                        f"type constructor {t.name} used without type "
-                        f"arguments ({t.name}<...> expected)"
-                    )
-                return self.resolve_type(td, _depth)
-            if t.name in self.NUMERIC_ALIASES:
-                return self.NUMERIC_ALIASES[t.name]
-            raise KernelTypeError(f"unknown type name {t.name}")
-        if isinstance(t, ast.TValue):
-            # value types constrain the domain, not the representation
-            return python_type_of(t.value)
-        if isinstance(t, ast.TOption):
-            return ast.TOption(self.resolve_type(t.inner, _depth))
-        if isinstance(t, ast.TList):
-            return ast.TList(self.resolve_type(t.item, _depth))
-        if isinstance(t, ast.TMap):
-            return ast.TMap(self.resolve_type(t.value, _depth))
-        if isinstance(t, ast.TTuple):
-            return ast.TTuple(
-                tuple(self.resolve_type(i, _depth) for i in t.items)
-            )
-        if isinstance(t, ast.TRecord):
-            # record fields resolve too — a generic body is usually a
-            # record over the parameters (`type Box<T>: {field v: T;};`)
-            return ast.TRecord(
-                tuple(
-                    ast.TRecordField(f.name, self.resolve_type(f.type, _depth))
-                    for f in t.fields
-                ),
-                methods=t.methods,
-            )
-        if isinstance(t, ast.TUnion):
-            # `"Hello" | "Goodnight"` collapses to Str — only unions with
-            # genuinely distinct representations need the tagged struct
-            variants: list[ast.Type] = []
-            for v in t.variants:
-                rv = self.resolve_type(v, _depth)
-                if rv not in variants:
-                    variants.append(rv)
-            if len(variants) == 1:
-                return variants[0]
-            return ast.TUnion(tuple(variants))
-        return t
+    def resolve_type(self, t: ast.Type) -> ast.Type:
+        # the typedefs in scope grow as `import` statements link libs
+        return resolve_type(t, self.typedefs)
 
     # -- entry -----------------------------------------------------------
     def compile(self, in_val: SVal) -> Column:
@@ -877,29 +830,32 @@ class Compiler:
             pairs.append(self.coerce_to(v, val_t))
         return SCol(F.create_map(*pairs), ast.TMap(val_t)), outs
 
-    # arithmetic with the reference's Int semantics (src/ir.rs:607-695)
-    @staticmethod
-    def _trunc_div(a: int, b: int) -> int:
-        q = abs(a) // abs(b)
-        return q if (a >= 0) == (b >= 0) else -q
-
-    @staticmethod
-    def _trunc_mod(a: int, b: int) -> int:
-        return a - b * Compiler._trunc_div(a, b)
-
     def compile_bin(self, expr: ast.Bin, env: dict):
         a, outs_a = self.compile_expr(expr.a, env)
         b, outs_b = self.compile_expr(expr.b, env)
         outs = concat_outs(self.ctx, [outs_a, outs_b])
         op = expr.op
         ta, tb = vtype(a), vtype(b)
+        try:
+            t = unify(ta, tb)
+        except KernelTypeError:
+            if op == "==":
+                # cross-type equality is `false`, never an error (src/ir.rs:679-695)
+                return SConst(False, ast.T_BOOL), outs
+            raise
+        rtype = bin_type(op, t, ta, tb)
 
         if isinstance(a, SConst) and isinstance(b, SConst) and not isinstance(
             a.value, (list, dict)
         ) and not isinstance(b.value, (list, dict)):
-            return SConst(*self.fold_bin(op, a, b)), outs
+            x, y = a.value, b.value
+            if op == "^" and t is ast.T_INT and None not in (x, y) and y < 0:
+                # the interpreter rejects a negative Int exponent; the Column
+                # arm below computes pow() in double and truncates, and so
+                # does the fold
+                return SConst(int(binop(op, float(x), float(y))), rtype), outs
+            return SConst(binop(op, x, y), rtype), outs
 
-        t = unify(ta, tb) if op not in ("==",) else None
         ca, cb = as_col(a), as_col(b)
         if t is ast.T_INT and op in ("+", "-"):
             # affine folding: (base + k) ± c → base + (k ± c). Int-only —
@@ -916,30 +872,29 @@ class Compiler:
                 base, off = base_off
                 col = base + F.lit(off) if off != 0 else base
                 return SCol(col, ast.T_INT, affine=(base, off)), outs
-        if op in ("+", "-", "*", "/", "^", "%") and t in (ast.T_INT, ast.T_FLOAT):
-            if t is ast.T_FLOAT:
-                ca, cb = ca.cast("double"), cb.cast("double")
-            if op == "+":
-                return SCol(ca + cb, t), outs
-            if op == "-":
-                return SCol(ca - cb, t), outs
-            if op == "*":
-                return SCol(ca * cb, t), outs
-            if op == "/":
-                if t is ast.T_INT:
-                    # i64 truncating division (src/ir.rs:622-625): Spark's
-                    # `div` function is integral divide, truncation toward 0
-                    return SCol(F.call_function("div", ca, cb), ast.T_INT), outs
-                return SCol(ca / cb, t), outs
-            if op == "%":
-                return SCol(ca % cb, t), outs  # Spark % == Rust % (sign of dividend)
-            if op == "^":
-                p = F.pow(ca, cb)
-                return SCol(p.cast("long") if t is ast.T_INT else p, t), outs
-        if op == "+" and t is ast.T_STR:
-            # intended string concat (README.md:120; arm missing in the
-            # reference op table — SURVEY.md §7.5 "reference bugs")
-            return SCol(F.concat(ca, cb), ast.T_STR), outs
+        if t is ast.T_FLOAT:
+            ca, cb = ca.cast("double"), cb.cast("double")
+        if op == "+":
+            if t is ast.T_STR:
+                # intended string concat (README.md:120; arm missing in the
+                # reference op table — SURVEY.md §7.5 "reference bugs")
+                return SCol(F.concat(ca, cb), ast.T_STR), outs
+            return SCol(ca + cb, t), outs
+        if op == "-":
+            return SCol(ca - cb, t), outs
+        if op == "*":
+            return SCol(ca * cb, t), outs
+        if op == "/":
+            if t is ast.T_INT:
+                # i64 truncating division (src/ir.rs:622-625): Spark's
+                # `div` function is integral divide, truncation toward 0
+                return SCol(F.call_function("div", ca, cb), ast.T_INT), outs
+            return SCol(ca / cb, t), outs
+        if op == "%":
+            return SCol(ca % cb, t), outs  # Spark % == Rust % (sign of dividend)
+        if op == "^":
+            p = F.pow(ca, cb)
+            return SCol(p.cast("long") if t is ast.T_INT else p, t), outs
         if op in ("and", "or", "xor"):
             if t is ast.T_BOOL:
                 # non-short-circuit logical ops (stack machine evaluates both)
@@ -948,125 +903,15 @@ class Compiler:
                 if op == "or":
                     return SCol(ca | cb, ast.T_BOOL), outs
                 return SCol(ca != cb, ast.T_BOOL), outs
-            if t is ast.T_INT:
-                if op == "and":
-                    return SCol(ca.bitwiseAND(cb), ast.T_INT), outs
-                if op == "or":
-                    return SCol(ca.bitwiseOR(cb), ast.T_INT), outs
-                return SCol(ca.bitwiseXOR(cb), ast.T_INT), outs
+            if op == "and":
+                return SCol(ca.bitwiseAND(cb), ast.T_INT), outs
+            if op == "or":
+                return SCol(ca.bitwiseOR(cb), ast.T_INT), outs
+            return SCol(ca.bitwiseXOR(cb), ast.T_INT), outs
         if op in ("<", ">", "<=", ">="):
-            if t not in (ast.T_INT, ast.T_FLOAT, ast.T_STR):
-                raise KernelTypeError(f"relational {op} on {t!r}")
-            if t is ast.T_FLOAT:
-                ca, cb = ca.cast("double"), cb.cast("double")
             table = {"<": ca < cb, ">": ca > cb, "<=": ca <= cb, ">=": ca >= cb}
             return SCol(table[op], ast.T_BOOL), outs
-        if op == "==":
-            try:
-                t_eq = unify(ta, tb)
-            except KernelTypeError:
-                # cross-type equality is `false`, never an error (src/ir.rs:679-695)
-                return SConst(False, ast.T_BOOL), outs
-            if t_eq is ast.T_FLOAT:
-                ca, cb = ca.cast("double"), cb.cast("double")
-            return SCol(ca == cb, ast.T_BOOL), outs
-        raise KernelTypeError(f"operator {op} not defined for {ta!r}, {tb!r}")
-
-    def fold_bin(self, op: str, a: SConst, b: SConst) -> tuple[object, ast.Type]:
-        x, y = a.value, b.value
-        ta, tb = vtype(a), vtype(b)
-        both_int = ta is ast.T_INT and tb is ast.T_INT
-        if x is None or y is None:
-            # NULL propagation must not depend on constant folding (r9
-            # map-access fuzz) — and neither may TYPE ERRORS (r9 ADVICE,
-            # low): validate op/type compatibility exactly like the
-            # non-constant compile_bin path BEFORE NULL-propagating, so an
-            # ill-typed expression with a NULL constant operand raises
-            # instead of silently folding to NULL. Where valid: mirror the
-            # runtime Column semantics — arithmetic/comparison with NULL is
-            # NULL; and/or are Kleene (Spark's & / | on nullable booleans),
-            # so a known-deciding operand still decides.
-            if op == "==":
-                try:
-                    unify(ta, tb)
-                except KernelTypeError:
-                    # cross-type equality is `false`, never an error —
-                    # matches compile_bin's non-constant == branch
-                    return False, ast.T_BOOL
-                return None, ast.T_BOOL
-            t = unify(ta, tb)  # raises on incompatible operands
-            if op in ("<", ">", "<=", ">="):
-                if t not in (ast.T_INT, ast.T_FLOAT, ast.T_STR):
-                    raise KernelTypeError(f"relational {op} on {t!r}")
-                return None, ast.T_BOOL
-            if op in ("and", "or", "xor"):
-                if t is ast.T_BOOL:
-                    if op == "and" and (x is False or y is False):
-                        return False, ast.T_BOOL
-                    if op == "or" and (x is True or y is True):
-                        return True, ast.T_BOOL
-                    return None, ast.T_BOOL
-                if t is ast.T_INT:
-                    return None, ast.T_INT
-                raise KernelTypeError(
-                    f"operator {op} not defined for {ta!r}, {tb!r}"
-                )
-            if op in ("+", "-", "*", "/", "%", "^"):
-                if t in (ast.T_INT, ast.T_FLOAT):
-                    return None, t
-                if op == "+" and t is ast.T_STR:
-                    return None, ast.T_STR
-            raise KernelTypeError(
-                f"operator {op} not defined for {ta!r}, {tb!r}"
-            )
-        if op == "+":
-            if ta is ast.T_STR and tb is ast.T_STR:
-                return x + y, ast.T_STR
-            return x + y, (ast.T_INT if both_int else ast.T_FLOAT)
-        if op == "-":
-            return x - y, (ast.T_INT if both_int else ast.T_FLOAT)
-        if op == "*":
-            return x * y, (ast.T_INT if both_int else ast.T_FLOAT)
-        if op == "/":
-            if both_int:
-                return self._trunc_div(x, y), ast.T_INT
-            return x / y, ast.T_FLOAT
-        if op == "%":
-            if both_int:
-                return self._trunc_mod(x, y), ast.T_INT
-            import math
-
-            return math.fmod(x, y), ast.T_FLOAT
-        if op == "^":
-            return (x**y if not both_int else int(x**y)), (
-                ast.T_INT if both_int else ast.T_FLOAT
-            )
-        if op == "and":
-            return (x and y, ast.T_BOOL) if ta is ast.T_BOOL else (x & y, ast.T_INT)
-        if op == "or":
-            return (x or y, ast.T_BOOL) if ta is ast.T_BOOL else (x | y, ast.T_INT)
-        if op == "xor":
-            return (
-                (bool(x) != bool(y), ast.T_BOOL)
-                if ta is ast.T_BOOL
-                else (x ^ y, ast.T_INT)
-            )
-        if op in ("<", ">", "<=", ">=", "=="):
-            import operator
-
-            f = {
-                "<": operator.lt,
-                ">": operator.gt,
-                "<=": operator.le,
-                ">=": operator.ge,
-                "==": operator.eq,
-            }[op]
-            if op == "==" and type(x) is not type(y) and not (
-                isinstance(x, (int, float)) and isinstance(y, (int, float))
-            ):
-                return False, ast.T_BOOL
-            return f(x, y), ast.T_BOOL
-        raise KernelTypeError(f"cannot fold {op}")
+        return SCol(ca == cb, ast.T_BOOL), outs
 
     def compile_un(self, expr: ast.Un, env: dict):
         a, outs = self.compile_expr(expr.a, env)
@@ -1081,14 +926,7 @@ class Compiler:
             return a, outs
         t = vtype(a)
         if isinstance(a, SConst) and not isinstance(a.value, (list, dict)):
-            if a.value is None:  # NULL propagation (see fold_bin None branch)
-                return SConst(None, t), outs
-            if expr.op == "-":
-                return SConst(-a.value, t), outs
-            if expr.op == "not":
-                if t is ast.T_BOOL:
-                    return SConst(not a.value, ast.T_BOOL), outs
-                return SConst(~a.value, ast.T_INT), outs
+            return SConst(unop(expr.op, a.value), t), outs
         ca = as_col(a)
         if expr.op == "-":
             return SCol(-ca, t), outs
@@ -1503,13 +1341,10 @@ class Compiler:
             # reference `as i64` semantics), then check.
             name = t.name
             if isinstance(v, SConst) and isinstance(v.value, (int, float)) and not isinstance(v.value, bool):
-                x = int(v.value)
-                _s, lo, hi = SIZED_INTS[name]
-                if not (lo <= x <= min(hi, 2**63 - 1)):
-                    raise KernelTypeError(
-                        f"constant {x} out of range for {name}"
-                    )
-                return SConst(x, ast.T_INT), outs
+                try:
+                    return SConst(cast_value(v.value, t), ast.T_INT), outs
+                except InterpError as exc:  # a compile-time range error
+                    raise KernelTypeError(f"constant {exc}") from None
             if vt is ast.T_FLOAT:
                 v = SCol(as_col(v).cast("long"), ast.T_INT)
                 vt = ast.T_INT
@@ -1528,14 +1363,12 @@ class Compiler:
                 ),
                 outs,
             )
-        if isinstance(v, SConst) and not isinstance(v.value, (list, dict)):
-            x = v.value
-            if t is ast.T_INT:
-                return SConst(int(x), ast.T_INT), outs
-            if t is ast.T_FLOAT:
-                return SConst(float(x), ast.T_FLOAT), outs
-            if t is ast.T_BOOL:
-                return SConst(bool(x), ast.T_BOOL), outs
+        if (
+            isinstance(v, SConst)
+            and not isinstance(v.value, (list, dict))
+            and t in (ast.T_INT, ast.T_FLOAT, ast.T_BOOL)
+        ):
+            return SConst(cast_value(v.value, t), t), outs
         if t is ast.T_BOOL:
             if vt is ast.T_STR:
                 return SCol(F.length(as_col(v)) > 0, ast.T_BOOL), outs
@@ -1797,31 +1630,32 @@ class Compiler:
 # --------------------------------------------------------------------------
 # Built-in function library (SURVEY.md §2.3 "ext" row). All compile-time:
 # each native maps arg SVals to a result SVal (Column expression or folded
-# constant) — nothing exists at runtime but the Catalyst expression.
+# constant) — nothing exists at runtime but the Catalyst expression. Folded
+# constants come from the interpreter's SCALAR_BUILTINS.
 # --------------------------------------------------------------------------
-def _num2(comp, args, py, flt, name):
-    a, b = args
-    t = unify(vtype(a), vtype(b))
-    if t not in (ast.T_INT, ast.T_FLOAT):
-        raise KernelTypeError(f"{name} on {t!r}")
-    if isinstance(a, SConst) and isinstance(b, SConst):
-        # least/greatest SKIP NULLs (return the non-NULL operand, NULL only
-        # when both are) — the constant fold must match that runtime
-        # coerce the surviving operand(s) to the unified type so the SConst
-        # payload/type invariant holds (min(2, NULL-Float) is T_FLOAT and
-        # must carry 2.0, not int 2 — r10 ADVICE)
-        conv = float if t is ast.T_FLOAT else int
-        nn = [conv(v) for v in (a.value, b.value) if v is not None]
-        if len(nn) < 2:
-            return SConst(nn[0] if nn else None, t)
-        return SConst(py(*nn), t)
-    ca, cb = as_col(a), as_col(b)
-    if t is ast.T_FLOAT:
-        ca, cb = ca.cast("double"), cb.cast("double")
-    return SCol(flt(ca, cb), t)
+def _num2(name, flt):
+    def apply(comp, args):
+        a, b = args
+        t = unify(vtype(a), vtype(b))
+        if t not in (ast.T_INT, ast.T_FLOAT):
+            raise KernelTypeError(f"{name} on {t!r}")
+        if isinstance(a, SConst) and isinstance(b, SConst):
+            # coerce the operand(s) to the unified type so the SConst
+            # payload/type invariant holds (min(2, NULL-Float) is T_FLOAT
+            # and must carry 2.0, not int 2 — r10 ADVICE); NULLs are skipped
+            # like least/greatest do at runtime
+            conv = float if t is ast.T_FLOAT else int
+            x, y = (None if v is None else conv(v) for v in (a.value, b.value))
+            return SConst(SCALAR_BUILTINS[name](x, y), t)
+        ca, cb = as_col(a), as_col(b)
+        if t is ast.T_FLOAT:
+            ca, cb = ca.cast("double"), cb.cast("double")
+        return SCol(flt(ca, cb), t)
+
+    return apply
 
 
-def _math1(fname, pyf):
+def _math1(fname):
     def apply(comp, args):
         (a,) = args
         if vtype(a) not in (ast.T_INT, ast.T_FLOAT):
@@ -1829,18 +1663,10 @@ def _math1(fname, pyf):
         if isinstance(a, SConst):
             if a.value is None:  # NULL-propagate like the runtime column
                 return SConst(None, ast.T_FLOAT)
-            return SConst(float(pyf(a.value)), ast.T_FLOAT)
+            return SConst(SCALAR_BUILTINS[fname](a.value), ast.T_FLOAT)
         return SCol(getattr(F, fname)(as_col(a).cast("double")), ast.T_FLOAT)
 
     return apply
-
-
-def _n_min(comp, args):
-    return _num2(comp, args, min, F.least, "min")
-
-
-def _n_max(comp, args):
-    return _num2(comp, args, max, F.greatest, "max")
 
 
 def _n_abs(comp, args):
@@ -1851,11 +1677,11 @@ def _n_abs(comp, args):
     if isinstance(a, SConst):
         if a.value is None:  # NULL-propagate like the runtime column
             return SConst(None, t)
-        return SConst(abs(a.value), t)
+        return SConst(SCALAR_BUILTINS["abs"](a.value), t)
     return SCol(F.abs(as_col(a)), t)
 
 
-def _shift(direction):
+def _shift(name, direction):
     def apply(comp, args):
         a, b = args
         if vtype(a) is not ast.T_INT or vtype(b) is not ast.T_INT:
@@ -1863,8 +1689,7 @@ def _shift(direction):
         if isinstance(a, SConst) and isinstance(b, SConst):
             if a.value is None or b.value is None:  # runtime shift is NULL
                 return SConst(None, ast.T_INT)
-            v = a.value << b.value if direction == "shiftleft" else a.value >> b.value
-            return SConst(v, ast.T_INT)
+            return SConst(SCALAR_BUILTINS[name](a.value, b.value), ast.T_INT)
         # SQL shiftleft/shiftright operate on INT/BIGINT; both args as cols
         return SCol(
             F.call_function(direction, as_col(a), as_col(b).cast("int")), ast.T_INT
@@ -1873,7 +1698,7 @@ def _shift(direction):
     return apply
 
 
-def _floorceil(fname, pyf):
+def _floorceil(fname):
     def apply(comp, args):
         (a,) = args
         if vtype(a) not in (ast.T_INT, ast.T_FLOAT):
@@ -1881,7 +1706,7 @@ def _floorceil(fname, pyf):
         if isinstance(a, SConst):
             if a.value is None:  # NULL-propagate like the runtime column
                 return SConst(None, ast.T_INT)
-            return SConst(int(pyf(a.value)), ast.T_INT)
+            return SConst(SCALAR_BUILTINS[fname](a.value), ast.T_INT)
         return SCol(getattr(F, fname)(as_col(a)).cast("long"), ast.T_INT)
 
     return apply
@@ -1897,7 +1722,7 @@ def _n_length(comp, args):
     ):
         return SConst(None, ast.T_INT)  # length/size of NULL is NULL
     if isinstance(a, SConst) and isinstance(a.value, (str, list, dict)):
-        return SConst(len(a.value), ast.T_INT)
+        return SConst(SCALAR_BUILTINS["length"](a.value), ast.T_INT)
     if t is ast.T_STR:
         return SCol(F.length(as_col(a)).cast("long"), ast.T_INT)
     if isinstance(t, (ast.TList, ast.TMap)):
@@ -2036,43 +1861,35 @@ def _n_reduce(comp, args):
     return SCol(col, acc_t)
 
 
-def _make_builtins() -> dict:
-    import math
+_COMPILE_BUILTIN = {
+    "min": _num2("min", F.least),
+    "max": _num2("max", F.greatest),
+    "abs": _n_abs,
+    "shl": _shift("shl", "shiftleft"),
+    "shr": _shift("shr", "shiftright"),
+    **{name: _math1(name) for name in ("sqrt", "cos", "sin", "tan", "log", "exp")},
+    "floor": _floorceil("floor"),
+    "ceil": _floorceil("ceil"),
+    "length": _n_length,
+    "join": _n_join,
+    "split": _n_split,
+    "upper": _str1("upper"),
+    "lower": _str1("lower"),
+    "trim": _str1("trim"),
+    "replace": _n_replace,
+    "substr": _n_substr,
+    "contains": _n_contains,
+    "map": _n_map,
+    "filter": _n_filter,
+    "reduce": _n_reduce,
+}
 
-    specs = {
-        "min": (2, _n_min),
-        "max": (2, _n_max),
-        "abs": (1, _n_abs),
-        "shl": (2, _shift("shiftleft")),
-        "shr": (2, _shift("shiftright")),
-        "sqrt": (1, _math1("sqrt", math.sqrt)),
-        "cos": (1, _math1("cos", math.cos)),
-        "sin": (1, _math1("sin", math.sin)),
-        "tan": (1, _math1("tan", math.tan)),
-        "log": (1, _math1("log", math.log)),
-        "exp": (1, _math1("exp", math.exp)),
-        "floor": (1, _floorceil("floor", math.floor)),
-        "ceil": (1, _floorceil("ceil", math.ceil)),
-        "length": (1, _n_length),
-        "join": (2, _n_join),
-        "split": (2, _n_split),
-        "upper": (1, _str1("upper")),
-        "lower": (1, _str1("lower")),
-        "trim": (1, _str1("trim")),
-        "replace": (3, _n_replace),
-        "substr": (3, _n_substr),
-        "contains": (2, _n_contains),
-        "map": (2, _n_map),
-        "filter": (2, _n_filter),
-        "reduce": (3, _n_reduce),
-    }
-    return {
-        name: SNative(name=name, arity=arity, fn=fn)
-        for name, (arity, fn) in specs.items()
-    }
-
-
-BUILTINS = _make_builtins()
+# names and arities come from the interpreter's table, so both execution
+# paths expose the same library
+BUILTINS = {
+    name: SNative(name=name, arity=arity, fn=_COMPILE_BUILTIN[name])
+    for name, arity in BUILTIN_ARITY.items()
+}
 
 # builtins also reachable method-style via dot on a fitting receiver:
 # `xs.join(", ")`, `s.upper()`, `xs.map(f)` (README.md:235 `.join` usage)

@@ -15,14 +15,33 @@ floored `//`), `+` on strings = concat, non-short-circuit logic, deep
 `==` with cross-type False, `!` pass-through. Unsupported constructs
 raise InterpError naming the node — never silently diverge from the
 compiled path.
+
+This module holds the one copy of uDLang's value semantics over plain
+Python values: the operators (`binop`, `unop`, `trunc_div`), the `as`
+cast (`cast_value`) and the scalar builtins (`SCALAR_BUILTINS`, named
+with their arities in `BUILTIN_ARITY`). The compiler's constant folding
+calls these same functions, so folding can never change a result; type
+resolution is shared too (types.resolve_type).
 """
 
 from __future__ import annotations
 
 import math
+import operator
 from dataclasses import dataclass
 
 from udlang_spark.kernel import ast
+from udlang_spark.kernel.types import (
+    SIZED_INTS,
+    KernelTypeError,
+    collapse_sized,
+    collect_typedefs,
+    is_sized_int,
+    python_type_of,
+    resolve_type,
+    type_tag,
+    unify,
+)
 
 VOID = object()  # a proc's "value": never emitted by `out`
 
@@ -70,13 +89,13 @@ class Closure:
 
 @dataclass
 class Native:
-    """Interp-side twin of the compiler's SNative builtins (the named
-    function library, SURVEY.md §2.3 ext row) — Python semantics matching
-    the Column-compiled versions."""
+    """A builtin as a runtime value (the named function library, SURVEY.md
+    §2.3 ext row): a SCALAR_BUILTINS function, or a HOF_BUILTINS one that
+    also takes the interpreter's function-application callback."""
 
     name: str
     arity: int
-    fn: object  # callable(interp, args, in_value, outs) -> value
+    fn: object
 
 
 class Interp:
@@ -84,6 +103,7 @@ class Interp:
         if program.kind != "script":
             raise InterpError("only scripts are executable")
         self.program = program
+        self.typedefs = collect_typedefs(program)
         self.max_steps = max_steps
         self._steps = 0
 
@@ -120,16 +140,17 @@ class Interp:
             # every other builtin is NULL on any NULL argument.
             # Function-valued args (map/filter/reduce lambdas) are never
             # None, so the generic any() check is safe for them.
-            if fn.name in ("min", "max"):
-                nn = [a for a in args if a is not None]
-                if len(nn) < 2:
-                    return nn[0] if nn else None
-            elif fn.name == "reduce":
+            if fn.name == "reduce":
                 if args[0] is None:
                     return None
-            elif any(a is None for a in args):
+            elif fn.name not in ("min", "max") and any(a is None for a in args):
                 return None
-            return fn.fn(self, args, in_value, outs)
+            if fn.name in HOF_BUILTINS:
+                return fn.fn(
+                    lambda f, *xs: self.apply_fn(f, list(xs), in_value, outs),
+                    *args,
+                )
+            return fn.fn(*args)
         if not isinstance(fn, Closure):
             raise InterpError("call of a non-function value")
         params = fn.fn.params
@@ -328,19 +349,13 @@ class Interp:
                 return self.eval(e.default, env, in_value, outs)
             return VOID
         if isinstance(e, ast.Bin):
-            return self._bin(e.op, self.eval(e.a, env, in_value, outs),
-                             self.eval(e.b, env, in_value, outs))
+            return binop(e.op, self.eval(e.a, env, in_value, outs),
+                         self.eval(e.b, env, in_value, outs))
         if isinstance(e, ast.Un):
             a = self.eval(e.a, env, in_value, outs)
             if e.op == "!":
                 return a  # debug tap: pass-through
-            if a is None:
-                return None  # NULL propagation (compiled -col / ~col)
-            if e.op == "-":
-                return -a
-            if e.op == "not":
-                return (not a) if isinstance(a, bool) else ~a
-            raise InterpError(f"unsupported unary {e.op!r}")
+            return unop(e.op, a)
         if isinstance(e, ast.ListExpr):
             return [self.eval(x, env, in_value, outs) for x in e.items]
         if isinstance(e, ast.Index):
@@ -365,7 +380,9 @@ class Interp:
             except (IndexError, KeyError) as exc:
                 raise InterpError(f"index error: {exc}") from exc
         if isinstance(e, ast.Cast):
-            return self._cast(self.eval(e.expr, env, in_value, outs), e.type)
+            return cast_value(
+                self.eval(e.expr, env, in_value, outs), self._resolve(e.type)
+            )
         if isinstance(e, ast.Match):
             return self._match(e, env, in_value, outs)
         if isinstance(e, ast.MapExpr):
@@ -449,13 +466,6 @@ class Interp:
         a tagged-struct subject by `_tag` (binding the variant branch) or a
         plain subject by exact runtime type. No arm matched = InterpError,
         the compiled path's poison."""
-        from udlang_spark.kernel.types import (
-            KernelTypeError,
-            python_type_of,
-            type_tag,
-            unify,
-        )
-
         subj = self.eval(e.subject, env, in_value, outs)
         for arm in e.arms:
             pat = arm.pattern
@@ -476,10 +486,11 @@ class Interp:
                     env2 = dict(env)
                     env2[pat.name] = subj
                     return self.eval(arm.body, env2, in_value, outs)
-                # resolve typedef aliases / value types exactly like the
-                # compiler does — an unresolved TName would never tag-match
-                # (and type_tag would raise); found by review of the fuzz
-                pt = self._resolve_type(pat.type)
+                # resolve typedef aliases / value types with the compiler's
+                # resolver, and match sized views as Int like compile_match
+                # — an unresolved TName would never tag-match (and type_tag
+                # would raise); found by review of the fuzz
+                pt = collapse_sized(self._resolve(pat.type))
                 if isinstance(subj, dict) and "_tag" in subj:
                     if subj["_tag"] != type_tag(pt):
                         continue
@@ -502,80 +513,11 @@ class Interp:
             raise InterpError(f"unsupported pattern {pat!r}")
         raise InterpError("match: no case matched")
 
-    def _resolve_type(self, t: ast.Type) -> ast.Type:
-        """The compiler's resolve_type, re-expressed over the program's
-        TypeDef decls: alias names, the numeric tower, value types, and
-        recursive containers — so typed binds see the same resolved type on
-        both execution paths."""
-        from udlang_spark.kernel.types import (
-            NUMERIC_ALIASES,
-            python_type_of,
-        )
-
-        if isinstance(t, ast.TCons):
-            from udlang_spark.kernel.types import (
-                KernelTypeError,
-                apply_type_cons,
-            )
-
-            cons = t.cons
-            td = (
-                self._typedefs().get(cons.name)
-                if isinstance(cons, ast.TName)
-                else None
-            )
-            if not isinstance(td, ast.TFunc):
-                raise InterpError(f"cannot apply non-constructor type {cons!r}")
-            try:
-                return self._resolve_type(apply_type_cons(td, cons.name, t.args))
-            except KernelTypeError as e:
-                raise InterpError(str(e)) from None
-        if isinstance(t, ast.TName):
-            td = self._typedefs().get(t.name)
-            if td is not None:
-                if isinstance(td, ast.TFunc):
-                    raise InterpError(
-                        f"type constructor {t.name} used without arguments"
-                    )
-                return self._resolve_type(td)
-            if t.name in NUMERIC_ALIASES:
-                from udlang_spark.kernel.types import collapse_sized
-
-                # sized views match as Int (compiler.compile_match collapses
-                # pattern types identically)
-                return collapse_sized(NUMERIC_ALIASES[t.name])
-            raise InterpError(f"unknown type name {t.name}")
-        if isinstance(t, ast.TValue):
-            return python_type_of(t.value)
-        if isinstance(t, ast.TOption):
-            return ast.TOption(self._resolve_type(t.inner))
-        if isinstance(t, ast.TList):
-            return ast.TList(self._resolve_type(t.item))
-        if isinstance(t, ast.TMap):
-            return ast.TMap(self._resolve_type(t.value))
-        if isinstance(t, ast.TTuple):
-            return ast.TTuple(tuple(self._resolve_type(i) for i in t.items))
-        if isinstance(t, ast.TUnion):
-            variants: list[ast.Type] = []
-            for v in t.variants:
-                rv = self._resolve_type(v)
-                if rv not in variants:
-                    variants.append(rv)
-            if len(variants) == 1:
-                return variants[0]
-            return ast.TUnion(tuple(variants))
-        return t
-
-    def _typedefs(self) -> dict:
-        cached = getattr(self, "_typedef_cache", None)
-        if cached is None:
-            cached = {}
-            for d in self.program.decls:
-                decl = d.decl if isinstance(d, ast.Export) else d
-                if isinstance(decl, ast.TypeDef):
-                    cached[decl.name] = decl.type
-            self._typedef_cache = cached
-        return cached
+    def _resolve(self, t: ast.Type) -> ast.Type:
+        try:
+            return resolve_type(t, self.typedefs)
+        except KernelTypeError as exc:
+            raise InterpError(str(exc)) from None
 
     @staticmethod
     def _runtime_matches(subj, pt: ast.Type) -> bool:
@@ -585,8 +527,6 @@ class Interp:
         matches a Float bind), containers by shape. Non-scalar subjects
         previously raised inside python_type_of and silently skipped the
         arm (review finding)."""
-        from udlang_spark.kernel.types import KernelTypeError, python_type_of
-
         if isinstance(pt, ast.TOption):
             return subj is None or Interp._runtime_matches(subj, pt.inner)
         if subj is None:
@@ -611,201 +551,185 @@ class Interp:
                 subj, len(pt.items)
             )
         try:
-            return python_type_of(subj) == pt
+            return python_type_of(subj) == collapse_sized(pt)
         except KernelTypeError:
             return False
 
-    # -- reference operator semantics (src/ir.rs:429-696) ---------------
-    @staticmethod
-    def _trunc_div(a: int, b: int) -> int:
-        q = a // b
-        if a % b != 0 and (a < 0) != (b < 0):
-            q += 1
-        return q
 
-    def _bin(self, op: str, a, b):
-        if a is None or b is None:
-            # NULL propagation mirroring the compiled Column semantics (and
-            # compiler.fold_bin's None branch): arithmetic/comparison with
-            # NULL is NULL; and/or are Kleene, so a deciding operand decides
-            if op == "and" and (a is False or b is False):
-                return False
-            if op == "or" and (a is True or b is True):
-                return True
-            return None
-        both_int = isinstance(a, int) and isinstance(b, int) and not (
-            isinstance(a, bool) or isinstance(b, bool)
-        )
-        if op == "+":
-            if isinstance(a, str) or isinstance(b, str):
-                if not (isinstance(a, str) and isinstance(b, str)):
-                    raise InterpError("`+` mixes Str and non-Str")
-                return a + b
+# -- reference operator semantics (src/ir.rs:429-696) -------------------
+def trunc_div(a: int, b: int) -> int:
+    """i64 division truncating toward zero (Rust `/`), not Python's floor."""
+    q = a // b
+    if a % b != 0 and (a < 0) != (b < 0):
+        q += 1
+    return q
+
+
+def binop(op: str, a, b):
+    if a is None or b is None:
+        # NULL propagation mirroring the compiled Column semantics:
+        # arithmetic/comparison with NULL is NULL; and/or are Kleene, so a
+        # deciding operand decides
+        if op == "and" and (a is False or b is False):
+            return False
+        if op == "or" and (a is True or b is True):
+            return True
+        return None
+    both_int = isinstance(a, int) and isinstance(b, int) and not (
+        isinstance(a, bool) or isinstance(b, bool)
+    )
+    if op == "+":
+        if isinstance(a, str) or isinstance(b, str):
+            if not (isinstance(a, str) and isinstance(b, str)):
+                raise InterpError("`+` mixes Str and non-Str")
             return a + b
-        if op == "-":
-            return a - b
-        if op == "*":
-            return a * b
-        if op == "/":
-            if both_int:
-                if b == 0:
-                    raise InterpError("integer division by zero")
-                return self._trunc_div(a, b)
-            return a / b
-        if op == "%":
-            if both_int:
-                if b == 0:
-                    raise InterpError("integer modulo by zero")
-                return a - self._trunc_div(a, b) * b
-            return math.fmod(a, b)
-        if op == "^":
-            if both_int:
-                if b < 0:
-                    raise InterpError("Int^negative (reference casts exponent u32)")
-                return a**b
-            return float(a) ** float(b)
-        if op in ("and", "or", "xor"):
-            if isinstance(a, bool) and isinstance(b, bool):
-                return {"and": a and b, "or": a or b, "xor": a != b}[op]
-            return {"and": a & b, "or": a | b, "xor": a ^ b}[op]
-        if op in ("<", ">", "<=", ">="):
-            return {"<": a < b, ">": a > b, "<=": a <= b, ">=": a >= b}[op]
-        if op == "==":
-            if type(a) is not type(b) and not (
-                isinstance(a, (int, float)) and isinstance(b, (int, float))
-                and not isinstance(a, bool) and not isinstance(b, bool)
-            ):
-                return False
-            return a == b
-        raise InterpError(f"unsupported operator {op!r}")
-
-    @staticmethod
-    def _cast(v, t: ast.Type):
-        from udlang_spark.kernel.types import SIZED_INTS
-
-        if v is None:
-            return None  # compiled Column.cast propagates NULL
-        if isinstance(t, ast.TName) and t.name in SIZED_INTS:
-            t = ast.TPrim(t.name)
-        if isinstance(t, ast.TPrim) and t.name in SIZED_INTS:
-            # range-checked sized view (compiler sized_range_check twin):
-            # value stays an i64-domain int; out-of-range raises
-            _s, lo, hi = SIZED_INTS[t.name]
-            x = int(v)
-            if not (lo <= x <= min(hi, 2**63 - 1)):
-                raise InterpError(f"value out of range for {t.name}: {x}")
-            return x
-        if t is ast.T_INT:
-            return int(v)  # Float→Int truncates, matching the compiled path
-        if t is ast.T_FLOAT:
-            return float(v)
-        if t is ast.T_BOOL:
-            return bool(v)
-        if t is ast.T_STR and isinstance(v, str):
-            return v
-        raise InterpError(f"unsupported cast target {t!r}")
+        return a + b
+    if op == "-":
+        return a - b
+    if op == "*":
+        return a * b
+    if op == "/":
+        if both_int:
+            if b == 0:
+                raise InterpError("integer division by zero")
+            return trunc_div(a, b)
+        return a / b
+    if op == "%":
+        if both_int:
+            if b == 0:
+                raise InterpError("integer modulo by zero")
+            return a - trunc_div(a, b) * b
+        return math.fmod(a, b)
+    if op == "^":
+        if both_int:
+            if b < 0:
+                raise InterpError("Int^negative (reference casts exponent u32)")
+            return a**b
+        return float(a) ** float(b)
+    if op in ("and", "or", "xor"):
+        if isinstance(a, bool) and isinstance(b, bool):
+            return {"and": a and b, "or": a or b, "xor": a != b}[op]
+        return {"and": a & b, "or": a | b, "xor": a ^ b}[op]
+    if op in ("<", ">", "<=", ">="):
+        return {"<": a < b, ">": a > b, "<=": a <= b, ">=": a >= b}[op]
+    if op == "==":
+        if type(a) is not type(b) and not (
+            isinstance(a, (int, float)) and isinstance(b, (int, float))
+            and not isinstance(a, bool) and not isinstance(b, bool)
+        ):
+            return False
+        return a == b
+    raise InterpError(f"unsupported operator {op!r}")
 
 
-def _nat(name, arity):
-    def deco(f):
-        return Native(name, arity, f)
+def unop(op: str, a):
+    if a is None:
+        return None  # NULL propagation (compiled -col / ~col)
+    if op == "-":
+        return -a
+    if op == "not":
+        return (not a) if isinstance(a, bool) else ~a
+    raise InterpError(f"unsupported unary {op!r}")
 
-    return deco
+
+def cast_value(v, t: ast.Type):
+    """`v as t` for a resolved target type t."""
+    if v is None:
+        return None  # compiled Column.cast propagates NULL
+    if is_sized_int(t):
+        # range-checked sized view (compiler sized_range_check twin):
+        # value stays an i64-domain int; out-of-range raises
+        _s, lo, hi = SIZED_INTS[t.name]
+        x = int(v)
+        if not (lo <= x <= min(hi, 2**63 - 1)):
+            raise InterpError(f"value out of range for {t.name}: {x}")
+        return x
+    if t is ast.T_INT:
+        return int(v)  # Float→Int truncates, matching the compiled path
+    if t is ast.T_FLOAT:
+        return float(v)
+    if t is ast.T_BOOL:
+        return bool(v)
+    if t is ast.T_STR and isinstance(v, str):
+        return v
+    raise InterpError(f"unsupported cast target {t!r}")
 
 
-def _num2(pyfn):
-    def f(it, args, in_value, outs):
-        a, b = args
-        return pyfn(a, b)
+# -- builtin library (SURVEY.md §2.3 ext row) ---------------------------
+# Every builtin's name and arity, listed once: compiler.BUILTINS and
+# _NATIVES are both built from this table.
+BUILTIN_ARITY = {
+    "min": 2, "max": 2, "abs": 1, "shl": 2, "shr": 2,
+    "sqrt": 1, "cos": 1, "sin": 1, "tan": 1, "log": 1, "exp": 1,
+    "floor": 1, "ceil": 1, "length": 1,
+    "join": 2, "split": 2, "upper": 1, "lower": 1, "trim": 1,
+    "replace": 3, "substr": 3, "contains": 2,
+    "map": 2, "filter": 2, "reduce": 3,
+}
+
+
+def _skip_null(pick):
+    """least/greatest semantics: a NULL operand is skipped; the result is
+    NULL only when both are."""
+
+    def f(a, b):
+        if a is None or b is None:
+            return b if a is None else a
+        return pick(a, b)
 
     return f
 
 
 def _math1(pyfn):
-    def f(it, args, in_value, outs):
-        return pyfn(float(args[0]))
-
-    return f
+    return lambda x: pyfn(float(x))
 
 
-def _interp_natives() -> dict:
-    import math
-
-    def length(it, args, in_value, outs):
-        v = args[0]
-        if isinstance(v, (str, list, dict)):
-            return len(v)
-        raise InterpError(f"length on {type(v).__name__}")
-
-    def join(it, args, in_value, outs):
-        xs, sep = args
-        return sep.join(str(x) for x in xs)
-
-    def split(it, args, in_value, outs):
-        s, sep = args
-        return s.split(sep)
-
-    def replace(it, args, in_value, outs):
-        s, old, new = args
-        return s.replace(old, new)
-
-    def substr(it, args, in_value, outs):
-        s, start, n = args
-        return s[start : start + n]  # 0-based, matching the compiled path
-
-    def contains(it, args, in_value, outs):
-        hay, needle = args
-        return needle in hay
-
-    def map_(it, args, in_value, outs):
-        xs, fn = args
-        return [it.apply_fn(fn, [x], in_value, outs) for x in xs]
-
-    def filter_(it, args, in_value, outs):
-        xs, fn = args
-        return [x for x in xs if it.apply_fn(fn, [x], in_value, outs)]
-
-    def reduce_(it, args, in_value, outs):
-        xs, acc, fn = args
-        for x in xs:
-            acc = it.apply_fn(fn, [acc, x], in_value, outs)
-        return acc
-
-    def floor_(it, args, in_value, outs):
-        return math.floor(args[0])
-
-    def ceil_(it, args, in_value, outs):
-        return math.ceil(args[0])
-
-    specs = {
-        "min": Native("min", 2, _num2(min)),
-        "max": Native("max", 2, _num2(max)),
-        "abs": Native("abs", 1, Native, ),
-    }
-    # abs needs its own wrapper (placeholder above replaced here)
-    specs["abs"] = Native("abs", 1, lambda it, a, iv, o: abs(a[0]))
-    specs["shl"] = Native("shl", 2, lambda it, a, iv, o: a[0] << a[1])
-    specs["shr"] = Native("shr", 2, lambda it, a, iv, o: a[0] >> a[1])
-    for name, fn in (
-        ("sqrt", math.sqrt), ("cos", math.cos), ("sin", math.sin),
-        ("tan", math.tan), ("log", math.log), ("exp", math.exp),
-    ):
-        specs[name] = Native(name, 1, _math1(fn))
-    specs["floor"] = Native("floor", 1, floor_)
-    specs["ceil"] = Native("ceil", 1, ceil_)
-    specs["length"] = Native("length", 1, length)
-    specs["join"] = Native("join", 2, join)
-    specs["split"] = Native("split", 2, split)
-    specs["upper"] = Native("upper", 1, lambda it, a, iv, o: a[0].upper())
-    specs["lower"] = Native("lower", 1, lambda it, a, iv, o: a[0].lower())
-    specs["trim"] = Native("trim", 1, lambda it, a, iv, o: a[0].strip())
-    specs["replace"] = Native("replace", 3, replace)
-    specs["substr"] = Native("substr", 3, substr)
-    specs["contains"] = Native("contains", 2, contains)
-    specs["map"] = Native("map", 2, map_)
-    specs["filter"] = Native("filter", 2, filter_)
-    specs["reduce"] = Native("reduce", 3, reduce_)
-    return specs
+def _length(v):
+    if isinstance(v, (str, list, dict)):
+        return len(v)
+    raise InterpError(f"length on {type(v).__name__}")
 
 
-_NATIVES = _interp_natives()
+# value-level builtins: Python values in, value out (every other argument
+# is non-NULL — Interp.apply_fn and the compiler's folds check that first)
+SCALAR_BUILTINS = {
+    "min": _skip_null(min),
+    "max": _skip_null(max),
+    "abs": abs,
+    "shl": operator.lshift,
+    "shr": operator.rshift,
+    **{
+        name: _math1(getattr(math, name))
+        for name in ("sqrt", "cos", "sin", "tan", "log", "exp")
+    },
+    "floor": math.floor,
+    "ceil": math.ceil,
+    "length": _length,
+    "join": lambda xs, sep: sep.join(str(x) for x in xs),
+    "split": lambda s, sep: s.split(sep),
+    "upper": lambda s: s.upper(),
+    "lower": lambda s: s.lower(),
+    "trim": lambda s: s.strip(),
+    "replace": lambda s, old, new: s.replace(old, new),
+    "substr": lambda s, start, n: s[start : start + n],  # 0-based, as compiled
+    "contains": lambda hay, needle: needle in hay,
+}
+
+
+def _reduce(call, xs, acc, fn):
+    for x in xs:
+        acc = call(fn, acc, x)
+    return acc
+
+
+# higher-order builtins: `call(fn, *args)` applies a uDLang function value
+HOF_BUILTINS = {
+    "map": lambda call, xs, fn: [call(fn, x) for x in xs],
+    "filter": lambda call, xs, fn: [x for x in xs if call(fn, x)],
+    "reduce": _reduce,
+}
+
+_NATIVES = {
+    name: Native(name, arity, {**SCALAR_BUILTINS, **HOF_BUILTINS}[name])
+    for name, arity in BUILTIN_ARITY.items()
+}

@@ -113,9 +113,8 @@ def substitute_type(t: ast.Type, mapping: dict[str, ast.Type]) -> ast.Type:
     """Monomorphizing substitution for type-constructor application:
     replace TName(p) for every parameter p in `mapping`, structurally
     recursing — the lowering of the reference's parse-only TypeCons
-    (src/ast.rs:203-205). Shared by the compiler's and the interp's type
-    resolution so both paths expand generics identically. Inner
-    parameters shadow outer ones via TFunc's own param list."""
+    (src/ast.rs:203-205), used by resolve_type. Inner parameters shadow
+    outer ones via TFunc's own param list."""
     if isinstance(t, ast.TName):
         return mapping.get(t.name, t)
     if isinstance(t, ast.TOption):
@@ -166,6 +165,92 @@ def apply_type_cons(
             f"argument(s), got {len(args)}"
         )
     return substitute_type(tf.body, dict(zip(tf.params, args)))
+
+
+def collect_typedefs(program: ast.Program) -> dict[str, ast.Type]:
+    """The program's `type` declarations by name, pre-scanned so input and
+    output declarations may reference them."""
+    return {
+        d.name: d.type
+        for d in list(program.decls) + list(program.body)
+        if isinstance(d, ast.TypeDef)
+    }
+
+
+def resolve_type(
+    t: ast.Type, typedefs: dict[str, ast.Type], _depth: int = 0
+) -> ast.Type:
+    """Structural form of a declared type: typedef aliases and generic
+    applications expanded, the numeric tower aliased, value types reduced
+    to their representation. The one resolver behind both execution paths
+    (the compiler's typing and the interpreter's typed pattern binds)."""
+    if _depth > MAX_TCONS_DEPTH:
+        raise KernelTypeError(
+            "type-constructor expansion exceeds depth "
+            f"{MAX_TCONS_DEPTH} (self-referential generic?)"
+        )
+    if isinstance(t, ast.TCons):
+        # generic application `Box<Int>` — monomorphize (SURVEY §2.11;
+        # the reference parses this form but never lowers it)
+        cons = t.cons
+        if not isinstance(cons, ast.TName):
+            raise KernelTypeError(f"cannot apply non-name type {cons!r}")
+        tf = typedefs.get(cons.name)
+        if not isinstance(tf, ast.TFunc):
+            raise KernelTypeError(
+                f"{cons.name} is not a parameterized type (declare it "
+                f"as `type {cons.name}<...>: ...;`)"
+            )
+        return resolve_type(
+            apply_type_cons(tf, cons.name, t.args), typedefs, _depth + 1
+        )
+    if isinstance(t, ast.TName):
+        if t.name in typedefs:
+            td = typedefs[t.name]
+            if isinstance(td, ast.TFunc):
+                raise KernelTypeError(
+                    f"type constructor {t.name} used without type "
+                    f"arguments ({t.name}<...> expected)"
+                )
+            return resolve_type(td, typedefs, _depth)
+        if t.name in NUMERIC_ALIASES:
+            return NUMERIC_ALIASES[t.name]
+        raise KernelTypeError(f"unknown type name {t.name}")
+    if isinstance(t, ast.TValue):
+        # value types constrain the domain, not the representation
+        return python_type_of(t.value)
+    if isinstance(t, ast.TOption):
+        return ast.TOption(resolve_type(t.inner, typedefs, _depth))
+    if isinstance(t, ast.TList):
+        return ast.TList(resolve_type(t.item, typedefs, _depth))
+    if isinstance(t, ast.TMap):
+        return ast.TMap(resolve_type(t.value, typedefs, _depth))
+    if isinstance(t, ast.TTuple):
+        return ast.TTuple(
+            tuple(resolve_type(i, typedefs, _depth) for i in t.items)
+        )
+    if isinstance(t, ast.TRecord):
+        # record fields resolve too — a generic body is usually a record
+        # over the parameters (`type Box<T>: {field v: T;};`)
+        return ast.TRecord(
+            tuple(
+                ast.TRecordField(f.name, resolve_type(f.type, typedefs, _depth))
+                for f in t.fields
+            ),
+            methods=t.methods,
+        )
+    if isinstance(t, ast.TUnion):
+        # `"Hello" | "Goodnight"` collapses to Str — only unions with
+        # genuinely distinct representations need the tagged struct
+        variants: list[ast.Type] = []
+        for v in t.variants:
+            rv = resolve_type(v, typedefs, _depth)
+            if rv not in variants:
+                variants.append(rv)
+        if len(variants) == 1:
+            return variants[0]
+        return ast.TUnion(tuple(variants))
+    return t
 
 
 def type_tag(t: ast.Type) -> str:
