@@ -924,7 +924,7 @@ def test_compiled_equals_interp_on_builtin_nulls(spark, expr, inputs):
 
 
 def test_fold_bin_null_operand_still_validates_types():
-    """r9 ADVICE (low): fold_bin's NULL branch must validate op/type
+    """r9 ADVICE (low): the constant fold must validate op/type
     compatibility BEFORE NULL-propagating — an ill-typed expression with a
     NULL constant operand raises exactly like the non-constant compile_bin
     path, instead of semantics depending on constant folding."""

@@ -20,8 +20,9 @@ This module holds the one copy of uDLang's value semantics over plain
 Python values: the operators (`binop`, `unop`, `trunc_div`), the `as`
 cast (`cast_value`) and the scalar builtins (`SCALAR_BUILTINS`, named
 with their arities in `BUILTIN_ARITY`). The compiler's constant folding
-calls these same functions, so folding can never change a result; type
-resolution is shared too (types.resolve_type).
+calls these same functions, so a fold computes the value this interpreter
+computes (the one deliberate exception, Int ^ negative Int, is noted in
+compiler.compile_bin); type resolution is shared too (types.resolve_type).
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """uDLang kernel queries: the repository's example programs
 (udlang_spark/examples/*.us, one per example in the reference's e2e suite)
-compiled by udlang_spark.kernel and applied to driver testdata tables, each
+compiled by udlang_spark.kernel and applied to the testdata tables, each
 with a DuckDB oracle expressing the same semantics in SQL.
 
 These exercise the full frontend: parse → analysis → inline → Column
