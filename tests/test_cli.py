@@ -33,6 +33,18 @@ def test_dump_ast():
     assert "kind='script'" in got and "Out(" in got
 
 
+def test_compile_prints_sql(spark):
+    """`compile` prints the SQL of the kernel's analyzed output expression,
+    and that text parses back to the kernel's rows."""
+    from pyspark.sql import functions as F
+
+    assert _cli("compile", HELLO).strip() == "array(concat('Hello, ', value))"
+    sql = _cli("compile", os.path.join(EXAMPLES_DIR, "fact.us")).strip()
+    df = spark.createDataFrame([(n,) for n in range(-1, 8)], "value long")
+    got = sorted(r[0] for r in df.select(F.explode(F.expr(sql))).collect())
+    assert got == [-1, 0, 1, 2, 6, 24, 120, 720, 5040]
+
+
 def test_dump_expr_repl():
     got = _cli("dump-expr", stdin="1 + 2 * 3\n[xs | $ * 2]\n")
     assert "Bin(op='+'" in got

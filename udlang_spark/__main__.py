@@ -2,7 +2,7 @@
 (reference src/main.rs:51-62 — SURVEY.md §3.2-3.3):
 
   python -m udlang_spark dump-ast  <script.us>   # parse → AST pretty-print
-  python -m udlang_spark compile   <script.us>   # parse+lower → Column expr
+  python -m udlang_spark compile   <script.us>   # parse+lower → SQL expression
   python -m udlang_spark dump-expr               # expression REPL (stdin)
   python -m udlang_spark run <script.us> --input PATH [--format json|csv|parquet|msgpack]
                                           [--input-col NAME] [--output PATH]
@@ -11,7 +11,7 @@
                                           [--format json|csv|msgpack] [--policy ...]
   python -m udlang_spark lower <parquet> --output PATH [--format json|msgpack]
 
-`compile` prints the Catalyst expression the kernel lowers to — the
+`compile` prints the SQL of the expression the kernel lowers to — the
 engine's analogue of `udlang --compile`'s IR dump; `run` executes the
 kernel over a file and emits JSON lines (the udlift | udlang | udlower
 pipeline collapsed into one process)."""
@@ -32,26 +32,19 @@ def _dump_ast(path: str) -> int:
 
 
 def _compile(path: str) -> int:
-    from pyspark.sql import functions as F
-
-    from udlang_spark.kernel import ast
     from udlang_spark.kernel.api import compile_kernel_file
-    from udlang_spark.kernel.compiler import SCol
     from udlang_spark.session import get_spark
+    from udlang_spark.sources import json_lift
 
     spark = get_spark("udlang_compile")  # Column exprs live on the JVM
     spark.sparkContext.setLogLevel("ERROR")
     k = compile_kernel_file(path)
-    it = k.resolved_input
-    if isinstance(it, ast.TRecord):
-        in_val = SCol(F.struct(*[F.col(f.name) for f in it.fields]), it)
-    else:
-        in_val = SCol(F.col("value"), it)
-    col = k.outputs_column(in_val)
-    try:
-        print(col._jc.expr().sql())
-    except Exception:
-        print(col)
+    # analyze the expression over an empty frame of the declared input
+    # shape: the analyzed projection's child is the resolved expression
+    df = spark.createDataFrame([], json_lift.input_schema(k.input_type))
+    col = k.outputs_column(k._in_sval(df, None))
+    analyzed = df.select(col)._jdf.queryExecution().analyzed()
+    print(analyzed.projectList().head().child().sql())
     return 0
 
 
