@@ -2582,3 +2582,84 @@ def test_match_untyped_bind_keeps_optional(spark):
         compile_kernel(src).apply(df, input_col="value")
     # the interp is a runtime walker: value present -> computes
     assert Interp(parse(src)).run(5) == [10]
+
+
+_DECL_OUT_HEAD = (
+    'version 0.1-pre_mvp;\nscript "declaration outputs";\n'
+    "proc p(n: Int) { out n; }\nlet y = p(in + 100);\n"
+    "input Int;\noutput Int;\n"
+)
+
+
+@pytest.mark.parametrize("decl", [True, False], ids=["decl_out", "no_decl"])
+@pytest.mark.parametrize(
+    "body, fast",
+    [
+        ("out in;", True),
+        ("if (in > 1) { out in; }", True),
+        ("if ({ out in + 7; in > 1 }) { out in; }", False),
+        ("out { out in * 3; in };", False),
+    ],
+)
+def test_single_out_shapes_keep_every_output(spark, decl, body, fast):
+    """Kernels of the filter+select shape give the same rows from apply(),
+    apply(with_pos=True) and the interpreter, including the rows a `let`
+    declaration emits by calling an `out`-emitting proc. Only a kernel
+    whose one `out` is its sole source of rows lowers to filter+select
+    (no Generate node); everything else lowers to posexplode."""
+    from udlang_spark.kernel.api import Kernel
+    from udlang_spark.kernel.interp import Interp
+    from udlang_spark.kernel.parser import parse
+
+    head = _DECL_OUT_HEAD if decl else _DECL_OUT_HEAD.replace("let y = p(in + 100);\n", "")
+    prog = parse(head + body)
+    inputs = [1, 2, 3]
+    df = spark.createDataFrame([(v,) for v in inputs], "value long")
+    k = Kernel(prog)
+    plain = k.apply(df)
+    with_pos = k.apply(df, with_pos=True).drop("pos")
+    interp = Interp(prog)
+    expect = sorted(o for v in inputs for o in interp.run(v))
+    assert sorted(r.out for r in plain.collect()) == expect
+    assert sorted(r.out for r in with_pos.collect()) == expect
+    generates = "Generate" in plain._jdf.queryExecution().optimizedPlan().toString()
+    assert generates is not (fast and not decl)
+
+
+def _kernel_sources():
+    import glob
+    import os
+
+    from udlang_spark.queries import kernels as q
+
+    srcs = {
+        os.path.basename(p): open(p).read()
+        for p in sorted(glob.glob(os.path.join(q.EXAMPLES_DIR, "*.us")))
+    }
+    for name in ("FILTER_KERNEL", "MATCH_LIT_KERNEL", "MATCH_UNION_KERNEL", "TOWER_KERNEL"):
+        srcs[name] = getattr(q, name)
+    return srcs
+
+
+@pytest.mark.parametrize("name", sorted(_kernel_sources()))
+def test_uncached_apply_builds_one_compiler(spark, monkeypatch, name):
+    """One uncached apply() runs exactly one Compiler pass, whichever of
+    the filter+select and posexplode forms the kernel lowers to."""
+    from udlang_spark.kernel import api
+    from udlang_spark.kernel.parser import parse
+    from udlang_spark.sources.json_lift import input_schema
+
+    built = []
+
+    class Counting(api.Compiler):
+        def __init__(self, *a, **kw):
+            built.append(1)
+            super().__init__(*a, **kw)
+
+    monkeypatch.setattr(api, "Compiler", Counting)
+    k = api.Kernel(parse(_kernel_sources()[name]))
+    df = spark.createDataFrame([], input_schema(k.resolved_input))
+    k.apply(df)
+    assert len(built) == 1
+    k.apply(df)  # the input binding's compile is cached
+    assert len(built) == 1

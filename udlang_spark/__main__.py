@@ -41,8 +41,8 @@ def _compile(path: str) -> int:
     k = compile_kernel_file(path)
     # analyze the expression over an empty frame of the declared input
     # shape: the analyzed projection's child is the resolved expression
-    df = spark.createDataFrame([], json_lift.input_schema(k.input_type))
-    col = k.outputs_column(k._in_sval(df, None))
+    df = spark.createDataFrame([], json_lift.input_schema(k.resolved_input))
+    col = k.outputs_column(df)
     analyzed = df.select(col)._jdf.queryExecution().analyzed()
     print(analyzed.projectList().head().child().sql())
     return 0

@@ -18,9 +18,15 @@ from udlang_spark.kernel.compiler import (
     BUILTINS,
     MAX_RECURSION_DEPTH,
     Compiler,
+    Ctx,
     SCol,
     SVal,
+    as_col,
+    concat_outs,
+    empty_outs,
+    outs_or_empty,
     sized_range_check,
+    vtype,
 )
 from udlang_spark.kernel.parser import parse
 from udlang_spark.kernel.types import (
@@ -30,6 +36,59 @@ from udlang_spark.kernel.types import (
     resolve_type,
     to_spark,
 )
+
+
+def _single_out(body: tuple[ast.Stmt, ...]) -> tuple[ast.Expr | None, ast.Expr] | None:
+    """(p, e) for a body of one `if (p) { out e; }`, (None, e) for a body of
+    one bare `out e;`, else None: the AST shape of the filter+select form."""
+    if len(body) != 1:
+        return None
+    stmt = body[0]
+    if isinstance(stmt, ast.Out):
+        return None, stmt.value
+    if (
+        isinstance(stmt, ast.ExprStmt)
+        and isinstance(stmt.expr, ast.Cond)
+        and len(stmt.expr.clauses) == 1
+        and stmt.expr.default is None
+    ):
+        pred, block = stmt.expr.clauses[0]
+        if (
+            isinstance(block, ast.Block)
+            and block.ret is None
+            and len(block.stmts) == 1
+            and isinstance(block.stmts[0], ast.Out)
+        ):
+            return pred, block.stmts[0].value
+    return None
+
+
+def _guarded(ctx: Ctx, pred: Column | None, pouts: Column | None, body: Column) -> Column:
+    """`if (p) { body }` as an outputs array: the when() compile_cond builds,
+    after the predicate's own outputs."""
+    if pred is None:
+        return body
+    return concat_outs(ctx, [pouts, F.when(pred, body).otherwise(empty_outs(ctx))])
+
+
+@dataclass
+class _Lowered:
+    """One Compiler pass over a kernel for one input binding: the parts of
+    both lowering forms. `single` is the (predicate or None, value) pair of
+    the filter+select form, set when nothing but that one `out` emits;
+    `outs` (the posexplode form's array<output>) is then built on demand."""
+
+    ctx: Ctx
+    taps: tuple[Column, ...]
+    bindings: tuple[tuple[str, Column], ...]
+    outs: Column | None
+    single: tuple[Column | None, Column] | None = None
+
+    def outs_array(self) -> Column:
+        if self.outs is None:
+            pred, value = self.single
+            self.outs = _guarded(self.ctx, pred, None, F.array(value))
+        return self.outs
 
 
 @dataclass
@@ -42,8 +101,8 @@ class Kernel:
     # of any particular DataFrame (they resolve by column NAME), so the
     # expensive symbolic compile + py4j tree construction — measured ~1 s
     # for a depth-48 recursion unroll, more than the query's own execution
-    # at sf0.1 — runs once per (input_col, keep, out_name, mode), not once
-    # per apply(). A long-running engine compiles each kernel shape once.
+    # at sf0.1 — runs once per input binding (_input_col), not once per
+    # apply(). A long-running engine compiles each kernel shape once.
     _expr_cache: dict = field(default_factory=dict, repr=False, compare=False)
 
     @property
@@ -64,25 +123,29 @@ class Kernel:
     def resolved_output(self) -> ast.Type:
         return resolve_type(self.program.output, collect_typedefs(self.program))
 
-    def outputs_column(self, in_val: SVal) -> Column:
-        """array<output> Column for one input record symbol. Compiled with
+    def outputs_column(self, df: DataFrame, input_col: str | None = None) -> Column:
+        """array<output> Column of the kernel over `df`. Compiled with
         hoisting disabled so the result is a single self-contained
-        expression (dump-expr/explain); apply() uses the hoisting path."""
+        expression (the CLI's `compile`); apply() uses the hoisting path."""
         return Compiler(
             self.program, self.max_depth, self.libs, allow_hoist=False
-        ).compile(in_val)
+        ).compile(self._in_value(self._input_col(df, input_col)))
 
-    def _outputs_and_debug(
-        self, in_val: SVal
-    ) -> tuple[Column, Column | None, tuple[tuple[str, Column], ...]]:
-        """(array<output>, array<string> of `!` taps or None, hoisted
-        intermediate-projection bindings — see Compiler._maybe_hoist)."""
-        c = Compiler(self.program, self.max_depth, self.libs)
-        outs = c.compile(in_val)
-        dbg = F.array(*c.debug_taps) if c.debug_taps else None
-        return outs, dbg, tuple(c.bindings)
+    def _input_col(self, df: DataFrame, input_col: str | None) -> str | None:
+        """The column `in` binds to: the input binding, and the only
+        df-dependent part of expression construction. None for record
+        inputs, which bind by field names."""
+        if isinstance(self.resolved_input, ast.TRecord):
+            return None
+        if input_col is None:
+            if len(df.columns) != 1:
+                raise KernelTypeError(
+                    "scalar-input kernel on a multi-column DataFrame: pass input_col"
+                )
+            return df.columns[0]
+        return input_col
 
-    def _in_sval(self, df: DataFrame, input_col: str | None) -> SVal:
+    def _in_value(self, input_col: str | None) -> SVal:
         # the resolved type, so `in` carries a structural type (e.g.
         # `input "Hello" | "Goodnight"` is Str; unions are tagged structs)
         it = self.resolved_input
@@ -91,12 +154,6 @@ class Kernel:
                 *[F.col(f.name).alias(f.name) for f in it.fields]
             )
             return SCol(struct, it)
-        if input_col is None:
-            if len(df.columns) != 1:
-                raise KernelTypeError(
-                    "scalar-input kernel on a multi-column DataFrame: pass input_col"
-                )
-            input_col = df.columns[0]
         if is_sized_int(it):
             # sized input (SURVEY.md §1.2): the column's STORAGE type may be
             # wider than the logical range (U8 rides in a Short; U64 in a
@@ -104,6 +161,36 @@ class Kernel:
             # an out-of-range input record raises instead of wrapping
             return SCol(sized_range_check(F.col(input_col), it.name), ast.T_INT)
         return SCol(F.col(input_col), it)
+
+    def _lower(self, in_val: SVal) -> _Lowered:
+        """The kernel's one Compiler pass. A body of the _single_out shape
+        compiles its parts here — decls, then `p`, then `e` (under `p`, as
+        compile_cond does) — so the posexplode array is assembled from them
+        and the filter+select pair needs no second compile."""
+        c = Compiler(self.program, self.max_depth, self.libs)
+        shape = _single_out(self.program.body)
+        if shape is None:
+            outs = c.compile(in_val)
+            return _Lowered(c.ctx, tuple(c.debug_taps), tuple(c.bindings), outs)
+        env: dict = {**BUILTINS, "in": in_val}
+        side = [c.compile_stmt(d, env) for d in self.program.decls]
+        pred_ast, value_ast = shape
+        pred = pouts = None
+        if pred_ast is not None:
+            pval, pouts = c.compile_expr(pred_ast, env)
+            if vtype(pval) is not ast.T_BOOL:
+                raise KernelTypeError("condition must be Bool")
+            pred = as_col(pval)
+        with c._on_path(pred):
+            value, vouts = c.compile_out(value_ast, env)
+        low = _Lowered(c.ctx, tuple(c.debug_taps), tuple(c.bindings), None)
+        if any(o is not None for o in [*side, pouts, vouts]):
+            body = concat_outs(c.ctx, [vouts, F.array(value)])
+            side.append(_guarded(c.ctx, pred, pouts, body))
+            low.outs = outs_or_empty(c.ctx, concat_outs(c.ctx, side))
+        else:
+            low.single = (pred, value)
+        return low
 
     def _apply_interp(
         self,
@@ -118,23 +205,17 @@ class Kernel:
         import pandas as pd
         from pyspark.sql.types import StructField, StructType
 
-        if isinstance(self.resolved_input, ast.TRecord):
+        in_col = self._input_col(df, input_col)
+        if in_col is None:
             raise KernelTypeError(
                 "recursion='interp' supports scalar-input kernels "
                 "(record inputs: use the compiled path)"
             )
-        if input_col is None:
-            if len(df.columns) != 1:
-                raise KernelTypeError(
-                    "scalar-input kernel on a multi-column DataFrame: pass input_col"
-                )
-            input_col = df.columns[0]
         fields = [df.schema[c] for c in keep]
         schema = StructType(
             fields + [StructField(out_name, self.output_spark_type(), True)]
         )
         prog = self.program
-        in_col = input_col
 
         def run(batches):
             from udlang_spark.kernel.interp import Interp
@@ -175,95 +256,6 @@ class Kernel:
 
         return df.select(*keep, in_col).mapInPandas(run, schema)
 
-    def _resolved_input_col(self, df: DataFrame, input_col: str | None) -> str | None:
-        """The column name `in` binds to — the only df-dependent part of
-        expression construction (and only when input_col defaults)."""
-        if isinstance(self.resolved_input, ast.TRecord):
-            return None  # record inputs bind by field names, not input_col
-        if input_col is None:
-            if len(df.columns) != 1:
-                raise KernelTypeError(
-                    "scalar-input kernel on a multi-column DataFrame: pass input_col"
-                )
-            return df.columns[0]
-        return input_col
-
-    def _filter_select_fastpath(
-        self, df: DataFrame, input_col: str | None, keep: tuple[str, ...],
-        out_name: str,
-    ) -> DataFrame | None:
-        """Peephole (SURVEY.md §2.2): a kernel whose whole body is
-        `if (p) { out e; }` (or a bare `out e;`) lowers to filter+select
-        instead of posexplode(when(...)). This keeps the predicate a plain
-        Filter node, so Catalyst pushes it into the parquet scan — at scale
-        the difference between reading a partition and skipping it."""
-        key = ("fast", self._resolved_input_col(df, input_col), keep, out_name)
-        result = self._expr_cache.get(key)
-        if result is None:
-            result = self._fastpath_columns(df, input_col)
-            self._expr_cache[key] = result
-        if result[0] == "none":
-            return None
-        if result[0] == "out":
-            base = df
-            for bname, bcol in result[2]:
-                base = base.select("*", bcol.alias(bname))
-            return base.select(*[F.col(c) for c in keep], result[1].alias(out_name))
-        return df.filter(result[1]).select(
-            *[F.col(c) for c in keep], result[2].alias(out_name)
-        )
-
-    def _fastpath_columns(self, df: DataFrame, input_col: str | None):
-        """("none",) | ("out", out_col) | ("filter", pred_col, out_col)."""
-        body = [s for s in self.program.body]
-        decls = self.program.decls
-        # declarations must be pure (no `out` at init time) — funcs/lets are;
-        # conservative: allow any decls, they contribute no rows unless they
-        # contain Out/iteration statements
-        if any(isinstance(s, (ast.Out, ast.ListIter, ast.MapIter, ast.Suppose)) for s in decls):
-            return ("none",)
-        if len(body) != 1:
-            return ("none",)
-        comp = Compiler(self.program, self.max_depth, self.libs)
-        env: dict = {**BUILTINS, "in": self._in_sval(df, input_col)}
-        for d in decls:
-            comp.compile_stmt(d, env)
-        stmt = body[0]
-        if isinstance(stmt, ast.Out):
-            # unconditional single `out`: eager per row, so hoisting large
-            # range-check operands is safe here (mirrors compile_stmt's Out
-            # arm); the filter case below stays unarmed — its out expression
-            # only evaluates for rows passing the predicate
-            with comp._hoist_scope():
-                val, outs = comp.compile_expr(stmt.value, env)
-                if outs is not None:
-                    return ("none",)
-                out_col = comp.coerce_to(val, self.resolved_output)
-            return ("out", out_col, tuple(comp.bindings))
-        if (
-            isinstance(stmt, ast.ExprStmt)
-            and isinstance(stmt.expr, ast.Cond)
-            and len(stmt.expr.clauses) == 1
-            and stmt.expr.default is None
-        ):
-            pred_ast, block = stmt.expr.clauses[0]
-            if not (
-                isinstance(block, ast.Block)
-                and block.ret is None
-                and len(block.stmts) == 1
-                and isinstance(block.stmts[0], ast.Out)
-            ):
-                return ("none",)
-            pval, pouts = comp.compile_expr(pred_ast, env)
-            oval, oouts = comp.compile_expr(block.stmts[0].value, env)
-            if pouts is not None or oouts is not None:
-                return ("none",)
-            out_col = comp.coerce_to(oval, self.resolved_output)
-            from udlang_spark.kernel.compiler import as_col
-
-            return ("filter", as_col(pval), out_col)
-        return ("none",)
-
     def apply(
         self,
         df: DataFrame,
@@ -281,9 +273,16 @@ class Kernel:
         emit nothing produce no rows (posexplode drops empty arrays), which
         is exactly the reference's conditional-`out` filter semantics.
 
-        Single-`out` and conditional-single-`out` kernels take a
-        filter+select fast path so predicates and projections push down to
-        the scan (see _filter_select_fastpath).
+        Each (kernel, input binding) is compiled by one Compiler pass
+        (_lower), which yields the parts of both lowering forms. A body of
+        one `out e;` or one `if (p) { out e; }` lowers to filter+select
+        (SURVEY.md §2.2) when the declarations, `p` and `e` emit no outputs
+        of their own: the predicate stays a plain Filter node, so Catalyst
+        pushes it into the parquet scan — at scale the difference between
+        reading a partition and skipping it. Otherwise, and under with_pos
+        or debug, the kernel lowers to posexplode, and outputs emitted by
+        declarations (a `let` calling an `out`-emitting proc) are kept on
+        both forms.
 
         debug=True adds a `_debug` array<string> column holding the record's
         `!`-tapped values (manual.md:54-62 — the reference's stderr trace,
@@ -301,29 +300,30 @@ class Kernel:
             return self._apply_interp(df, input_col, keep, out_name)
         if recursion != "unroll":
             raise ValueError("recursion must be 'unroll' or 'interp'")
-        if not with_pos and not debug:
-            fast = self._filter_select_fastpath(df, input_col, keep, out_name)
-            if fast is not None:
-                return fast
-        key = ("main", self._resolved_input_col(df, input_col))
-        cached = self._expr_cache.get(key)
-        if cached is None:
-            cached = self._outputs_and_debug(self._in_sval(df, input_col))
-            self._expr_cache[key] = cached
-        outs, dbg, bindings = cached
+        key = self._input_col(df, input_col)
+        low = self._expr_cache.get(key)
+        if low is None:
+            low = self._lower(self._in_value(key))
+            self._expr_cache[key] = low
+        cols = [F.col(c) for c in keep]
+        if low.single is not None and not with_pos and not debug:
+            pred, value = low.single
+            base = df if pred is None else df.filter(pred)
+            for bname, bcol in low.bindings:
+                base = base.select("*", bcol.alias(bname))
+            return base.select(*cols, value.alias(out_name))
         # hoisted range-check operands become narrow intermediate
         # projections below the output select; Catalyst's CollapseProject
         # re-inlines the cheap ones and keeps the expensive multi-referenced
         # ones split — which is the point (janino-limit fix, SURVEY §2.3)
         base = df
-        for bname, bcol in bindings:
+        for bname, bcol in low.bindings:
             base = base.select("*", bcol.alias(bname))
-        exploded = F.posexplode(outs)
-        cols = [F.col(c) for c in keep]
-        if debug and dbg is not None:
-            sel = base.select(*cols, dbg.alias("_debug"), exploded.alias("pos", out_name))
+        exploded = F.posexplode(low.outs_array()).alias("pos", out_name)
+        if debug and low.taps:
+            sel = base.select(*cols, F.array(*low.taps).alias("_debug"), exploded)
         else:
-            sel = base.select(*cols, exploded.alias("pos", out_name))
+            sel = base.select(*cols, exploded)
         if not with_pos:
             sel = sel.drop("pos")
         return sel

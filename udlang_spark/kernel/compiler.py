@@ -464,13 +464,7 @@ class Compiler:
             )
             return concat_outs(self.ctx, [outs, poison])
         if isinstance(stmt, ast.Out):
-            # `out` evaluates eagerly for every row reaching it, so large
-            # range-check operands compiled here may hoist into projection
-            # bindings (the _path/_hof guards inside _maybe_hoist still
-            # block hoisting when this `out` sits under a branch)
-            with self._hoist_scope():
-                val, outs = self.compile_expr(stmt.value, env)
-                out_col = self.coerce_to(val, self.resolve_type(self.program.output))
+            out_col, outs = self.compile_out(stmt.value, env)
             return concat_outs(self.ctx, [outs, F.array(out_col)])
         if isinstance(stmt, ast.ExprStmt):
             _, outs = self.compile_expr(stmt.expr, env)
@@ -495,6 +489,17 @@ class Compiler:
         if isinstance(stmt, ast.Export):
             raise KernelCompileError("`export` is only valid in a lib")
         raise KernelCompileError(f"unsupported statement {stmt!r}")
+
+    def compile_out(self, value: ast.Expr, env: dict) -> tuple[Column, Column | None]:
+        """An `out` statement's value coerced to the output type, and the
+        outputs the value itself emits. `out` evaluates eagerly for every
+        row reaching it, so large range-check operands compiled here may
+        hoist into projection bindings (the _path/_hof guards inside
+        _maybe_hoist still block hoisting when this `out` sits under a
+        branch)."""
+        with self._hoist_scope():
+            val, outs = self.compile_expr(value, env)
+            return self.coerce_to(val, self.resolve_type(self.program.output)), outs
 
     # -- module linking (SURVEY.md §2.10 modules row; §7.2 step 10) --------
     def compile_import(self, stmt: ast.Import, env: dict) -> None:
@@ -1276,22 +1281,14 @@ class Compiler:
                 dval, douts = None, None
             compiled.append((None, None, dval, douts))
 
-        # assemble: iterate reversed, building value + outs when-chains
-        value_needed = any(
-            bval is not None and not (isinstance(bval, SConst) and bval.value is None)
-            for _, _, bval, _ in compiled
-        )
         # result type
         rtype: ast.Type | None = None
         for _, _, bval, _ in compiled:
             if isinstance(bval, (SCol, SConst)):
                 rtype = vtype(bval) if rtype is None else unify(rtype, vtype(bval))
 
-        val_col: Column | None = None
-        outs_col: Column | None = None
-        pred_outs_parts: list[Column | None] = []
-        for pval, pouts, bval, bouts in compiled:
-            pred_outs_parts.append(pouts)
+        # assemble: iterate reversed, building value + outs when-chains
+        pred_outs_parts = [pouts for _, pouts, _, _ in compiled]
 
         # walk branches from last to first
         tail_val: Column | None = None
