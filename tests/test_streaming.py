@@ -88,7 +88,9 @@ def test_windowed_stream_equals_batch(spark, events_json_dir):
         stream, "ts", window="1 hour", watermark="2 hours",
         group_cols=("event_type",), aggs={"value": "sum"},
     )
-    got = runner.run_windowed_stream_to_memory(res, "t_win_stream", spark)
+    got = runner.run_stream_to_memory(
+        res, "t_win_stream", spark, output_mode="complete"
+    )
     stream_rows = {
         (r.w.start, r.event_type): (r.n_events, round(r.sum_value, 6))
         for r in got.collect()
@@ -166,7 +168,9 @@ def test_session_window_stream_equals_batch(spark, events_json_dir):
         stream, "ts", gap="2 minutes", watermark="1 hour",
         group_cols=("event_type",), aggs={"value": "sum"},
     )
-    got = runner.run_windowed_stream_to_memory(res, "t_sess_stream", spark)
+    got = runner.run_stream_to_memory(
+        res, "t_sess_stream", spark, output_mode="complete"
+    )
     stream_rows = {
         (r.w.start, r.event_type): (r.n_events, round(r.sum_value, 6))
         for r in got.collect()

@@ -182,7 +182,9 @@ def s_windowed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         src, "ts", window="1 hour", watermark="2 hours",
         group_cols=("event_type",), aggs={"value_fp": "sum"},
     )
-    out = runner.run_windowed_stream_to_memory(res, "q_s_windowed_stream", spark)
+    out = runner.run_stream_to_memory(
+        res, "q_s_windowed_stream", spark, output_mode="complete"
+    )
     return out.select(
         F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("bucket"),
         "event_type",
@@ -483,7 +485,9 @@ def s_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         src, "ts", gap="10 minutes", watermark="2 hours",
         group_cols=("event_type",), aggs={"value_fp": "sum"},
     )
-    out = runner.run_windowed_stream_to_memory(res, "q_s_session_stream", spark)
+    out = runner.run_stream_to_memory(
+        res, "q_s_session_stream", spark, output_mode="complete"
+    )
     return out.select(
         F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("session_start"),
         F.date_format(F.col("w.end"), "yyyy-MM-dd HH:mm:ss").alias("session_end"),
@@ -526,8 +530,8 @@ def s_interval_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         iv, "ts", gap=F.col("gap"), watermark="2 hours",
         group_cols=("user_id",),
     )
-    out = runner.run_windowed_stream_to_memory(
-        res, "q_s_interval_stream", spark
+    out = runner.run_stream_to_memory(
+        res, "q_s_interval_stream", spark, output_mode="complete"
     )
     return out.select(
         "user_id",

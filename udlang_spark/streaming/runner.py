@@ -21,6 +21,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
 
 from udlang_spark.kernel.api import Kernel
@@ -74,6 +75,18 @@ def _stream_shuffle(spark: SparkSession):
             spark.conf.unset(_SHUFFLE_KEY)
         else:
             spark.conf.set(_SHUFFLE_KEY, prev)
+
+
+def _drain(writer: DataStreamWriter, spark: SparkSession, timeout_s: int, what: str) -> None:
+    """Run a stream to completion (availableNow) under the streaming
+    shuffle count. A stream still running at the timeout is stopped and
+    raises: an ignored False would leave a PARTIAL sink while the query
+    keeps running (and holds its sink state for the session)."""
+    with _stream_shuffle(spark):
+        q = writer.trigger(availableNow=True).start()
+        if not q.awaitTermination(timeout_s):
+            q.stop()
+            raise TimeoutError(f"{what} did not finish in {timeout_s}s")
 
 
 def kernel_stream(
@@ -279,17 +292,12 @@ def run_stream_to_parquet(
         .option("path", out_path)
         .option("checkpointLocation", checkpoint_path)
         .outputMode(output_mode)
-        .trigger(availableNow=True)
     )
     if partition_by:
         # hive-layout sink (e.g. shard=N dirs for s_shard_stream): each
         # micro-batch appends only to the partitions it carries rows for
         w = w.partitionBy(*partition_by)
-    with _stream_shuffle(result.sparkSession):
-        q = w.start()
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise TimeoutError(f"stream did not finish in {timeout_s}s")
+    _drain(w, result.sparkSession, timeout_s, "stream")
 
 
 def run_stream_to_memory(
@@ -301,45 +309,14 @@ def run_stream_to_memory(
 ) -> DataFrame:
     """Drain a (bounded) stream into an in-memory table; returns the table.
     Test/debug harness — production sinks are writeStream.format(...).
-    Stateful update-mode operators need output_mode="update"."""
-    with _stream_shuffle(spark):
-        q = (
-            result.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        # an ignored False here would silently return a PARTIAL table while
-        # the query keeps running (and holds memory-sink state for the
-        # session)
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise TimeoutError(
-                f"stream {query_name!r} did not finish in {timeout_s}s"
-            )
-    return spark.table(query_name)
-
-
-def run_windowed_stream_to_memory(
-    result: DataFrame, query_name: str, spark: SparkSession, timeout_s: int = 60
-) -> DataFrame:
-    with _stream_shuffle(spark):
-        q = (
-            result.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        # an ignored False here would silently return a PARTIAL table while
-        # the query keeps running (and holds memory-sink state for the
-        # session)
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise TimeoutError(
-                f"stream {query_name!r} did not finish in {timeout_s}s"
-            )
+    Stateful update-mode operators need output_mode="update"; windowed
+    aggregations re-emitted whole need output_mode="complete"."""
+    w = (
+        result.writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode(output_mode)
+    )
+    _drain(w, spark, timeout_s, f"stream {query_name!r}")
     return spark.table(query_name)
 
 
@@ -518,18 +495,10 @@ def run_sketch_merge_stream(
         )
 
     _recover_swap(target_path)
-    with _stream_shuffle(spark):
-        q = (
-            cell_stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", checkpoint_path)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise TimeoutError(
-                f"sketch merge stream did not finish in {timeout_s}s"
-            )
+    w = cell_stream.writeStream.foreachBatch(apply_batch).option(
+        "checkpointLocation", checkpoint_path
+    )
+    _drain(w, spark, timeout_s, "sketch merge stream")
 
 
 def run_cdc_apply_stream(
@@ -576,15 +545,7 @@ def run_cdc_apply_stream(
         _atomic_replace(merged, target_path, batch_id)
 
     _recover_swap(target_path)
-    with _stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", checkpoint_path)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise TimeoutError(
-                f"CDC apply stream did not finish in {timeout_s}s"
-            )
+    w = stream.writeStream.foreachBatch(apply_batch).option(
+        "checkpointLocation", checkpoint_path
+    )
+    _drain(w, spark, timeout_s, "CDC apply stream")
