@@ -306,19 +306,18 @@ class Kernel:
             low = self._lower(self._in_value(key))
             self._expr_cache[key] = low
         cols = [F.col(c) for c in keep]
-        if low.single is not None and not with_pos and not debug:
-            pred, value = low.single
-            base = df if pred is None else df.filter(pred)
-            for bname, bcol in low.bindings:
-                base = base.select("*", bcol.alias(bname))
-            return base.select(*cols, value.alias(out_name))
+        single = low.single if not with_pos and not debug else None
+        base = df
+        if single is not None and single[0] is not None:
+            base = df.filter(single[0])
         # hoisted range-check operands become narrow intermediate
         # projections below the output select; Catalyst's CollapseProject
         # re-inlines the cheap ones and keeps the expensive multi-referenced
         # ones split — which is the point (janino-limit fix, SURVEY §2.3)
-        base = df
         for bname, bcol in low.bindings:
             base = base.select("*", bcol.alias(bname))
+        if single is not None:
+            return base.select(*cols, single[1].alias(out_name))
         exploded = F.posexplode(low.outs_array()).alias("pos", out_name)
         if debug and low.taps:
             sel = base.select(*cols, F.array(*low.taps).alias("_debug"), exploded)
