@@ -2599,14 +2599,19 @@ _DECL_OUT_HEAD = (
         ("if (in > 1) { out in; }", True),
         ("if ({ out in + 7; in > 1 }) { out in; }", False),
         ("out { out in * 3; in };", False),
+        ("if (true) { out in; }", True),
+        ("if (false) { out 1 / 0; }", False),
     ],
 )
 def test_single_out_shapes_keep_every_output(spark, decl, body, fast):
     """Kernels of the filter+select shape give the same rows from apply(),
-    apply(with_pos=True) and the interpreter, including the rows a `let`
-    declaration emits by calling an `out`-emitting proc. Only a kernel
-    whose one `out` is its sole source of rows lowers to filter+select
-    (no Generate node); everything else lowers to posexplode."""
+    apply(with_pos=True), apply(debug=True) and the interpreter, including
+    the rows a `let` declaration emits by calling an `out`-emitting proc.
+    Only a kernel whose one `out` is its sole source of rows lowers to
+    filter+select (no Generate node); everything else lowers to
+    posexplode. A constant predicate prunes as in compile_cond: `true`
+    drops the guard, `false` never compiles the `out` value (its 1 / 0
+    would fail the compile) and leaves only the declarations' rows."""
     from udlang_spark.kernel.api import Kernel
     from udlang_spark.kernel.interp import Interp
     from udlang_spark.kernel.parser import parse
@@ -2618,10 +2623,12 @@ def test_single_out_shapes_keep_every_output(spark, decl, body, fast):
     k = Kernel(prog)
     plain = k.apply(df)
     with_pos = k.apply(df, with_pos=True).drop("pos")
+    debug = k.apply(df, debug=True)
     interp = Interp(prog)
     expect = sorted(o for v in inputs for o in interp.run(v))
     assert sorted(r.out for r in plain.collect()) == expect
     assert sorted(r.out for r in with_pos.collect()) == expect
+    assert sorted(r.out for r in debug.collect()) == expect
     generates = "Generate" in plain._jdf.queryExecution().optimizedPlan().toString()
     assert generates is not (fast and not decl)
 

@@ -21,12 +21,10 @@ from udlang_spark.kernel.compiler import (
     Ctx,
     SCol,
     SVal,
-    as_col,
     concat_outs,
-    empty_outs,
     outs_or_empty,
     sized_range_check,
-    vtype,
+    when_outs,
 )
 from udlang_spark.kernel.parser import parse
 from udlang_spark.kernel.types import (
@@ -63,14 +61,6 @@ def _single_out(body: tuple[ast.Stmt, ...]) -> tuple[ast.Expr | None, ast.Expr] 
     return None
 
 
-def _guarded(ctx: Ctx, pred: Column | None, pouts: Column | None, body: Column) -> Column:
-    """`if (p) { body }` as an outputs array: the when() compile_cond builds,
-    after the predicate's own outputs."""
-    if pred is None:
-        return body
-    return concat_outs(ctx, [pouts, F.when(pred, body).otherwise(empty_outs(ctx))])
-
-
 @dataclass
 class _Lowered:
     """One Compiler pass over a kernel for one input binding: the parts of
@@ -87,7 +77,7 @@ class _Lowered:
     def outs_array(self) -> Column:
         if self.outs is None:
             pred, value = self.single
-            self.outs = _guarded(self.ctx, pred, None, F.array(value))
+            self.outs = when_outs(self.ctx, pred, F.array(value))
         return self.outs
 
 
@@ -123,13 +113,13 @@ class Kernel:
     def resolved_output(self) -> ast.Type:
         return resolve_type(self.program.output, collect_typedefs(self.program))
 
-    def outputs_column(self, df: DataFrame, input_col: str | None = None) -> Column:
+    def outputs_column(self, df: DataFrame) -> Column:
         """array<output> Column of the kernel over `df`. Compiled with
         hoisting disabled so the result is a single self-contained
         expression (the CLI's `compile`); apply() uses the hoisting path."""
         return Compiler(
             self.program, self.max_depth, self.libs, allow_hoist=False
-        ).compile(self._in_value(self._input_col(df, input_col)))
+        ).compile(self._in_value(self._input_col(df, None)))
 
     def _input_col(self, df: DataFrame, input_col: str | None) -> str | None:
         """The column `in` binds to: the input binding, and the only
@@ -164,9 +154,11 @@ class Kernel:
 
     def _lower(self, in_val: SVal) -> _Lowered:
         """The kernel's one Compiler pass. A body of the _single_out shape
-        compiles its parts here — decls, then `p`, then `e` (under `p`, as
-        compile_cond does) — so the posexplode array is assembled from them
-        and the filter+select pair needs no second compile."""
+        compiles its parts here — decls, then the clause `p`/`e` through
+        compile_clause, as compile_cond does — so the posexplode array is
+        assembled from them and the filter+select pair needs no second
+        compile. A constant-false `p` prunes `e`; the kernel then emits only
+        what the decls and `p` emit, on the posexplode form."""
         c = Compiler(self.program, self.max_depth, self.libs)
         shape = _single_out(self.program.body)
         if shape is None:
@@ -175,21 +167,18 @@ class Kernel:
         env: dict = {**BUILTINS, "in": in_val}
         side = [c.compile_stmt(d, env) for d in self.program.decls]
         pred_ast, value_ast = shape
-        pred = pouts = None
-        if pred_ast is not None:
-            pval, pouts = c.compile_expr(pred_ast, env)
-            if vtype(pval) is not ast.T_BOOL:
-                raise KernelTypeError("condition must be Bool")
-            pred = as_col(pval)
-        with c._on_path(pred):
-            value, vouts = c.compile_out(value_ast, env)
+        pred, pouts, res = c.compile_clause(
+            pred_ast, env, lambda: c.compile_out(value_ast, env)
+        )
         low = _Lowered(c.ctx, tuple(c.debug_taps), tuple(c.bindings), None)
-        if any(o is not None for o in [*side, pouts, vouts]):
-            body = concat_outs(c.ctx, [vouts, F.array(value)])
-            side.append(_guarded(c.ctx, pred, pouts, body))
-            low.outs = outs_or_empty(c.ctx, concat_outs(c.ctx, side))
-        else:
-            low.single = (pred, value)
+        side.append(pouts)
+        if res is not None:
+            value, vouts = res
+            if all(o is None for o in [*side, vouts]):
+                low.single = (pred, value)
+                return low
+            side.append(when_outs(c.ctx, pred, concat_outs(c.ctx, [vouts, F.array(value)])))
+        low.outs = outs_or_empty(c.ctx, concat_outs(c.ctx, side))
         return low
 
     def _apply_interp(

@@ -261,6 +261,16 @@ def outs_or_empty(ctx: Ctx, outs: Column | None) -> Column:
     return outs if outs is not None else empty_outs(ctx)
 
 
+def when_outs(
+    ctx: Ctx, cond: Column | None, then: Column | None, otherwise: Column | None = None
+) -> Column:
+    """The outputs `then` on rows where `cond` holds, else `otherwise`; a
+    None `cond` is an unconditional branch (a constant-true predicate)."""
+    if cond is None:
+        return outs_or_empty(ctx, then)
+    return F.when(cond, outs_or_empty(ctx, then)).otherwise(outs_or_empty(ctx, otherwise))
+
+
 @dataclass
 class _CatchFrame:
     """One active `attempt`: throws compiled under it record themselves
@@ -780,9 +790,7 @@ class Compiler:
         with self._on_path(thrown):
             fval, fouts = self.compile_expr(expr.fallback, fb_env)
 
-        outs = F.when(
-            thrown, outs_or_empty(self.ctx, fouts)
-        ).otherwise(outs_or_empty(self.ctx, bouts))
+        outs = when_outs(self.ctx, thrown, fouts, bouts)
         bt, ft = vtype(bval), vtype(fval)
         if bt is ast.T_VOID or ft is ast.T_VOID:
             return SConst(None, ast.T_VOID), outs
@@ -1242,43 +1250,50 @@ class Compiler:
             )
         raise KernelTypeError(f"indexing {t!r}")
 
-    def compile_cond(self, expr: ast.Cond, env: dict):
-        # values and outputs both lower to when-chains; constant predicates
-        # prune branches at compile time
-        clauses: list[tuple[SVal, SVal, Column | None, Column | None]] = []
-        compiled: list = []
-        # negations of the non-constant predicates already tried: branch i
-        # executes under ¬p1 ∧ … ∧ ¬p(i-1) ∧ pi — tracked on _path so a
-        # `throw` in the branch knows its reach condition (ast.Attempt)
-        negs: list[Column] = []
-
-        def branch_path(pcol: Column | None) -> Column | None:
-            conds = [~n for n in negs] + ([pcol] if pcol is not None else [])
-            return _reduce(lambda a, b: a & b, conds) if conds else None
-
-        for pred, body in expr.clauses:
+    def compile_clause(self, pred: ast.Expr | None, env: dict, body, negs=()):
+        """One `if` clause: (predicate Column, the predicate's outputs,
+        body()). body compiles the branch under the clause's reach path
+        ¬n1 ∧ … ∧ ¬nk ∧ p — tracked on _path so a `throw` in the branch
+        knows its reach condition (ast.Attempt). A constant predicate is
+        pruned at compile time: true (or a None `pred`, an `else`) gives a
+        None Column; false gives a None body result, body never compiled."""
+        pcol = pouts = None
+        if pred is not None:
             pval, pouts = self.compile_expr(pred, env)
             if vtype(pval) is not ast.T_BOOL:
                 raise KernelTypeError("condition must be Bool")
-            if isinstance(pval, SConst):
-                if pval.value:
-                    with self._on_path(branch_path(None)):
-                        bval, bouts = self.compile_expr(body, env)
-                    compiled.append((None, pouts, bval, bouts))
-                    break
+            if isinstance(pval, SConst) and not pval.value:
+                return None, pouts, None
+            if not isinstance(pval, SConst):
+                pcol = as_col(pval)
+        conds = [~n for n in negs] + ([pcol] if pcol is not None else [])
+        with self._on_path(_reduce(lambda a, b: a & b, conds) if conds else None):
+            return pcol, pouts, body()
+
+    def compile_cond(self, expr: ast.Cond, env: dict):
+        # values and outputs both lower to when-chains; constant predicates
+        # prune branches at compile time
+        compiled: list = []
+        # the non-constant predicates already tried: branch i executes
+        # under ¬p1 ∧ … ∧ ¬p(i-1) ∧ pi
+        negs: list[Column] = []
+        for pred, body in expr.clauses:
+            pcol, pouts, res = self.compile_clause(
+                pred, env, lambda: self.compile_expr(body, env), negs
+            )
+            if res is None:  # constant-false: branch pruned
                 compiled.append((None, pouts, None, None))
                 continue
-            pcol = as_col(pval)
-            with self._on_path(branch_path(pcol)):
-                bval, bouts = self.compile_expr(body, env)
-            compiled.append((pval, pouts, bval, bouts))
+            compiled.append((pcol, pouts, *res))
+            if pcol is None:  # constant-true: later clauses never run
+                break
             negs.append(pcol)
         else:
+            dval = douts = None
             if expr.default is not None:
-                with self._on_path(branch_path(None)):
-                    dval, douts = self.compile_expr(expr.default, env)
-            else:
-                dval, douts = None, None
+                _, _, (dval, douts) = self.compile_clause(
+                    None, env, lambda: self.compile_expr(expr.default, env), negs
+                )
             compiled.append((None, None, dval, douts))
 
         # result type
@@ -1293,24 +1308,21 @@ class Compiler:
         # walk branches from last to first
         tail_val: Column | None = None
         tail_outs: Column | None = None
-        for pval, pouts, bval, bouts in reversed(compiled):
-            if pval is None:
+        for pcol, pouts, bval, bouts in reversed(compiled):
+            if pcol is None:
                 # default (or constant-true clause)
                 tail_val = (
                     self.coerce_to(bval, rtype) if (bval is not None and rtype) else tail_val
                 )
                 tail_outs = bouts if bouts is not None else tail_outs
                 continue
-            pcol = as_col(pval)
             if rtype is not None:
                 branch_v = (
                     self.coerce_to(bval, rtype) if bval is not None else F.lit(None).cast(to_spark(rtype))
                 )
                 base = tail_val if tail_val is not None else F.lit(None).cast(to_spark(rtype))
                 tail_val = F.when(pcol, branch_v).otherwise(base)
-            b_outs = outs_or_empty(self.ctx, bouts)
-            t_outs = outs_or_empty(self.ctx, tail_outs)
-            tail_outs = F.when(pcol, b_outs).otherwise(t_outs)
+            tail_outs = when_outs(self.ctx, pcol, bouts, tail_outs)
 
         outs_all = concat_outs(self.ctx, pred_outs_parts + [tail_outs])
         if rtype is None or tail_val is None:
@@ -1503,9 +1515,7 @@ class Compiler:
                 )
                 base = tail_val if tail_val is not None else F.lit(None).cast(spark_rt)
                 tail_val = F.when(ccol, bv).otherwise(base)
-            b_outs = outs_or_empty(self.ctx, bouts)
-            t_outs = outs_or_empty(self.ctx, tail_outs)
-            tail_outs = F.when(ccol, b_outs).otherwise(t_outs)
+            tail_outs = when_outs(self.ctx, ccol, bouts, tail_outs)
 
         outs_all = concat_outs(self.ctx, [souts, tail_outs])
         if rtype is None or tail_val is None:
