@@ -7,7 +7,9 @@ import os
 import subprocess
 import sys
 
-from udlang_spark.queries.kernels import EXAMPLES_DIR
+import pytest
+
+from udlang_spark.queries.kernels import EXAMPLES_DIR, MATCH_LIT_KERNEL
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 HELLO = os.path.join(EXAMPLES_DIR, "hello.us")
@@ -59,6 +61,49 @@ def test_run_end_to_end(tmp_path):
     assert lines == ['{"out":"Hello, World"}', '{"out":"Hello, uDLang"}'] or sorted(
         lines
     ) == sorted(['{"out":"Hello, World"}', '{"out":"Hello, uDLang"}'])
+
+
+# an input type that is a type alias of a record
+ALIAS_RECORD_KERNEL = """
+version 0.1-pre_mvp;
+script "aliased record input";
+type Pair: {field a: Int; field b: Str;};
+input Pair;
+output Str;
+out in.b + "!";
+"""
+
+
+@pytest.mark.parametrize(
+    "src, frames, lifted, want",
+    [
+        (
+            MATCH_LIT_KERNEL,
+            ['{"value": "Hello"}', '{"value": "Goodnight"}'],
+            [("Goodnight",), ("Hello",)],
+            ['{"out":"Goodnight, Moon!"}', '{"out":"Hello, World!"}'],
+        ),
+        (
+            ALIAS_RECORD_KERNEL,
+            ['{"a": 1, "b": "x"}', '{"a": 2, "b": "y"}'],
+            [(1, "x"), (2, "y")],
+            ['{"out":"x!"}', '{"out":"y!"}'],
+        ),
+    ],
+    ids=["value_type", "record_alias"],
+)
+def test_run_and_lift_read_the_resolved_input_type(spark, tmp_path, src, frames, lifted, want):
+    """`run` and `lift` read frames against the kernel's structural input
+    type: a value type (`input "Hello" | "Goodnight";` is a Str) or an
+    alias of a record has no Spark schema of its own."""
+    script = tmp_path / "k.us"
+    script.write_text(src)
+    inp = tmp_path / "in.json"
+    inp.write_text("\n".join(frames) + "\n")
+    assert sorted(_cli("run", str(script), "--input", str(inp)).splitlines()) == want
+    pq = str(tmp_path / "lifted")
+    assert "lifted 2 records" in _cli("lift", str(script), "--input", str(inp), "--output", pq)
+    assert sorted(tuple(r) for r in spark.read.parquet(pq).collect()) == lifted
 
 
 def test_run_msgpack_input(tmp_path):

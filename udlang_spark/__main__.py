@@ -36,7 +36,7 @@ def _compile(path: str) -> int:
     from udlang_spark.session import get_spark
     from udlang_spark.sources import json_lift
 
-    spark = get_spark("udlang_compile")  # Column exprs live on the JVM
+    spark = get_spark("udlang_compile")  # the SQL is analyzed on the JVM
     spark.sparkContext.setLogLevel("ERROR")
     k = compile_kernel_file(path)
     # analyze the expression over an empty frame of the declared input
@@ -72,7 +72,9 @@ def _run(path: str, input_path: str, fmt: str, input_col: str | None,
     spark = get_spark("udlang_run")
     spark.sparkContext.setLogLevel("ERROR")
     k = compile_kernel_file(path)
-    it = k.program.input
+    # the structural type: the readers need a Spark schema, which a value
+    # type (`input "Hello" | "Goodnight";`) or an alias does not name
+    it = k.resolved_input
     if fmt == "json":
         df = formats.read_json(spark, input_path, it)
     elif fmt == "csv":
@@ -106,7 +108,7 @@ def _lift(script: str, input_path: str, fmt: str, out_parquet: str, policy: str)
 
     spark = get_spark("udlift")
     spark.sparkContext.setLogLevel("ERROR")
-    it = compile_kernel_file(script).program.input
+    it = compile_kernel_file(script).resolved_input
     readers = {
         "json": formats.read_json,
         "csv": formats.read_csv,

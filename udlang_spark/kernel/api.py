@@ -1,13 +1,13 @@
 """Public kernel API: compile uDLang source, apply it to DataFrames.
 
 The batch path is also the streaming path: kernels are stateless by
-construction (manual.md:21-24), so the same compiled Column expressions run
+construction (manual.md:21-24), so the same compiled SQL expressions run
 unchanged on `spark.readStream` inputs (see udlang_spark/streaming/).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from functools import cached_property, lru_cache
 
 from pyspark.sql import Column, DataFrame
@@ -18,7 +18,6 @@ from udlang_spark.kernel.compiler import (
     BUILTINS,
     MAX_RECURSION_DEPTH,
     Compiler,
-    Ctx,
     SCol,
     SVal,
     concat_outs,
@@ -27,6 +26,7 @@ from udlang_spark.kernel.compiler import (
     when_outs,
 )
 from udlang_spark.kernel.parser import parse
+from udlang_spark.sqltext import call, ident, lit
 from udlang_spark.kernel.types import (
     KernelTypeError,
     collect_typedefs,
@@ -64,21 +64,14 @@ def _single_out(body: tuple[ast.Stmt, ...]) -> tuple[ast.Expr | None, ast.Expr] 
 @dataclass
 class _Lowered:
     """One Compiler pass over a kernel for one input binding: the parts of
-    both lowering forms. `single` is the (predicate or None, value) pair of
-    the filter+select form, set when nothing but that one `out` emits;
-    `outs` (the posexplode form's array<output>) is then built on demand."""
+    both lowering forms, as SQL text. `outs` is the posexplode form's
+    array<output>; `single` is the (predicate or None, value) pair of the
+    filter+select form, set when nothing but that one `out` emits."""
 
-    ctx: Ctx
-    taps: tuple[Column, ...]
-    bindings: tuple[tuple[str, Column], ...]
-    outs: Column | None
-    single: tuple[Column | None, Column] | None = None
-
-    def outs_array(self) -> Column:
-        if self.outs is None:
-            pred, value = self.single
-            self.outs = when_outs(self.ctx, pred, F.array(value))
-        return self.outs
+    taps: tuple[str, ...]
+    bindings: tuple[tuple[str, str], ...]
+    outs: str
+    single: tuple[str | None, str] | None = None
 
 
 @dataclass
@@ -87,13 +80,6 @@ class Kernel:
     max_depth: int = MAX_RECURSION_DEPTH
     # pre-parsed lib programs for `import` linking (name -> lib AST)
     libs: dict[str, ast.Program] | None = None
-    # compiled-expression cache: Column trees are immutable and independent
-    # of any particular DataFrame (they resolve by column NAME), so the
-    # expensive symbolic compile + py4j tree construction — measured ~1 s
-    # for a depth-48 recursion unroll, more than the query's own execution
-    # at sf0.1 — runs once per input binding (_input_col), not once per
-    # apply(). A long-running engine compiles each kernel shape once.
-    _expr_cache: dict = field(default_factory=dict, repr=False, compare=False)
 
     @property
     def input_type(self) -> ast.Type:
@@ -117,9 +103,11 @@ class Kernel:
         """array<output> Column of the kernel over `df`. Compiled with
         hoisting disabled so the result is a single self-contained
         expression (the CLI's `compile`); apply() uses the hoisting path."""
-        return Compiler(
-            self.program, self.max_depth, self.libs, allow_hoist=False
-        ).compile(self._in_value(self._input_col(df, None)))
+        return F.expr(
+            Compiler(self.program, self.max_depth, self.libs, allow_hoist=False).compile(
+                self._in_value(self._input_col(df, None))
+            )
+        )
 
     def _input_col(self, df: DataFrame, input_col: str | None) -> str | None:
         """The column `in` binds to: the input binding, and the only
@@ -140,17 +128,15 @@ class Kernel:
         # `input "Hello" | "Goodnight"` is Str; unions are tagged structs)
         it = self.resolved_input
         if isinstance(it, ast.TRecord):
-            struct = F.struct(
-                *[F.col(f.name).alias(f.name) for f in it.fields]
-            )
-            return SCol(struct, it)
+            fields = [p for f in it.fields for p in (lit(f.name), ident(f.name))]
+            return SCol(call("named_struct", *fields), it)
         if is_sized_int(it):
             # sized input (SURVEY.md §1.2): the column's STORAGE type may be
             # wider than the logical range (U8 rides in a Short; U64 in a
             # Decimal(20,0)), so entry into i64 compute is range-checked —
             # an out-of-range input record raises instead of wrapping
-            return SCol(sized_range_check(F.col(input_col), it.name), ast.T_INT)
-        return SCol(F.col(input_col), it)
+            return SCol(sized_range_check(ident(input_col), it.name), ast.T_INT)
+        return SCol(ident(input_col), it)
 
     def _lower(self, in_val: SVal) -> _Lowered:
         """The kernel's one Compiler pass. A body of the _single_out shape
@@ -163,23 +149,22 @@ class Kernel:
         shape = _single_out(self.program.body)
         if shape is None:
             outs = c.compile(in_val)
-            return _Lowered(c.ctx, tuple(c.debug_taps), tuple(c.bindings), outs)
+            return _Lowered(tuple(c.debug_taps), tuple(c.bindings), outs)
         env: dict = {**BUILTINS, "in": in_val}
         side = [c.compile_stmt(d, env) for d in self.program.decls]
         pred_ast, value_ast = shape
         pred, pouts, res = c.compile_clause(
             pred_ast, env, lambda: c.compile_out(value_ast, env)
         )
-        low = _Lowered(c.ctx, tuple(c.debug_taps), tuple(c.bindings), None)
+        single = None
         side.append(pouts)
         if res is not None:
             value, vouts = res
             if all(o is None for o in [*side, vouts]):
-                low.single = (pred, value)
-                return low
-            side.append(when_outs(c.ctx, pred, concat_outs(c.ctx, [vouts, F.array(value)])))
-        low.outs = outs_or_empty(c.ctx, concat_outs(c.ctx, side))
-        return low
+                single = (pred, value)
+            side.append(when_outs(c.ctx, pred, concat_outs(c.ctx, [vouts, call("array", value)])))
+        outs = outs_or_empty(c.ctx, concat_outs(c.ctx, side))
+        return _Lowered(tuple(c.debug_taps), tuple(c.bindings), outs, single)
 
     def _apply_interp(
         self,
@@ -262,8 +247,9 @@ class Kernel:
         emit nothing produce no rows (posexplode drops empty arrays), which
         is exactly the reference's conditional-`out` filter semantics.
 
-        Each (kernel, input binding) is compiled by one Compiler pass
-        (_lower), which yields the parts of both lowering forms. A body of
+        Each apply compiles the kernel by one Compiler pass (_lower), which
+        yields the parts of both lowering forms; the pass is pure Python
+        (0.1-3.3 ms for the repository's kernels), so it is not cached. A body of
         one `out e;` or one `if (p) { out e; }` lowers to filter+select
         (SURVEY.md §2.2) when the declarations, `p` and `e` emit no outputs
         of their own: the predicate stays a plain Filter node, so Catalyst
@@ -282,34 +268,35 @@ class Kernel:
         recursion="interp" switches to the per-row AST interpreter
         (kernel/interp.py) inside mapInPandas — the SURVEY.md §2.10 UDF
         fallback: reference semantics at ANY recursion depth, at Python
-        speed; the default "unroll" path compiles recursion into Column
+        speed; the default "unroll" path compiles recursion into SQL
         expressions up to max_depth (JVM-speed, bounded depth).
+
+        Each lowered expression — the filter predicate, the output value or
+        array, each hoisted binding — reaches the JVM as one `F.expr` of
+        SQL text.
         """
         if recursion == "interp":
             return self._apply_interp(df, input_col, keep, out_name)
         if recursion != "unroll":
             raise ValueError("recursion must be 'unroll' or 'interp'")
-        key = self._input_col(df, input_col)
-        low = self._expr_cache.get(key)
-        if low is None:
-            low = self._lower(self._in_value(key))
-            self._expr_cache[key] = low
+        low = self._lower(self._in_value(self._input_col(df, input_col)))
         cols = [F.col(c) for c in keep]
         single = low.single if not with_pos and not debug else None
         base = df
         if single is not None and single[0] is not None:
-            base = df.filter(single[0])
+            base = df.filter(F.expr(single[0]))
         # hoisted range-check operands become narrow intermediate
         # projections below the output select; Catalyst's CollapseProject
         # re-inlines the cheap ones and keeps the expensive multi-referenced
         # ones split — which is the point (janino-limit fix, SURVEY §2.3)
-        for bname, bcol in low.bindings:
-            base = base.select("*", bcol.alias(bname))
+        for bname, bsql in low.bindings:
+            base = base.select("*", F.expr(bsql).alias(bname))
         if single is not None:
-            return base.select(*cols, single[1].alias(out_name))
-        exploded = F.posexplode(low.outs_array()).alias("pos", out_name)
+            return base.select(*cols, F.expr(single[1]).alias(out_name))
+        exploded = F.posexplode(F.expr(low.outs)).alias("pos", out_name)
         if debug and low.taps:
-            sel = base.select(*cols, F.array(*low.taps).alias("_debug"), exploded)
+            taps = F.expr(call("array", *low.taps)).alias("_debug")
+            sel = base.select(*cols, taps, exploded)
         else:
             sel = base.select(*cols, exploded)
         if not with_pos:
@@ -337,9 +324,7 @@ def compile_kernel(
     source text (compile-time linking — SURVEY.md §2.10 modules row).
 
     Memoized on (source, max_depth, libs): recompiling the same kernel
-    text returns the SAME Kernel, whose compiled-expression cache then
-    makes repeat apply() calls skip parse + symbolic compile + py4j
-    Column-tree construction entirely — the engine's query-plan cache."""
+    text returns the SAME Kernel without parsing it again."""
     return _compile_kernel_cached(
         source, max_depth, tuple(sorted((libs or {}).items()))
     )

@@ -1,13 +1,20 @@
-"""uDLang kernel → PySpark Column compiler.
+"""uDLang kernel → Catalyst SQL expression compiler.
 
 Strategy (SURVEY.md §7.1): symbolically evaluate the kernel over an
 environment of typed symbolic values, inlining every function/closure/partial
 at compile time (the reference's prototype optimizer strategy —
 scripts/stackfolder.py partial evaluation); the whole kernel lowers to pure
-Column expressions. Per-record multi-`out` semantics (src/vm.rs:583-600)
-lower to one array<output> column; `Kernel.apply` posexplodes it, so a record
-emitting zero outputs yields zero rows (conditional `out` ≡ relational
-filter) and intra-record output order is preserved by the explode position.
+SQL expressions. Per-record multi-`out` semantics (src/vm.rs:583-600)
+lower to one array<output> expression; `Kernel.apply` posexplodes it, so a
+record emitting zero outputs yields zero rows (conditional `out` ≡
+relational filter) and intra-record output order is preserved by the
+explode position.
+
+Runtime values are SQL text (sqltext.py renders identifiers, literals and
+types): `Kernel.apply` hands the JVM one `F.expr` per output expression or
+hoisted binding, where building the same tree from `Column` calls cost one
+py4j round-trip per node. Every binary operator is parenthesized, so the
+parsed tree has exactly the nesting the compiler built.
 
 Recursion cannot inline; it unrolls to a configurable depth with a
 raise_error poison beyond (fact/count examples), keeping everything inside
@@ -30,8 +37,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field, replace
 from functools import reduce as _reduce
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from udlang_spark.kernel import ast
 from udlang_spark.kernel.interp import (
@@ -54,22 +60,29 @@ from udlang_spark.kernel.types import (
     type_tag,
     unify,
 )
+from udlang_spark.sqltext import call, case, cast, ident, lit
 
 
-def sized_range_check(col: Column, name: str) -> Column:
+def get_field(x: str, name: str) -> str:
+    """Struct field access, parsed as Column.getField parses it."""
+    return f"{x}[{lit(name)}]"
+
+
+def all_of(conds: list[str]) -> str:
+    return _reduce(lambda a, b: f"({a} AND {b})", conds)
+
+
+def sized_range_check(col: str, name: str) -> str:
     """Range-checked entry into / exit from a sized-int view (SURVEY.md
     §1.2): rows whose value falls outside [lo, hi] raise at runtime
     (assert_true poison — the same mechanism as match-no-case) instead of
-    silently wrapping. Returns the value as a LONG compute-domain column;
-    narrowing to the storage type (to_spark) is the caller's concern.
-    NULLs pass through (nullability is the Option layer's job)."""
+    silently wrapping. Returns the value as a BIGINT compute-domain
+    expression; narrowing to the storage type (to_spark) is the caller's
+    concern. NULLs pass through (nullability is the Option layer's job)."""
     _storage, lo, hi = SIZED_INTS[name]
-    as_long = col.cast("long")
-    ok = col.isNull() | ((col >= F.lit(lo)) & (col <= F.lit(min(hi, 2**63 - 1))))
-    poison = F.assert_true(
-        F.lit(False), F.concat(F.lit(f"value out of range for {name}: "), col.cast("string"))
-    ).cast("long")
-    return F.when(ok, as_long).otherwise(poison)
+    ok = f"({col} IS NULL OR (({col} >= {lit(lo)}) AND ({col} <= {lit(min(hi, 2**63 - 1))})))"
+    msg = call("concat", lit(f"value out of range for {name}: "), cast(col, "STRING"))
+    return case(ok, cast(col, "BIGINT"), cast(call("assert_true", "false", msg), "BIGINT"))
 
 
 def _check_subsumes(checked: str | None, target: str) -> bool:
@@ -87,14 +100,14 @@ def _check_subsumes(checked: str | None, target: str) -> bool:
 # branch, the error message), so NESTED checks blow up the Catalyst tree —
 # and the generated Java — multiplicatively (k_tower's checked-sum-of-checks
 # hit janino's 64 KB method limit and silently fell back to interpretation;
-# round-10 VERDICT). Operands whose expression string exceeds this many
-# chars are hoisted into an intermediate projection (Compiler.bindings) so
-# the check references a plain attribute instead of a copied tree. Small
-# operands stay inline — existing kernels' plans are byte-identical.
+# round-10 VERDICT). Operands whose SQL text exceeds this many chars are
+# hoisted into an intermediate projection (Compiler.bindings) so the check
+# references a plain attribute instead of a copied tree. Small operands
+# stay inline.
 HOIST_MIN_EXPR_CHARS = 600
 
-# Unroll budget for recursive kernels. Each level costs ~20 py4j Column
-# calls at plan-build time and a guard at run time, so the default is the
+# Unroll budget for recursive kernels. Each level adds its guard and body
+# to the SQL text and a guard at run time, so the default is the
 # smallest depth that comfortably covers the reference's recursive examples
 # (fact overflows i64 past 20 anyway); rows that recurse deeper hit the
 # poison error, and callers needing more pass max_depth explicitly.
@@ -115,7 +128,7 @@ class SVal:
 
 @dataclass(frozen=True)
 class SCol(SVal):
-    col: Column
+    col: str  # SQL text
     type: ast.Type
     # affine normal form (base_column, int_offset) when this value is known
     # to equal base + offset — lets ± const chains fold flat (the partial
@@ -177,31 +190,25 @@ class SModule(SVal):
     typedefs: dict
 
 
-def as_col(v: SVal) -> Column:
+def as_col(v: SVal) -> str:
     if isinstance(v, SCol):
         return v.col
     if isinstance(v, SConst):
         if v.value is None:
-            # TYPED null literal: a bare lit(None) is VOID, which functions
-            # like element_at/map_contains_key reject at analysis — cast to
-            # the constant's declared type so a NULL map/record/list object
-            # keeps NULL-propagating like its runtime Column twin (r9
-            # nested-access fuzz). Unknown/Any types keep the bare lit.
+            # TYPED null literal: a bare NULL is VOID, which functions like
+            # element_at/map_contains_key reject at analysis — cast to the
+            # constant's declared type so a NULL map/record/list object
+            # keeps NULL-propagating like its runtime twin (r9 nested-access
+            # fuzz). Unknown/Any types keep the bare NULL.
             try:
-                from udlang_spark.kernel.types import to_spark
-
-                return F.lit(None).cast(to_spark(v.type))
+                return cast("NULL", to_spark(v.type))
             except Exception:  # noqa: BLE001 — T_ANY and friends
-                return F.lit(None)
+                return "NULL"
         if isinstance(v.value, list):
-            return F.array(*[as_col(x) for x in v.value])
+            return call("array", *[as_col(x) for x in v.value])
         if isinstance(v.value, dict):
-            pairs: list[Column] = []
-            for k, item in v.value.items():
-                pairs.append(F.lit(k))
-                pairs.append(as_col(item))
-            return F.create_map(*pairs)
-        return F.lit(v.value)
+            return call("map", *[p for k, x in v.value.items() for p in (lit(k), as_col(x))])
+        return lit(v.value)
     raise KernelCompileError(f"function value {v!r} escapes to runtime")
 
 
@@ -242,33 +249,31 @@ class Ctx:
     max_depth: int = MAX_RECURSION_DEPTH
 
 
-def empty_outs(ctx: Ctx) -> Column:
-    from pyspark.sql.types import ArrayType
-
-    return F.array().cast(ArrayType(ctx.out_spark_type))
+def empty_outs(ctx: Ctx) -> str:
+    return cast("array()", T.ArrayType(ctx.out_spark_type))
 
 
-def concat_outs(ctx: Ctx, parts: list[Column | None]) -> Column | None:
+def concat_outs(ctx: Ctx, parts: list[str | None]) -> str | None:
     real = [p for p in parts if p is not None]
     if not real:
         return None
     if len(real) == 1:
         return real[0]
-    return F.concat(*real)
+    return call("concat", *real)
 
 
-def outs_or_empty(ctx: Ctx, outs: Column | None) -> Column:
+def outs_or_empty(ctx: Ctx, outs: str | None) -> str:
     return outs if outs is not None else empty_outs(ctx)
 
 
 def when_outs(
-    ctx: Ctx, cond: Column | None, then: Column | None, otherwise: Column | None = None
-) -> Column:
+    ctx: Ctx, cond: str | None, then: str | None, otherwise: str | None = None
+) -> str:
     """The outputs `then` on rows where `cond` holds, else `otherwise`; a
     None `cond` is an unconditional branch (a constant-true predicate)."""
     if cond is None:
         return outs_or_empty(ctx, then)
-    return F.when(cond, outs_or_empty(ctx, then)).otherwise(outs_or_empty(ctx, otherwise))
+    return case(cond, outs_or_empty(ctx, then), outs_or_empty(ctx, otherwise))
 
 
 @dataclass
@@ -278,7 +283,7 @@ class _CatchFrame:
 
     path_len: int  # _path depth at attempt entry; reach-conds are relative
     hof_depth: int  # runtime-lambda nesting at entry (throws deeper: error)
-    captures: list[tuple[Column, Column]] = field(default_factory=list)
+    captures: list[tuple[str, str]] = field(default_factory=list)
 
 
 class Compiler:
@@ -303,7 +308,7 @@ class Compiler:
         )
         self.ctx.out_spark_type = to_spark(self.resolve_type(program.output))
         # `!`-tapped expressions (the reference's second side effect,
-        # manual.md:54-62) as string Columns, in tap order; surfaced by
+        # manual.md:54-62) as string expressions, in tap order; surfaced by
         # Kernel.apply(debug=True) as a `_debug` array column
         self.debug_taps: list = []
         # recoverable exceptions (ast.Attempt): _path is the stack of branch
@@ -314,20 +319,21 @@ class Compiler:
         # to raise_error. _hof_depth > frame depth means the throw sits in a
         # runtime HOF lambda whose reach-condition is per-ELEMENT, which the
         # row-level when() machinery cannot express — compile error.
-        self._path: list[Column] = []
+        self._path: list[str] = []
         self._catch: list[_CatchFrame] = []
         self._hof_depth = 0
-        # hoisted range-check operands: ordered (name, Column) bindings
+        # hoisted range-check operands: ordered (name, SQL) bindings
         # (later entries may reference earlier names). Kernel.apply inserts
         # one narrow projection per binding below the output select, so a
         # check over a huge operand references an attribute instead of
         # copying the tree 5× (the janino-limit fix — see
         # HOIST_MIN_EXPR_CHARS). allow_hoist=False keeps the compiled
-        # output a single self-contained Column (dump-expr / outputs_column).
+        # output a single self-contained expression (outputs_column).
         self.allow_hoist = allow_hoist
-        self.bindings: list[tuple[str, Column]] = []
+        self.bindings: list[tuple[str, str]] = []
         self._bind_n = 0
         self._no_hoist_depth = 0
+        self._lambda_n = 0  # lambda_fn's variable-name counter
         # hoisting is armed ONLY while compiling an `out` statement's value
         # and output coercion: `out` evaluates eagerly for every row, so a
         # hoisted operand (which a projection evaluates unconditionally)
@@ -339,7 +345,7 @@ class Compiler:
         self._hoist_armed = False
 
     @contextmanager
-    def _on_path(self, cond: Column | None):
+    def _on_path(self, cond: str | None):
         """Scope a branch predicate for throw reach-condition tracking."""
         if cond is None:
             yield
@@ -378,7 +384,7 @@ class Compiler:
         finally:
             self._hoist_armed = prev
 
-    def _maybe_hoist(self, col: Column, tag: str) -> Column:
+    def _maybe_hoist(self, col: str, tag: str) -> str:
         """If safe and worthwhile, bind `col` as an intermediate projection
         column and return a reference to it; else return `col` unchanged.
 
@@ -395,22 +401,31 @@ class Compiler:
             or self._catch
         ):
             return col
-        if len(str(col)) < HOIST_MIN_EXPR_CHARS:
+        if len(col) < HOIST_MIN_EXPR_CHARS:
             return col
         name = f"__ud_hoist{self._bind_n}_{tag.lower()}"
         self._bind_n += 1
         self.bindings.append((name, col))
-        return F.col(name)
+        return ident(name)
+
+    def lambda_fn(self, body, arity: int = 1) -> str:
+        """A higher-order function's lambda `x_N -> body(x_N)` (`(x_N, y_M)
+        -> …` for two parameters). Variable names are fresh per compile, so
+        a nested lambda never shadows an enclosing one."""
+        names = [f"{p}_{self._lambda_n + i}" for i, p in enumerate("xy"[:arity])]
+        self._lambda_n += arity
+        params = names[0] if arity == 1 else f"({', '.join(names)})"
+        return f"{params} -> {body(*names)}"
 
     def resolve_type(self, t: ast.Type) -> ast.Type:
         # the typedefs in scope grow as `import` statements link libs
         return resolve_type(t, self.typedefs)
 
     # -- entry -----------------------------------------------------------
-    def compile(self, in_val: SVal) -> Column:
-        """Compile the whole script to one array<output> Column."""
+    def compile(self, in_val: SVal) -> str:
+        """Compile the whole script to one array<output> expression."""
         env: dict[str, SVal] = {**BUILTINS, "in": in_val}
-        outs_parts: list[Column | None] = []
+        outs_parts: list[str | None] = []
         for decl in self.program.decls:
             outs_parts.append(self.compile_stmt(decl, env))
         for stmt in self.program.body:
@@ -418,9 +433,9 @@ class Compiler:
         return outs_or_empty(self.ctx, concat_outs(self.ctx, outs_parts))
 
     # -- statements ------------------------------------------------------
-    def compile_stmt(self, stmt: ast.Stmt, env: dict) -> Column | None:
+    def compile_stmt(self, stmt: ast.Stmt, env: dict) -> str | None:
         """Compile one statement; mutates env for bindings; returns the
-        outputs this statement contributes (array Column) or None."""
+        outputs this statement contributes (array expression) or None."""
         if isinstance(stmt, ast.Let):
             # let values inline LAZILY at use sites (substitution), so a
             # hoisted check operand inside one could evaluate — and raise —
@@ -450,7 +465,7 @@ class Compiler:
             return outs
         if isinstance(stmt, ast.Throw):
             val, outs = self.compile_expr(stmt.value, env)
-            msg = as_col(val).cast("string")
+            msg = cast(as_col(val), "STRING")
             if self._catch:
                 # recoverable: record (reach-condition, message) on the
                 # innermost attempt frame; no raise is emitted at all —
@@ -464,18 +479,16 @@ class Compiler:
                         "loop or drop the attempt"
                     )
                 conds = self._path[frame.path_len :]
-                reach = _reduce(lambda a, b: a & b, conds) if conds else F.lit(True)
+                reach = all_of(conds) if conds else "true"
                 frame.captures.append((reach, msg))
                 return outs
             # fatal for rows reaching this statement (README.md:337-341);
             # when-guarded branches keep it lazy, so only thrown rows error
-            poison = F.array(
-                F.raise_error(msg).cast(self.ctx.out_spark_type)
-            )
+            poison = call("array", cast(call("raise_error", msg), self.ctx.out_spark_type))
             return concat_outs(self.ctx, [outs, poison])
         if isinstance(stmt, ast.Out):
             out_col, outs = self.compile_out(stmt.value, env)
-            return concat_outs(self.ctx, [outs, F.array(out_col)])
+            return concat_outs(self.ctx, [outs, call("array", out_col)])
         if isinstance(stmt, ast.ExprStmt):
             _, outs = self.compile_expr(stmt.expr, env)
             return outs
@@ -491,8 +504,7 @@ class Compiler:
             return env["..."]  # type: ignore[return-value]
         if isinstance(stmt, ast.TemplateCall):
             block_fn = ast.Lambda((), ast.T_VOID, stmt.block)
-            call = ast.Call(stmt.func, stmt.args + (block_fn,))
-            _, outs = self.compile_expr(call, env)
+            _, outs = self.compile_expr(ast.Call(stmt.func, stmt.args + (block_fn,)), env)
             return outs
         if isinstance(stmt, ast.Import):
             return self.compile_import(stmt, env)
@@ -500,7 +512,7 @@ class Compiler:
             raise KernelCompileError("`export` is only valid in a lib")
         raise KernelCompileError(f"unsupported statement {stmt!r}")
 
-    def compile_out(self, value: ast.Expr, env: dict) -> tuple[Column, Column | None]:
+    def compile_out(self, value: ast.Expr, env: dict) -> tuple[str, str | None]:
         """An `out` statement's value coerced to the output type, and the
         outputs the value itself emits. `out` evaluates eagerly for every
         row reaching it, so large range-check operands compiled here may
@@ -593,11 +605,11 @@ class Compiler:
         self._module_cache[name] = (exports, tdefs)
         return exports, tdefs
 
-    def compile_list_iter(self, stmt: ast.ListIter, env: dict) -> Column | None:
+    def compile_list_iter(self, stmt: ast.ListIter, env: dict) -> str | None:
         src, src_outs = self.compile_expr(stmt.source, env)
         if isinstance(src, SConst) and isinstance(src.value, list):
             # constant list: unroll — each element re-inlines the body
-            parts: list[Column | None] = [src_outs]
+            parts: list[str | None] = [src_outs]
             for item in src.value:
                 inner = dict(env)
                 inner[stmt.var] = item
@@ -607,7 +619,7 @@ class Compiler:
             raise KernelTypeError("for..in over a non-list")
         item_t = self.resolve_type(vtype(src).item)
 
-        def body(x: Column) -> Column:
+        def body(x: str) -> str:
             inner = dict(env)
             inner[stmt.var] = SCol(x, item_t)
             with self._in_hof():
@@ -615,13 +627,13 @@ class Compiler:
                     self.ctx, self.compile_block_for_effect(stmt.body, inner)
                 )
 
-        loop = F.flatten(F.transform(as_col(src), body))
+        loop = call("flatten", call("transform", as_col(src), self.lambda_fn(body)))
         return concat_outs(self.ctx, [src_outs, loop])
 
-    def compile_map_iter(self, stmt: ast.MapIter, env: dict) -> Column | None:
+    def compile_map_iter(self, stmt: ast.MapIter, env: dict) -> str | None:
         src, src_outs = self.compile_expr(stmt.source, env)
         if isinstance(src, SConst) and isinstance(src.value, dict):
-            parts: list[Column | None] = [src_outs]
+            parts: list[str | None] = [src_outs]
             for k, item in src.value.items():
                 inner = dict(env)
                 inner[stmt.key_var] = SConst(k, ast.T_STR)
@@ -632,19 +644,20 @@ class Compiler:
             raise KernelTypeError("for (k, v) over a non-map")
         val_t = self.resolve_type(vtype(src).value)
 
-        def body(entry: Column) -> Column:
+        def body(entry: str) -> str:
             inner = dict(env)
-            inner[stmt.key_var] = SCol(entry.getField("key"), ast.T_STR)
-            inner[stmt.val_var] = SCol(entry.getField("value"), val_t)
+            inner[stmt.key_var] = SCol(get_field(entry, "key"), ast.T_STR)
+            inner[stmt.val_var] = SCol(get_field(entry, "value"), val_t)
             with self._in_hof():
                 return outs_or_empty(
                     self.ctx, self.compile_block_for_effect(stmt.body, inner)
                 )
 
-        loop = F.flatten(F.transform(F.map_entries(as_col(src)), body))
+        entries = call("map_entries", as_col(src))
+        loop = call("flatten", call("transform", entries, self.lambda_fn(body)))
         return concat_outs(self.ctx, [src_outs, loop])
 
-    def compile_suppose(self, stmt: ast.Suppose, env: dict) -> Column:
+    def compile_suppose(self, stmt: ast.Suppose, env: dict) -> str:
         # Speculatively capture the delegate's outputs (src/vm.rs:603-638):
         # if it produced any, run the branch with `...;` splicing them in;
         # otherwise run the leaf. Pure expression-level — no custom operator.
@@ -652,18 +665,18 @@ class Compiler:
         cand = outs_or_empty(self.ctx, candidates)
         branch_env = dict(env)
         branch_env["..."] = cand
-        took_branch = F.size(cand) > 0
+        took_branch = f"(size({cand}) > 0)"
         with self._on_path(took_branch):
             branch = outs_or_empty(
                 self.ctx, self.compile_block_for_effect(stmt.branch, branch_env)
             )
-        with self._on_path(~took_branch):
+        with self._on_path(f"(NOT {took_branch})"):
             leaf = outs_or_empty(
                 self.ctx, self.compile_block_for_effect(stmt.leaf, env)
             )
-        return F.when(took_branch, branch).otherwise(leaf)
+        return case(took_branch, branch, leaf)
 
-    def compile_block_for_effect(self, block: ast.Expr, env: dict) -> Column | None:
+    def compile_block_for_effect(self, block: ast.Expr, env: dict) -> str | None:
         if not isinstance(block, ast.Block):
             _, outs = self.compile_expr(block, env)
             return outs
@@ -675,7 +688,7 @@ class Compiler:
         return concat_outs(self.ctx, parts)
 
     # -- expressions -----------------------------------------------------
-    def compile_expr(self, expr: ast.Expr, env: dict) -> tuple[SVal, Column | None]:
+    def compile_expr(self, expr: ast.Expr, env: dict) -> tuple[SVal, str | None]:
         if isinstance(expr, ast.Lit):
             return SConst(expr.value, python_type_of(expr.value)), None
         if isinstance(expr, ast.In):
@@ -762,9 +775,7 @@ class Compiler:
             # via a nested attempt whose inner fallback held the only throw)
             scratch_env = dict(env)
             if expr.bind is not None:
-                scratch_env[expr.bind] = SCol(
-                    F.lit(None).cast("string"), ast.T_STR
-                )
+                scratch_env[expr.bind] = SCol(cast("NULL", "STRING"), ast.T_STR)
             self._catch.append(_CatchFrame(len(self._path), self._hof_depth))
             try:
                 fval, _ = self.compile_expr(expr.fallback, scratch_env)
@@ -774,13 +785,13 @@ class Compiler:
                 unify(vtype(bval), vtype(fval))
             return bval, bouts
 
-        thrown = _reduce(lambda a, b: a | b, [c for c, _ in frame.captures])
+        thrown = _reduce(lambda a, b: f"({a} OR {b})", [c for c, _ in frame.captures])
         # first-throw-wins message: earlier captures are earlier in program
         # order within a branch, and reach-conditions of sibling branches
         # are mutually exclusive — a when-chain in capture order is exact
-        msg: Column = F.lit(None).cast("string")
+        msg = cast("NULL", "STRING")
         for cond, m in reversed(frame.captures):
-            msg = F.when(cond, m).otherwise(msg)
+            msg = case(cond, m, msg)
 
         fb_env = dict(env)
         if expr.bind is not None:
@@ -795,9 +806,7 @@ class Compiler:
         if bt is ast.T_VOID or ft is ast.T_VOID:
             return SConst(None, ast.T_VOID), outs
         rtype = unify(bt, ft)
-        value = F.when(thrown, self.coerce_to(fval, rtype)).otherwise(
-            self.coerce_to(bval, rtype)
-        )
+        value = case(thrown, self.coerce_to(fval, rtype), self.coerce_to(bval, rtype))
         return SCol(value, rtype), outs
 
     def compile_list(self, expr: ast.ListExpr, env: dict):
@@ -813,16 +822,14 @@ class Compiler:
         for v in vals:
             item_t = unify(item_t, vtype(v))
         cols = [self.coerce_to(v, item_t) for v in vals]
-        return SCol(F.array(*cols), ast.TList(item_t)), outs
+        return SCol(call("array", *cols), ast.TList(item_t)), outs
 
     def compile_tuple(self, expr: ast.TupleExpr, env: dict):
         items = [self.compile_expr(e, env) for e in expr.items]
         outs = concat_outs(self.ctx, [o for _, o in items])
         vals = [v for v, _ in items]
         t = ast.TTuple(tuple(vtype(v) for v in vals))
-        col = F.struct(
-            *[as_col(v).alias(f"_{i + 1}") for i, v in enumerate(vals)]
-        )
+        col = call("named_struct", *[p for i, v in enumerate(vals) for p in (lit(f"_{i + 1}"), as_col(v))])
         return SCol(col, t), outs
 
     def compile_map(self, expr: ast.MapExpr, env: dict):
@@ -837,11 +844,8 @@ class Compiler:
         val_t = ast.T_ANY
         for _, v in vals:
             val_t = unify(val_t, vtype(v))
-        pairs: list[Column] = []
-        for k, v in vals:
-            pairs.append(F.lit(k))
-            pairs.append(self.coerce_to(v, val_t))
-        return SCol(F.create_map(*pairs), ast.TMap(val_t)), outs
+        pairs = [p for k, v in vals for p in (lit(k), self.coerce_to(v, val_t))]
+        return SCol(call("map", *pairs), ast.TMap(val_t)), outs
 
     def compile_bin(self, expr: ast.Bin, env: dict):
         a, outs_a = self.compile_expr(expr.a, env)
@@ -863,7 +867,7 @@ class Compiler:
         ) and not isinstance(b.value, (list, dict)):
             x, y = a.value, b.value
             if op == "^" and t is ast.T_INT and None not in (x, y) and y < 0:
-                # the interpreter rejects a negative Int exponent; the Column
+                # the interpreter rejects a negative Int exponent; the SQL
                 # arm below computes pow() in double and truncates, and so
                 # does the fold
                 return SConst(int(binop(op, float(x), float(y))), rtype), outs
@@ -883,71 +887,52 @@ class Compiler:
                 base_off = (base, off + a.value)
             if base_off is not None:
                 base, off = base_off
-                col = base + F.lit(off) if off != 0 else base
+                col = f"({base} + {lit(off)})" if off != 0 else base
                 return SCol(col, ast.T_INT, affine=(base, off)), outs
         if t is ast.T_FLOAT:
-            ca, cb = ca.cast("double"), cb.cast("double")
-        if op == "+":
-            if t is ast.T_STR:
-                # intended string concat (README.md:120; arm missing in the
-                # reference op table — SURVEY.md §7.5 "reference bugs")
-                return SCol(F.concat(ca, cb), ast.T_STR), outs
-            return SCol(ca + cb, t), outs
-        if op == "-":
-            return SCol(ca - cb, t), outs
-        if op == "*":
-            return SCol(ca * cb, t), outs
-        if op == "/":
-            if t is ast.T_INT:
-                # i64 truncating division (src/ir.rs:622-625): Spark's
-                # `div` function is integral divide, truncation toward 0
-                return SCol(F.call_function("div", ca, cb), ast.T_INT), outs
-            return SCol(ca / cb, t), outs
-        if op == "%":
-            return SCol(ca % cb, t), outs  # Spark % == Rust % (sign of dividend)
+            ca, cb = cast(ca, "DOUBLE"), cast(cb, "DOUBLE")
+        if op == "+" and t is ast.T_STR:
+            # intended string concat (README.md:120; arm missing in the
+            # reference op table — SURVEY.md §7.5 "reference bugs")
+            return SCol(call("concat", ca, cb), ast.T_STR), outs
+        if op == "/" and t is ast.T_INT:
+            # i64 truncating division (src/ir.rs:622-625): Spark's `div`
+            # function is integral divide, truncation toward 0
+            return SCol(call("div", ca, cb), ast.T_INT), outs
         if op == "^":
-            p = F.pow(ca, cb)
-            return SCol(p.cast("long") if t is ast.T_INT else p, t), outs
-        if op in ("and", "or", "xor"):
-            if t is ast.T_BOOL:
-                # non-short-circuit logical ops (stack machine evaluates both)
-                if op == "and":
-                    return SCol(ca & cb, ast.T_BOOL), outs
-                if op == "or":
-                    return SCol(ca | cb, ast.T_BOOL), outs
-                return SCol(ca != cb, ast.T_BOOL), outs
-            if op == "and":
-                return SCol(ca.bitwiseAND(cb), ast.T_INT), outs
-            if op == "or":
-                return SCol(ca.bitwiseOR(cb), ast.T_INT), outs
-            return SCol(ca.bitwiseXOR(cb), ast.T_INT), outs
-        if op in ("<", ">", "<=", ">="):
-            table = {"<": ca < cb, ">": ca > cb, "<=": ca <= cb, ">=": ca >= cb}
-            return SCol(table[op], ast.T_BOOL), outs
-        return SCol(ca == cb, ast.T_BOOL), outs
+            p = call("pow", ca, cb)
+            return SCol(cast(p, "BIGINT") if t is ast.T_INT else p, t), outs
+        # Spark % == Rust % (sign of dividend); and/or/xor are logical on
+        # Bool — non-short-circuit, as the stack machine evaluates both —
+        # and bitwise on Int
+        logic = {"and": "AND", "or": "OR", "xor": "!="} if t is ast.T_BOOL else {
+            "and": "&", "or": "|", "xor": "^"
+        }
+        sql_op = {**logic, "==": "="}.get(op, op)
+        return SCol(f"({ca} {sql_op} {cb})", rtype), outs
 
     def compile_un(self, expr: ast.Un, env: dict):
         a, outs = self.compile_expr(expr.a, env)
         if expr.op == "!":
             # debug operator: value passes through; the tap is recorded as a
-            # string Column for Kernel.apply(debug=True)'s `_debug` array
+            # string expression for Kernel.apply(debug=True)'s `_debug` array
             # (the distributed analogue of the reference's stderr trace —
             # executor-side stderr is not observable from a driver).
             # Semantic deviation, documented: taps record unconditionally,
             # even when the enclosing `when` branch is not taken.
-            self.debug_taps.append(as_col(a).cast("string"))
+            self.debug_taps.append(cast(as_col(a), "STRING"))
             return a, outs
         t = vtype(a)
         if isinstance(a, SConst) and not isinstance(a.value, (list, dict)):
             return SConst(unop(expr.op, a.value), t), outs
         ca = as_col(a)
         if expr.op == "-":
-            return SCol(-ca, t), outs
+            return SCol(f"(- {ca})", t), outs
         if expr.op == "not":
             if t is ast.T_BOOL:
-                return SCol(~ca, ast.T_BOOL), outs
+                return SCol(f"(NOT {ca})", ast.T_BOOL), outs
             if t is ast.T_INT:
-                return SCol(F.bitwise_not(ca), ast.T_INT), outs
+                return SCol(call("bitwise_not", ca), ast.T_INT), outs
         raise KernelTypeError(f"unary {expr.op} on {t!r}")
 
     def compile_call(self, expr: ast.Call, env: dict):
@@ -965,7 +950,7 @@ class Compiler:
                         )
                 else:
                     native_args.append(a)
-            arg_parts: list[Column | None] = [outs_fn]
+            arg_parts: list[str | None] = [outs_fn]
             args: list[SVal] = list(fn.bound)
             for a in native_args:
                 av, ao = self.compile_expr(a, env)
@@ -1063,7 +1048,7 @@ class Compiler:
                 )
             params_eff = fn.params
             args_eff = tuple(call_args)
-        arg_parts: list[Column | None] = [outs_fn]
+        arg_parts: list[str | None] = [outs_fn]
         call_env = dict(fn.env)
         for (pname, ptype), arg in zip(params_eff, args_eff):
             aval, aouts = self.compile_expr(arg, env)
@@ -1076,7 +1061,7 @@ class Compiler:
                 if isinstance(aval, SConst):
                     aval = SConst(float(aval.value), ast.T_FLOAT)
                 else:
-                    aval = SCol(aval.col.cast("double"), ast.T_FLOAT)
+                    aval = SCol(cast(aval.col, "DOUBLE"), ast.T_FLOAT)
             call_env[pname] = aval
 
         key = id(fn.body)
@@ -1084,16 +1069,15 @@ class Compiler:
         if depth >= self.ctx.max_depth:
             # recursion unrolling limit: poison this branch — it only fires
             # for rows that actually recurse deeper than max_depth
-            msg = f"recursion depth > {self.ctx.max_depth} in {fn.name}"
-            poison = F.assert_true(F.lit(False), F.lit(msg)).cast(
-                to_spark(self.resolve_type(fn.ret) if fn.ret is not ast.T_ANY else ast.T_INT)
+            fail = call("assert_true", "false", lit(f"recursion depth > {self.ctx.max_depth} in {fn.name}"))
+            poison = cast(
+                fail,
+                to_spark(self.resolve_type(fn.ret) if fn.ret is not ast.T_ANY else ast.T_INT),
             )
             # the poison must live in BOTH the value and the output stream:
             # a proc's value is discarded, so an effect-only recursion would
             # otherwise silently truncate instead of erroring
-            poison_out = F.array(
-                F.assert_true(F.lit(False), F.lit(msg)).cast(self.ctx.out_spark_type)
-            )
+            poison_out = call("array", cast(fail, self.ctx.out_spark_type))
             return SCol(poison, self.resolve_type(fn.ret)), concat_outs(
                 self.ctx, arg_parts + [poison_out]
             )
@@ -1137,10 +1121,7 @@ class Compiler:
         if isinstance(t, ast.TRecord):
             ft = next((f.type for f in t.fields if f.name == expr.name), None)
             if ft is not None:
-                return (
-                    SCol(as_col(obj).getField(expr.name), self.resolve_type(ft)),
-                    outs,
-                )
+                return SCol(get_field(as_col(obj), expr.name), self.resolve_type(ft)), outs
             # record members (§2.10: method / static / const, typecheck-only
             # in the reference — src/typechecker.rs:71-83): methods bind
             # `self` to the struct value and inline like any function
@@ -1159,12 +1140,10 @@ class Compiler:
                     return cval, concat_outs(self.ctx, [outs, couts])
             raise KernelTypeError(f"record has no field {expr.name!r}")
         if isinstance(t, ast.TMap):
-            return (
-                SCol(F.element_at(as_col(obj), F.lit(expr.name)), self.resolve_type(t.value)),
-                outs,
-            )
+            value = call("element_at", as_col(obj), lit(expr.name))
+            return SCol(value, self.resolve_type(t.value)), outs
         if t is ast.T_POINT and expr.name in ("x", "y"):
-            return SCol(as_col(obj).getField(expr.name), ast.T_FLOAT), outs
+            return SCol(get_field(as_col(obj), expr.name), ast.T_FLOAT), outs
         if expr.name in METHOD_BUILTINS and isinstance(
             t, (ast.TList, ast.TMap)
         ) or (t is ast.T_STR and expr.name in METHOD_BUILTINS):
@@ -1177,24 +1156,16 @@ class Compiler:
         obj, outs = self.compile_expr(expr.obj, env)
         t = vtype(obj)
         if isinstance(t, ast.TRecord):
-            return SCol(as_col(obj).getField(expr.name).isNotNull(), ast.T_BOOL), outs
+            return SCol(f"({get_field(as_col(obj), expr.name)} IS NOT NULL)", ast.T_BOOL), outs
         if isinstance(t, ast.TMap):
             # coalesce to False: map_contains_key over a NULL object (e.g. a
             # missing nested key upstream) is NULL, but `.?.` is a presence
             # test — a missing object has nothing. This also makes the map
-            # branch agree with the record branch (isNotNull never yields
+            # branch agree with the record branch (IS NOT NULL never yields
             # NULL) and with the interp's uniform False (r9 nested-access
             # fuzz probe).
-            return (
-                SCol(
-                    F.coalesce(
-                        F.map_contains_key(as_col(obj), F.lit(expr.name)),
-                        F.lit(False),
-                    ),
-                    ast.T_BOOL,
-                ),
-                outs,
-            )
+            has = call("map_contains_key", as_col(obj), lit(expr.name))
+            return SCol(call("coalesce", has, "false"), ast.T_BOOL), outs
         raise KernelTypeError(f".?. on {t!r}")
 
     def compile_index(self, expr: ast.Index, env: dict):
@@ -1234,29 +1205,27 @@ class Compiler:
             return obj.value[idx.value], outs
         if isinstance(t, ast.TList):
             # uDLang is 0-based; element_at is 1-based (SURVEY.md §2.2)
-            if isinstance(idx, SConst):
-                ix = F.lit(idx.value + 1)
-            else:
-                ix = as_col(idx) + 1
-            return SCol(F.element_at(as_col(obj), ix), self.resolve_type(t.item)), outs
+            ix = lit(idx.value + 1) if isinstance(idx, SConst) else f"({as_col(idx)} + 1)"
+            return SCol(call("element_at", as_col(obj), ix), self.resolve_type(t.item)), outs
         if isinstance(t, ast.TMap):
-            return SCol(F.element_at(as_col(obj), as_col(idx)), self.resolve_type(t.value)), outs
+            value = call("element_at", as_col(obj), as_col(idx))
+            return SCol(value, self.resolve_type(t.value)), outs
         if isinstance(t, ast.TTuple):
             if not isinstance(idx, SConst):
                 raise KernelTypeError("tuple index must be constant")
             return (
-                SCol(as_col(obj).getField(f"_{idx.value + 1}"), self.resolve_type(t.items[idx.value])),
+                SCol(get_field(as_col(obj), f"_{idx.value + 1}"), self.resolve_type(t.items[idx.value])),
                 outs,
             )
         raise KernelTypeError(f"indexing {t!r}")
 
     def compile_clause(self, pred: ast.Expr | None, env: dict, body, negs=()):
-        """One `if` clause: (predicate Column, the predicate's outputs,
+        """One `if` clause: (predicate expression, the predicate's outputs,
         body()). body compiles the branch under the clause's reach path
         ¬n1 ∧ … ∧ ¬nk ∧ p — tracked on _path so a `throw` in the branch
         knows its reach condition (ast.Attempt). A constant predicate is
         pruned at compile time: true (or a None `pred`, an `else`) gives a
-        None Column; false gives a None body result, body never compiled."""
+        None predicate; false gives a None body result, body never compiled."""
         pcol = pouts = None
         if pred is not None:
             pval, pouts = self.compile_expr(pred, env)
@@ -1266,8 +1235,8 @@ class Compiler:
                 return None, pouts, None
             if not isinstance(pval, SConst):
                 pcol = as_col(pval)
-        conds = [~n for n in negs] + ([pcol] if pcol is not None else [])
-        with self._on_path(_reduce(lambda a, b: a & b, conds) if conds else None):
+        conds = [f"(NOT {n})" for n in negs] + ([pcol] if pcol is not None else [])
+        with self._on_path(all_of(conds) if conds else None):
             return pcol, pouts, body()
 
     def compile_cond(self, expr: ast.Cond, env: dict):
@@ -1276,7 +1245,7 @@ class Compiler:
         compiled: list = []
         # the non-constant predicates already tried: branch i executes
         # under ¬p1 ∧ … ∧ ¬p(i-1) ∧ pi
-        negs: list[Column] = []
+        negs: list[str] = []
         for pred, body in expr.clauses:
             pcol, pouts, res = self.compile_clause(
                 pred, env, lambda: self.compile_expr(body, env), negs
@@ -1306,8 +1275,8 @@ class Compiler:
         pred_outs_parts = [pouts for _, pouts, _, _ in compiled]
 
         # walk branches from last to first
-        tail_val: Column | None = None
-        tail_outs: Column | None = None
+        tail_val: str | None = None
+        tail_outs: str | None = None
         for pcol, pouts, bval, bouts in reversed(compiled):
             if pcol is None:
                 # default (or constant-true clause)
@@ -1317,11 +1286,9 @@ class Compiler:
                 tail_outs = bouts if bouts is not None else tail_outs
                 continue
             if rtype is not None:
-                branch_v = (
-                    self.coerce_to(bval, rtype) if bval is not None else F.lit(None).cast(to_spark(rtype))
-                )
-                base = tail_val if tail_val is not None else F.lit(None).cast(to_spark(rtype))
-                tail_val = F.when(pcol, branch_v).otherwise(base)
+                null = cast("NULL", to_spark(rtype))
+                branch_v = self.coerce_to(bval, rtype) if bval is not None else null
+                tail_val = case(pcol, branch_v, tail_val if tail_val is not None else null)
             tail_outs = when_outs(self.ctx, pcol, bouts, tail_outs)
 
         outs_all = concat_outs(self.ctx, pred_outs_parts + [tail_outs])
@@ -1338,7 +1305,7 @@ class Compiler:
         t = self.resolve_type(expr.type)
         vt = vtype(v)
         if isinstance(v, SConst) and v.value is None:
-            # NULL casts to NULL of the target type (Column.cast semantics;
+            # NULL casts to NULL of the target type (CAST semantics;
             # sized views pass too — their range check is NULL-transparent)
             return SConst(None, ast.T_INT if is_sized_int(t) else t), outs
         if vt == t:
@@ -1354,11 +1321,8 @@ class Compiler:
                     return SConst(cast_value(v.value, t), ast.T_INT), outs
                 except InterpError as exc:  # a compile-time range error
                     raise KernelTypeError(f"constant {exc}") from None
-            if vt is ast.T_FLOAT:
-                v = SCol(as_col(v).cast("long"), ast.T_INT)
-                vt = ast.T_INT
-            if vt is ast.T_BOOL:
-                v = SCol(as_col(v).cast("long"), ast.T_INT)
+            if vt is ast.T_FLOAT or vt is ast.T_BOOL:
+                v = SCol(cast(as_col(v), "BIGINT"), ast.T_INT)
                 vt = ast.T_INT
             if vt is not ast.T_INT:
                 raise KernelTypeError(f"cannot cast {vt!r} as {name}")
@@ -1380,18 +1344,18 @@ class Compiler:
             return SConst(cast_value(v.value, t), t), outs
         if t is ast.T_BOOL:
             if vt is ast.T_STR:
-                return SCol(F.length(as_col(v)) > 0, ast.T_BOOL), outs
+                return SCol(f"(length({as_col(v)}) > 0)", ast.T_BOOL), outs
             if isinstance(vt, (ast.TList, ast.TMap)):
-                return SCol(F.size(as_col(v)) > 0, ast.T_BOOL), outs
+                return SCol(f"(size({as_col(v)}) > 0)", ast.T_BOOL), outs
             if vt is ast.T_INT:
-                return SCol(as_col(v) != 0, ast.T_BOOL), outs
+                return SCol(f"({as_col(v)} != 0)", ast.T_BOOL), outs
         if vt is ast.T_BOOL and t is ast.T_INT:
-            return SCol(as_col(v).cast("long"), ast.T_INT), outs
+            return SCol(cast(as_col(v), "BIGINT"), ast.T_INT), outs
         if vt is ast.T_INT and t is ast.T_FLOAT:
-            return SCol(as_col(v).cast("double"), ast.T_FLOAT), outs
+            return SCol(cast(as_col(v), "DOUBLE"), ast.T_FLOAT), outs
         if vt is ast.T_FLOAT and t is ast.T_INT:
             # truncation toward zero (reference src/ir.rs:523 `as i64`)
-            return SCol(as_col(v).cast("long"), ast.T_INT), outs
+            return SCol(cast(as_col(v), "BIGINT"), ast.T_INT), outs
         if isinstance(t, ast.TUnion):
             return SCol(self.coerce_to(v, t), t), outs
         raise KernelTypeError(f"cannot cast {vt!r} as {t!r}")
@@ -1405,13 +1369,13 @@ class Compiler:
         per arm — keep subjects simple or bind them with `let` first."""
         sval, souts = self.compile_expr(expr.subject, env)
         st = vtype(sval)
-        arms: list[tuple[SVal | None, SVal, Column | None]] = []
+        arms: list[tuple[SVal | None, SVal, str | None]] = []
         matched_always = False
-        match_negs: list[Column] = []  # throw reach-conds, as in compile_cond
+        match_negs: list[str] = []  # throw reach-conds, as in compile_cond
 
-        def arm_path(ccol: Column | None) -> Column | None:
-            conds = [~n for n in match_negs] + ([ccol] if ccol is not None else [])
-            return _reduce(lambda a, b: a & b, conds) if conds else None
+        def arm_path(ccol: str | None) -> str | None:
+            conds = [f"(NOT {n})" for n in match_negs] + ([ccol] if ccol is not None else [])
+            return all_of(conds) if conds else None
 
         for arm in expr.arms:
             pat = arm.pattern
@@ -1428,12 +1392,12 @@ class Compiler:
                     if isinstance(sval, SConst):
                         cond = SConst(sval.value == pat.value, ast.T_BOOL)
                     else:
-                        cond = SCol(as_col(sval) == F.lit(pat.value), ast.T_BOOL)
+                        cond = SCol(f"({as_col(sval)} = {lit(pat.value)})", ast.T_BOOL)
             elif isinstance(pat, ast.PNone):
                 if isinstance(sval, SConst):
                     cond = SConst(sval.value is None, ast.T_BOOL)
                 else:
-                    cond = SCol(as_col(sval).isNull(), ast.T_BOOL)
+                    cond = SCol(f"({as_col(sval)} IS NULL)", ast.T_BOOL)
             elif isinstance(pat, ast.PBind):
                 if pat.type is None:
                     cond = None
@@ -1451,16 +1415,14 @@ class Compiler:
                             cond = SConst(False, ast.T_BOOL)
                         else:
                             scol = as_col(sval)
-                            cond = SCol(
-                                scol.getField("_tag") == F.lit(type_tag(pt)),
-                                ast.T_BOOL,
-                            )
-                            bind_env[pat.name] = SCol(scol.getField(f"_{idx}"), pt)
+                            tag = get_field(scol, "_tag")
+                            cond = SCol(f"({tag} = {lit(type_tag(pt))})", ast.T_BOOL)
+                            bind_env[pat.name] = SCol(get_field(scol, f"_{idx}"), pt)
                     else:
                         inner = st.inner if isinstance(st, ast.TOption) else st
                         if inner == pt:
                             if isinstance(st, ast.TOption) and isinstance(sval, SCol):
-                                cond = SCol(as_col(sval).isNotNull(), ast.T_BOOL)
+                                cond = SCol(f"({as_col(sval)} IS NOT NULL)", ast.T_BOOL)
                                 bind_env[pat.name] = SCol(as_col(sval), pt)
                             else:
                                 cond = None
@@ -1488,15 +1450,13 @@ class Compiler:
                 rtype = vtype(bval) if rtype is None else unify(rtype, vtype(bval))
         spark_rt = to_spark(rtype) if rtype is not None else None
 
-        tail_val: Column | None = None
-        tail_outs: Column | None = None
+        tail_val: str | None = None
+        tail_outs: str | None = None
         if not matched_always:
-            msg = "match: no case matched"
+            fail = call("assert_true", "false", lit("match: no case matched"))
             if spark_rt is not None:
-                tail_val = F.assert_true(F.lit(False), F.lit(msg)).cast(spark_rt)
-            tail_outs = F.array(
-                F.assert_true(F.lit(False), F.lit(msg)).cast(self.ctx.out_spark_type)
-            )
+                tail_val = cast(fail, spark_rt)
+            tail_outs = call("array", cast(fail, self.ctx.out_spark_type))
         for cond, bval, bouts in reversed(arms):
             if cond is None:
                 tail_val = (
@@ -1508,13 +1468,9 @@ class Compiler:
                 continue
             ccol = as_col(cond)
             if rtype is not None:
-                bv = (
-                    self.coerce_to(bval, rtype)
-                    if bval is not None
-                    else F.lit(None).cast(spark_rt)
-                )
-                base = tail_val if tail_val is not None else F.lit(None).cast(spark_rt)
-                tail_val = F.when(ccol, bv).otherwise(base)
+                null = cast("NULL", spark_rt)
+                bv = self.coerce_to(bval, rtype) if bval is not None else null
+                tail_val = case(ccol, bv, tail_val if tail_val is not None else null)
             tail_outs = when_outs(self.ctx, ccol, bouts, tail_outs)
 
         outs_all = concat_outs(self.ctx, [souts, tail_outs])
@@ -1550,7 +1506,7 @@ class Compiler:
 
         result_t: list[ast.Type] = []
 
-        def body_fn(el: Column) -> Column:
+        def body_fn(el: str) -> str:
             benv = dict(fn.env)
             benv[pname] = SCol(el, ptype)
             with self._in_hof():
@@ -1560,7 +1516,7 @@ class Compiler:
             result_t.append(vtype(bval))
             return as_col(bval)
 
-        col = F.transform(as_col(seq), body_fn)
+        col = call("transform", as_col(seq), self.lambda_fn(body_fn))
         return SCol(col, ast.TList(result_t[0])), souts
 
     def compile_block_expr(self, expr: ast.Block, env: dict):
@@ -1572,7 +1528,7 @@ class Compiler:
         return val, concat_outs(self.ctx, parts + [routs])
 
     # -- coercion ----------------------------------------------------------
-    def coerce_to(self, v: SVal, t: ast.Type) -> Column:
+    def coerce_to(self, v: SVal, t: ast.Type) -> str:
         """Cast a value to a declared type. Coercion semantics follow the
         reference's `as` table (src/ir.rs:510-529): Int↔Float (Float→Int
         truncates — Spark cast("long") truncates too), Bool↔Int (we implement
@@ -1581,7 +1537,7 @@ class Compiler:
         t = self.resolve_type(t)
         vt = vtype(v)
         if isinstance(v, SConst) and v.value is None:
-            return F.lit(None).cast(to_spark(t))
+            return cast("NULL", to_spark(t))
         if vt == t or t is ast.T_ANY:
             return as_col(v)
         if is_sized_int(t):
@@ -1592,24 +1548,25 @@ class Compiler:
             # coercion's check, squaring the tree (round-10 k_tower fix).
             base = v
             if vtype(base) is ast.T_FLOAT or vtype(base) is ast.T_BOOL:
-                base = SCol(as_col(base).cast("long"), ast.T_INT)
+                base = SCol(cast(as_col(base), "BIGINT"), ast.T_INT)
             if vtype(base) is not ast.T_INT:
                 raise KernelTypeError(f"cannot coerce {vt!r} to {t!r}")
             if isinstance(base, SCol) and _check_subsumes(base.checked, t.name):
-                return as_col(base).cast(to_spark(t))
-            return sized_range_check(
-                self._maybe_hoist(as_col(base), t.name), t.name
-            ).cast(to_spark(t))
+                return cast(as_col(base), to_spark(t))
+            return cast(
+                sized_range_check(self._maybe_hoist(as_col(base), t.name), t.name),
+                to_spark(t),
+            )
         if isinstance(t, ast.TOption):
             return self.coerce_to(v, t.inner)
         if vt is ast.T_INT and t is ast.T_FLOAT:
-            return as_col(v).cast("double")
+            return cast(as_col(v), "DOUBLE")
         if vt is ast.T_FLOAT and t is ast.T_INT:
-            return as_col(v).cast("long")  # truncation, matches reference intent
+            return cast(as_col(v), "BIGINT")  # truncation, matches reference intent
         if vt is ast.T_BOOL and t is ast.T_INT:
-            return as_col(v).cast("long")
+            return cast(as_col(v), "BIGINT")
         if vt is ast.T_INT and t is ast.T_BOOL:
-            return as_col(v) != 0
+            return f"({as_col(v)} != 0)"
         if isinstance(t, ast.TUnion):
             # wrap into the tagged struct (SURVEY.md §7.5): _tag names the
             # variant, the matching branch holds the value, others are null
@@ -1617,30 +1574,28 @@ class Compiler:
             idx = next((i for i, var in enumerate(variants) if var == vt), None)
             if idx is None and vt is ast.T_INT and ast.T_FLOAT in variants:
                 idx = variants.index(ast.T_FLOAT)
-                v = SCol(as_col(v).cast("double"), ast.T_FLOAT)
+                v = SCol(cast(as_col(v), "DOUBLE"), ast.T_FLOAT)
                 vt = ast.T_FLOAT
             if idx is None:
                 raise KernelTypeError(f"{vt!r} is not a variant of {t!r}")
-            fields = [F.lit(type_tag(variants[idx])).alias("_tag")]
+            fields = [lit("_tag"), lit(type_tag(variants[idx]))]
             for i, var in enumerate(variants):
-                if i == idx:
-                    fields.append(self.coerce_to(v, var).alias(f"_{i}"))
-                else:
-                    fields.append(F.lit(None).cast(to_spark(var)).alias(f"_{i}"))
-            return F.struct(*fields)
+                value = self.coerce_to(v, var) if i == idx else cast("NULL", to_spark(var))
+                fields += [lit(f"_{i}"), value]
+            return call("named_struct", *fields)
         spark_t = to_spark(t)
         if to_spark(vt) == spark_t:
             return as_col(v)
-        return as_col(v).cast(spark_t)
+        return cast(as_col(v), spark_t)
 
 
 # --------------------------------------------------------------------------
 # Built-in function library (SURVEY.md §2.3 "ext" row). All compile-time:
-# each native maps arg SVals to a result SVal (Column expression or folded
+# each native maps arg SVals to a result SVal (SQL expression or folded
 # constant) — nothing exists at runtime but the Catalyst expression. Folded
 # constants come from the interpreter's SCALAR_BUILTINS.
 # --------------------------------------------------------------------------
-def _num2(name, flt):
+def _num2(name, fn):
     def apply(comp, args):
         a, b = args
         t = unify(vtype(a), vtype(b))
@@ -1656,8 +1611,8 @@ def _num2(name, flt):
             return SConst(SCALAR_BUILTINS[name](x, y), t)
         ca, cb = as_col(a), as_col(b)
         if t is ast.T_FLOAT:
-            ca, cb = ca.cast("double"), cb.cast("double")
-        return SCol(flt(ca, cb), t)
+            ca, cb = cast(ca, "DOUBLE"), cast(cb, "DOUBLE")
+        return SCol(call(fn, ca, cb), t)
 
     return apply
 
@@ -1671,7 +1626,7 @@ def _math1(fname):
             if a.value is None:  # NULL-propagate like the runtime column
                 return SConst(None, ast.T_FLOAT)
             return SConst(SCALAR_BUILTINS[fname](a.value), ast.T_FLOAT)
-        return SCol(getattr(F, fname)(as_col(a).cast("double")), ast.T_FLOAT)
+        return SCol(call(fname, cast(as_col(a), "DOUBLE")), ast.T_FLOAT)
 
     return apply
 
@@ -1685,7 +1640,7 @@ def _n_abs(comp, args):
         if a.value is None:  # NULL-propagate like the runtime column
             return SConst(None, t)
         return SConst(SCALAR_BUILTINS["abs"](a.value), t)
-    return SCol(F.abs(as_col(a)), t)
+    return SCol(call("abs", as_col(a)), t)
 
 
 def _shift(name, direction):
@@ -1698,9 +1653,7 @@ def _shift(name, direction):
                 return SConst(None, ast.T_INT)
             return SConst(SCALAR_BUILTINS[name](a.value, b.value), ast.T_INT)
         # SQL shiftleft/shiftright operate on INT/BIGINT; both args as cols
-        return SCol(
-            F.call_function(direction, as_col(a), as_col(b).cast("int")), ast.T_INT
-        )
+        return SCol(call(direction, as_col(a), cast(as_col(b), "INT")), ast.T_INT)
 
     return apply
 
@@ -1714,7 +1667,7 @@ def _floorceil(fname):
             if a.value is None:  # NULL-propagate like the runtime column
                 return SConst(None, ast.T_INT)
             return SConst(SCALAR_BUILTINS[fname](a.value), ast.T_INT)
-        return SCol(getattr(F, fname)(as_col(a)).cast("long"), ast.T_INT)
+        return SCol(cast(call(fname, as_col(a)), "BIGINT"), ast.T_INT)
 
     return apply
 
@@ -1731,9 +1684,9 @@ def _n_length(comp, args):
     if isinstance(a, SConst) and isinstance(a.value, (str, list, dict)):
         return SConst(SCALAR_BUILTINS["length"](a.value), ast.T_INT)
     if t is ast.T_STR:
-        return SCol(F.length(as_col(a)).cast("long"), ast.T_INT)
+        return SCol(cast(call("length", as_col(a)), "BIGINT"), ast.T_INT)
     if isinstance(t, (ast.TList, ast.TMap)):
-        return SCol(F.size(as_col(a)).cast("long"), ast.T_INT)
+        return SCol(cast(call("size", as_col(a)), "BIGINT"), ast.T_INT)
     raise KernelTypeError(f"length on {t!r}")
 
 
@@ -1744,9 +1697,7 @@ def _n_join(comp, args):
         raise KernelTypeError(f"join on {t!r}")
     if vtype(sep) is not ast.T_STR:
         raise KernelTypeError("join separator must be Str")
-    # F.array_join only takes a Python-string delimiter; the SQL function
-    # accepts an expression
-    return SCol(F.call_function("array_join", as_col(xs), as_col(sep)), ast.T_STR)
+    return SCol(call("array_join", as_col(xs), as_col(sep)), ast.T_STR)
 
 
 def _str1(fname):
@@ -1754,7 +1705,7 @@ def _str1(fname):
         (a,) = args
         if vtype(a) is not ast.T_STR:
             raise KernelTypeError(f"{fname} on {vtype(a)!r}")
-        return SCol(getattr(F, fname)(as_col(a)), ast.T_STR)
+        return SCol(call(fname, as_col(a)), ast.T_STR)
 
     return apply
 
@@ -1767,14 +1718,14 @@ def _n_split(comp, args):
         raise KernelTypeError("split(s, sep) needs a Str and a constant separator")
     if sep.value is None:  # split on a NULL pattern is NULL
         return SConst(None, ast.TList(ast.T_STR))
-    return SCol(F.split(as_col(s), _re.escape(sep.value)), ast.TList(ast.T_STR))
+    return SCol(call("split", as_col(s), lit(_re.escape(sep.value)), "-1"), ast.TList(ast.T_STR))
 
 
 def _n_replace(comp, args):
     s, old, new = args
     if vtype(s) is not ast.T_STR:
         raise KernelTypeError("replace on non-Str")
-    return SCol(F.replace(as_col(s), as_col(old), as_col(new)), ast.T_STR)
+    return SCol(call("replace", as_col(s), as_col(old), as_col(new)), ast.T_STR)
 
 
 def _n_substr(comp, args):
@@ -1782,31 +1733,29 @@ def _n_substr(comp, args):
     if vtype(s) is not ast.T_STR:
         raise KernelTypeError("substr on non-Str")
     # 0-based (matching the reference's 0-based indexing — SURVEY.md §2.2)
-    return SCol(
-        F.substring(as_col(s), as_col(start).cast("int") + 1, as_col(length).cast("int")),
-        ast.T_STR,
-    )
+    pos = f"({cast(as_col(start), 'INT')} + 1)"
+    return SCol(call("substring", as_col(s), pos, cast(as_col(length), "INT")), ast.T_STR)
 
 
 def _n_contains(comp, args):
     hay, needle = args
     t = vtype(hay)
     if t is ast.T_STR:
-        return SCol(F.contains(as_col(hay), as_col(needle)), ast.T_BOOL)
+        return SCol(call("contains", as_col(hay), as_col(needle)), ast.T_BOOL)
     if isinstance(t, ast.TList):
-        return SCol(F.array_contains(as_col(hay), as_col(needle)), ast.T_BOOL)
+        return SCol(call("array_contains", as_col(hay), as_col(needle)), ast.T_BOOL)
     raise KernelTypeError(f"contains on {t!r}")
 
 
 def _inline1(comp, fn, item_t):
-    """One-arg SFunc → Column-lambda, enforcing purity."""
+    """One-arg SFunc → SQL lambda, enforcing purity."""
     if not isinstance(fn, SFunc) or len(fn.params) != 1:
         raise KernelTypeError("expected a 1-argument function")
     pname, ptype = fn.params[0]
     et = comp.resolve_type(ptype) if ptype is not ast.T_ANY else item_t
     rtypes: list[ast.Type] = []
 
-    def body(x: Column) -> Column:
+    def body(x: str) -> str:
         benv = dict(fn.env)
         benv[pname] = SCol(x, et)
         with comp._in_hof():
@@ -1816,7 +1765,7 @@ def _inline1(comp, fn, item_t):
         rtypes.append(vtype(bval))
         return as_col(bval)
 
-    return body, rtypes
+    return comp.lambda_fn(body), rtypes
 
 
 def _n_map(comp, args):
@@ -1825,7 +1774,7 @@ def _n_map(comp, args):
     if not isinstance(t, ast.TList):
         raise KernelTypeError(f"map on {t!r}")
     body, rtypes = _inline1(comp, fn, t.item)
-    col = F.transform(as_col(xs), body)
+    col = call("transform", as_col(xs), body)
     return SCol(col, ast.TList(rtypes[0]))
 
 
@@ -1835,7 +1784,7 @@ def _n_filter(comp, args):
     if not isinstance(t, ast.TList):
         raise KernelTypeError(f"filter on {t!r}")
     body, rtypes = _inline1(comp, fn, t.item)
-    col = F.filter(as_col(xs), body)
+    col = call("filter", as_col(xs), body)
     if rtypes[0] is not ast.T_BOOL:
         raise KernelTypeError("filter predicate must return Bool")
     return SCol(col, t)
@@ -1854,7 +1803,7 @@ def _n_reduce(comp, args):
     acc_t = vtype(init)
     item_t = comp.resolve_type(xtype) if xtype is not ast.T_ANY else t.item
 
-    def merge(acc: Column, x: Column) -> Column:
+    def merge(acc: str, x: str) -> str:
         benv = dict(fn.env)
         benv[aname] = SCol(acc, acc_t)
         benv[xname] = SCol(x, item_t)
@@ -1864,13 +1813,13 @@ def _n_reduce(comp, args):
             raise KernelCompileError("reduce body cannot `out`")
         return comp.coerce_to(bval, acc_t)
 
-    col = F.aggregate(as_col(xs), as_col(init).cast(to_spark(acc_t)), merge)
+    col = call("aggregate", as_col(xs), cast(as_col(init), to_spark(acc_t)), comp.lambda_fn(merge, 2))
     return SCol(col, acc_t)
 
 
 _COMPILE_BUILTIN = {
-    "min": _num2("min", F.least),
-    "max": _num2("max", F.greatest),
+    "min": _num2("min", "least"),
+    "max": _num2("max", "greatest"),
     "abs": _n_abs,
     "shl": _shift("shl", "shiftleft"),
     "shr": _shift("shr", "shiftright"),

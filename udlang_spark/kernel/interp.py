@@ -1,6 +1,6 @@
 """Per-row AST interpreter — the recursion fallback of SURVEY.md §2.10.
 
-The kernel compiler inlines and unrolls recursion into Column expressions
+The kernel compiler inlines and unrolls recursion into SQL expressions
 up to `max_depth` (with a poison guard beyond); that covers the common
 case with zero Python in the hot path. For genuinely unbounded recursion
 (the reference VM recurses natively to any depth — src/vm.rs:561-580),

@@ -43,6 +43,7 @@ from pyspark.sql.types import (
 from pyspark.sql.window import Window
 
 from udlang_spark.functions.text import ALNUM_WORDS_SQL
+from udlang_spark.sqltext import call, case, ident
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -1146,7 +1147,7 @@ def pq_adc_topk(
 # Hamming distance between sign signatures is a monotone proxy for angular
 # distance (Charikar 2002 sign-LSH: P[bit differs] = angle/π), so a
 # signature scan is the classic FIRST-PASS filter before exact or PQ
-# re-scoring. Everything is integer Column codegen: xor + bit_count.
+# re-scoring. Everything is integer codegen: xor + bit_count.
 # ---------------------------------------------------------------------------
 _SIGN_WORD_BITS = 32  # 32-bit words: bit j < 31 shifts never overflow a
 # signed i64 on either engine (DuckDB range-checks 1<<63; Spark ANSI would
@@ -1158,23 +1159,23 @@ def sign_signatures(
 ) -> DataFrame:
     """(vec_id, sig array<long>): sign-bit signature of each vector, bit j
     of word w set iff v[w·32+j] >= 0 (zero counts as positive — an exact
-    float comparison, identical on every engine). Pure Column work, zero
-    shuffles, linear scan."""
-    from functools import reduce as _red
-
+    float comparison, identical on every engine). Zero shuffles, linear
+    scan. The 64 packed terms reach the JVM as one SQL expression; a tree
+    of Column calls costs one py4j round-trip per node."""
+    v = ident(vec_col)
     words = []
     for w in range(0, dim, _SIGN_WORD_BITS):
-        nbits = min(_SIGN_WORD_BITS, dim - w)
         bits = [
-            F.when(
-                F.element_at(F.col(vec_col), w + j + 1) >= 0,
-                F.shiftleft(F.lit(1).cast("long"), j),
-            ).otherwise(F.lit(0).cast("long"))
-            for j in range(nbits)
+            case(
+                f"element_at({v}, {w + j + 1}) >= 0",
+                f"shiftleft(CAST(1 AS BIGINT), {j})",
+                "CAST(0 AS BIGINT)",
+            )
+            for j in range(min(_SIGN_WORD_BITS, dim - w))
         ]
-        words.append(_red(Column.bitwiseOR, bits))
+        words.append(" | ".join(bits))
     return emb.select(
-        F.col(id_col).alias("vec_id"), F.array(*words).alias("sig")
+        F.col(id_col).alias("vec_id"), F.expr(call("array", *words)).alias("sig")
     )
 
 
@@ -1216,14 +1217,12 @@ def hamming_topk(
             F.col("vec_id").alias("query_id"), F.col("sig").alias("qsig")
         )
     )
-    dist = sum(
-        F.bit_count(
-            F.element_at("sig", i).bitwiseXOR(F.element_at("qsig", i))
-        )
+    dist = " + ".join(
+        f"bit_count(element_at(sig, {i}) ^ element_at(qsig, {i}))"
         for i in range(1, n_words + 1)
-    ).cast("int")
+    )
     scored = sigs.join(q, F.col("vec_id") != F.col("query_id")).select(
-        "query_id", "vec_id", dist.alias("hamming")
+        "query_id", "vec_id", F.expr(f"CAST({dist} AS INT)").alias("hamming")
     )
     w = Window.partitionBy("query_id").orderBy(F.asc("hamming"), F.asc("vec_id"))
     return (

@@ -2,7 +2,7 @@
 
 uDLang kernels are stateless by construction (manual.md:21-24: the
 environment exposes no mutable state), so every compiled kernel is
-streaming-safe: the same Column expressions run unchanged under
+streaming-safe: the same compiled expressions run unchanged under
 `spark.readStream` (SURVEY.md §2.8). Stateful processing is explicitly out
 of the reference's scope (delegated to a planned driver — README.md:59-61);
 here the engine-extension stateful operators are watermarked window
@@ -97,7 +97,7 @@ def kernel_stream(
     out_name: str = "out",
 ) -> DataFrame:
     """Apply a compiled kernel to a streaming DataFrame. Identical code path
-    to batch: Kernel.apply only builds Column expressions."""
+    to batch: Kernel.apply only builds expressions."""
     if not stream.isStreaming:
         raise ValueError("kernel_stream expects a streaming DataFrame")
     return kernel.apply(stream, input_col=input_col, keep=keep, out_name=out_name)
