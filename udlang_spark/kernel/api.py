@@ -26,7 +26,6 @@ from udlang_spark.kernel.compiler import (
     when_outs,
 )
 from udlang_spark.kernel.parser import parse
-from udlang_spark.sqltext import call, ident, lit
 from udlang_spark.kernel.types import (
     KernelTypeError,
     collect_typedefs,
@@ -34,6 +33,7 @@ from udlang_spark.kernel.types import (
     resolve_type,
     to_spark,
 )
+from udlang_spark.sqltext import call, ident, lit
 
 
 def _single_out(body: tuple[ast.Stmt, ...]) -> tuple[ast.Expr | None, ast.Expr] | None:

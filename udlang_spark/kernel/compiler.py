@@ -64,7 +64,9 @@ from udlang_spark.sqltext import call, case, cast, ident, lit
 
 
 def get_field(x: str, name: str) -> str:
-    """Struct field access, parsed as Column.getField parses it."""
+    """Struct field access as a subscript: `x['f']` parses to a field
+    extraction on `x` even when `x` is a column name, where `x.f` could
+    resolve `x` as a table qualifier."""
     return f"{x}[{lit(name)}]"
 
 
