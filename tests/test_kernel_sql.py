@@ -36,14 +36,10 @@ def test_identifier_quoting_keeps_odd_names_whole(spark):
     names = ["a.b", "we`ird name", "x-y"]
     assert ident("we`ird name") == "`we``ird name`"
     df = spark.createDataFrame([(1, 2, 3)], [*names])
-    assert tuple(_one_row_of(df, names)) == (1, 2, 3)
+    assert tuple(df.select(*[F.expr(ident(n)) for n in names]).first()) == (1, 2, 3)
     k = compile_kernel(HDR + "input Int;\noutput Int;\nout in * 10;\n")
     got = k.apply(df, input_col="a.b", keep=("x-y",)).collect()
     assert [tuple(r) for r in got] == [(3, 10)]
-
-
-def _one_row_of(df, names):
-    return df.select(*[F.expr(ident(n)) for n in names]).first()
 
 
 def test_int_literals_type_as_f_lit(spark):
