@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import pytest
 
-SF = "/root/testdata/sf0.01"
+from tests.conftest import SF_DIR_CORRECTNESS as SF
 
 # query -> commands measured for one cold construction, doubled
 BOUNDS = {

@@ -17,6 +17,7 @@ from udlang_spark.kernel.compiler import Compiler, SConst, as_col
 from udlang_spark.kernel.interp import Interp
 from udlang_spark.kernel.types import to_spark
 from udlang_spark.sqltext import cast, ident, lit, type_sql
+from tests.conftest import SF_DIR_SMOKE
 
 HDR = 'version 0.1-pre_mvp;\nscript "t";\n'
 
@@ -169,7 +170,7 @@ def test_sign_signatures_match_python_sign_bits(spark):
     from udlang_spark.operators.similarity import sign_signatures
     from udlang_spark.sources.tables import load_table
 
-    emb = load_table(spark, "embeddings", "/root/testdata/sf0.001")
+    emb = load_table(spark, "embeddings", SF_DIR_SMOKE)
     crafted = [0.0, -0.0, -1.5, 2.0, -1e-30, 1e-30] + [(-1.0) ** i for i in range(58)]
     extra = spark.createDataFrame(
         [(-1, crafted)], T.StructType([emb.schema["vec_id"], emb.schema["embedding"]])
