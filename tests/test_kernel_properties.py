@@ -2649,8 +2649,8 @@ def _kernel_sources():
 
 @pytest.mark.parametrize("name", sorted(_kernel_sources()))
 def test_uncached_apply_builds_one_compiler(spark, monkeypatch, name):
-    """One apply() runs exactly one Compiler pass, whichever of the
-    filter+select and posexplode forms the kernel lowers to."""
+    """One uncached apply() runs exactly one Compiler pass, whichever of
+    the filter+select and posexplode forms the kernel lowers to."""
     from udlang_spark.kernel import api
     from udlang_spark.kernel.parser import parse
     from udlang_spark.sources.json_lift import input_schema
@@ -2667,5 +2667,5 @@ def test_uncached_apply_builds_one_compiler(spark, monkeypatch, name):
     df = spark.createDataFrame([], input_schema(k.resolved_input))
     k.apply(df)
     assert len(built) == 1
-    k.apply(df)  # each apply compiles once: the pass is not cached
-    assert len(built) == 2
+    k.apply(df)  # the input binding's compile is cached
+    assert len(built) == 1

@@ -32,15 +32,22 @@ def _sql(src: str) -> str:
     return Compiler(k.program, allow_hoist=False).compile(k._in_value("v"))
 
 
-def test_identifier_quoting_keeps_odd_names_whole(spark):
-    """A dotted or backticked input column is one column, not a path."""
+@pytest.mark.parametrize("recursion", ["unroll", "interp"])
+def test_identifier_quoting_keeps_odd_names_whole(spark, recursion):
+    """A dotted or backticked input or kept column is one column, not a
+    struct path, on the compiled and the interpreted path alike."""
     names = ["a.b", "we`ird name", "x-y"]
     assert ident("we`ird name") == "`we``ird name`"
     df = spark.createDataFrame([(1, 2, 3)], [*names])
     assert tuple(df.select(*[F.expr(ident(n)) for n in names]).first()) == (1, 2, 3)
     k = compile_kernel(HDR + "input Int;\noutput Int;\nout in * 10;\n")
-    got = k.apply(df, input_col="a.b", keep=("x-y",)).collect()
-    assert [tuple(r) for r in got] == [(3, 10)]
+    for input_col, keep, want in [
+        ("a.b", ("x-y", "we`ird name"), (3, 2, 10)),
+        ("x-y", ("a.b",), (1, 30)),
+    ]:
+        got = k.apply(df, input_col=input_col, keep=keep, recursion=recursion)
+        assert got.columns == [*keep, "out"]
+        assert [tuple(r) for r in got.collect()] == [want]
 
 
 def test_int_literals_type_as_f_lit(spark):
@@ -120,6 +127,19 @@ def test_nested_lambdas_get_unique_variable_names(spark):
     got = sorted(r["out"] for r in k.apply(df, input_col="v").collect())
     interp = Interp(k.program)
     assert got == sorted(o for v in inputs for o in interp.run(v))
+
+
+def test_lambda_names_do_not_capture_input_columns(spark):
+    """An input field named like a generated lambda variable (`x_0`) is
+    still the field inside the lambda body: Spark binds a bare name to an
+    in-scope lambda variable first, case-insensitively."""
+    src = "input {field x_0: Int; field xs: [Int];};\noutput [Int];\n"
+    k = compile_kernel(HDR + src + "out [in.xs | $ * 100 + in.x_0];\n")
+    df = spark.createDataFrame([(10, [1, 2])], "x_0 long, xs array<long>")
+    assert [r["out"] for r in k.apply(df).collect()] == [[110, 210]]
+    k = compile_kernel(HDR + "input [Int];\noutput [Int];\nout [in | $ + length(in)];\n")
+    df = spark.createDataFrame([([1, 2, 3],)], "X_0 array<long>")
+    assert [r["out"] for r in k.apply(df).collect()] == [[4, 5, 6]]
 
 
 @pytest.mark.parametrize(

@@ -7,7 +7,7 @@ unchanged on `spark.readStream` inputs (see udlang_spark/streaming/).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from functools import cached_property, lru_cache
 
 from pyspark.sql import Column, DataFrame
@@ -72,6 +72,15 @@ class _Lowered:
     bindings: tuple[tuple[str, str], ...]
     outs: str
     single: tuple[str | None, str] | None = None
+    _cols: dict[str, Column] = field(default_factory=dict, repr=False)
+
+    def expr(self, sql: str) -> Column:
+        """`F.expr(sql)`, parsed on the JVM once: a Column resolves by
+        column name, so one built here serves every later apply."""
+        col = self._cols.get(sql)
+        if col is None:
+            col = self._cols[sql] = F.expr(sql)
+        return col
 
 
 @dataclass
@@ -80,6 +89,11 @@ class Kernel:
     max_depth: int = MAX_RECURSION_DEPTH
     # pre-parsed lib programs for `import` linking (name -> lib AST)
     libs: dict[str, ast.Program] | None = None
+    # per input binding (_input_col), the kernel's _Lowered and the Columns
+    # apply() parsed from it: a warm apply runs no Compiler pass and sends
+    # the JVM no SQL to parse, only the DataFrame calls that place the
+    # cached Columns. A long-running engine compiles each kernel shape once.
+    _expr_cache: dict = field(default_factory=dict, repr=False, compare=False)
 
     @property
     def input_type(self) -> ast.Type:
@@ -205,8 +219,8 @@ class Kernel:
             memo: dict = {}
             for pdf in batches:
                 rows: dict[str, list] = {c: [] for c in list(keep) + [out_name]}
-                keep_arrays = {c: pdf[c].to_numpy() for c in keep}
-                in_arr = pdf[in_col].to_numpy()
+                keep_arrays = {c: pdf[f"_{i}"].to_numpy() for i, c in enumerate(keep)}
+                in_arr = pdf[f"_{len(keep)}"].to_numpy()
                 for i in range(len(pdf)):
                     v = in_arr[i]
                     if hasattr(v, "item"):  # numpy scalar → Python scalar
@@ -228,7 +242,10 @@ class Kernel:
                         rows[out_name].append(o)
                 yield pd.DataFrame(rows, columns=list(keep) + [out_name])
 
-        return df.select(*keep, in_col).mapInPandas(run, schema)
+        # positional names in: mapInPandas re-reads its input columns by
+        # name and would parse a dot or backtick in one as a struct path
+        src = df.select(*[F.col(ident(c)).alias(f"_{i}") for i, c in enumerate((*keep, in_col))])
+        return src.mapInPandas(run, schema)
 
     def apply(
         self,
@@ -247,9 +264,9 @@ class Kernel:
         emit nothing produce no rows (posexplode drops empty arrays), which
         is exactly the reference's conditional-`out` filter semantics.
 
-        Each apply compiles the kernel by one Compiler pass (_lower), which
-        yields the parts of both lowering forms; the pass is pure Python
-        (0.1-3.3 ms for the repository's kernels), so it is not cached. A body of
+        The first apply for an input binding compiles the kernel by one
+        Compiler pass (_lower), which yields the parts of both lowering
+        forms; later applies on that binding reuse it (_expr_cache). A body of
         one `out e;` or one `if (p) { out e; }` lowers to filter+select
         (SURVEY.md §2.2) when the declarations, `p` and `e` emit no outputs
         of their own: the predicate stays a plain Filter node, so Catalyst
@@ -273,29 +290,33 @@ class Kernel:
 
         Each lowered expression — the filter predicate, the output value or
         array, each hoisted binding — reaches the JVM as one `F.expr` of
-        SQL text.
+        SQL text. `input_col` and `keep` name top-level columns whole, on
+        both recursion paths: a dot is part of the name, not a struct path.
         """
         if recursion == "interp":
             return self._apply_interp(df, input_col, keep, out_name)
         if recursion != "unroll":
             raise ValueError("recursion must be 'unroll' or 'interp'")
-        low = self._lower(self._in_value(self._input_col(df, input_col)))
-        cols = [F.col(c) for c in keep]
+        key = self._input_col(df, input_col)
+        low = self._expr_cache.get(key)
+        if low is None:
+            low = self._expr_cache[key] = self._lower(self._in_value(key))
+        cols = [F.col(ident(c)) for c in keep]
         single = low.single if not with_pos and not debug else None
         base = df
         if single is not None and single[0] is not None:
-            base = df.filter(F.expr(single[0]))
+            base = df.filter(low.expr(single[0]))
         # hoisted range-check operands become narrow intermediate
         # projections below the output select; Catalyst's CollapseProject
         # re-inlines the cheap ones and keeps the expensive multi-referenced
         # ones split — which is the point (janino-limit fix, SURVEY §2.3)
         for bname, bsql in low.bindings:
-            base = base.select("*", F.expr(bsql).alias(bname))
+            base = base.select("*", low.expr(bsql).alias(bname))
         if single is not None:
-            return base.select(*cols, F.expr(single[1]).alias(out_name))
-        exploded = F.posexplode(F.expr(low.outs)).alias("pos", out_name)
+            return base.select(*cols, low.expr(single[1]).alias(out_name))
+        exploded = F.posexplode(low.expr(low.outs)).alias("pos", out_name)
         if debug and low.taps:
-            taps = F.expr(call("array", *low.taps)).alias("_debug")
+            taps = low.expr(call("array", *low.taps)).alias("_debug")
             sel = base.select(*cols, taps, exploded)
         else:
             sel = base.select(*cols, exploded)

@@ -411,10 +411,13 @@ class Compiler:
         return ident(name)
 
     def lambda_fn(self, body, arity: int = 1) -> str:
-        """A higher-order function's lambda `x_N -> body(x_N)` (`(x_N, y_M)
-        -> …` for two parameters). Variable names are fresh per compile, so
-        a nested lambda never shadows an enclosing one."""
-        names = [f"{p}_{self._lambda_n + i}" for i, p in enumerate("xy"[:arity])]
+        """A higher-order function's lambda `__ud_x_N -> body(__ud_x_N)`
+        (`(__ud_x_N, __ud_y_M) -> …` for two parameters). Variable names are
+        fresh per compile, so a nested lambda never shadows an enclosing
+        one; the `__ud_` prefix (the hoist bindings' too) keeps them apart
+        from input columns, which Spark would otherwise resolve to an
+        in-scope lambda variable of the same name."""
+        names = [f"__ud_{p}_{self._lambda_n + i}" for i, p in enumerate("xy"[:arity])]
         self._lambda_n += arity
         params = names[0] if arity == 1 else f"({', '.join(names)})"
         return f"{params} -> {body(*names)}"
