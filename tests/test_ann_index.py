@@ -15,6 +15,74 @@ def _embeddings(spark):
     return load_table(spark, "embeddings", SF_DIR_CORRECTNESS)
 
 
+def test_round6_cosine_zero_norm_row_scores_zero():
+    """A zero vector scores exactly 0.0 against everything (itself and
+    other zero rows included) — never NaN, which Spark sorts above every
+    double and would rank into each top-k."""
+    import numpy as np
+
+    a = np.array([[0.0, 0.0, 0.0], [1.0, -2.0, 0.5]])
+    b = np.array([[3.0, 1.0, -1.0], [0.0, 0.0, 0.0]])
+    cos = similarity.round6_cosine(a, b)
+    assert not np.isnan(cos).any()
+    assert (cos[0] == 0.0).all() and (cos[:, 1] == 0.0).all()
+    self_cos = similarity.round6_cosine(a)
+    assert not np.isnan(self_cos).any()
+    assert (self_cos[0] == 0.0).all() and (self_cos[:, 0] == 0.0).all()
+
+
+@pytest.mark.parametrize("rounded", [True, False])
+@pytest.mark.parametrize("dtype", ["float32", "float64"])
+def test_round6_cosine_bit_identical_to_left_then_right_formula(
+    dtype, rounded, monkeypatch
+):
+    """The shared kernel equals, bit for bit, the rule written out inline:
+    float64 GEMM, divide by the left norms, then by the right, round to 6
+    — for float32 and float64 inputs, and on all three call shapes (two
+    matrices, precomputed right norms, self-similarity). Rounding hides
+    most 1-ulp differences, so the unrounded case (np.round patched to the
+    identity on both sides) pins the division order itself."""
+    import numpy as np
+
+    if not rounded:
+        monkeypatch.setattr(np, "round", lambda x, decimals=0, out=None: x)
+    rng = np.random.default_rng(20261019)
+    a = rng.standard_normal((97, 64)).astype(dtype)
+    b = rng.standard_normal((41, 64)).astype(dtype)
+
+    def ref(x, y):
+        x = x.astype(np.float64)
+        y = x if y is None else y.astype(np.float64)
+        out = (x @ y.T) / np.sqrt((x * x).sum(axis=1))[:, None]
+        out = out / np.sqrt((y * y).sum(axis=1))[None, :]
+        return np.round(out, 6)
+
+    b_norm = np.sqrt((b.astype(np.float64) ** 2).sum(axis=1))
+    assert np.array_equal(similarity.round6_cosine(a, b), ref(a, b))
+    assert np.array_equal(similarity.round6_cosine(a, b, b_norm), ref(a, b))
+    assert np.array_equal(similarity.round6_cosine(a), ref(a, None))
+
+
+def test_round6_cosine_rounds_before_ranking():
+    """Cosines that differ only past the 6th decimal tie, and the tie goes
+    to the lower id: raw floats would rank id 2 (cos 1 - 5e-9) above id 1
+    (cos 1 - 2e-8)."""
+    import numpy as np
+
+    q = np.array([[1.0, 0.0]])
+    b = np.array([[1.0, 2e-4], [1.0, 1e-4]])
+    raw = (q @ b.T) / np.sqrt((b * b).sum(axis=1))
+    assert raw[0, 1] > raw[0, 0]
+    cos = similarity.round6_cosine(q, b)
+    assert np.array_equal(cos, np.round(cos, 6))
+    assert cos[0, 0] == cos[0, 1] == 1.0
+    top = similarity.gemm_topk_pairs(
+        np.array([0]), q, np.array([1, 2]), b, k=2
+    )
+    assert top["nbr"].tolist() == [1, 2]
+    assert top["cos_sim"].tolist() == [1.0, 1.0]
+
+
 def test_probe_equals_in_memory(spark, tmp_path):
     """A probe against the persisted index returns exactly what
     ivf_ann_topk computes for the same queries/parameters: same centroids,
@@ -171,7 +239,7 @@ def test_ivfpq_layout_and_code_parity(spark, tmp_path):
 def test_ivfpq_rerank_over_all_candidates_equals_ivf_probe(spark, tmp_path):
     """Exactness backstop: reranking the ENTIRE probed candidate set with
     raw vectors must reproduce the uncompressed IVF probe bit-for-bit —
-    same routing (shared _routing_gemm), same candidates, same scorer
+    same routing (shared round6_cosine), same candidates, same scorer
     (shared gemm_topk_pairs), same tie-breaks. This pins that IVF-PQ's
     approximation lives ONLY in the ADC scoring/truncation, never in the
     routing or candidate generation."""

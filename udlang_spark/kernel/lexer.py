@@ -36,13 +36,6 @@ KEYWORDS = {
     "match", "case", "throw", "attempt", "recover",
 }
 
-# Order matters: longest first.
-PUNCT = [
-    ".?.", "...", "->", "=>", "<=", ">=", "==", "!=",
-    "(", ")", "[", "]", "{", "}", "<", ">", ",", ";", ":", "=",
-    "+", "-", "*", "/", "^", "%", ".", "|", "?", "$", "_", "!",
-]
-
 _TOKEN_RE = re.compile(
     r"""
     (?P<ws>\s+)

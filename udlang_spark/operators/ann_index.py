@@ -14,10 +14,13 @@ count, never the data), and reads the index with a plan-time
 ``cell IN (...)`` predicate, so the scan's PartitionFilters prune to the
 probed directories: at 100 TB a 10-query probe against a 1024-cell index
 touches ~n_probe directories' worth of files, not the corpus. Scoring and
-ranking replicate ivf_ann_topk bit-for-bit (routing/scoring GEMMs and the
-tie-breaks live ONCE, in operators/similarity.py), so a probe against a
-persisted index equals the in-memory result for the same queries — the
-equality a pytest asserts.
+ranking replicate ivf_ann_topk bit-for-bit by construction: every routing
+and scoring GEMM here calls operators/similarity.round6_cosine (the one
+cosine rule), in-cell top-k is similarity.gemm_topk_pairs, and
+write_ivf_index seeds its centroids with similarity.first_rows_matrix as
+ivf_ann_topk does — so a probe against a persisted index equals the
+in-memory result for the same queries, the equality a pytest asserts. Each sidecar has one writer (_write_sidecar) and one reader
+(_read_sidecar).
 
 The reference has no file storage at all (pipe stdin/stdout only,
 HACKING.md:127-140) — this is engine-extension surface (SURVEY.md §2.1).
@@ -38,20 +41,66 @@ from pyspark.sql.window import Window
 
 from udlang_spark.operators.similarity import (
     _safe_norms,
+    first_rows_matrix,
     gemm_topk_pairs,
-    pq_adc_tables,
+    pq_adc_lookup,
     pq_code_block,
+    round6_cosine,
 )
 from udlang_spark.session import persist_tracked
 
+# sidecar directory -> its row-position column (the on-disk layout)
+_SIDECARS = {"_centroids": "cell", "_codebook": "pos"}
 
-def _write_sidecar(spark: SparkSession, rows, schema: StructType, dst: str):
-    """Single-slice write for a tiny driver-built relation: a plain
-    createDataFrame slices local data across defaultParallelism tasks —
-    at local[32] that is 32 Python workers forked to serialize 16 rows
-    (measured 3.6 s per sidecar); parallelize(rows, 1) makes it one."""
-    rdd = spark.sparkContext.parallelize(rows, 1)
-    spark.createDataFrame(rdd, schema).write.mode("overwrite").parquet(dst)
+
+def _write_sidecar(spark: SparkSession, path: str, name: str, mat, vec_type):
+    """Persist matrix row i as (<position>=i, vec) under <path>/<name>.
+    `vec` is typed as the source vec column: a hardcoded float would
+    silently truncate double-precision centroids, so append/probe would
+    route against DIFFERENT centroids than the build used. tolist() lifts
+    to Python floats (createDataFrame rejects np.float32) and the schema
+    casts back, lossless both ways (float32 -> double -> float32 exact).
+    Single-slice write: a plain createDataFrame slices local data across
+    defaultParallelism tasks — at local[32] that is 32 Python workers
+    forked to serialize 16 rows (measured 3.6 s per sidecar);
+    parallelize(rows, 1) makes it one."""
+    assert isinstance(vec_type, ArrayType)
+    schema = StructType(
+        [
+            StructField(_SIDECARS[name], IntegerType(), False),
+            StructField("vec", vec_type, False),
+        ]
+    )
+    rdd = spark.sparkContext.parallelize(
+        [(i, v.tolist()) for i, v in enumerate(mat)], 1
+    )
+    spark.createDataFrame(rdd, schema).write.mode("overwrite").parquet(
+        f"{path}/{name}"
+    )
+
+
+def _read_sidecar(spark: SparkSession, path: str, name: str):
+    """The persisted <path>/<name> sidecar as a position-ordered float64
+    matrix (n_cells or K rows — driver-trivial)."""
+    import numpy as np
+
+    rows = spark.read.parquet(f"{path}/{name}").orderBy(_SIDECARS[name]).collect()
+    if not rows:
+        raise ValueError(f"{path}: index has an empty {name} sidecar")
+    return np.stack([np.asarray(r["vec"]) for r in rows]).astype(np.float64)
+
+
+def _broadcast_centroids(spark: SparkSession, cent):
+    """The coarse quantizer broadcast as (matrix, norms) — the trailing
+    arguments of round6_cosine."""
+    return spark.sparkContext.broadcast((cent, _safe_norms(cent)))
+
+
+def _n_subspaces(schema: StructType) -> int:
+    """PQ subspace count of an IVF-PQ code relation (its c0..c{m-1})."""
+    return sum(
+        1 for f in schema.fields if f.name.startswith("c") and f.name != "cell"
+    )
 
 
 def _routed_schema(sdf: DataFrame) -> StructType:
@@ -64,19 +113,6 @@ def _routed_schema(sdf: DataFrame) -> StructType:
     )
 
 
-def _routing_gemm(bc, pb):
-    """Round-6 query×centroid cosine block — the single routing kernel for
-    build, append, and probe (parity depends on all three agreeing)."""
-    import numpy as np
-
-    cent_, cent_norm_ = bc.value
-    mat = np.stack(pb["vec"].to_numpy()).astype(np.float64)
-    nrm = _safe_norms(mat)
-    qc = (mat @ cent_.T) / nrm[:, None] / cent_norm_[None, :]
-    np.round(qc, 6, out=qc)
-    return qc
-
-
 def _member_router(bc):
     """Each row -> its argmax-cosine cell (first-max = lowest cell id)."""
 
@@ -87,7 +123,7 @@ def _member_router(bc):
         for pb in batches:
             if len(pb) == 0:
                 continue
-            qc = _routing_gemm(bc, pb)
+            qc = round6_cosine(np.stack(pb["vec"].to_numpy()), *bc.value)
             yield pd.DataFrame(
                 {
                     "cell": np.argmax(qc, axis=1).astype(np.int32),
@@ -109,7 +145,7 @@ def _query_router(bc, n_probe: int):
         for pb in batches:
             if len(pb) == 0:
                 continue
-            qc = _routing_gemm(bc, pb)
+            qc = round6_cosine(np.stack(pb["vec"].to_numpy()), *bc.value)
             probe = np.argsort(-qc, kind="stable", axis=1)[:, :n_probe]
             yield pd.DataFrame(
                 {
@@ -134,8 +170,8 @@ def _pq_member_router(bc, bcb, n_subspaces: int):
         for pb in batches:
             if len(pb) == 0:
                 continue
-            qc = _routing_gemm(bc, pb)
             X = np.stack(pb["vec"].to_numpy()).astype(np.float64)
+            qc = round6_cosine(X, *bc.value)
             codes, _ = pq_code_block(X, bcb.value, n_subspaces)
             out = {
                 "cell": np.argmax(qc, axis=1).astype(np.int32),
@@ -161,21 +197,6 @@ def _pq_code_schema(sdf: DataFrame, n_subspaces: int) -> StructType:
     )
 
 
-def _broadcast_centroids(spark: SparkSession, path: str):
-    """Load the persisted quantizer (n_cells rows — driver-trivial) and
-    broadcast (matrix, norms)."""
-    import numpy as np
-
-    cent_rows = (
-        spark.read.parquet(path + "/_centroids").orderBy("cell").collect()
-    )
-    if not cent_rows:
-        raise ValueError(f"{path}: index has an empty _centroids sidecar")
-    cent = np.stack([np.asarray(r["vec"]) for r in cent_rows]).astype(np.float64)
-    cent_norm = _safe_norms(cent)
-    return spark.sparkContext.broadcast((cent, cent_norm)), len(cent_rows)
-
-
 def write_ivf_index(
     df: DataFrame,
     vec_col: str,
@@ -192,42 +213,21 @@ def write_ivf_index(
     as ivf_ann_topk; a production build runs k-means here — the index
     machinery is identical). The ONLY driver materialization anywhere in
     the build, O(n_cells x dim)."""
-    import numpy as np
-
     spark = df.sparkSession
     sdf = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    cent_pdf = sdf.orderBy("id").limit(n_cells).toPandas().sort_values("id")
-    if len(cent_pdf) == 0:
+    cent = first_rows_matrix(sdf, n_cells)
+    if cent is None:
         raise ValueError(
             "write_ivf_index: cannot build an IVF index over an empty "
             "relation (no rows to seed the coarse quantizer)"
         )
-    cent = np.stack(cent_pdf["vec"].to_numpy()).astype(np.float64)
-    bc = spark.sparkContext.broadcast((cent, _safe_norms(cent)))
+    bc = _broadcast_centroids(spark, cent)
 
     members = sdf.mapInPandas(_member_router(bc), _routed_schema(sdf))
     members.write.mode("overwrite").partitionBy("cell").parquet(path)
     # centroids written LAST: a crashed build leaves no complete-looking
-    # _centroids over partial member data (readers require both). The
-    # sidecar's element type mirrors the source vec column — a hardcoded
-    # float would silently truncate double-precision centroids, so append/
-    # probe would route against DIFFERENT centroids than the build used.
-    elem_type = sdf.schema["vec"].dataType
-    cent_schema = StructType(
-        [
-            StructField("cell", IntegerType(), False),
-            StructField("vec", elem_type, False),
-        ]
-    )
-    assert isinstance(elem_type, ArrayType)
-    # float(x) lifts numpy scalars to Python floats (createDataFrame rejects
-    # np.float32); the schema casts back to the source element type, which
-    # is lossless in both directions (float32 -> double -> float32 exact)
-    cent_rows = [
-        (int(i), [float(x) for x in v])
-        for i, v in enumerate(cent_pdf["vec"].to_numpy())
-    ]
-    _write_sidecar(spark, cent_rows, cent_schema, path + "/_centroids")
+    # _centroids over partial member data (readers require both)
+    _write_sidecar(spark, path, "_centroids", cent, sdf.schema["vec"].dataType)
 
 
 def append_to_ivf_index(
@@ -244,7 +244,7 @@ def append_to_ivf_index(
     untouched. Periodic rebuild (write_ivf_index) re-balances cells when
     drift makes the frozen quantizer a bad fit."""
     spark = df.sparkSession
-    bc, _ = _broadcast_centroids(spark, path)
+    bc = _broadcast_centroids(spark, _read_sidecar(spark, path, "_centroids"))
     sdf = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     sdf.mapInPandas(_member_router(bc), _routed_schema(sdf)).write.mode(
         "append"
@@ -266,8 +266,9 @@ def probe_ivf_index(
     import numpy as np
     import pandas as pd
 
-    bc, n_cells = _broadcast_centroids(spark, path)
-    n_probe = min(n_probe, n_cells)
+    cent = _read_sidecar(spark, path, "_centroids")
+    bc = _broadcast_centroids(spark, cent)
+    n_probe = min(n_probe, len(cent))
 
     q = queries.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     # persisted: the distinct-cells collect below and the cogroup job are
@@ -325,7 +326,7 @@ def probe_ivf_index(
 # raw vectors (64 float32 → n_subspaces int8-sized codes: ~64× less I/O per
 # probed cell), and probing scores them with per-query ADC lookup tables in
 # pure Column codegen. Composition of the persisted IVF machinery above
-# with operators/similarity's PQ kernels (pq_code_block / pq_adc_tables —
+# with operators/similarity's PQ kernels (pq_code_block / pq_adc_lookup —
 # parity with the in-memory e_pq_* queries depends on sharing them).
 # ---------------------------------------------------------------------------
 
@@ -385,7 +386,7 @@ def write_ivfpq_index(
         raise ValueError("write_ivfpq_index: no codebook rows found")
     cent = np.stack(cent_pdf["vec"].to_numpy()).astype(np.float64)
     C = np.stack(cb_pdf["vec"].to_numpy()).astype(np.float64)
-    bc = spark.sparkContext.broadcast((cent, _safe_norms(cent)))
+    bc = _broadcast_centroids(spark, cent)
     bcb = spark.sparkContext.broadcast(C)
 
     # fan_out(8): the route+encode GEMM is CPU-heavy per row and a
@@ -403,32 +404,10 @@ def write_ivfpq_index(
         path
     )
 
-    # sidecars LAST (same crash-consistency argument as write_ivf_index);
-    # element type mirrors the source vec column
-    elem_type = sdf.schema["vec"].dataType
-    assert isinstance(elem_type, ArrayType)
-    side_schema = StructType(
-        [
-            StructField("pos", IntegerType(), False),
-            StructField("vec", elem_type, False),
-        ]
-    )
-    cent_rows = [
-        (int(i), [float(x) for x in v])
-        for i, v in enumerate(cent_pdf["vec"].to_numpy())
-    ]
-    cb_rows = [
-        (int(i), [float(x) for x in v])
-        for i, v in enumerate(cb_pdf["vec"].to_numpy())
-    ]
-    cent_schema = StructType(
-        [
-            StructField("cell", IntegerType(), False),
-            StructField("vec", elem_type, False),
-        ]
-    )
-    _write_sidecar(spark, cent_rows, cent_schema, path + "/_centroids")
-    _write_sidecar(spark, cb_rows, side_schema, path + "/_codebook")
+    # sidecars LAST (same crash-consistency argument as write_ivf_index)
+    vec_type = sdf.schema["vec"].dataType
+    _write_sidecar(spark, path, "_centroids", cent, vec_type)
+    _write_sidecar(spark, path, "_codebook", C, vec_type)
 
 
 def append_to_ivfpq_index(
@@ -443,22 +422,10 @@ def append_to_ivfpq_index(
     invalidate every stored code), then append into their cell
     partitions. One narrow route+encode map + an append-mode partitioned
     write; existing files untouched. Periodic rebuild re-balances."""
-    import numpy as np
-
     spark = df.sparkSession
-    bc, _ = _broadcast_centroids(spark, path)
-    cb_rows = spark.read.parquet(path + "/_codebook").orderBy("pos").collect()
-    if not cb_rows:
-        raise ValueError(f"{path}: index has an empty _codebook sidecar")
-    C = np.stack([np.asarray(r["vec"]) for r in cb_rows]).astype(np.float64)
-    bcb = spark.sparkContext.broadcast(C)
-    n_subspaces = len(
-        [
-            f
-            for f in spark.read.parquet(path).schema.fields
-            if f.name.startswith("c") and f.name != "cell"
-        ]
-    )
+    bc = _broadcast_centroids(spark, _read_sidecar(spark, path, "_centroids"))
+    bcb = spark.sparkContext.broadcast(_read_sidecar(spark, path, "_codebook"))
+    n_subspaces = _n_subspaces(spark.read.parquet(path).schema)
 
     sdf = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     sdf.mapInPandas(
@@ -575,24 +542,15 @@ def _adc_probe(
     collect. The distributed mapInPandas router this replaces (r12 shape)
     was a per-run Python-worker round-trip plus a persist and two extra
     collect jobs that re-derived what the table build already held; the
-    routing kernel math is unchanged (_routing_gemm's round-6 cosine GEMM,
-    stable argsort, ties break low), so the probed cells are
-    bit-identical. Returns (adc_top, qpd, id_dtype); on an empty query
-    panel returns (typed empty result, None, None)."""
+    routing kernel is the build's (similarity.round6_cosine, stable
+    argsort, ties break low), so the probed cells are bit-identical.
+    Returns (adc_top, qpd, id_dtype); on an empty query panel returns
+    (typed empty result, None, None)."""
     import numpy as np
-    from functools import reduce
 
-    cent_rows = (
-        spark.read.parquet(path + "/_centroids").orderBy("cell").collect()
-    )
-    if not cent_rows:
-        raise ValueError(f"{path}: index has an empty _centroids sidecar")
-    cent = np.stack([np.asarray(r["vec"]) for r in cent_rows]).astype(np.float64)
-    cent_norm = _safe_norms(cent)
-    n_cells = len(cent_rows)
-    n_probe = min(n_probe, n_cells)
-    cb_rows = spark.read.parquet(path + "/_codebook").orderBy("pos").collect()
-    C = np.stack([np.asarray(r["vec"]) for r in cb_rows]).astype(np.float64)
+    cent = _read_sidecar(spark, path, "_centroids")
+    n_probe = min(n_probe, len(cent))
+    C = _read_sidecar(spark, path, "_codebook")
 
     q = queries.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     qpd = q.dropDuplicates(["id"]).toPandas().sort_values("id")
@@ -606,32 +564,16 @@ def _adc_probe(
             ]
         )
         return spark.createDataFrame([], empty), None, None
-    Q = np.stack([np.asarray(v, dtype=np.float64) for v in qpd["vec"]])
-    # driver-side routing: the same kernel math as _routing_gemm /
-    # _query_router, over the already-collected panel
-    qc = (Q @ cent.T) / _safe_norms(Q)[:, None] / cent_norm[None, :]
-    np.round(qc, 6, out=qc)
+    Q = np.stack(qpd["vec"].to_numpy()).astype(np.float64)
+    # driver-side routing: _query_router's kernel over the collected panel
+    qc = round6_cosine(Q, cent)
     probe_cells = np.argsort(-qc, kind="stable", axis=1)[:, :n_probe]
     cells = sorted({int(c) for c in probe_cells.ravel()})
     codes = spark.read.parquet(path).where(F.col("cell").isin(cells))
-    n_subspaces = sum(
-        1
-        for f in codes.schema.fields
-        if f.name.startswith("c") and f.name != "cell"
+    id_type = q.schema["id"].dataType
+    tabs, dist = pq_adc_lookup(
+        spark, qpd["id"], Q, C, _n_subspaces(codes.schema), id_type
     )
-    tabs_np = pq_adc_tables(Q, C, n_subspaces)
-    id_sql = q.schema["id"].dataType.simpleString()
-    tab_schema = f"query_id {id_sql}, " + ", ".join(
-        f"t{s} array<double>" for s in range(n_subspaces)
-    )
-    tab_rows = [
-        tuple(
-            [qid] + [[float(x) for x in tabs_np[i, s]] for s in range(n_subspaces)]
-        )
-        for i, qid in enumerate(qpd["id"])
-    ]
-    tabs = F.broadcast(spark.createDataFrame(tab_rows, tab_schema))
-
     routing = F.broadcast(
         spark.createDataFrame(
             [
@@ -639,15 +581,8 @@ def _adc_probe(
                 for qid, row in zip(qpd["id"], probe_cells)
                 for c in row
             ],
-            f"query_id {id_sql}, cell int",
+            f"query_id {id_type.simpleString()}, cell int",
         )
-    )
-    dist = reduce(
-        lambda a, b: a + b,
-        [
-            F.element_at(F.col(f"t{s}"), F.col(f"c{s}") + 1)
-            for s in range(n_subspaces)
-        ],
     )
     scored = (
         codes.join(routing, "cell")
@@ -661,7 +596,7 @@ def _adc_probe(
         .filter(F.col("rnk") <= topr)
         .withColumn("rnk", F.col("rnk").cast("int"))
     )
-    return adc_top, qpd, q.schema["id"].dataType
+    return adc_top, qpd, id_type
 
 
 def _adc_rescore(

@@ -52,15 +52,6 @@ def shingle_sets(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     ).filter(F.size("sh") > 0)
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, n_hashes: int = N_HASHES
-) -> DataFrame:
-    """(doc, sig_0..sig_{n-1}): min over shingles of md5(f"{h}:{shingle}")."""
-    return _signatures_from_shingles(
-        shingle_sets(df, text_col, id_col), n_hashes
-    )
-
-
 def _signatures_from_shingles(sh: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
     """Signature pipeline from a (doc, sh) relation.
 
@@ -277,16 +268,6 @@ def simhash_fingerprints(df: DataFrame, text_col: str, id_col: str) -> DataFrame
     )
 
 
-def simhash_dup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Docs sharing a SimHash fingerprint (hamming distance 0 buckets)."""
-    return (
-        simhash_fingerprints(df, text_col, id_col)
-        .groupBy("simhash")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc").alias("keeper"))
-        .filter(F.col("n_docs") > 1)
-    )
-
-
 def simhash_near_pairs(
     df: DataFrame, text_col: str, id_col: str, max_hamming: int = 3
 ) -> DataFrame:
@@ -432,7 +413,6 @@ def embedding_near_dups(
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     from udlang_spark.operators import similarity as _sim
-    from udlang_spark.operators.similarity import _safe_norms
 
     cap = (
         max_broadcast_rows
@@ -457,7 +437,7 @@ def embedding_near_dups(
         )
     b_ids = pdf["id"].to_numpy()
     b_mat = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-    b_norm = _safe_norms(b_mat)
+    b_norm = _sim._safe_norms(b_mat)
     bc = df.sparkSession.sparkContext.broadcast((b_ids, b_mat, b_norm))
 
     def score(batches):
@@ -466,12 +446,7 @@ def embedding_near_dups(
             if len(pb) == 0:
                 continue
             a_ids = pb["id"].to_numpy()
-            a_mat = np.stack(pb["vec"].to_numpy()).astype(np.float64)
-            a_norm = _safe_norms(a_mat)
-            cos = a_mat @ b_mat_.T
-            cos /= a_norm[:, None]
-            cos /= b_norm_[None, :]
-            np.round(cos, 6, out=cos)
+            cos = _sim.round6_cosine(np.stack(pb["vec"].to_numpy()), b_mat_, b_norm_)
             keep = (a_ids[:, None] < b_ids_[None, :]) & (cos >= threshold)
             ai, bj = np.nonzero(keep)
             yield pd.DataFrame(
@@ -511,7 +486,7 @@ def embedding_near_dups_lsh(
 
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    from udlang_spark.operators.similarity import _safe_norms, lsh_bucket_rows
+    from udlang_spark.operators.similarity import lsh_bucket_rows, round6_cosine
 
     buckets = lsh_bucket_rows(df, vec_col, id_col, n_planes, n_dims, n_tables)
 
@@ -519,12 +494,7 @@ def embedding_near_dups_lsh(
         if len(pdf) < 2:
             return pd.DataFrame({"id_a": [], "id_b": [], "cos": []})
         ids = pdf["id"].to_numpy()
-        mat = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-        nrm = _safe_norms(mat)
-        cos = mat @ mat.T
-        cos /= nrm[:, None]
-        cos /= nrm[None, :]
-        np.round(cos, 6, out=cos)
+        cos = round6_cosine(np.stack(pdf["vec"].to_numpy()))
         keep = (ids[:, None] < ids[None, :]) & (cos >= threshold)
         ai, bj = np.nonzero(keep)
         return pd.DataFrame({"id_a": ids[ai], "id_b": ids[bj], "cos": cos[ai, bj]})
@@ -775,14 +745,14 @@ def semantic_dedup(
     # round-6 cosines in BLAS (~2 s). Values identical: round-6 masks
     # accumulation-order differences (dim·ulp ≪ 5e-7, the same argument
     # kmeans_assign's GEMM already relies on vs its unrolled SQL oracle),
-    # and _safe_norms gives zero vectors cos 0.0 exactly like cosine().
+    # and round6_cosine gives zero vectors cos 0.0 exactly like cosine().
     # Parallelism = #blocks; per-task memory is chunk×|block| cosines,
     # bounded by max_cluster_size.
     import pandas as pd
 
     from pyspark.sql.types import StructField, StructType
 
-    from udlang_spark.operators.similarity import _safe_norms
+    from udlang_spark.operators.similarity import _safe_norms, round6_cosine
 
     def find_dropped(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
@@ -798,10 +768,7 @@ def semantic_dedup(
         cols = np.arange(n)
         for s in range(1, n, chunk):  # the min id (row 0) can never drop
             t = min(s + chunk, n)
-            cos = mat[s:t] @ mat.T
-            cos /= nrm[s:t, None]
-            cos /= nrm[None, :]
-            np.round(cos, 6, out=cos)
+            cos = round6_cosine(mat[s:t], mat, nrm)
             # any LOWER-id cluster-mate at/over threshold drops a row —
             # compared against ALL mates, not only kept ones (order-free)
             lower = cols[None, :] < np.arange(s, t)[:, None]

@@ -19,6 +19,8 @@ Float determinism note: numpy GEMM uses pairwise/SIMD summation while the
 Column fold and DuckDB's list_dot_product are sequential — results agree to
 ~1e-14 relative, so every similarity this module emits is rounded to 6
 decimals BEFORE ranking/thresholding, on both the Spark and oracle sides.
+The GEMM form of that rule is written once, in round6_cosine; every GEMM
+scorer and router here, in ann_index.py and in dedup.py calls it.
 
 Performance notes (measured at sf0.1, 2000×64-d vectors, local[32]):
 - Norms are computed ONCE per vector before the pair join; the naive
@@ -107,22 +109,41 @@ def _safe_norms(mat):
     return nrm
 
 
+def round6_cosine(a, b=None, b_norm=None):
+    """THE cosine rule of every GEMM scorer, router and dedup kernel in
+    this package (and of their DuckDB oracles): float64 GEMM a·bᵀ, divided
+    by the left row norms and then by the right ones (_safe_norms, so a
+    zero-norm row scores 0.0, never NaN), rounded to 6 decimals before any
+    ranking, argmax or threshold. `b=None` scores `a` against itself — the
+    same array on both sides of the matmul, which numpy computes with its
+    symmetric-product kernel (its low bits differ from a general GEMM, so
+    a self-similarity caller must not pass a copy); `b_norm` is a
+    precomputed _safe_norms(b), e.g. one broadcast beside `b`."""
+    import numpy as np
+
+    a = np.asarray(a, dtype=np.float64)
+    b = a if b is None else np.asarray(b, dtype=np.float64)
+    a_norm = _safe_norms(a)
+    if b_norm is None:
+        b_norm = a_norm if b is a else _safe_norms(b)
+    cos = a @ b.T
+    cos /= a_norm[:, None]
+    cos /= b_norm[None, :]
+    np.round(cos, 6, out=cos)
+    return cos
+
+
 def gemm_topk_pairs(q_ids, q_mat, b_ids, b_mat, k):
     """The parity-critical in-group scorer shared by ivf_ann_topk and the
-    persisted-index probe (operators/ann_index.py): float64 GEMM cosine,
-    round-6 BEFORE ranking, self-pairs masked, per-query top-k by
-    (cos desc, neighbor id asc). Exists exactly once so a tie-break or
-    rounding change cannot silently break the probe==in-memory equality
-    the pytests assert."""
+    persisted-index probe (operators/ann_index.py): round6_cosine scores,
+    self-pairs masked, per-query top-k by (cos desc, neighbor id asc).
+    Exists exactly once, on the one cosine rule, so a tie-break or rounding
+    change cannot silently break the probe==in-memory equality the pytests
+    assert."""
     import numpy as np
     import pandas as pd
 
-    b_norm = _safe_norms(b_mat)
-    q_norm = _safe_norms(q_mat)
-    cos = q_mat @ b_mat.T
-    cos /= q_norm[:, None]
-    cos /= b_norm[None, :]
-    np.round(cos, 6, out=cos)
+    cos = round6_cosine(q_mat, b_mat)
     cos[q_ids[:, None] == b_ids[None, :]] = -np.inf
     order = np.lexsort((b_ids[None, :].repeat(len(q_ids), 0), -cos), axis=1)
     m = min(k, cos.shape[1])
@@ -135,6 +156,20 @@ def gemm_topk_pairs(q_ids, q_mat, b_ids, b_mat, k):
         }
     )
     return out[out["cos_sim"] != -np.inf]
+
+
+def first_rows_matrix(sdf: DataFrame, n: int, id_col: str = "id"):
+    """The first `n` rows of `sdf` by `id_col` as an id-ordered float64
+    matrix of their `vec` column — the deterministic seed-centroid
+    convention of ivf_ann_topk, kmeans_assign and the persisted IVF index
+    (one collect, bounded by n, never by the relation). None when `sdf` is
+    empty."""
+    import numpy as np
+
+    pdf = sdf.orderBy(id_col).limit(n).toPandas().sort_values(id_col)
+    if len(pdf) == 0:
+        return None
+    return np.stack(pdf["vec"].to_numpy()).astype(np.float64)
 
 
 def _topk_schema(id_type) -> StructType:
@@ -206,12 +241,7 @@ def cosine_topk(
             if len(pb) == 0:
                 continue
             a_ids = pb["id"].to_numpy()
-            a_mat = np.stack(pb["vec"].to_numpy()).astype(np.float64)
-            a_norm = _safe_norms(a_mat)
-            cos = a_mat @ b_mat_.T
-            cos /= a_norm[:, None]
-            cos /= b_norm_[None, :]
-            np.round(cos, 6, out=cos)
+            cos = round6_cosine(np.stack(pb["vec"].to_numpy()), b_mat_, b_norm_)
             # mask self-pairs, then top-k by (cos desc, nbr asc)
             self_mask = a_ids[:, None] == b_ids_[None, :]
             cos[self_mask] = -np.inf
@@ -237,39 +267,6 @@ def cosine_topk(
     return sdf.mapInPandas(score, _topk_schema(id_type)).filter(
         F.col("cos_sim") != float("-inf")
     )
-
-
-def cosine_topk_expr(
-    df: DataFrame, vec_col: str, id_col: str, k: int = 5
-) -> DataFrame:
-    """Pure-Column brute-force top-k (broadcast nested-loop + window).
-    Bit-identical to the sequential fold; used as the JVM-only reference
-    for cosine_topk's GEMM results in tests."""
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        norm(F.col(vec_col)).alias("nrm"),
-    )
-    a = base.select(
-        F.col("id").alias("vec_id"), F.col("vec").alias("vec_a"), F.col("nrm").alias("nrm_a")
-    )
-    b = base.select(
-        F.col("id").alias("nbr"), F.col("vec").alias("vec_b"), F.col("nrm").alias("nrm_b")
-    )
-    pairs = (
-        a.crossJoin(F.broadcast(b))
-        .filter(F.col("vec_id") != F.col("nbr"))
-        .select(
-            "vec_id",
-            "nbr",
-            F.round(
-                dot(F.col("vec_a"), F.col("vec_b")) / (F.col("nrm_a") * F.col("nrm_b")),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos_sim").desc(), F.col("nbr"))
-    return pairs.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
 
 
 def centroid_assign(
@@ -310,12 +307,7 @@ def centroid_assign(
             if len(pb) == 0:
                 continue
             a_ids = pb["vec_id"].to_numpy()
-            a_mat = np.stack(pb["vec"].to_numpy()).astype(np.float64)
-            a_norm = _safe_norms(a_mat)
-            cos = a_mat @ c_mat_.T
-            cos /= a_norm[:, None]
-            cos /= c_norm_[None, :]
-            np.round(cos, 6, out=cos)
+            cos = round6_cosine(np.stack(pb["vec"].to_numpy()), c_mat_, c_norm_)
             # argmax by (cos desc, centroid id asc): c_ids_ is sorted, and
             # np.argmax takes the FIRST maximal column — exactly min-id.
             best = np.argmax(cos, axis=1)
@@ -374,17 +366,14 @@ def kmeans_assign(
     sdf = persist_tracked(
         df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec"))
     )
-    seed = (
-        sdf.orderBy("vec_id").limit(k).toPandas().sort_values("vec_id")
-    )
-    if len(seed) == 0:  # empty relation: empty assignment, no driver GEMM
+    c_mat = first_rows_matrix(sdf, k, "vec_id")
+    if c_mat is None:  # empty relation: empty assignment, no driver GEMM
         return df.sparkSession.createDataFrame(
             [], _assign_schema(sdf.schema["vec_id"].dataType, LongType())
         )
-    c_mat = np.stack(seed["vec"].to_numpy()).astype(np.float64)
-    # len(seed) may be < k on tiny relations — the id range must match the
-    # actual centroid matrix or the assignment would reference ghost cells
-    c_ids = np.arange(len(seed))
+    # the seed may have < k rows on tiny relations — the id range must match
+    # the actual centroid matrix or the assignment would reference ghost cells
+    c_ids = np.arange(len(c_mat))
 
     def make_assign(bc, with_vec: bool):
         def assign(batches):
@@ -394,12 +383,7 @@ def kmeans_assign(
             for pb in batches:
                 if len(pb) == 0:
                     continue
-                a_mat = np.stack(pb["vec"].to_numpy()).astype(np.float64)
-                a_norm = _safe_norms(a_mat)
-                cos = a_mat @ c_mat_.T
-                cos /= a_norm[:, None]
-                cos /= c_norm_[None, :]
-                np.round(cos, 6, out=cos)
+                cos = round6_cosine(np.stack(pb["vec"].to_numpy()), c_mat_, c_norm_)
                 best = np.argmax(cos, axis=1)  # first max = min centroid idx
                 out = {
                     "vec_id": pb["vec_id"].to_numpy(),
@@ -591,12 +575,7 @@ def lsh_ann_topk(
         if len(pdf) < 2:
             return pd.DataFrame({"vec_id": [], "nbr": [], "cos_sim": []})
         ids = pdf["id"].to_numpy()
-        mat = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-        nrm = _safe_norms(mat)
-        cos = mat @ mat.T
-        cos /= nrm[:, None]
-        cos /= nrm[None, :]
-        np.round(cos, 6, out=cos)
+        cos = round6_cosine(np.stack(pdf["vec"].to_numpy()))
         # per-vector top-k WITHIN the bucket suffices: any global top-k
         # candidate shares a bucket with the vector and ranks ≤ k among
         # that bucket's members — pruning here cuts the dedup shuffle ~|B|/k
@@ -664,8 +643,8 @@ def ivf_ann_topk(
 
     sdf = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     # the ONLY driver-side collect: bounded by n_cells, not |df|
-    cent_pdf = sdf.orderBy("id").limit(n_cells).toPandas().sort_values("id")
-    if len(cent_pdf) == 0:  # empty relation: empty top-k
+    cent = first_rows_matrix(sdf, n_cells)
+    if cent is None:  # empty relation: empty top-k
         id_type = sdf.schema["id"].dataType
         return df.sparkSession.createDataFrame(
             [],
@@ -678,24 +657,18 @@ def ivf_ann_topk(
                 ]
             ),
         )
-    cent = np.stack(cent_pdf["vec"].to_numpy()).astype(np.float64)
-    cent_norm = _safe_norms(cent)
-    bc = df.sparkSession.sparkContext.broadcast((cent, cent_norm))
+    bc = df.sparkSession.sparkContext.broadcast((cent, _safe_norms(cent)))
 
     def route(batches):
         import pandas as pd
 
-        cent_, cent_norm_ = bc.value
         for pb in batches:
             if len(pb) == 0:
                 continue
             a_ids = pb["id"].to_numpy()
-            a_mat = np.stack(pb["vec"].to_numpy()).astype(np.float64)
-            a_norm = _safe_norms(a_mat)
-            qc = (a_mat @ cent_.T) / a_norm[:, None] / cent_norm_[None, :]
             # round-6 before ranking: routing must agree across engines
             # and BLAS variants; raw-float ordering is 1-ulp fragile
-            np.round(qc, 6, out=qc)
+            qc = round6_cosine(np.stack(pb["vec"].to_numpy()), *bc.value)
             # index membership: first-max argmax (ties → lowest cell id);
             # probe set: stable argsort, so ties also break low
             member = np.argmax(qc, axis=1).astype(np.int32)
@@ -896,14 +869,7 @@ def mmr_rerank(
         ).head(n_candidates)
         ids = pdf["vec_id"].to_numpy()
         rel_v = pdf["rel"].to_numpy(dtype=np.float64)
-        X = np.asarray(
-            [np.asarray(v, dtype=np.float64) for v in pdf["_v"]]
-        )
-        nrm = _safe_norms(X)
-        S = X @ X.T
-        S /= nrm[:, None]
-        S /= nrm[None, :]
-        np.round(S, 6, out=S)
+        S = round6_cosine(np.stack(pdf["_v"].to_numpy()))
         n = len(ids)
         # the first pick has no redundancy term (score = lam*rel - mu*0);
         # afterwards maxsim is the TRUE max sim over the selected set — it
@@ -937,23 +903,33 @@ def mmr_rerank(
     return cand.groupBy("query_id").applyInPandas(greedy, out_schema)
 
 
-def pq_code_block(X, C, n_subspaces: int, with_error: bool = False):
-    """The PQ encode kernel shared by pq_encode and the IVF-PQ index
-    writer (parity between the in-memory and persisted paths depends on
-    one implementation): per subspace, round-6 squared-L2 to every
-    codeword, argmin with lowest-position tie-break. Returns
-    (codes int32 [n, m], recon_err float64 [n] | None)."""
+def _pq_subspace_dists(X, C, n_subspaces: int):
+    """THE PQ distance rule, per subspace s in order: the round-6 squared
+    L2 from each row of X to every codeword of C over that subspace's
+    contiguous dims — an [n, K] float64 block. Encoding (argmin) and the
+    ADC lookup tables both read it, so codes and tables cannot drift."""
     import numpy as np
 
-    dim = C.shape[1]
-    sub = dim // n_subspaces
-    codes = np.empty((len(X), n_subspaces), dtype=np.int32)
-    recon = np.zeros(len(X)) if with_error else None
+    sub = C.shape[1] // n_subspaces
     for s in range(n_subspaces):
         Xs = X[:, s * sub : (s + 1) * sub]
         Cs = C[:, s * sub : (s + 1) * sub]
         d = ((Xs[:, None, :] - Cs[None, :, :]) ** 2).sum(-1)
         np.round(d, 6, out=d)
+        yield d
+
+
+def pq_code_block(X, C, n_subspaces: int, with_error: bool = False):
+    """The PQ encode kernel shared by pq_encode and the IVF-PQ index
+    writer (parity between the in-memory and persisted paths depends on
+    one implementation): per subspace, argmin of _pq_subspace_dists with
+    lowest-position tie-break. Returns
+    (codes int32 [n, m], recon_err float64 [n] | None)."""
+    import numpy as np
+
+    codes = np.empty((len(X), n_subspaces), dtype=np.int32)
+    recon = np.zeros(len(X)) if with_error else None
+    for s, d in enumerate(_pq_subspace_dists(X, C, n_subspaces)):
         code = np.argmin(d, axis=1)  # first min = lowest position
         codes[:, s] = code
         if with_error:
@@ -961,22 +937,30 @@ def pq_code_block(X, C, n_subspaces: int, with_error: bool = False):
     return codes, recon
 
 
-def pq_adc_tables(Q, C, n_subspaces: int):
-    """Per-query ADC lookup tables: round-6 squared-L2 from each query
-    subvector to every codeword — [|Q|, m, K] float64. Shared by
-    pq_adc_topk and probe_ivfpq_index (one table convention)."""
-    import numpy as np
+def pq_adc_lookup(spark, query_ids, Q, C, n_subspaces: int, id_type):
+    """The ADC scoring pieces shared by pq_adc_topk and the IVF-PQ probe
+    (one table convention): a broadcast (query_id, t0..t{m-1}) relation
+    whose t{s} is query Q[i]'s _pq_subspace_dists row — round-6 literals,
+    identical on both engines — and the Column that sums a code row's
+    lookups in fixed subspace order (element_at over c{s} + 1)."""
+    from functools import reduce
 
-    dim = C.shape[1]
-    sub = dim // n_subspaces
-    tabs = np.empty((len(Q), n_subspaces, len(C)))
-    for s in range(n_subspaces):
-        Qs = Q[:, s * sub : (s + 1) * sub]
-        Cs = C[:, s * sub : (s + 1) * sub]
-        d = ((Qs[:, None, :] - Cs[None, :, :]) ** 2).sum(-1)
-        np.round(d, 6, out=d)
-        tabs[:, s, :] = d
-    return tabs
+    dists = list(_pq_subspace_dists(Q, C, n_subspaces))
+    rows = [
+        tuple([qid] + [d[i].tolist() for d in dists])
+        for i, qid in enumerate(query_ids)
+    ]
+    schema = f"query_id {id_type.simpleString()}, " + ", ".join(
+        f"t{s} array<double>" for s in range(n_subspaces)
+    )
+    dist = reduce(
+        lambda a, b: a + b,
+        [
+            F.element_at(F.col(f"t{s}"), F.col(f"c{s}") + 1)
+            for s in range(n_subspaces)
+        ],
+    )
+    return F.broadcast(spark.createDataFrame(rows, schema)), dist
 
 
 def _collect_codebook(sdf: DataFrame, codebook_ids: tuple[int, ...]):
@@ -1104,27 +1088,13 @@ def pq_adc_topk(
     )
     if len(seed) == 0 or len(qpd) == 0:
         return emb.sparkSession.createDataFrame([], out_schema)
-    C = np.stack(seed["vec"].to_numpy()).astype(np.float64)
-    Q = np.stack([np.asarray(v, dtype=np.float64) for v in qpd["vec"]])
-    tabs_np = pq_adc_tables(Q, C, n_subspaces)
-    tab_rows = [
-        tuple(
-            [qid] + [[float(x) for x in tabs_np[i, s]] for s in range(n_subspaces)]
-        )
-        for i, qid in enumerate(qpd["vec_id"])
-    ]
-    tab_schema = f"query_id {emb.schema[id_col].dataType.simpleString()}, " + ", ".join(
-        f"t{s} array<double>" for s in range(n_subspaces)
-    )
-    tabs = F.broadcast(emb.sparkSession.createDataFrame(tab_rows, tab_schema))
-    from functools import reduce
-
-    dist = reduce(
-        lambda a, b: a + b,
-        [
-            F.element_at(F.col(f"t{s}"), F.col(f"c{s}") + 1)
-            for s in range(n_subspaces)
-        ],
+    tabs, dist = pq_adc_lookup(
+        emb.sparkSession,
+        qpd["vec_id"],
+        np.stack(qpd["vec"].to_numpy()).astype(np.float64),
+        np.stack(seed["vec"].to_numpy()).astype(np.float64),
+        n_subspaces,
+        emb.schema[id_col].dataType,
     )
     scored = (
         codes.join(tabs, F.col("vec_id") != F.col("query_id"))

@@ -605,12 +605,6 @@ def _simhash64_oracle() -> str:
     )
 
 
-_HAMMING = " + ".join(
-    f"CASE WHEN substr(a.simhash, {p}, 1) <> substr(b.simhash, {p}, 1) "
-    "THEN 1 ELSE 0 END"
-    for p in range(1, 65)
-)
-
 # banded like the Spark plan (NOT all-pairs): 4×16-char bands, candidates
 # = pairs sharing any band, exact hamming filter after. By pigeonhole this
 # finds EXACTLY the all-pairs hamming≤3 result (3 differing bits cannot

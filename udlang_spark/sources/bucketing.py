@@ -33,10 +33,6 @@ def write_bucketed(
     w.format("parquet").saveAsTable(table)
 
 
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def cobucketed_join(
     spark: SparkSession, left_table: str, right_table: str, on: str, how: str = "inner"
 ) -> DataFrame:

@@ -21,10 +21,9 @@ predicate pushdown + column pruning (always prefer it for 100 TB);
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StringType, StructField, StructType
 
 from udlang_spark.kernel import ast
-from udlang_spark.sources.json_lift import POLICY_TO_MODE, input_schema
+from udlang_spark.sources.json_lift import POLICY_TO_MODE, input_schema, policy_schema
 
 
 def read_csv(
@@ -36,13 +35,7 @@ def read_csv(
     sep: str = ",",
 ) -> DataFrame:
     """CSV → typed DataFrame matching the kernel's declared input shape."""
-    if policy not in POLICY_TO_MODE:
-        raise ValueError(f"unknown policy {policy!r} (abort|ignore|warn)")
-    schema = input_schema(input_type)
-    if policy == "warn":
-        schema = StructType(
-            list(schema.fields) + [StructField("_corrupt", StringType())]
-        )
+    schema = policy_schema(input_type, policy)
     return (
         spark.read.schema(schema)
         .option("header", str(header).lower())
@@ -61,13 +54,7 @@ def read_json(
     spark: SparkSession, path: str, input_type: ast.Type, policy: str = "abort"
 ) -> DataFrame:
     """JSON-lines → typed DataFrame (file twin of json_lift.lift_json)."""
-    if policy not in POLICY_TO_MODE:
-        raise ValueError(f"unknown policy {policy!r} (abort|ignore|warn)")
-    schema = input_schema(input_type)
-    if policy == "warn":
-        schema = StructType(
-            list(schema.fields) + [StructField("_corrupt", StringType())]
-        )
+    schema = policy_schema(input_type, policy)
     return (
         spark.read.schema(schema)
         .option("mode", POLICY_TO_MODE[policy])
@@ -148,15 +135,8 @@ def read_msgpack(
 
     from udlang_spark.sources import msgpack_codec as mp
 
-    if policy not in POLICY_TO_MODE:
-        raise ValueError(f"unknown policy {policy!r} (abort|ignore|warn)")
-    schema = input_schema(input_type)
-    names = [f.name for f in schema.fields]
-    out_schema = schema
-    if policy == "warn":
-        out_schema = StructType(
-            list(schema.fields) + [StructField("_corrupt", StringType())]
-        )
+    out_schema = policy_schema(input_type, policy)
+    names = input_schema(input_type).fieldNames()
     scalar = not isinstance(input_type, ast.TRecord)
 
     def decode(batches):

@@ -35,6 +35,24 @@ def input_schema(input_type: ast.Type, scalar_name: str = "value") -> StructType
     return StructType([StructField(scalar_name, to_spark(input_type))])
 
 
+def policy_schema(
+    input_type: ast.Type,
+    policy: str,
+    corrupt_col: str = "_corrupt",
+    corrupt_on: tuple[str, ...] = ("warn",),
+) -> StructType:
+    """input_schema under an invalid-record policy — the one setup every
+    reader and lift_json share: an unknown `policy` raises, and a policy in
+    `corrupt_on` (those that keep malformed records) gets a `corrupt_col`
+    string field appended."""
+    if policy not in POLICY_TO_MODE:
+        raise ValueError(f"unknown policy {policy!r} (abort|ignore|warn)")
+    schema = input_schema(input_type)
+    if policy in corrupt_on:
+        schema = StructType(list(schema.fields) + [StructField(corrupt_col, StringType())])
+    return schema
+
+
 def lift_json(
     df: DataFrame,
     json_col: str,
@@ -46,15 +64,12 @@ def lift_json(
     invalid-record policy. DROPMALFORMED is emulated for from_json (Spark
     only honors it in readers) by filtering rows where all parsed fields
     are null but the source isn't."""
-    if policy not in POLICY_TO_MODE:
-        raise ValueError(f"policy must be one of {sorted(POLICY_TO_MODE)}")
-    schema = input_schema(input_type)
     # from_json supports only PERMISSIVE and FAILFAST; `ignore` is emulated
     # by PERMISSIVE + filtering rows whose corrupt column is set (exactly
     # what DROPMALFORMED does in the file readers).
+    schema = policy_schema(input_type, policy, corrupt_col, ("warn", "ignore"))
     opts = {"mode": "FAILFAST" if policy == "abort" else "PERMISSIVE"}
-    if policy in ("warn", "ignore"):
-        schema = StructType(list(schema.fields) + [StructField(corrupt_col, StringType())])
+    if policy != "abort":
         opts["columnNameOfCorruptRecord"] = corrupt_col
     parsed = df.withColumn("__parsed", F.from_json(F.col(json_col), schema, opts))
     fields = [f.name for f in schema.fields]
@@ -70,23 +85,3 @@ def lift_json(
 def lower_json(df: DataFrame, cols: tuple[str, ...], out_col: str = "json") -> DataFrame:
     """Serialize columns to one JSON string column (udlower direction)."""
     return df.withColumn(out_col, F.to_json(F.struct(*[F.col(c) for c in cols])))
-
-
-def read_json_stream(spark, path: str, input_type: ast.Type, policy: str = "abort"):
-    """Streaming file source of JSON frames with the invalid-record policy
-    applied at the reader (native mode support). policy='warn' carries the
-    raw malformed line in a `_corrupt` column — PERMISSIVE without that
-    column in the schema would silently null-fill bad rows,
-    indistinguishable from valid null data."""
-    if policy not in POLICY_TO_MODE:
-        raise ValueError(f"unknown policy {policy!r} (abort|ignore|warn)")
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    schema = input_schema(input_type)
-    reader = spark.readStream
-    if policy == "warn":
-        schema = StructType(
-            list(schema.fields) + [StructField("_corrupt", StringType())]
-        )
-        reader = reader.option("columnNameOfCorruptRecord", "_corrupt")
-    return reader.schema(schema).option("mode", POLICY_TO_MODE[policy]).json(path)

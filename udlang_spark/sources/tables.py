@@ -35,11 +35,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any scale factor the TPC-H
-# generator produces (region/nation are constant-size; supplier/part/customer
-# grow with SF but stay dimension-like vs. lineitem/orders facts).
-BROADCAST_SAFE = {"region", "nation", "supplier"}
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # A parquet file is split at row-group granularity: the driver's testdata
