@@ -19,8 +19,9 @@ and scoring GEMM here calls operators/similarity.round6_cosine (the one
 cosine rule), in-cell top-k is similarity.gemm_topk_pairs, and
 write_ivf_index seeds its centroids with similarity.first_rows_matrix as
 ivf_ann_topk does — so a probe against a persisted index equals the
-in-memory result for the same queries, the equality a pytest asserts. Each sidecar has one writer (_write_sidecar) and one reader
-(_read_sidecar).
+in-memory result for the same queries, the equality a pytest asserts.
+Each sidecar (this _centroids, and IVF-PQ's _codebook) has one writer,
+_write_sidecar, and one reader, _read_sidecar.
 
 The reference has no file storage at all (pipe stdin/stdout only,
 HACKING.md:127-140) — this is engine-extension surface (SURVEY.md §2.1).
