@@ -15,6 +15,14 @@ def _embeddings(spark):
     return load_table(spark, "embeddings", SF_DIR_CORRECTNESS)
 
 
+def _first_vectors(emb, n):
+    """The first n embeddings in vec_id order as a float64 matrix."""
+    import numpy as np
+
+    rows = emb.orderBy("vec_id").limit(n).collect()
+    return np.array([r["embedding"] for r in rows], dtype=np.float64)
+
+
 def test_round6_cosine_zero_norm_row_scores_zero():
     """A zero vector scores exactly 0.0 against everything (itself and
     other zero rows included) — never NaN, which Spark sorts above every
@@ -126,10 +134,9 @@ def test_probe_prunes_partitions(spark, tmp_path):
     assert len(all_cells) == 16
     import numpy as np
 
-    cent_rows = (
-        spark.read.parquet(path + "/_centroids").orderBy("cell").collect()
-    )
-    cent = np.stack([np.asarray(r["vec"]) for r in cent_rows]).astype(np.float64)
+    # the sidecar's row i is cell i: the i-th vector in id order
+    cent = ann_index._read_sidecar(path).centroids
+    assert np.array_equal(cent, _first_vectors(emb, 16))
     qv = np.asarray(one_query.collect()[0]["embedding"], dtype=np.float64)
     qc = (cent @ qv) / (np.linalg.norm(cent, axis=1) * np.linalg.norm(qv))
     np.round(qc, 6, out=qc)
@@ -158,8 +165,7 @@ def test_index_layout_and_rebuild(spark, tmp_path):
     n = emb.count()
     assert members.count() == n
     assert members.select("id").distinct().count() == n
-    cents = spark.read.parquet(path + "/_centroids")
-    assert cents.count() == 8
+    assert len(ann_index._read_sidecar(path).centroids) == 8
 
 
 def test_append_equals_rebuild(spark, tmp_path):
@@ -220,8 +226,9 @@ def test_ivfpq_layout_and_code_parity(spark, tmp_path):
     assert {f.name for f in codes.schema.fields} == {
         "cell", "id", "c0", "c1", "c2", "c3",
     }
-    assert spark.read.parquet(path + "/_centroids").count() == 16
-    assert spark.read.parquet(path + "/_codebook").count() == 16
+    side = ann_index._read_sidecar(path)
+    assert len(side.centroids) == 16
+    assert len(side.codebook) == 16
 
     want = {
         (r["vec_id"], r["c0"], r["c1"], r["c2"], r["c3"])
@@ -311,10 +318,9 @@ def test_ivfpq_probe_prunes_partitions(spark, tmp_path):
 
     import numpy as np
 
-    cent_rows = (
-        spark.read.parquet(path + "/_centroids").orderBy("cell").collect()
-    )
-    cent = np.stack([np.asarray(r["vec"]) for r in cent_rows]).astype(np.float64)
+    # the sidecar's row i is cell i: the i-th vector in id order
+    cent = ann_index._read_sidecar(path).centroids
+    assert np.array_equal(cent, _first_vectors(emb, 16))
     qv = np.asarray(one_query.collect()[0]["embedding"], dtype=np.float64)
     qc = (cent @ qv) / (np.linalg.norm(cent, axis=1) * np.linalg.norm(qv))
     np.round(qc, 6, out=qc)
@@ -332,6 +338,7 @@ def test_double_precision_vectors_round_trip(spark, tmp_path):
     """The centroid sidecar must preserve the source element type: with
     array<double> vectors a float32 sidecar would route append/probe
     against truncated centroids, breaking parity with the in-memory path."""
+    import numpy as np
     from pyspark.sql.types import ArrayType, DoubleType
 
     emb = _embeddings(spark).select(
@@ -339,8 +346,9 @@ def test_double_precision_vectors_round_trip(spark, tmp_path):
     )
     path = str(tmp_path / "ivf_double")
     ann_index.write_ivf_index(emb, "embedding", "vec_id", path, n_cells=16)
-    cents = spark.read.parquet(path + "/_centroids")
-    assert isinstance(cents.schema["vec"].dataType.elementType, DoubleType)
+    side = ann_index._read_sidecar(path)
+    assert isinstance(side.cells["vec"].dataType.elementType, DoubleType)
+    assert np.array_equal(side.centroids, _first_vectors(emb, 16))
 
     queries = emb.where(F.col("vec_id") < 30)
     got = {
@@ -439,26 +447,23 @@ def test_ivfpq_ensure_index_marker_crash_consistency(spark, tmp_path, monkeypatc
     fully returns, so a half-written index can never be probed."""
     import os
 
-    from udlang_spark.queries import llm as llm_q
-    from tests.conftest import SF_DIR_CORRECTNESS
-
     monkeypatch.setenv("TMPDIR", str(tmp_path))
     import tempfile
 
     monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
 
-    path = llm_q.ivfpq_ensure_index(spark, SF_DIR_CORRECTNESS)
+    path = ann_index.ivfpq_ensure_index(spark, SF_DIR_CORRECTNESS)
     marker = os.path.join(path, "_BUILT")
     assert os.path.exists(marker)
     first_mtime = os.path.getmtime(marker)
 
     # completed build: second call must reuse, not rebuild
-    assert llm_q.ivfpq_ensure_index(spark, SF_DIR_CORRECTNESS) == path
+    assert ann_index.ivfpq_ensure_index(spark, SF_DIR_CORRECTNESS) == path
     assert os.path.getmtime(marker) == first_mtime
 
     # crashed build: directory present, marker missing -> full rebuild
     os.remove(marker)
-    assert llm_q.ivfpq_ensure_index(spark, SF_DIR_CORRECTNESS) == path
+    assert ann_index.ivfpq_ensure_index(spark, SF_DIR_CORRECTNESS) == path
     assert os.path.exists(marker)
 
 

@@ -1,14 +1,21 @@
-"""Construction-cost guard: one cold construction of each query of the
-perfbench `first_call` workload (the kernel compile cache, `plan_cache` and
+"""Construction-cost guards.
+
+py4j commands: one cold construction of each query of the perfbench
+`first_call` workload (the kernel compile cache, `plan_cache` and
 `release_caches()` cleared first, the JVM warm) sends at most a bounded
 number of py4j commands. Generated expressions reach the JVM as SQL text;
 a regression to building them from `Column` calls costs a py4j command per
 expression node and shows here as a count several times the bound.
-
 The bounds are twice the counts measured when the expressions became SQL
 text (4 cores, sf0.01). Py4j's memory-release commands (`m\\nd\\n…`, sent
 when Python garbage-collects a JavaObject) are not counted: when they are
-sent depends on the garbage collector, not on the construction."""
+sent depends on the garbage collector, not on the construction.
+
+Spark jobs: with its persisted index already built, one cold construction
+of each IVF-PQ serving query launches only the jobs its query-panel
+collect needs. Index metadata (centroids, codebook, the schema of the
+code relation) is one driver-side file read: reading it through Spark
+costs 9 more jobs per construction, which these bounds catch."""
 
 from __future__ import annotations
 
@@ -78,3 +85,39 @@ def counts(spark):
 @pytest.mark.parametrize("name", list(BOUNDS))
 def test_cold_construction_py4j_commands(counts, name):
     assert counts[name] <= BOUNDS[name], (name, counts[name], BOUNDS[name])
+
+
+# query -> Spark jobs of one cold construction with the index built, as
+# measured (4 cores, sf0.01)
+JOB_BOUNDS = {
+    "e_ivfpq_ann": 2,
+    "e_ivfpq_append": 2,
+    "e_ivfpq_recall": 3,
+    "e_ivfpq_append_recall": 3,
+    "t_retrieval_pipeline": 2,
+}
+
+
+@pytest.fixture(scope="module")
+def jobs(spark):
+    from udlang_spark.queries import QUERIES
+
+    sc = spark.sparkContext
+    out = {}
+    for name in JOB_BOUNDS:
+        QUERIES[name](spark, SF)  # builds the index on a miss
+        _clear_caches()
+        group = f"construct_{name}"
+        sc.setJobGroup(group, name)
+        try:
+            QUERIES[name](spark, SF)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        out[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    _clear_caches()
+    return out
+
+
+@pytest.mark.parametrize("name", list(JOB_BOUNDS))
+def test_cold_construction_spark_jobs(jobs, name):
+    assert jobs[name] <= JOB_BOUNDS[name], (name, jobs[name], JOB_BOUNDS[name])

@@ -1437,7 +1437,7 @@ def test_e_ivfpq_recall_histogram_consistency(spark):
 
     emb = load_table(spark, "embeddings", SF_DIR_CORRECTNESS)
     panel = emb.filter(F.col("vec_id") < llm._ANN_RECALL_PANEL)
-    path = llm.ivfpq_ensure_index(spark, SF_DIR_CORRECTNESS)
+    path = ann_index.ivfpq_ensure_index(spark, SF_DIR_CORRECTNESS)
     exact = [
         (r.vec_id, r.nbr)
         for r in similarity.cosine_topk(
@@ -1722,13 +1722,14 @@ def test_probe_plan_cache_invalidated_by_rebuild(spark):
     at analysis time, so an in-session force_rebuild at the SAME path must
     be a cache MISS (the key now folds in the build marker's mtime_ns) —
     otherwise the cached plan would scan deleted/rewritten files."""
+    from udlang_spark.operators import ann_index
     from udlang_spark.session import plan_cache, release_caches
 
     plan_cache.clear()
     release_caches()
     a = llm.QUERIES["e_ivfpq_ann"](spark, SF_DIR_CORRECTNESS)
     rows_a = sorted(map(tuple, a.collect()))
-    llm.ivfpq_ensure_index(spark, SF_DIR_CORRECTNESS, force_rebuild=True)
+    ann_index.ivfpq_ensure_index(spark, SF_DIR_CORRECTNESS, force_rebuild=True)
     b = llm.QUERIES["e_ivfpq_ann"](spark, SF_DIR_CORRECTNESS)
     assert b is not a, (
         "rebuild at the same path must invalidate the cached probe plan"

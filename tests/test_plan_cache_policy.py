@@ -26,8 +26,7 @@ SRC = pathlib.Path(__file__).resolve().parent.parent / "udlang_spark"
 WHITELIST: dict[str, str] = {
     # persisted-index probe tiers: the index is built once per corpus and
     # probed many times; a hit skips sidecar collects/routing/analysis only
-    "e_ivfpq_ann": "persisted IVF-PQ index probe (serving tier)",
-    "e_ivfpq_append": "persisted append-grown IVF-PQ index probe",
+    "_ivfpq_topk": "persisted IVF-PQ index probe (e_ivfpq_ann, e_ivfpq_append)",
     "_ivfpq_recall_arms": "recall card over a persisted index probe",
     "_exact_panel_top5": "shared exact arm of the three recall cards",
     "d_neardup_index": "persisted near-dup ingest index probe",

@@ -9,6 +9,8 @@ Writes <out>/<query><suffix> with the formatted physical plan, the same
 capture the optimization-round plan claims are checked against. Streaming
 queries drain first (the dumped plan is the drained batch result's plan;
 the streaming micro-batch plans are pinned by tests/test_streaming.py).
+Each query's persisted relations are released after its dump, so a dumped
+plan does not depend on which queries ran before it in the same call.
 An unregistered name is named on stderr; the rest still dump, and the tool
 then exits non-zero.
 """
@@ -33,7 +35,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from udlang_spark.queries import QUERIES
-    from udlang_spark.session import get_spark
+    from udlang_spark.session import get_spark, release_caches
 
     os.makedirs(args.out, exist_ok=True)
     spark = get_spark("udlang_spark_plan_dump")
@@ -51,6 +53,7 @@ def main() -> None:
         path = os.path.join(args.out, f"{name}{args.suffix}")
         with open(path, "w") as f:
             f.write(buf.getvalue())
+        release_caches()
         print(f"wrote {path} ({len(buf.getvalue())} chars)")
     spark.stop()
     if unknown:

@@ -25,7 +25,12 @@ from pyspark.sql import functions as F
 
 from udlang_spark.functions.text import fingerprint, shingles, simhash16, simhash_bits
 from udlang_spark.session import persist_tracked
-from udlang_spark.sources.tables import fan_out
+from udlang_spark.sources.tables import (
+    ensure_artifact,
+    fan_out,
+    load_table,
+    table_fingerprint,
+)
 
 N_HASHES = 8
 BAND_ROWS = 2  # rows per band → B = N_HASHES / BAND_ROWS bands
@@ -998,6 +1003,34 @@ def append_to_neardup_index(
     sh.withColumn("dpfx", _dpfx()).repartition(
         NEARDUP_IDX_PREFIXES, F.col("dpfx")
     ).write.mode("append").partitionBy("dpfx").parquet(path + "/shingles")
+
+
+_NDIDX_FMT = 3  # bump on any layout change (2: dpfx shingles; 3: one file/dir)
+
+
+def _neardup_idx_key(sf_dir: str) -> str:
+    """Build key of the cached near-dup ingest index — the IVF-PQ cache
+    idiom: the documents file fingerprint plus every layout parameter."""
+    fp = table_fingerprint(sf_dir, "documents")
+    return (
+        f"{sf_dir}|{fp}|nh={N_HASHES}|br={BAND_ROWS}"
+        f"|pfx={NEARDUP_IDX_PREFIXES}|fmt={_NDIDX_FMT}"
+    )
+
+
+def neardup_ensure_index(spark, sf_dir: str) -> str:
+    """The d_neardup_index ingest index, built once per (data, layout):
+    history doc_id % 5 == 1 written, then % 5 in (2, 3, 4) appended
+    (% 5 == 0 is the probe batch)."""
+
+    def build(path: str) -> None:
+        docs = load_table(spark, "documents", sf_dir)
+        hist = docs.filter(F.col("doc_id") % 5 == 1)
+        write_neardup_index(hist, "text", "doc_id", path)
+        rest = docs.filter((F.col("doc_id") % 5 != 0) & (F.col("doc_id") % 5 != 1))
+        append_to_neardup_index(rest, "text", "doc_id", path)
+
+    return ensure_artifact("udlang_spark_ndidx", _neardup_idx_key(sf_dir), build)
 
 
 def probe_neardup_index(

@@ -13,8 +13,6 @@ folds — so hash-equality is bit-for-bit, not approximate.
 from __future__ import annotations
 
 import math
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,6 +21,7 @@ from pyspark.sql.window import Window
 from udlang_spark.functions import text as TXT
 from udlang_spark.functions import url as URL
 from udlang_spark.operators import ann_index, dedup, multimodal, similarity, sketches
+from udlang_spark.operators.ann_index import PQ_CB, PQ_M
 from udlang_spark.operators.similarity import (
     MAXSIM_DIMS,
     MAXSIM_QUERIES,
@@ -33,9 +32,6 @@ from udlang_spark.operators.similarity import (
 )
 from udlang_spark.session import persist_tracked, plan_cache
 from udlang_spark.sources.tables import (
-    artifact_built,
-    artifact_path,
-    ensure_artifact,
     fan_out,
     generation,
     load_table,
@@ -382,19 +378,6 @@ WHERE s.doc_id % 5 = 0
 )
 
 
-_NDIDX_FMT = 3  # bump on any layout change (2: dpfx shingles; 3: one file/dir)
-
-
-def _neardup_idx_key(sf_dir: str) -> str:
-    """Build key of the cached near-dup ingest index — the e_ivfpq cache
-    idiom: the documents file fingerprint plus every layout parameter."""
-    fp = table_fingerprint(sf_dir, "documents")
-    return (
-        f"{sf_dir}|{fp}|nh={dedup.N_HASHES}|br={dedup.BAND_ROWS}"
-        f"|pfx={dedup.NEARDUP_IDX_PREFIXES}|fmt={_NDIDX_FMT}"
-    )
-
-
 def d_neardup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup admission against a PERSISTED ingest index — the
     production form of d_incremental_neardup, completing its docstring's
@@ -419,24 +402,10 @@ def d_neardup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch shingling, the pruned bands join, and the exact-jaccard verify
     (persisted relations are re-armed on hit, recomputed from parquet
     after any release_caches())."""
-    key = _neardup_idx_key(sf_dir)
-
-    def build(path: str) -> None:
-        docs = load_table(spark, "documents", sf_dir)
-        dedup.write_neardup_index(
-            docs.filter(F.col("doc_id") % 5 == 1), "text", "doc_id", path
-        )
-        dedup.append_to_neardup_index(
-            docs.filter(
-                (F.col("doc_id") % 5 != 0) & (F.col("doc_id") % 5 != 1)
-            ),
-            "text",
-            "doc_id",
-            path,
-        )
-
-    path = ensure_artifact("udlang_spark_ndidx", key, build)
-    ckey = ("ndidx_probe", key, path, generation(path))
+    # the path is the md5 of the build key, which folds in the corpus
+    # fingerprint: a regenerated corpus is a new path, never a stale plan
+    path = dedup.neardup_ensure_index(spark, sf_dir)
+    ckey = ("ndidx_probe", path, generation(path))
     hit = plan_cache.get(spark, ckey)
     if hit is not None:
         res, pins = hit
@@ -1995,12 +1964,6 @@ FROM ({union})
 ORACLE_E_MMR_RERANK = _mmr_oracle()
 
 
-_PQ_M = 4  # subspaces over the 64-dim embeddings (16 dims each)
-_PQ_CB = tuple(range(16))  # codebook seed rows (16 codewords per subspace)
-_IVFPQ_FMT = 1  # persisted-index format version (bump on layout change)
-_IVFPQ = "udlang_spark_ivfpq"  # index artifact directory prefix
-
-
 def e_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization encode (Jégou et al. 2011): 64 floats → 4
     codeword bytes + reconstruction error — what an IVF-PQ index stores.
@@ -2010,11 +1973,11 @@ def e_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     e_centroid_assign, so the oracle re-derives them exactly)."""
     emb = load_table(spark, "embeddings", sf_dir)
     return similarity.pq_encode(
-        emb, "embedding", "vec_id", n_subspaces=_PQ_M, codebook_ids=_PQ_CB
+        emb, "embedding", "vec_id", n_subspaces=PQ_M, codebook_ids=PQ_CB
     )
 
 
-def _pq_oracle(m: int = _PQ_M, dim: int = 64, n_cb: int = 16) -> str:
+def _pq_oracle(m: int = PQ_M, dim: int = 64, n_cb: int = 16) -> str:
     sub = dim // m
     subs = []
     joins = []
@@ -2066,13 +2029,13 @@ def e_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         _MMR_QUERY_IDS,
         k=10,
-        n_subspaces=_PQ_M,
-        codebook_ids=_PQ_CB,
+        n_subspaces=PQ_M,
+        codebook_ids=PQ_CB,
     )
 
 
 def _pq_adc_oracle(
-    m: int = _PQ_M,
+    m: int = PQ_M,
     dim: int = 64,
     n_cb: int = 16,
     query_ids=_MMR_QUERY_IDS,
@@ -2131,65 +2094,45 @@ def e_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ: the production ANN layout — a PERSISTED index whose cells
     store PQ codes (not vectors), probed with per-query ADC lookup tables.
     Builds the index (operators/ann_index.write_ivfpq_index: one narrow
-    route+encode pass, partitioned by cell, centroid+codebook sidecars),
-    then probes it for query vectors 0..3 with k=10, n_probe=6
-    (probe_ivfpq_index: plan-time partition pruning to the probed cells,
-    broadcast routing + LUT joins, pure-Column ADC scoring). Approximate
-    RELATIVE TO brute force but deterministic in itself; the oracle
-    re-derives coarse routing, PQ codes, and ADC tables exactly. Recall
-    vs the uncompressed IVF path is pytest-measured
-    (tests/test_ann_index.py). The index build is cached per
-    (data, layout) by ivfpq_ensure_index — the steady-state cost of this
-    query is the probe, matching production where an index is built once
-    and probed many times."""
-    emb = load_table(spark, "embeddings", sf_dir)
-    # the emptiness probe costs a Spark job — skip it when the index is
-    # already built (marker present ⇒ the corpus was non-empty)
-    if not ivfpq_index_ready(sf_dir) and len(emb.limit(1).collect()) == 0:
-        # no index can exist over an empty relation — the probe of nothing
-        # is the empty top-k (degenerate-sweep contract: empty in, empty
-        # out, never a raise from a registered query)
+    route+encode pass, partitioned by cell, one centroid+codebook
+    sidecar file), then probes it for query vectors 0..3 with k=10,
+    n_probe=6 (_ivfpq_topk). Approximate RELATIVE TO brute force but
+    deterministic in itself; the oracle re-derives coarse routing, PQ
+    codes, and ADC tables exactly. Recall vs the uncompressed IVF path is
+    pytest-measured (tests/test_ann_index.py). The index build is cached
+    per (data, layout) by ann_index.ivfpq_ensure_index — the steady-state
+    cost of this query is the probe, matching production where an index
+    is built once and probed many times."""
+    return _ivfpq_topk(spark, sf_dir, ann_index.ivfpq_ensure_index(spark, sf_dir))
+
+
+def _ivfpq_topk(spark: SparkSession, sf_dir: str, path: str | None) -> DataFrame:
+    """ADC top-10 of query vectors 0..3 against the persisted IVF-PQ index
+    at `path` (probe_ivfpq_index: plan-time partition pruning to the
+    probed cells, broadcast routing + LUT joins, pure-Column ADC scoring)
+    — the probe e_ivfpq_ann and e_ivfpq_append share. `path` is None for
+    an empty corpus, which has no index: the probe of nothing is the
+    empty top-k (empty in, empty out, never a raise).
+
+    The plan is cached per (session, index path, build generation), the
+    recall-card amortization (r13): the panel toPandas, broadcasts and
+    analysis are per-corpus serving setup, while re-execution pays the
+    pruned code scan, ADC scoring and top-k window in full. The path is
+    the md5 of a build key that folds in the corpus fingerprint, so a
+    regenerated corpus never meets a stale plan."""
+    if path is None:
         return _empty_ivfpq_result(spark)
-    path = ivfpq_ensure_index(spark, sf_dir)
-    # probe plan cached per (session, corpus fingerprint, index path) —
-    # the recall-card amortization applied to the plain probe (r13): the
-    # probe's bounded construction round-trips (centroid/codebook sidecar
-    # collects, panel toPandas, routing/table broadcasts, analysis) are
-    # per-corpus serving-tier setup; re-execution still pays the pruned
-    # code scan, ADC scoring, and the per-query top-k window in full. A
-    # regenerated corpus changes the fingerprint AND the index path, so a
-    # stale plan can never be served.
-    key = (
-        "ivfpq_probe",
-        sf_dir,
-        table_fingerprint(sf_dir, "embeddings"),
-        path,
-        generation(path),
-    )
+    key = ("ivfpq_probe", path, generation(path))
     hit = plan_cache.get(spark, key)
     if hit is not None:
         return hit
+    emb = load_table(spark, "embeddings", sf_dir)
     queries = emb.where(F.col("vec_id").isin(*_MMR_QUERY_IDS))
     res = ann_index.probe_ivfpq_index(
         spark, path, queries, "embedding", "vec_id", k=10, n_probe=6
     )
     plan_cache.put(spark, key, res)
     return res
-
-
-def _ivfpq_key(sf_dir: str, variant: str = "") -> str:
-    """Build key of the cached IVF-PQ index. The key carries the
-    embeddings file fingerprint (size+mtime), so regenerated source data
-    is a cache miss — the index can never silently serve a stale
-    corpus."""
-    v = f"|{variant}" if variant else ""
-    fp = table_fingerprint(sf_dir, "embeddings")
-    return f"{sf_dir}{v}|{fp}|cells=16|m={_PQ_M}|cb={_PQ_CB}|fmt={_IVFPQ_FMT}"
-
-
-def ivfpq_index_ready(sf_dir: str) -> bool:
-    """True when the cached e_ivfpq_ann index for sf_dir is fully built."""
-    return artifact_built(artifact_path(_IVFPQ, _ivfpq_key(sf_dir)))
 
 
 def _empty_ivfpq_result(spark: SparkSession) -> DataFrame:
@@ -2220,7 +2163,8 @@ def e_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     append_to_ivfpq_index the second half — appended rows route against
     the PERSISTED coarse quantizer and encode against the PERSISTED
     codebook (both frozen: re-deriving either on append would silently
-    invalidate every stored code) — and probe the grown index. The grown
+    invalidate every stored code) — and probe the grown index
+    (ann_index.ivfpq_ensure_append_index, then _ivfpq_topk). The grown
     index is bit-identical to a from-scratch build
     (tests/test_ann_index.py::test_ivfpq_append_equals_rebuild; the
     cutoff keeps the seed rows 0..15 in the base build so the frozen
@@ -2231,101 +2175,13 @@ def e_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass plus an append-mode partitioned write into the touched cells;
     existing cell files are never rewritten. The daily-ingest pattern at
     100 TB: append each increment, rebuild only to re-balance."""
-    emb = load_table(spark, "embeddings", sf_dir)
-    path = _ivfpq_append_index(spark, emb, sf_dir)
-    if path is None:
-        return _empty_ivfpq_result(spark)
-    # same per-(session, corpus, index path) probe-plan amortization as
-    # e_ivfpq_ann — construction round-trips only; the scan/score/top-k
-    # DAG re-executes on every run
-    key = (
-        "ivfpq_append_probe",
-        sf_dir,
-        table_fingerprint(sf_dir, "embeddings"),
-        path,
-        generation(path),
+    return _ivfpq_topk(
+        spark, sf_dir, ann_index.ivfpq_ensure_append_index(spark, sf_dir)
     )
-    hit = plan_cache.get(spark, key)
-    if hit is not None:
-        return hit
-    queries = emb.where(F.col("vec_id").isin(*_MMR_QUERY_IDS))
-    res = ann_index.probe_ivfpq_index(
-        spark, path, queries, "embedding", "vec_id", k=10, n_probe=6
-    )
-    plan_cache.put(spark, key, res)
-    return res
-
-
-def _ivfpq_append_index(
-    spark: SparkSession, emb: DataFrame, sf_dir: str
-) -> str | None:
-    """Build (once per corpus fingerprint) the half-build + append-grown
-    IVF-PQ index e_ivfpq_append and e_ivfpq_append_recall probe. Returns
-    None for an empty corpus (no index can exist)."""
-    key = _ivfpq_key(sf_dir, variant="append")
-    if (
-        not artifact_built(artifact_path(_IVFPQ, key))
-        and len(emb.limit(1).collect()) == 0
-    ):
-        return None
-
-    def build(path: str) -> None:
-        max_id = emb.agg(F.max("vec_id")).collect()[0][0]
-        # base half must contain the quantizer/codebook seed rows (ids
-        # 0..15) so the frozen artifacts equal the full build's
-        cutoff = max(max(_PQ_CB) + 1, (int(max_id) + 1) // 2)
-        ann_index.write_ivfpq_index(
-            emb.where(F.col("vec_id") < cutoff),
-            "embedding",
-            "vec_id",
-            path,
-            n_cells=16,
-            n_subspaces=_PQ_M,
-            codebook_ids=_PQ_CB,
-        )
-        rest = emb.where(F.col("vec_id") >= cutoff)
-        if len(rest.limit(1).collect()) > 0:
-            ann_index.append_to_ivfpq_index(rest, "embedding", "vec_id", path)
-
-    return ensure_artifact(_IVFPQ, key, build)
-
-
-def ivfpq_ensure_index(
-    spark: SparkSession, sf_dir: str, force_rebuild: bool = False
-) -> str:
-    """Build the e_ivfpq_ann index ONCE per (data, layout) and reuse: the
-    index is a pure function of the source relation and the build
-    parameters, so the persisted copy is valid for every later probe in
-    the session — rebuilding per invocation conflated build cost with
-    probe cost in the headline bench (r6 verdict #6; bench.py now times
-    this build separately via force_rebuild=True and the headline query
-    measures the probe alone, the production-shaped cost). The key folds
-    in every build parameter plus a format version (bump _IVFPQ_FMT on
-    any layout change); the marker file is written only after
-    write_ivfpq_index fully returns (sidecars last), so a crashed build
-    is rebuilt, never probed."""
-    key = _ivfpq_key(sf_dir)
-    path = artifact_path(_IVFPQ, key)
-    if force_rebuild and os.path.exists(path):
-        shutil.rmtree(path)
-
-    def build(path: str) -> None:
-        emb = load_table(spark, "embeddings", sf_dir)
-        ann_index.write_ivfpq_index(
-            emb,
-            "embedding",
-            "vec_id",
-            path,
-            n_cells=16,
-            n_subspaces=_PQ_M,
-            codebook_ids=_PQ_CB,
-        )
-
-    return ensure_artifact(_IVFPQ, key, build)
 
 
 def _ivfpq_ctes(
-    m: int = _PQ_M,
+    m: int = PQ_M,
     dim: int = 64,
     n_cb: int = 16,
     n_cells: int = 16,
@@ -2404,7 +2260,7 @@ adcscored AS (
 
 
 def _ivfpq_oracle(
-    m: int = _PQ_M,
+    m: int = PQ_M,
     dim: int = 64,
     n_cb: int = 16,
     n_cells: int = 16,
@@ -2471,11 +2327,9 @@ def e_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     is computed ONCE per (session, corpus) and shared with e_ann_recall
     and e_ivfpq_append_recall (_exact_panel_top5) — both histograms and
     all three cards reuse it (r12 VERDICT #1)."""
-    emb = load_table(spark, "embeddings", sf_dir)
-    if not ivfpq_index_ready(sf_dir) and len(emb.limit(1).collect()) == 0:
-        return _empty_recall_hist(spark)
-    path = ivfpq_ensure_index(spark, sf_dir)
-    return _ivfpq_recall_arms(spark, sf_dir, emb, path)
+    return _ivfpq_recall_arms(
+        spark, sf_dir, ann_index.ivfpq_ensure_index(spark, sf_dir)
+    )
 
 
 def _exact_panel_top5(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataFrame:
@@ -2499,24 +2353,22 @@ def _exact_panel_top5(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataF
 
 
 def _ivfpq_recall_arms(
-    spark: SparkSession, sf_dir: str, emb: DataFrame, path: str
+    spark: SparkSession, sf_dir: str, path: str | None
 ) -> DataFrame:
     """The two-arm panel recall eval against a persisted IVF-PQ index at
     `path` — shared by e_ivfpq_recall (full build) and
-    e_ivfpq_append_recall (append-grown build). The probe runs FIRST so
+    e_ivfpq_append_recall (append-grown build); the empty histogram when
+    `path` is None (an empty corpus has no index). The probe runs FIRST so
     an empty panel returns before any persisted relation is registered
     (r12 ADVICE #3), through the public two-arm API (r12 ADVICE #4). The
-    finished card is plan-cached per (session, corpus, index path): the
-    probe's bounded driver round-trips (routing, ADC tables) are
-    per-corpus setup, while re-execution still pays the pruned code scan,
-    ADC scoring, rerank, and both histogram joins."""
-    key = (
-        "ivfpq_recall_card",
-        sf_dir,
-        table_fingerprint(sf_dir, "embeddings"),
-        path,
-        generation(path),
-    )
+    finished card is plan-cached per (session, index path, build
+    generation), as in _ivfpq_topk: the probe's bounded driver
+    round-trips (routing, ADC tables) are per-corpus setup, while
+    re-execution still pays the pruned code scan, ADC scoring, rerank,
+    and both histogram joins."""
+    if path is None:
+        return _empty_recall_hist(spark)
+    key = ("ivfpq_recall_card", path, generation(path))
     hit = plan_cache.get(spark, key)
     if hit is not None:
         res, pins = hit
@@ -2524,6 +2376,7 @@ def _ivfpq_recall_arms(
             persist_tracked(df)  # re-arm shared-relation caching
         return res
 
+    emb = load_table(spark, "embeddings", sf_dir)
     panel = emb.filter(F.col("vec_id") < _ANN_RECALL_PANEL)
     adc_k, rr_k, candidates = ann_index.probe_ivfpq_arms(
         spark,
@@ -2587,11 +2440,9 @@ def e_ivfpq_append_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     promoting the index (the daily-append pattern at 100 TB: append,
     re-run the bounded-panel recall card, promote only on no-regression).
     """
-    emb = load_table(spark, "embeddings", sf_dir)
-    path = _ivfpq_append_index(spark, emb, sf_dir)
-    if path is None:
-        return _empty_recall_hist(spark)
-    return _ivfpq_recall_arms(spark, sf_dir, emb, path)
+    return _ivfpq_recall_arms(
+        spark, sf_dir, ann_index.ivfpq_ensure_append_index(spark, sf_dir)
+    )
 
 
 def _ivfpq_recall_oracle(rerank_r: int = 20) -> str:
@@ -5045,7 +4896,7 @@ def t_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         table_fingerprint(sf_dir, "embeddings"),
         # the dense arm probes the shared IVF-PQ index: an in-session
         # rebuild at the same path must be a cache miss here too
-        generation(artifact_path(_IVFPQ, _ivfpq_key(sf_dir))),
+        generation(ann_index.ivfpq_index_path(sf_dir)),
     )
     hit = plan_cache.get(spark, key)
     if hit is not None:
@@ -5065,8 +4916,10 @@ def t_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("lex_rank"),
     )
 
-    if ivfpq_index_ready(sf_dir) or len(emb.limit(1).collect()) > 0:
-        path = ivfpq_ensure_index(spark, sf_dir)
+    path = ann_index.ivfpq_ensure_index(spark, sf_dir)
+    if path is None:
+        dense_raw = _empty_ivfpq_result(spark)
+    else:
         dense_raw = ann_index.probe_ivfpq_index(
             spark,
             path,
@@ -5076,8 +4929,6 @@ def t_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             k=20,
             n_probe=6,
         )
-    else:
-        dense_raw = _empty_ivfpq_result(spark)
     dense = dense_raw.select("vec_id", F.col("rnk").alias("vec_rank"))
 
     fused = persist_tracked(
