@@ -1490,6 +1490,26 @@ def test_retrieval_pipeline_card(spark):
     assert all(r.maxsim == 0.0 for r in rows if r.best_chunk_idx == -1)
 
 
+def test_retrieval_pipeline_caches_fresh_build_once(spark, tmp_path, monkeypatch):
+    """The first call after a fresh IVF-PQ build caches its plan under the
+    build's generation, not the pre-build -1: the second call is a hit
+    and the session holds one retrieval_pipeline entry."""
+    import tempfile
+
+    from udlang_spark.session import release_caches
+
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    plan_cache.clear()
+    a = llm.QUERIES["t_retrieval_pipeline"](spark, SF_DIR_CORRECTNESS)
+    b = llm.QUERIES["t_retrieval_pipeline"](spark, SF_DIR_CORRECTNESS)
+    assert a is b
+    keys = [k for k in plan_cache._per[spark] if k[0] == "retrieval_pipeline"]
+    assert len(keys) == 1
+    # the cached plan and its pins read the index under tmp_path
+    plan_cache.clear()
+    release_caches()
+
+
 def _maxsim_vocab_model(texts, min_df):
     """Pure-Python MaxSim-with-learned-vocab model: per-doc DISTINCT
     tokens, vocab = doc-frequency >= min_df, OOV tokens dropped BEFORE

@@ -1073,3 +1073,77 @@ def test_stream_shuffle_restores_on_error(spark):
             )
             raise RuntimeError("boom")
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
+_CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_CKPT_PKG = "org.apache.spark.sql.execution.streaming.checkpointing."
+_FS_MANAGER = _CKPT_PKG + "FileSystemBasedCheckpointFileManager"
+_FC_MANAGER = _CKPT_PKG + "FileContextBasedCheckpointFileManager"
+
+
+def test_get_spark_checkpoint_manager_default_and_override(spark):
+    """Every get_spark session writes stream checkpoints through Hadoop
+    FileSystem; a caller's extra_conf still overrides it."""
+    from udlang_spark.session import get_spark
+
+    assert spark.conf.get(_CKPT_MANAGER_KEY) == _FS_MANAGER
+    try:
+        other = get_spark("udlang_spark_tests", **{_CKPT_MANAGER_KEY: _FC_MANAGER})
+        assert other.conf.get(_CKPT_MANAGER_KEY) == _FC_MANAGER
+    finally:
+        spark.conf.set(_CKPT_MANAGER_KEY, _FS_MANAGER)
+
+
+def test_filecontext_checkpoint_restarts_under_filesystem_manager(spark, tmp_path):
+    """A stateful dropDuplicates stream checkpointed under the
+    FileContext manager (Spark's default, and this engine's before it
+    moved to FileSystem) restarts under the engine's manager: the new
+    batches commit on the old log, the parquet sink stays exactly-once,
+    and no duplicate escapes the restored state."""
+    import json
+
+    rep = tmp_path / "rep"
+    rep.mkdir()
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+
+    def write_file(name: str, ids):
+        with open(rep / name, "w") as fh:
+            for i in ids:
+                fh.write(json.dumps({"doc_id": i}) + "\n")
+
+    def drain():
+        src = (
+            spark.readStream.schema("doc_id long")
+            .option("maxFilesPerTrigger", 1)
+            .json(str(rep))
+        )
+        runner._drain(
+            src.dropDuplicates(["doc_id"])
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt),
+            spark,
+            120,
+            "dedup drain",
+        )
+
+    def commits():
+        log = tmp_path / "ckpt" / "commits"
+        return sorted(int(p.name) for p in log.iterdir() if p.name.isdigit())
+
+    write_file("a.json", list(range(50)) + list(range(0, 50, 2)))
+    spark.conf.set(_CKPT_MANAGER_KEY, _FC_MANAGER)
+    try:
+        drain()
+    finally:
+        spark.conf.set(_CKPT_MANAGER_KEY, _FS_MANAGER)
+    assert commits() == [0]
+
+    write_file("b.json", list(range(25, 75)))  # 25..49 are dup history
+    drain()
+    assert commits() == [0, 1]
+    drain()  # restart, no new data -> no new batch, no new rows
+    assert commits() == [0, 1]
+    got = sorted(r["doc_id"] for r in spark.read.parquet(out).collect())
+    assert got == list(range(75))

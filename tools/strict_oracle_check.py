@@ -117,18 +117,13 @@ def main() -> int:
     args = ap.parse_args()
 
     import duckdb
-    from pyspark.sql import SparkSession
 
     from udlang_spark.queries import ORACLE, QUERIES
+    from udlang_spark.session import get_spark, release_caches
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "8g")
-        .appName("strict-oracle-check")
-        .getOrCreate()
-    )
+    # the engine's own session (AQE, Arrow, checkpoint manager), so the
+    # check runs the queries as every other caller does
+    spark = get_spark("strict-oracle-check")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
@@ -171,8 +166,6 @@ def main() -> int:
             print(f"  {name}: ERROR {e}", flush=True)
             continue
         finally:
-            from udlang_spark.session import release_caches
-
             release_caches()  # queries may persist intermediates
         dt = time.time() - t0
         risky = spark_risky + [

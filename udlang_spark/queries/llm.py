@@ -4889,6 +4889,9 @@ def t_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-order IEEE sums of round-6 terms written identically in both
     engines; all orderings tie-break on id/chunk_idx.
     """
+    # ensure first: the key's build generation must be the one the dense
+    # arm probes, so the first call after a fresh build is cached under it
+    path = ann_index.ivfpq_ensure_index(spark, sf_dir)
     key = (
         "retrieval_pipeline",
         sf_dir,
@@ -4916,7 +4919,6 @@ def t_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("lex_rank"),
     )
 
-    path = ann_index.ivfpq_ensure_index(spark, sf_dir)
     if path is None:
         dense_raw = _empty_ivfpq_result(spark)
     else:

@@ -49,13 +49,28 @@ _SHUFFLE_KEY = "spark.sql.shuffle.partitions"
 
 
 def stream_shuffle_partitions() -> int:
-    """Default 8: the in-process A/B at sf0.1 (min-of-3 per arm, warm JVM)
-    measured the stateful entries at 32/8/4 = s_url_dedup_stream
-    1.90/1.28/1.25 s and s_interval_stream 1.79/1.45/1.53 s — the win is
-    going BELOW core count at all (fewer state-store instances +
-    per-batch commit files), not squeezing the last partition; stateless
-    foreachBatch entries (s_cms_merge, s_kmv_stream) are flat across all
-    three, so the low default costs them nothing."""
+    """Default 8. Under the FileSystem checkpoint manager (session.py),
+    an in-process A/B at sf0.1 on 4 cores (warm JVM, arms interleaved,
+    9 runs per arm; min / median seconds) found no value that wins on
+    every stateful entry:
+
+    | query              | 8           | 4           | 1            |
+    |--------------------|-------------|-------------|--------------|
+    | s_stream_join      | 4.91 / 5.34 | 4.48 / 6.05 | 9.19 / 10.94 |
+    | s_interval_stream  | 1.70 / 1.98 | 1.67 / 2.03 | 1.89 / 2.63  |
+    | s_cms_stream       | 1.44 / 1.93 | 1.29 / 1.57 | 1.49 / 1.88  |
+    | s_neardup_stream   | 1.12 / 1.42 | 0.94 / 1.28 | 0.95 / 1.25  |
+    | s_stateful_totals  | 1.10 / 1.22 | 0.78 / 1.00 | 0.82 / 0.92  |
+    | s_session_stream   | 0.94 / 1.00 | 0.79 / 0.98 | 0.88 / 1.20  |
+    | s_windowed_stream  | 0.60 / 0.78 | 0.53 / 0.67 | 0.61 / 0.75  |
+    | s_enrich_stream    | 0.69 / 0.75 | 0.55 / 0.71 | 0.57 / 0.68  |
+    | s_url_dedup_stream | 0.60 / 0.69 | 0.51 / 0.67 | 0.53 / 0.62  |
+    | s_dedup_stream     | 0.57 / 0.72 | 0.45 / 0.59 | 0.51 / 0.58  |
+
+    1 has the lowest median on five entries but doubles the stream-stream
+    join, whose state is the largest. Between 8 and 4, 8 has the lower
+    join and interval medians and 4 the lower medians on the other
+    eight."""
     return int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
 
 
