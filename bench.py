@@ -147,10 +147,10 @@ HEADLINE = [
 ]
 
 # Every plan-cached query (the serving-surface whitelist pinned by
-# tests/test_llm_oracle.py::test_plan_cache_whitelist): the bench reports a
-# per-query {construct_sec, exec_sec} split for these (r13 VERDICT #1) so
-# the amortized construction cost is visible in the artifact, the
-# ivfpq_build_sec precedent generalized. Headline rule: the headline entry
+# tests/test_plan_cache_policy.py::test_plan_cache_whitelist): the bench
+# reports a per-query {construct_sec, exec_sec} split for these (r13
+# VERDICT #1) so the amortized construction cost is visible in the
+# artifact, the ivfpq_build_sec precedent generalized. Headline rule: the headline entry
 # prices steady-state EXECUTION (the serving pattern these caches model);
 # construction is priced here, separately, on every run. The two r13
 # entries whose construction was per-run DATA work (q67_bloom_prune,

@@ -456,6 +456,30 @@ def test_operator_edge_semantics(spark):
     assert {r["component"] for r in comp.collect()} == {0}
 
 
+def test_connected_components_failure_leaves_no_cache(spark):
+    """A job that fails inside the propagation loop must not leave the
+    raw edges/labels persists in the CacheManager, where release_caches()
+    cannot reach them."""
+    from pyspark.sql import functions as F
+
+    from udlang_spark.operators.dedup import connected_components
+    from udlang_spark.session import release_caches
+
+    release_caches()
+    spark.catalog.clearCache()  # leftovers of earlier tests are not ours
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    assert cm.isEmpty()
+    pairs = spark.range(10).select(
+        F.col("id").alias("doc_a"),
+        F.when(F.col("id") == 7, F.raise_error(F.lit("bad pair")))
+        .otherwise(F.col("id") + 1)
+        .alias("doc_b"),
+    )
+    with pytest.raises(Exception, match="bad pair"):
+        connected_components(pairs)
+    assert cm.isEmpty()
+
+
 def test_dedup_keeper_invariants(spark):
     """Exactly one keeper per component, and no cluster-mate strictly
     beats its keeper on (n_stop, n_words, -doc)."""

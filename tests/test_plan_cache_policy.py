@@ -4,8 +4,10 @@ genuinely holds those plans (probe tiers against persisted indexes,
 admission gates, serving reranks), and a cache hit must amortize
 construction round-trips and Catalyst analysis ONLY, never per-run data
 jobs of a batch query. That line was prose in OPTIMIZATION_r13.md; this
-test encodes it: any NEW `plan_cache.put` call site fails until it is
-added here WITH a production-recurrence argument.
+test encodes it: any NEW `plan_cache.memo` call site fails until it is
+added here WITH a production-recurrence argument, and no module but
+session.py reaches the cache through `plan_cache.get`/`plan_cache.put`,
+so a hand-written entry cannot get past the whitelist.
 
 The r13 entries for q67_bloom_prune (dim-count sizing job + bloom-build
 aggregation/collect) and t_wordpiece (corpus vocab-derivation job +
@@ -40,11 +42,14 @@ WHITELIST: dict[str, str] = {
 }
 
 
-def _put_sites() -> dict[str, list[str]]:
+REPO = SRC.parent
+
+
+def _call_sites(files, attrs: tuple[str, ...]) -> dict[str, list[str]]:
     """{enclosing function name: [file:line, ...]} for every
-    plan_cache.put call under udlang_spark/."""
+    `plan_cache.<attr>(...)` call with attr in `attrs` in `files`."""
     sites: dict[str, list[str]] = {}
-    for py in sorted(SRC.rglob("*.py")):
+    for py in sorted(files):
         tree = ast.parse(py.read_text(), filename=str(py))
         # map every node to its enclosing function
         for func in [
@@ -56,30 +61,50 @@ def _put_sites() -> dict[str, list[str]]:
                 if (
                     isinstance(node, ast.Call)
                     and isinstance(node.func, ast.Attribute)
-                    and node.func.attr == "put"
+                    and node.func.attr in attrs
                     and isinstance(node.func.value, ast.Name)
                     and node.func.value.id == "plan_cache"
                 ):
                     sites.setdefault(func.name, []).append(
-                        f"{py.relative_to(SRC.parent)}:{node.lineno}"
+                        f"{py.relative_to(REPO)}:{node.lineno}"
                     )
     return sites
 
 
+def _memo_sites() -> dict[str, list[str]]:
+    return _call_sites(SRC.rglob("*.py"), ("memo",))
+
+
 def test_plan_cache_whitelist():
-    sites = _put_sites()
-    assert sites, "source scan found no plan_cache.put sites — scan broken?"
+    sites = _memo_sites()
+    assert sites, "source scan found no plan_cache.memo sites — scan broken?"
     rogue = {f: locs for f, locs in sites.items() if f not in WHITELIST}
     assert not rogue, (
-        "plan_cache.put outside the declared serving-surface whitelist: "
+        "plan_cache.memo outside the declared serving-surface whitelist: "
         f"{rogue}. Caching a batch query's plan moves its per-run "
         "construction out of every benched run — add the function here "
         "ONLY with a production-recurrence argument (see module docstring)."
     )
     stale = {f for f in WHITELIST if f not in sites}
     assert not stale, (
-        f"whitelist entries with no put site (stale — remove them): {stale}"
+        f"whitelist entries with no memo site (stale — remove them): {stale}"
     )
+    multi = {f: locs for f, locs in sites.items() if len(locs) != 1}
+    assert not multi, f"one memo call per cached function, got {multi}"
+
+
+def test_cache_reached_only_through_memo():
+    """A direct get/put pair would cache a plan the whitelist never sees
+    and skip memo's record of what the build persisted."""
+    files = [
+        py
+        for d in ("udlang_spark", "tools", "perfbench", "tests")
+        for py in (REPO / d).rglob("*.py")
+        if py != SRC / "session.py"
+    ] + list(REPO.glob("*.py"))
+    assert SRC / "queries" / "llm.py" in files
+    direct = _call_sites(files, ("get", "put"))
+    assert not direct, f"plan_cache.get/put outside session.py: {direct}"
 
 
 def test_evicted_entries_stay_evicted():
@@ -88,7 +113,7 @@ def test_evicted_entries_stay_evicted():
     in r14. A reintroduction under any function name that shadows these
     queries must fail the whitelist above; this pins the two names
     explicitly so the intent survives refactors."""
-    sites = _put_sites()
+    sites = _memo_sites()
     for banned in ("q67_bloom_prune", "t_wordpiece", "wordpiece_stats"):
         assert banned not in sites, (
             f"{banned} plan-caches again ({sites[banned]}): its construction "

@@ -524,24 +524,21 @@ def probe_ivfpq_arms(
     (e_ivfpq_recall / e_ivfpq_append_recall) consume — the index is
     routed/scanned/ADC-scored ONCE (a second probe measured +2.0 s of
     pure duplicate work at sf0.1) and both arms derive from the same
-    persisted candidate relation. Returns (adc_topk, reranked_topk,
-    candidates): adc_topk is (query_id, vec_id, adc_dist, rnk ≤ k),
-    reranked_topk is (query_id, vec_id, cos_sim, rnk ≤ k), and candidates
-    is the persisted ADC top-`rerank_r` relation both arms derive from —
-    a caller that holds the arms across a release_caches() cycle
-    re-persists it to re-arm the shared scan. On an empty query panel
-    returns (None, None, None) — the caller owns its typed-empty
-    contract."""
+    persisted candidate relation (the ADC top-`rerank_r`). Returns
+    (adc_topk, reranked_topk): adc_topk is (query_id, vec_id, adc_dist,
+    rnk ≤ k), reranked_topk is (query_id, vec_id, cos_sim, rnk ≤ k). On an
+    empty query panel returns (None, None) — the caller owns its
+    typed-empty contract."""
     adc_top, qpd, id_dtype = _adc_probe(
         spark, path, queries, vec_col, id_col, rerank_r, n_probe
     )
     if qpd is None:
-        return None, None, None
+        return None, None
     adc_top = persist_tracked(adc_top)
     rr = _adc_rescore(
         spark, adc_top, qpd, rerank_src, vec_col, id_col, k, id_dtype
     )
-    return adc_top.filter(F.col("rnk") <= k), rr, adc_top
+    return adc_top.filter(F.col("rnk") <= k), rr
 
 
 def _adc_probe(

@@ -540,53 +540,57 @@ def connected_components(
     edges = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct().persist()
-    labels = (
+    seed = labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
         .persist()
     )
-    for _ in range(max_iter):
-        nbr_min = (
-            edges.join(labels, edges["dst"] == labels["node"])
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_label = F.least(
-            labels["label"], F.coalesce("nbr_label", labels["label"])
-        )
-        # carry the moved flag through the checkpoint: the convergence
-        # probe is then one tiny agg over already-materialized data
-        # instead of a labels⋈labels join-and-count job per round
-        # (2 jobs/round instead of 3 — the loop cost is fixed job
-        # overhead, not data volume, on shallow near-dup clusters)
-        new_labels = (
-            labels.join(nbr_min, labels["node"] == nbr_min["src"], "left")
-            .select(
-                labels["node"],
-                new_label.alias("label"),
-                (new_label != labels["label"]).cast("long").alias("moved"),
+    # a job that fails inside the loop (a cancel, a failing row in `pairs`)
+    # must not leave either raw persist in the CacheManager:
+    # release_caches() cannot reach them
+    try:
+        for _ in range(max_iter):
+            nbr_min = (
+                edges.join(labels, edges["dst"] == labels["node"])
+                .groupBy("src")
+                .agg(F.min("label").alias("nbr_label"))
             )
-            .localCheckpoint(eager=True)  # truncate lineage each round
-        )
-        # sum over zero rows is NULL: an empty pair relation must read as
-        # converged (0 moved), not loop to the max_iter refusal
-        changed = new_labels.agg(F.sum("moved")).collect()[0][0] or 0
-        labels.unpersist()
-        labels = new_labels.drop("moved")
-        if changed == 0:
-            break
-    else:
-        # exhausting max_iter with labels still moving means components
-        # with diameter > max_iter would be SILENTLY split (duplicates
-        # retained downstream) — refuse instead
-        labels.unpersist()
+            new_label = F.least(
+                labels["label"], F.coalesce("nbr_label", labels["label"])
+            )
+            # carry the moved flag through the checkpoint: the convergence
+            # probe is then one tiny agg over already-materialized data
+            # instead of a labels⋈labels join-and-count job per round
+            # (2 jobs/round instead of 3 — the loop cost is fixed job
+            # overhead, not data volume, on shallow near-dup clusters)
+            new_labels = (
+                labels.join(nbr_min, labels["node"] == nbr_min["src"], "left")
+                .select(
+                    labels["node"],
+                    new_label.alias("label"),
+                    (new_label != labels["label"]).cast("long").alias("moved"),
+                )
+                .localCheckpoint(eager=True)  # truncate lineage each round
+            )
+            # sum over zero rows is NULL: an empty pair relation must read as
+            # converged (0 moved), not loop to the max_iter refusal
+            changed = new_labels.agg(F.sum("moved")).collect()[0][0] or 0
+            labels.unpersist()
+            labels = new_labels.drop("moved")
+            if changed == 0:
+                break
+        else:
+            # exhausting max_iter with labels still moving means components
+            # with diameter > max_iter would be SILENTLY split (duplicates
+            # retained downstream) — refuse instead
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} iterations "
+                "(a component's diameter exceeds max_iter); raise max_iter"
+            )
+    finally:
+        seed.unpersist()
         edges.unpersist()
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} iterations "
-            "(a component's diameter exceeds max_iter); raise max_iter"
-        )
-    edges.unpersist()
     return labels.select(F.col("node"), F.col("label").alias("component"))
 
 
@@ -857,7 +861,6 @@ def incremental_neardup(
     text_col: str,
     id_col: str,
     threshold: float = 0.8,
-    pins: list | None = None,
 ) -> DataFrame:
     """Ingest-time NEAR-dup admission: decide, per new-batch document,
     whether the historical corpus already contains a near-duplicate
@@ -881,15 +884,9 @@ def incremental_neardup(
 
     Returns one row per batch doc WITH shingles (docs under 3 words carry
     no near-dup signal and are admitted trivially upstream):
-    (doc_id, n_hist_matches, max_jaccard — NULL when none, admitted).
-
-    `pins`, when supplied, receives the persisted relations the returned
-    plan depends on so a plan-caching caller can re-arm them on a cache
-    hit (the probe_neardup_index idiom)."""
+    (doc_id, n_hist_matches, max_jaccard — NULL when none, admitted)."""
     sh_h = persist_tracked(shingle_sets(history, text_col, id_col))
     sh_b = persist_tracked(shingle_sets(batch, text_col, id_col))
-    if pins is not None:
-        pins.extend([sh_h, sh_b])
     bands_h = band_keys(_signatures_from_shingles(sh_h)).select(
         F.col("doc").alias("doc_h"), "bkey"
     )
@@ -1041,7 +1038,6 @@ def probe_neardup_index(
     id_col: str,
     threshold: float = 0.8,
     max_probe_candidates: int = 10_000,
-    pins: list | None = None,
 ) -> DataFrame:
     """incremental_neardup's admission decision against a PERSISTED index:
     same candidate generation (batch bands ⋈ history bands on bkey), same
@@ -1054,20 +1050,13 @@ def probe_neardup_index(
     (doc, dpfx) above it — so verify I/O is O(candidates), not
     O(history). Value-identical to incremental_neardup
     over (indexed corpus, batch) for identical parameters
-    (tests/test_llm_oracle.py::test_neardup_index_probe_matches_inplan).
-
-    `pins`, when supplied, receives the persisted relations the returned
-    plan depends on (batch shingles, batch bands, candidates) so a caller
-    that plan-caches the result can re-arm their persistence on a cache
-    hit — the recall-card idiom (_ivfpq_recall_arms)."""
+    (tests/test_llm_oracle.py::test_neardup_index_probe_matches_inplan)."""
     sh_b = persist_tracked(shingle_sets(batch, text_col, id_col))
     bands_b = persist_tracked(
         band_keys(_signatures_from_shingles(sh_b))
         .select(F.col("doc").alias("doc_b"), "bkey")
         .withColumn("bpfx", _bpfx())
     )
-    if pins is not None:
-        pins.extend([sh_b, bands_b])
     # bounded collect: ≤ NEARDUP_IDX_PREFIXES ints, a property of the
     # layout — this is what turns the runtime filter into plan-time
     # directory pruning on the bands scan
@@ -1128,8 +1117,6 @@ def probe_neardup_index(
     # stays bounded by the cap having told us the set is large. Probe I/O
     # on shingles is O(candidate partitions) either way.
     cand = persist_tracked(cand_src.distinct())
-    if pins is not None:
-        pins.append(cand)
     hist = (
         cand.select(F.col("doc_h").alias("doc"))
         .distinct()

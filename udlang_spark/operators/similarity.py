@@ -1156,7 +1156,6 @@ def hamming_topk(
     query_ids: tuple[int, ...],
     k: int = 10,
     dim: int = 64,
-    pins: list | None = None,
 ) -> DataFrame:
     """Top-k nearest by Hamming distance over sign signatures. Scale
     shape: the signature relation is |corpus| × 8 bytes; the |Q| query
@@ -1166,11 +1165,7 @@ def hamming_topk(
     the banded form (operators/dedup.simhash_banded_near_pairs — same
     trick, bucket join instead of scan). Ties break by ascending id.
 
-    Returns (query_id, vec_id, hamming, rnk).
-
-    `pins`, when supplied, receives the persisted relations the returned
-    plan depends on so a plan-caching caller can re-arm them on a cache
-    hit (the probe_neardup_index idiom)."""
+    Returns (query_id, vec_id, hamming, rnk)."""
     from udlang_spark.session import persist_tracked
 
     n_words = (dim + _SIGN_WORD_BITS - 1) // _SIGN_WORD_BITS
@@ -1180,8 +1175,6 @@ def hamming_topk(
     # At scale the signature column is a STORED artifact anyway — that is
     # the point of binarization — and this cache models exactly that.
     sigs = persist_tracked(sign_signatures(emb, vec_col, id_col, dim))
-    if pins is not None:
-        pins.append(sigs)
     q = F.broadcast(
         sigs.where(F.col("vec_id").isin(*query_ids)).select(
             F.col("vec_id").alias("query_id"), F.col("sig").alias("qsig")

@@ -317,24 +317,18 @@ def d_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache hits; every run re-executes shingling, banding, the candidate
     join, and the exact-jaccard verify from parquet."""
     key = ("inc_neardup", sf_dir, table_fingerprint(sf_dir, "documents"))
-    hit = plan_cache.get(spark, key)
-    if hit is not None:
-        res, pins = hit
-        for df in pins:
-            persist_tracked(df)  # re-arm shared-relation caching
-        return res
-    docs = load_table(spark, "documents", sf_dir)
-    pins: list = []
-    res = dedup.incremental_neardup(
-        docs.filter(F.col("doc_id") % 5 != 0),
-        docs.filter(F.col("doc_id") % 5 == 0),
-        "text",
-        "doc_id",
-        threshold=0.8,
-        pins=pins,
-    )
-    plan_cache.put(spark, key, (res, pins))
-    return res
+
+    def build() -> DataFrame:
+        docs = load_table(spark, "documents", sf_dir)
+        return dedup.incremental_neardup(
+            docs.filter(F.col("doc_id") % 5 != 0),
+            docs.filter(F.col("doc_id") % 5 == 0),
+            "text",
+            "doc_id",
+            threshold=0.8,
+        )
+
+    return plan_cache.memo(spark, key, build)
 
 
 ORACLE_INCREMENTAL_NEARDUP = (
@@ -405,26 +399,19 @@ def d_neardup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the path is the md5 of the build key, which folds in the corpus
     # fingerprint: a regenerated corpus is a new path, never a stale plan
     path = dedup.neardup_ensure_index(spark, sf_dir)
-    ckey = ("ndidx_probe", path, generation(path))
-    hit = plan_cache.get(spark, ckey)
-    if hit is not None:
-        res, pins = hit
-        for df in pins:
-            persist_tracked(df)  # re-arm shared-relation caching
-        return res
-    pins: list = []
-    docs = load_table(spark, "documents", sf_dir)
-    res = dedup.probe_neardup_index(
-        spark,
-        path,
-        docs.filter(F.col("doc_id") % 5 == 0),
-        "text",
-        "doc_id",
-        threshold=0.8,
-        pins=pins,
-    )
-    plan_cache.put(spark, ckey, (res, pins))
-    return res
+
+    def build() -> DataFrame:
+        docs = load_table(spark, "documents", sf_dir)
+        return dedup.probe_neardup_index(
+            spark,
+            path,
+            docs.filter(F.col("doc_id") % 5 == 0),
+            "text",
+            "doc_id",
+            threshold=0.8,
+        )
+
+    return plan_cache.memo(spark, ("ndidx_probe", path, generation(path)), build)
 
 
 def d_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2122,17 +2109,15 @@ def _ivfpq_topk(spark: SparkSession, sf_dir: str, path: str | None) -> DataFrame
     regenerated corpus never meets a stale plan."""
     if path is None:
         return _empty_ivfpq_result(spark)
-    key = ("ivfpq_probe", path, generation(path))
-    hit = plan_cache.get(spark, key)
-    if hit is not None:
-        return hit
-    emb = load_table(spark, "embeddings", sf_dir)
-    queries = emb.where(F.col("vec_id").isin(*_MMR_QUERY_IDS))
-    res = ann_index.probe_ivfpq_index(
-        spark, path, queries, "embedding", "vec_id", k=10, n_probe=6
-    )
-    plan_cache.put(spark, key, res)
-    return res
+
+    def build() -> DataFrame:
+        emb = load_table(spark, "embeddings", sf_dir)
+        queries = emb.where(F.col("vec_id").isin(*_MMR_QUERY_IDS))
+        return ann_index.probe_ivfpq_index(
+            spark, path, queries, "embedding", "vec_id", k=10, n_probe=6
+        )
+
+    return plan_cache.memo(spark, ("ivfpq_probe", path, generation(path)), build)
 
 
 def _empty_ivfpq_result(spark: SparkSession) -> DataFrame:
@@ -2342,14 +2327,16 @@ def _exact_panel_top5(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataF
     never leaves the shared arm uncached while two histograms consume it
     (r12 VERDICT #1: the pair paid the exact arm twice)."""
     key = ("ann_panel_exact5", sf_dir, table_fingerprint(sf_dir, "embeddings"))
-    hit = plan_cache.get(spark, key)
-    if hit is None:
+
+    def build() -> DataFrame:
         panel = emb.filter(F.col("vec_id") < _ANN_RECALL_PANEL)
-        hit = similarity.cosine_topk(
-            panel, "embedding", "vec_id", k=5, candidates=emb
-        ).select("vec_id", "nbr")
-        plan_cache.put(spark, key, hit)
-    return persist_tracked(hit)
+        return persist_tracked(
+            similarity.cosine_topk(
+                panel, "embedding", "vec_id", k=5, candidates=emb
+            ).select("vec_id", "nbr")
+        )
+
+    return plan_cache.memo(spark, key, build)
 
 
 def _ivfpq_recall_arms(
@@ -2362,69 +2349,67 @@ def _ivfpq_recall_arms(
     an empty panel returns before any persisted relation is registered
     (r12 ADVICE #3), through the public two-arm API (r12 ADVICE #4). The
     finished card is plan-cached per (session, index path, build
-    generation), as in _ivfpq_topk: the probe's bounded driver
-    round-trips (routing, ADC tables) are per-corpus setup, while
-    re-execution still pays the pruned code scan, ADC scoring, rerank,
-    and both histogram joins."""
+    generation), as in _ivfpq_topk, the empty-panel histogram included:
+    the probe's bounded driver round-trips (routing, ADC tables) are
+    per-corpus setup, while re-execution still pays the pruned code
+    scan, ADC scoring, rerank, and both histogram joins."""
     if path is None:
         return _empty_recall_hist(spark)
     key = ("ivfpq_recall_card", path, generation(path))
-    hit = plan_cache.get(spark, key)
-    if hit is not None:
-        res, pins = hit
-        for df in pins:
-            persist_tracked(df)  # re-arm shared-relation caching
-        return res
 
-    emb = load_table(spark, "embeddings", sf_dir)
-    panel = emb.filter(F.col("vec_id") < _ANN_RECALL_PANEL)
-    adc_k, rr_k, candidates = ann_index.probe_ivfpq_arms(
-        spark,
-        path,
-        panel,
-        "embedding",
-        "vec_id",
-        k=5,
-        rerank_src=emb,
-        rerank_r=20,
-        n_probe=6,
-    )
-    if adc_k is None:
-        return _empty_recall_hist(spark)
-    exact = _exact_panel_top5(spark, sf_dir, emb)
-    adc = adc_k.select(
-        F.col("query_id").alias("vec_id"), F.col("vec_id").alias("nbr")
-    )
-    rr = rr_k.select(
-        F.col("query_id").alias("vec_id"), F.col("vec_id").alias("nbr")
-    )
+    def build() -> DataFrame:
+        emb = load_table(spark, "embeddings", sf_dir)
+        panel = emb.filter(F.col("vec_id") < _ANN_RECALL_PANEL)
+        adc_k, rr_k = ann_index.probe_ivfpq_arms(
+            spark,
+            path,
+            panel,
+            "embedding",
+            "vec_id",
+            k=5,
+            rerank_src=emb,
+            rerank_r=20,
+            n_probe=6,
+        )
+        if adc_k is None:
+            return _empty_recall_hist(spark)
+        exact = _exact_panel_top5(spark, sf_dir, emb)
+        adc = adc_k.select(
+            F.col("query_id").alias("vec_id"), F.col("vec_id").alias("nbr")
+        )
+        rr = rr_k.select(
+            F.col("query_id").alias("vec_id"), F.col("vec_id").alias("nbr")
+        )
 
-    def hist(approx: DataFrame, arm: str) -> DataFrame:
-        per = (
-            exact.join(approx.withColumn("hit", F.lit(1)), ["vec_id", "nbr"], "left")
-            .groupBy("vec_id")
-            .agg(
-                F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hit"),
-                F.count(F.lit(1)).alias("n_exact"),
+        def hist(approx: DataFrame, arm: str) -> DataFrame:
+            per = (
+                exact.join(
+                    approx.withColumn("hit", F.lit(1)), ["vec_id", "nbr"], "left"
+                )
+                .groupBy("vec_id")
+                .agg(
+                    F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hit"),
+                    F.count(F.lit(1)).alias("n_exact"),
+                )
             )
-        )
-        recall = F.round(
-            F.col("n_hit") / F.least(F.lit(5), F.col("n_exact")).cast("double"),
-            2,
-        )
+            recall = F.round(
+                F.col("n_hit")
+                / F.least(F.lit(5), F.col("n_exact")).cast("double"),
+                2,
+            )
+            return (
+                per.groupBy(recall.alias("recall_at_5"))
+                .agg(F.count(F.lit(1)).alias("n_queries"))
+                .select(F.lit(arm).alias("arm"), "recall_at_5", "n_queries")
+            )
+
         return (
-            per.groupBy(recall.alias("recall_at_5"))
-            .agg(F.count(F.lit(1)).alias("n_queries"))
-            .select(F.lit(arm).alias("arm"), "recall_at_5", "n_queries")
+            hist(adc, "adc")
+            .unionAll(hist(rr, "rerank"))
+            .orderBy("arm", "recall_at_5")
         )
 
-    res = (
-        hist(adc, "adc")
-        .unionAll(hist(rr, "rerank"))
-        .orderBy("arm", "recall_at_5")
-    )
-    plan_cache.put(spark, key, (res, [exact, candidates]))
-    return res
+    return plan_cache.memo(spark, key, build)
 
 
 def e_ivfpq_append_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2538,19 +2523,17 @@ def e_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every run re-executes the signature build, the broadcast join,
     xor+bit_count scoring, and the top-k window from parquet."""
     key = ("hamming", sf_dir, table_fingerprint(sf_dir, "embeddings"))
-    hit = plan_cache.get(spark, key)
-    if hit is not None:
-        res, pins = hit
-        for df in pins:
-            persist_tracked(df)  # re-arm shared-relation caching
-        return res
-    emb = load_table(spark, "embeddings", sf_dir)
-    pins: list = []
-    res = similarity.hamming_topk(
-        emb, "embedding", "vec_id", _MMR_QUERY_IDS, k=10, pins=pins
+    return plan_cache.memo(
+        spark,
+        key,
+        lambda: similarity.hamming_topk(
+            load_table(spark, "embeddings", sf_dir),
+            "embedding",
+            "vec_id",
+            _MMR_QUERY_IDS,
+            k=10,
+        ),
     )
-    plan_cache.put(spark, key, (res, pins))
-    return res
 
 
 def _hamming_oracle(dim: int = 64, query_ids=_MMR_QUERY_IDS, k: int = 10) -> str:
@@ -4373,16 +4356,6 @@ def t_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-20 is a TakeOrderedAndProject. Total wide work: zero exchanges
     beyond the 1-row stats broadcast and the final ordered limit.
     """
-    return _bm25_scored(spark, sf_dir)[0]
-
-
-def _bm25_scored(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """(BM25 top-20 relation, the persisted per-doc tf/dl relation) —
-    shared by t_bm25_topk, t_hybrid_rrf, and t_retrieval_pipeline; the
-    second element is returned so a plan-caching caller can re-arm its
-    persist after a release_caches() cycle."""
     docs = load_table(spark, "documents", sf_dir)
     tf_cols = [
         F.expr(f"size(filter(wl, x -> x = '{t}'))").alias(f"tf_{t}")
@@ -4406,7 +4379,7 @@ def _bm25_scored(
             for t in _BM25_TERMS
         ],
     )
-    top = (
+    return (
         d.crossJoin(F.broadcast(stats))
         .filter(F.expr(_BM25_HITS) > 0)
         .select(
@@ -4417,7 +4390,6 @@ def _bm25_scored(
         .orderBy(F.col("bm25").desc(), "doc_id")
         .limit(20)
     )
-    return top, d
 
 
 def _bm25_oracle() -> str:
@@ -4573,9 +4545,7 @@ FROM fused
 # (r11 VERDICT #2 — the k_count/compile_kernel memoization lesson applied
 # to a relational plan). Returning the SAME DataFrame keeps exprIds
 # stable, so re-executions hit the codegen cache and price execution.
-# Keys fold in the source-file fingerprint so regenerated data is a miss;
-# session identity is the WeakKeyDictionary key inside plan_cache (r12
-# ADVICE #1/#2: per-session entries, FIFO eviction, dead sessions drop).
+# Keys fold in the source-file fingerprint so regenerated data is a miss.
 
 
 def t_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4623,12 +4593,9 @@ def t_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines, hence bit-identical.
     """
     key = ("msim_topk", sf_dir, table_fingerprint(sf_dir, "documents"))
-    hit = plan_cache.get(spark, key)
-    if hit is not None:
-        return hit
-    res = _maxsim_topk_core(load_table(spark, "documents", sf_dir))
-    plan_cache.put(spark, key, res)
-    return res
+    return plan_cache.memo(
+        spark, key, lambda: _maxsim_topk_core(load_table(spark, "documents", sf_dir))
+    )
 
 
 def _maxsim_topk_core(docs: DataFrame) -> DataFrame:
@@ -4901,126 +4868,120 @@ def t_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         # rebuild at the same path must be a cache miss here too
         generation(ann_index.ivfpq_index_path(sf_dir)),
     )
-    hit = plan_cache.get(spark, key)
-    if hit is not None:
-        res, pins = hit
-        for df in pins:
-            persist_tracked(df)
-        return res
 
-    docs = load_table(spark, "documents", sf_dir)
-    emb = load_table(spark, "embeddings", sf_dir)
+    def build() -> DataFrame:
+        docs = load_table(spark, "documents", sf_dir)
+        emb = load_table(spark, "embeddings", sf_dir)
 
-    lex_top, bm25_d = _bm25_scored(spark, sf_dir)
-    lex = lex_top.select(
-        "doc_id",
-        F.row_number()
-        .over(Window.orderBy(F.col("bm25").desc(), "doc_id"))
-        .alias("lex_rank"),
-    )
-
-    if path is None:
-        dense_raw = _empty_ivfpq_result(spark)
-    else:
-        dense_raw = ann_index.probe_ivfpq_index(
-            spark,
-            path,
-            emb.where(F.col("vec_id") == 0),
-            "embedding",
-            "vec_id",
-            k=20,
-            n_probe=6,
+        lex = t_bm25_topk(spark, sf_dir).select(
+            "doc_id",
+            F.row_number()
+            .over(Window.orderBy(F.col("bm25").desc(), "doc_id"))
+            .alias("lex_rank"),
         )
-    dense = dense_raw.select("vec_id", F.col("rnk").alias("vec_rank"))
 
-    fused = persist_tracked(
-        lex.join(dense, lex["doc_id"] == dense["vec_id"], "full_outer")
-        .select(
-            F.coalesce(lex["doc_id"], dense["vec_id"]).alias("id"),
-            "lex_rank",
-            "vec_rank",
-            (
-                F.coalesce(1.0 / (F.lit(60) + F.col("lex_rank")), F.lit(0.0))
-                + F.coalesce(1.0 / (F.lit(60) + F.col("vec_rank")), F.lit(0.0))
-            ).alias("rrf"),
-        )
-        .orderBy(F.col("rrf").desc(), "id")
-        .limit(20)
-    )
-
-    cand = docs.join(
-        F.broadcast(fused.select("id")), docs["doc_id"] == F.col("id")
-    ).select("id", "text")
-    starts = F.sequence(
-        F.lit(1), F.greatest(F.length("text"), F.lit(1)), F.lit(150)
-    )
-    chunks = cand.select(
-        "id",
-        F.posexplode(
-            F.transform(starts, lambda s: F.substring(F.col("text"), s, F.lit(200)))
-        ).alias("chunk_idx", "chunk"),
-    )
-    toks = chunks.select(
-        "id",
-        "chunk_idx",
-        F.explode(
-            F.array_distinct(
-                F.expr("regexp_extract_all(lower(chunk), '[a-z0-9]+', 0)")
+        if path is None:
+            dense_raw = _empty_ivfpq_result(spark)
+        else:
+            dense_raw = ann_index.probe_ivfpq_index(
+                spark,
+                path,
+                emb.where(F.col("vec_id") == 0),
+                "embedding",
+                "vec_id",
+                k=20,
+                n_probe=6,
             )
-        ).alias("tok"),
-    )
-    terms = [(f"r{j}", maxsim_qvec(t)) for j, t in enumerate(_BM25_TERMS)]
-    scored = _scored_token_vocab(toks.select("tok").distinct(), terms)
-    m = (
-        toks.join(F.broadcast(scored), "tok")
-        .groupBy("id", "chunk_idx")
-        .agg(*[F.max(name).alias(f"m{j}") for j, (name, _) in enumerate(terms)])
-    )
-    msum = " + ".join(f"m{j}" for j in range(len(terms)))
-    cs = m.select("id", "chunk_idx", F.expr(msum).alias("chunk_score"))
-    bw = Window.partitionBy("id").orderBy(
-        F.col("chunk_score").desc(), "chunk_idx"
-    )
-    best = (
-        cs.withColumn("rk", F.row_number().over(bw))
-        .filter(F.col("rk") == 1)
-        .select(
+        dense = dense_raw.select("vec_id", F.col("rnk").alias("vec_rank"))
+
+        fused = persist_tracked(
+            lex.join(dense, lex["doc_id"] == dense["vec_id"], "full_outer")
+            .select(
+                F.coalesce(lex["doc_id"], dense["vec_id"]).alias("id"),
+                "lex_rank",
+                "vec_rank",
+                (
+                    F.coalesce(1.0 / (F.lit(60) + F.col("lex_rank")), F.lit(0.0))
+                    + F.coalesce(1.0 / (F.lit(60) + F.col("vec_rank")), F.lit(0.0))
+                ).alias("rrf"),
+            )
+            .orderBy(F.col("rrf").desc(), "id")
+            .limit(20)
+        )
+
+        cand = docs.join(
+            F.broadcast(fused.select("id")), docs["doc_id"] == F.col("id")
+        ).select("id", "text")
+        starts = F.sequence(
+            F.lit(1), F.greatest(F.length("text"), F.lit(1)), F.lit(150)
+        )
+        chunks = cand.select(
             "id",
-            F.col("chunk_idx").alias("best_chunk_idx"),
-            F.col("chunk_score").alias("maxsim"),
+            F.posexplode(
+                F.transform(starts, lambda s: F.substring(F.col("text"), s, F.lit(200)))
+            ).alias("chunk_idx", "chunk"),
         )
-    )
-    final = fused.join(best, "id", "left").select(
-        "id",
-        "lex_rank",
-        "vec_rank",
-        F.col("rrf").alias("rrf_raw"),
-        F.coalesce("best_chunk_idx", F.lit(-1)).alias("best_chunk_idx"),
-        F.coalesce("maxsim", F.lit(0.0)).alias("maxsim"),
-    )
-    res = (
-        final.withColumn(
-            "rnk",
-            F.row_number().over(
-                Window.orderBy(
-                    F.col("maxsim").desc(), F.col("rrf_raw").desc(), "id"
+        toks = chunks.select(
+            "id",
+            "chunk_idx",
+            F.explode(
+                F.array_distinct(
+                    F.expr("regexp_extract_all(lower(chunk), '[a-z0-9]+', 0)")
                 )
-            ),
+            ).alias("tok"),
         )
-        .filter(F.col("rnk") <= 10)
-        .select(
+        terms = [(f"r{j}", maxsim_qvec(t)) for j, t in enumerate(_BM25_TERMS)]
+        scored = _scored_token_vocab(toks.select("tok").distinct(), terms)
+        m = (
+            toks.join(F.broadcast(scored), "tok")
+            .groupBy("id", "chunk_idx")
+            .agg(*[F.max(name).alias(f"m{j}") for j, (name, _) in enumerate(terms)])
+        )
+        msum = " + ".join(f"m{j}" for j in range(len(terms)))
+        cs = m.select("id", "chunk_idx", F.expr(msum).alias("chunk_score"))
+        bw = Window.partitionBy("id").orderBy(
+            F.col("chunk_score").desc(), "chunk_idx"
+        )
+        best = (
+            cs.withColumn("rk", F.row_number().over(bw))
+            .filter(F.col("rk") == 1)
+            .select(
+                "id",
+                F.col("chunk_idx").alias("best_chunk_idx"),
+                F.col("chunk_score").alias("maxsim"),
+            )
+        )
+        final = fused.join(best, "id", "left").select(
             "id",
             "lex_rank",
             "vec_rank",
-            F.round("rrf_raw", 9).alias("rrf"),
-            "best_chunk_idx",
-            "maxsim",
-            "rnk",
+            F.col("rrf").alias("rrf_raw"),
+            F.coalesce("best_chunk_idx", F.lit(-1)).alias("best_chunk_idx"),
+            F.coalesce("maxsim", F.lit(0.0)).alias("maxsim"),
         )
-        .orderBy("rnk")
-    )
-    plan_cache.put(spark, key, (res, [bm25_d, fused]))
-    return res
+        return (
+            final.withColumn(
+                "rnk",
+                F.row_number().over(
+                    Window.orderBy(
+                        F.col("maxsim").desc(), F.col("rrf_raw").desc(), "id"
+                    )
+                ),
+            )
+            .filter(F.col("rnk") <= 10)
+            .select(
+                "id",
+                "lex_rank",
+                "vec_rank",
+                F.round("rrf_raw", 9).alias("rrf"),
+                "best_chunk_idx",
+                "maxsim",
+                "rnk",
+            )
+            .orderBy("rnk")
+        )
+
+    return plan_cache.memo(spark, key, build)
 
 
 def _retrieval_pipeline_oracle() -> str:

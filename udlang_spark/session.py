@@ -87,34 +87,33 @@ def stop_spark() -> None:
 
 _PERSISTED: list = []
 _PERSISTED_IDS: set[int] = set()
+# one list per plan_cache.memo build in progress (see the recording rule)
+_RECORDING: list[list] = []
 
 
 # ---------------------------------------------------------------------------
 # per-session analyzed-plan cache
 #
-# Some queries return the SAME DataFrame object for the same (session, input
-# fingerprint) so exprIds stay stable across bench runs and re-executions hit
-# the JVM codegen cache (the t_maxsim_topk lesson, SURVEY §9 r12). Keying is
-# on the SparkSession OBJECT via a WeakKeyDictionary (r12 ADVICE #1: an
-# applicationId key is shared by newSession() siblings with different SQL
-# confs, and entries from stopped contexts linger), so a sibling session
-# never sees another session's plans and dead sessions drop their entries
-# automatically. Eviction is FIFO of the oldest entry only (r12 ADVICE #2:
-# a full clear at the cap threw away the hot entry whose exprId stability
-# the cache exists to preserve).
+# A serving query that returns the SAME DataFrame for the same (session,
+# input fingerprint) keeps its exprIds stable, so re-executions hit the JVM
+# codegen cache, and skips its driver construction. Entries are keyed on the
+# SparkSession OBJECT (a WeakKeyDictionary): a newSession() sibling with
+# other SQL confs never sees them, and a stopped session's entries go with
+# it. At the cap the oldest entry alone is evicted (FIFO).
+#
+# The recording rule: while ``memo`` runs a build, every relation the build
+# passes to ``persist_tracked`` is recorded with the result, whether or not it
+# is already tracked in the current release window, and an enclosing build
+# records it too. A hit passes each recorded relation to ``persist_tracked``
+# again, so after a ``release_caches()`` the cached plan reads the same
+# persisted relations as a cold build, not a recomputation from parquet.
 # ---------------------------------------------------------------------------
 
 
 class _PlanCache:
-    # Cap = bound on a pathological many-corpus session, NOT a working-set
-    # tuning. The r13 probe caches brought one (session, corpus) working
-    # set to EXACTLY 8 distinct keys (measured: maxsim, the shared exact
-    # arm, two recall cards, three persisted-index probes, the retrieval
-    # pipeline) — flush against the old cap of 8, where the next cache
-    # user would have silently FIFO-thrashed the whole set every bench
-    # pass. Raised to 24 for headroom; entries are a few hundred bytes of
-    # Python wrapper each, and tests pin that the full working set fits
-    # without eviction.
+    # A bound on a pathological many-corpus session, not a working-set size:
+    # one (session, corpus) working set holds 8 keys, and tests pin that it
+    # fits without eviction.
     MAX_PER_SESSION = 24
 
     def __init__(self) -> None:
@@ -125,14 +124,34 @@ class _PlanCache:
     def get(self, spark, key):
         return self._per.get(spark, {}).get(key)
 
-    def put(self, spark, key, df) -> None:
+    def put(self, spark, key, entry) -> None:
         per = self._per.get(spark)
         if per is None:
             per = {}
             self._per[spark] = per
         if key not in per and len(per) >= self.MAX_PER_SESSION:
             per.pop(next(iter(per)))  # FIFO-evict the oldest entry only
-        per[key] = df
+        per[key] = entry
+
+    def memo(self, spark, key, build):
+        """``build()``'s result for (spark, key), built once per session.
+
+        A miss runs ``build()`` and stores its result with the relations it
+        persisted; a build that raises stores nothing. A hit re-persists
+        those relations and returns the stored result."""
+        hit = self.get(spark, key)
+        if hit is not None:
+            res, persisted = hit
+            for df in persisted:
+                persist_tracked(df)
+            return res
+        _RECORDING.append([])
+        try:
+            res = build()
+        finally:
+            persisted = _RECORDING.pop()
+        self.put(spark, key, (res, persisted))
+        return res
 
     def clear(self) -> None:
         self._per.clear()
@@ -144,12 +163,13 @@ plan_cache = _PlanCache()
 def persist_tracked(df, storage_level=None):
     """persist() a DataFrame and register it for later release_caches().
 
-    Idempotent per DataFrame OBJECT within one release window (r13 ADVICE
-    #3): plan-cache hits re-arm their pins through here on every call, so
-    a long-lived serving session that never releases would otherwise grow
-    the registry without bound with duplicate refs. The id() key is safe
-    because the registry holds a strong reference — the object cannot be
-    collected (and its id reused) while tracked."""
+    Idempotent per DataFrame OBJECT within one release window, so plan-cache
+    hits in a session that never releases do not grow the registry. The
+    id() key is safe because the registry holds a strong reference: the
+    object cannot be collected (and its id reused) while tracked. Inside a
+    ``plan_cache.memo`` build the relation is recorded either way."""
+    for persisted in _RECORDING:
+        persisted.append(df)
     if id(df) in _PERSISTED_IDS:
         return df  # already persisted and tracked in this window
     df.persist() if storage_level is None else df.persist(storage_level)
