@@ -1124,7 +1124,6 @@ def test_filecontext_checkpoint_restarts_under_filesystem_manager(spark, tmp_pat
             .option("path", out)
             .option("checkpointLocation", ckpt),
             spark,
-            120,
             "dedup drain",
         )
 
@@ -1147,3 +1146,70 @@ def test_filecontext_checkpoint_restarts_under_filesystem_manager(spark, tmp_pat
     assert commits() == [0, 1]
     got = sorted(r["doc_id"] for r in spark.read.parquet(out).collect())
     assert got == list(range(75))
+
+
+def test_kernel_stream_reuses_replay(spark, monkeypatch):
+    """A second s_kernel_stream call reads the replay the first one
+    built: same artifact path, marker not rewritten."""
+    import os
+
+    from udlang_spark.queries import streaming as S
+    from udlang_spark.sources import tables
+
+    paths = []
+
+    def ensure(prefix, key, build):
+        paths.append(tables.ensure_artifact(prefix, key, build))
+        return paths[-1]
+
+    monkeypatch.setattr(S, "ensure_artifact", ensure)
+    n = S.s_kernel_stream(spark, SF_DIR_SMOKE).count()
+    marker = os.path.join(paths[0], tables._BUILT)
+    built_at = os.stat(marker).st_mtime_ns
+    assert S.s_kernel_stream(spark, SF_DIR_SMOKE).count() == n
+    assert paths == [paths[0]] * 2
+    assert os.stat(marker).st_mtime_ns == built_at
+
+
+def test_replay_build_retires_only_its_own_older_builds(spark, tmp_path, monkeypatch):
+    """A replay miss retires the same prefix's older build for the same
+    sf_dir (another source fingerprint), not another sf_dir's build."""
+    from udlang_spark.queries import streaming as S
+    from udlang_spark.sources import tables
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    cols = ("event_id",)
+
+    def fake_build(name: str, sf_dir: str):
+        d = tmp_path / f"udlang_test_replay_{name}"
+        d.mkdir()
+        (d / tables._BUILT).write_text(
+            f"{sf_dir}|events|{cols}|None|{S._REPLAY_FILES}|000000000000"
+        )
+        return d
+
+    older = fake_build("older", SF_DIR_SMOKE)
+    other_sf = fake_build("other", "/elsewhere/sf0.001")
+    path = S._replay_dir(spark, SF_DIR_SMOKE, "events", cols, "udlang_test_replay")
+    assert tables.artifact_built(path)
+    assert not older.exists()
+    assert other_sf.exists()
+    assert spark.read.text(path).count() == load_table(spark, "events", SF_DIR_SMOKE).count()
+
+
+def test_drain_overrun_stops_and_raises(spark, tmp_path, monkeypatch):
+    """A stream still running at the drain timeout is stopped and raises
+    TimeoutError instead of leaving a partial sink behind a live query."""
+    rep = tmp_path / "rep"
+    rep.mkdir()
+    (rep / "a.json").write_text('{"doc_id": 1}\n')
+    monkeypatch.setattr(runner, "_DRAIN_TIMEOUT_S", 0.001)
+    w = (
+        spark.readStream.schema("doc_id long").json(str(rep))
+        .writeStream.format("parquet")
+        .option("path", str(tmp_path / "out"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+    )
+    with pytest.raises(TimeoutError, match="slow drain"):
+        runner._drain(w, spark, "slow drain")
+    assert not spark.streams.active

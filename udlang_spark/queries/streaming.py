@@ -29,7 +29,11 @@ from udlang_spark.kernel.api import compile_kernel
 from udlang_spark.operators import similarity, sketches
 from udlang_spark.queries import llm as _llm
 from udlang_spark.sources import json_lift
-from udlang_spark.sources.tables import load_table, table_fingerprint
+from udlang_spark.sources.tables import (
+    ensure_artifact,
+    load_table,
+    table_fingerprint,
+)
 from udlang_spark.streaming import runner
 
 _EVENT_FIELDS = (
@@ -69,48 +73,41 @@ def _replay_dir(
     """Write a table's rows as JSON files for a replayable file stream.
 
     The replay input is a PURE FUNCTION of the source table's content, so
-    a completed build (marked by `_REPLAY_OK` after the write returns) is
-    reused across invocations — re-lowering the table to JSON on every
-    query run was measurable fixed cost in every streaming headline
-    entry. The key carries the source file fingerprint
-    (tables.table_fingerprint), so regenerating the parquet under the
-    same path is a cache MISS, never a stale replay. Checkpoint/state
-    dirs are NOT cached; each query still clears its own."""
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    tmp = os.path.join(tempfile.gettempdir(), f"{prefix}_{tag}")
-    marker = os.path.join(tmp, "_REPLAY_OK")
+    it is an on-disk artifact (tables.ensure_artifact) reused across
+    invocations — re-lowering the table to JSON on every query run was
+    measurable fixed cost in every streaming headline entry. The key's
+    last five fields are what can change between builds for one prefix
+    and sf_dir, the source fingerprint (tables.table_fingerprint) last:
+    regenerating the parquet under the same path is a miss, never a stale
+    replay, and the miss retires the older build. Checkpoint/state dirs
+    are NOT cached; each query still clears its own."""
     key = (
         f"{sf_dir}|{table}|{cols}|{select_exprs}|{_REPLAY_FILES}"
         f"|{table_fingerprint(sf_dir, table)}"
     )
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            if fh.read() == key:
-                return tmp
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp, ignore_errors=True)
-    rel = load_table(spark, table, sf_dir)
-    if select_exprs:
-        # derived replay columns (e.g. epoch-seconds from a timestamp —
-        # JSON-roundtripping a raw timestamp would add a tz/format parse
-        # surface the integer never has)
-        rel = rel.selectExpr(*select_exprs)
-    # repartition, not coalesce: coalesce cannot INCREASE the partition
-    # count, so a small source could collapse the replay to one file and
-    # make every run a single micro-batch — the multi-batch claims
-    # (s_cms_merge maxFilesPerTrigger=8 over 16 files → ≥2 batches) need
-    # them. 16 files (r13, was 4): a micro-batch's JSON parse runs one
-    # task per file, and the 2-task parse was the measured floor of every
-    # replay consumer (cms stream phase 1.92 → 1.47 s at 16 files);
-    # single-batch consumers get the same 16-way parse. All drained
-    # results are micro-batching-invariant by design, so the shuffled
-    # file assignment is immaterial.
-    json_lift.lower_json(rel.select(*cols), cols).select("json").repartition(
-        _REPLAY_FILES
-    ).write.mode("overwrite").text(tmp)
-    with open(marker, "w") as fh:
-        fh.write(key)
-    return tmp
+
+    def build(path: str) -> None:
+        rel = load_table(spark, table, sf_dir)
+        if select_exprs:
+            # derived replay columns (e.g. epoch-seconds from a timestamp —
+            # JSON-roundtripping a raw timestamp would add a tz/format parse
+            # surface the integer never has)
+            rel = rel.selectExpr(*select_exprs)
+        # repartition, not coalesce: coalesce cannot INCREASE the partition
+        # count, so a small source could collapse the replay to one file and
+        # make every run a single micro-batch — the multi-batch claims
+        # (s_cms_merge maxFilesPerTrigger=8 over 16 files → ≥2 batches) need
+        # them. 16 files (r13, was 4): a micro-batch's JSON parse runs one
+        # task per file, and the 2-task parse was the measured floor of every
+        # replay consumer (cms stream phase 1.92 → 1.47 s at 16 files);
+        # single-batch consumers get the same 16-way parse. All drained
+        # results are micro-batching-invariant by design, so the shuffled
+        # file assignment is immaterial.
+        json_lift.lower_json(rel.select(*cols), cols).select("json").repartition(
+            _REPLAY_FILES
+        ).write.mode("overwrite").text(path)
+
+    return ensure_artifact(prefix, key, build)
 
 
 def _replay_stream(

@@ -13,6 +13,10 @@ import os
 from pyspark.sql import SparkSession
 
 
+# the directory that holds the udlang_spark package
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def get_spark(app_name: str = "udlang_spark", **extra_conf: str) -> SparkSession:
     """Build (or return the active) SparkSession.
 
@@ -21,8 +25,42 @@ def get_spark(app_name: str = "udlang_spark", **extra_conf: str) -> SparkSession
     locally we match core count. AQE is always on: it converts sort-merge
     joins to broadcast at runtime when a side turns out small, splits skewed
     shuffle partitions, and coalesces tiny ones — all critical at 100 TB.
+
+    Python workers get the package's root directory ahead of any
+    ``PYTHONPATH`` already set, so a script started from any directory can
+    run Python UDFs that import ``udlang_spark``.
+
+    With a session already active, ``extra_conf`` runtime keys are set on
+    that shared session: the caller sees them, and so does every other
+    holder of it (the checkpoint-manager override test in
+    tests/test_streaming.py relies on this). A static key whose value
+    differs from the session's cannot be applied and raises
+    ``ValueError``; the app name is not checked. Static means
+    ``spark.conf.isModifiable`` is false, except for a ``spark.sql.`` key
+    that Spark does not register as static: such a key
+    (``spark.sql.streaming.checkpointFileManagerClass``) is unregistered,
+    so not "modifiable", yet a stream reads it from the session at start.
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        sql_conf = active._jvm.org.apache.spark.sql.internal.SQLConf
+        clash = sorted(
+            k
+            for k, v in extra_conf.items()
+            if k != "spark.app.name"
+            and not active.conf.isModifiable(k)
+            and (not k.startswith("spark.sql.") or sql_conf.isStaticConfigKey(k))
+            and active.conf.get(k, None) != str(v)
+        )
+        if clash:
+            raise ValueError(
+                f"static conf {clash} differs from the active session's; "
+                "stop it before asking for these values"
+            )
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    python_path = [_ROOT] + [
+        p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p
+    ]
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -55,6 +93,7 @@ def get_spark(app_name: str = "udlang_spark", **extra_conf: str) -> SparkSession
         )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", os.pathsep.join(python_path))
     )
     for k, v in extra_conf.items():
         builder = builder.config(k, v)

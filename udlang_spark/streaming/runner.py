@@ -92,16 +92,20 @@ def _stream_shuffle(spark: SparkSession):
             spark.conf.set(_SHUFFLE_KEY, prev)
 
 
-def _drain(writer: DataStreamWriter, spark: SparkSession, timeout_s: int, what: str) -> None:
+_DRAIN_TIMEOUT_S = 120
+
+
+def _drain(writer: DataStreamWriter, spark: SparkSession, what: str) -> None:
     """Run a stream to completion (availableNow) under the streaming
-    shuffle count. A stream still running at the timeout is stopped and
-    raises: an ignored False would leave a PARTIAL sink while the query
-    keeps running (and holds its sink state for the session)."""
+    shuffle count. A stream still running after _DRAIN_TIMEOUT_S is
+    stopped and raises TimeoutError: an ignored False would leave a
+    PARTIAL sink while the query keeps running (and holds its sink state
+    for the session)."""
     with _stream_shuffle(spark):
         q = writer.trigger(availableNow=True).start()
-        if not q.awaitTermination(timeout_s):
+        if not q.awaitTermination(_DRAIN_TIMEOUT_S):
             q.stop()
-            raise TimeoutError(f"{what} did not finish in {timeout_s}s")
+            raise TimeoutError(f"{what} did not finish in {_DRAIN_TIMEOUT_S}s")
 
 
 def kernel_stream(
@@ -290,7 +294,6 @@ def run_stream_to_parquet(
     result: DataFrame,
     out_path: str,
     checkpoint_path: str,
-    timeout_s: int = 120,
     output_mode: str = "append",
     partition_by: tuple[str, ...] = (),
 ) -> None:
@@ -312,14 +315,13 @@ def run_stream_to_parquet(
         # hive-layout sink (e.g. shard=N dirs for s_shard_stream): each
         # micro-batch appends only to the partitions it carries rows for
         w = w.partitionBy(*partition_by)
-    _drain(w, result.sparkSession, timeout_s, "stream")
+    _drain(w, result.sparkSession, "stream")
 
 
 def run_stream_to_memory(
     result: DataFrame,
     query_name: str,
     spark: SparkSession,
-    timeout_s: int = 60,
     output_mode: str = "append",
 ) -> DataFrame:
     """Drain a (bounded) stream into an in-memory table; returns the table.
@@ -331,7 +333,7 @@ def run_stream_to_memory(
         .queryName(query_name)
         .outputMode(output_mode)
     )
-    _drain(w, spark, timeout_s, f"stream {query_name!r}")
+    _drain(w, spark, f"stream {query_name!r}")
     return spark.table(query_name)
 
 
@@ -408,7 +410,6 @@ def run_sketch_merge_stream(
     value_col: str | None = None,
     out_col: str | None = None,
     k: int | None = None,
-    timeout_s: int = 120,
 ) -> None:
     """Streaming sketch via foreachBatch DELTA-MERGE: each micro-batch
     aggregates only ITS OWN (cell → partial count) delta — a map-side
@@ -513,7 +514,7 @@ def run_sketch_merge_stream(
     w = cell_stream.writeStream.foreachBatch(apply_batch).option(
         "checkpointLocation", checkpoint_path
     )
-    _drain(w, spark, timeout_s, "sketch merge stream")
+    _drain(w, spark, "sketch merge stream")
 
 
 def run_cdc_apply_stream(
@@ -523,7 +524,6 @@ def run_cdc_apply_stream(
     checkpoint_path: str,
     key: str,
     seq_col: str,
-    timeout_s: int = 120,
 ) -> None:
     """Streaming MERGE (CDC apply): every micro-batch upserts into a keyed
     parquet target via foreachBatch — the streaming twin of q34_upsert.
@@ -563,4 +563,4 @@ def run_cdc_apply_stream(
     w = stream.writeStream.foreachBatch(apply_batch).option(
         "checkpointLocation", checkpoint_path
     )
-    _drain(w, spark, timeout_s, "CDC apply stream")
+    _drain(w, spark, "CDC apply stream")
