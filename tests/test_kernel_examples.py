@@ -207,6 +207,26 @@ def test_interp_fallback_unbounded_depth(spark):
     assert got2 == [math.factorial(20)]
 
 
+def test_interp_restores_recursion_limit():
+    """The interpreter raises the recursion limit for its own call only:
+    a countdown from 1000 (~7 Python frames per level) needs far more
+    than 3,000 frames, and afterwards the process's limit reads 3,000."""
+    import sys
+
+    from udlang_spark.kernel.interp import Interp
+
+    prog = compile_kernel_file(f"{EX}/count.us", max_depth=8).program
+    prev = sys.getrecursionlimit()
+    sys.setrecursionlimit(3_000)
+    try:
+        got = Interp(prog).run(1000)
+        limit = sys.getrecursionlimit()
+    finally:
+        sys.setrecursionlimit(prev)
+    assert limit == 3_000
+    assert got == list(range(1000, -1, -1)) + [None]
+
+
 def test_spread_rest_compiled_and_interp(spark):
     """Spread/rest/$... (reference README.md:260-261, 335-336, 370-373):
     the compiled (inlined) path and the AST-interpreter fallback agree."""

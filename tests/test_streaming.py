@@ -7,10 +7,13 @@ import shutil
 import tempfile
 
 import pytest
+from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR_SMOKE
+from udlang_spark.functions import text as TXT
 from udlang_spark.kernel import ast
 from udlang_spark.kernel.api import compile_kernel
+from udlang_spark.operators import sketches
 from udlang_spark.sources import json_lift
 from udlang_spark.sources.tables import load_table
 from udlang_spark.streaming import runner
@@ -73,8 +76,6 @@ def test_windowed_stream_equals_batch(spark, events_json_dir):
         )
     )
     # synthesize a timestamp from event_id so the JSON replay has event-time
-    from pyspark.sql import functions as F
-
     def with_ts(df):
         return df.withColumn(
             "ts", F.timestamp_seconds(F.lit(1700000000) + F.col("event_id") * 60)
@@ -145,8 +146,6 @@ def test_lower_then_lift_roundtrip(spark):
 
 
 def test_session_window_stream_equals_batch(spark, events_json_dir):
-    from pyspark.sql import functions as F
-
     input_t = ast.TRecord(
         (
             ast.TRecordField("event_id", ast.T_INT),
@@ -189,8 +188,6 @@ def test_session_window_stream_equals_batch(spark, events_json_dir):
 
 
 def test_stateful_running_totals(spark, events_json_dir):
-    from pyspark.sql import functions as F
-
     input_t = ast.TRecord(
         (
             ast.TRecordField("event_id", ast.T_INT),
@@ -230,8 +227,6 @@ def test_stateful_running_totals(spark, events_json_dir):
 
 
 def _ts_stream(spark, events_json_dir):
-    from pyspark.sql import functions as F
-
     input_t = ast.TRecord(
         (
             ast.TRecordField("event_id", ast.T_INT),
@@ -251,8 +246,6 @@ def _ts_stream(spark, events_json_dir):
 
 
 def _ts_batch(spark):
-    from pyspark.sql import functions as F
-
     return (
         load_table(spark, "events", SF_DIR_SMOKE)
         .select("event_id", "event_type", "value")
@@ -263,8 +256,6 @@ def _ts_batch(spark):
 
 
 def _split_click_purchase(df):
-    from pyspark.sql import functions as F
-
     src = df.withColumn("ukey", F.col("event_id") % 13)
     clicks = src.filter(F.col("event_type") == "click").select(
         "ukey", F.col("event_id").alias("click_id"), F.col("ts").alias("click_ts")
@@ -305,8 +296,6 @@ def test_streaming_dedup_equals_batch_keyset(spark, events_json_dir):
     """dropDuplicatesWithinWatermark keeps one row per key; the surviving
     key set equals batch dropDuplicates' (which row survives is racy, the
     key set is not)."""
-    from pyspark.sql import functions as F
-
     src = _ts_stream(spark, events_json_dir).withColumn(
         "bucket", F.col("event_id") % 50
     )
@@ -328,8 +317,6 @@ def test_parquet_sink_exactly_once_restart(spark, tmp_path):
     """Checkpointed parquet sink: a restart over an unchanged source emits
     nothing; appended source data emits exactly its own rows."""
     import json as _json
-
-    from pyspark.sql import functions as F
 
     src = tmp_path / "src"
     src.mkdir()
@@ -379,8 +366,6 @@ if (small > 0) {
   out small * 10;
 }
 """
-    from pyspark.sql import functions as F
-
     k = compile_kernel(COUNTDOWN)
     schema = json_lift.input_schema(
         ast.TRecord(
@@ -412,8 +397,6 @@ def test_cdc_apply_stream(spark, tmp_path):
     replace matched keys (latest seq wins within and across batches), a
     restart over an unchanged source changes nothing."""
     import json as _json
-
-    from pyspark.sql import functions as F
 
     src = tmp_path / "cdc_src"
     src.mkdir()
@@ -476,8 +459,6 @@ def test_cdc_apply_matches_duckdb_oracle(spark, duck):
 def test_stateful_totals_string_keys(spark, tmp_path):
     """The stateful operator must work for non-long keys (the output/state
     schema derives the key type from the input)."""
-    from pyspark.sql import functions as F
-
     src_dir = str(tmp_path / "skeys")
     spark.createDataFrame(
         [("a", 1.0, 1), ("a", 2.0, 2), ("b", 5.0, 3)], "k string, v double, i long"
@@ -546,14 +527,25 @@ def test_neardup_stream_equals_batch_fpset(spark, duck):
     assert len(got) < docs.count()  # the corpus has fp-identical near-dups
 
 
-def _docs_cells_replay(spark, tmp_path, n_files=3):
-    """documents replayed as n_files JSON files + the matching batch-side
-    (row, bucket) cell relation — shared by the CMS streaming tests."""
-    from udlang_spark.functions import text as TXT
-    from udlang_spark.kernel import ast as A
-    from udlang_spark.operators import sketches
-    from pyspark.sql import functions as F
+# per sketch algebra: the (row, bucket) / (bucket, rank) / h cells of a
+# `tok` relation and run_sketch_merge_stream's arguments for it
+_SKETCH_CELLS = {
+    "count_sum": (lambda toks: sketches.cms_cells(toks, "tok"), {}),
+    "max": (
+        lambda toks: toks.select(*sketches.hll_bucket_rank(F.col("tok"))),
+        dict(cell_cols=("bucket",), mode="max", value_col="rank", out_col="r"),
+    ),
+    "min_k": (
+        lambda toks: toks.select(sketches.kmv_hash_col(F.col("tok")).alias("h")),
+        dict(cell_cols=("h",), mode="min_k", k=32),
+    ),
+}
 
+
+def _docs_cells_replay(spark, tmp_path, mode="count_sum", n_files=3):
+    """documents replayed as n_files JSON files, one per micro-batch, and
+    the stream- and batch-side cells of `mode`'s sketch algebra, plus its
+    run_sketch_merge_stream arguments — shared by the sketch stream tests."""
     docs = load_table(spark, "documents", SF_DIR_SMOKE)
     rep = str(tmp_path / "docs_json")
     # repartition, not coalesce: the smoke relation may hold fewer
@@ -562,8 +554,8 @@ def _docs_cells_replay(spark, tmp_path, n_files=3):
     json_lift.lower_json(
         docs.select("doc_id", "text"), ("doc_id", "text")
     ).select("json").repartition(n_files).write.mode("overwrite").text(rep)
-    doc_t = A.TRecord(
-        (A.TRecordField("doc_id", A.T_INT), A.TRecordField("text", A.T_STR))
+    doc_t = ast.TRecord(
+        (ast.TRecordField("doc_id", ast.T_INT), ast.TRecordField("text", ast.T_STR))
     )
     src = (
         spark.readStream.schema(json_lift.input_schema(doc_t))
@@ -571,13 +563,9 @@ def _docs_cells_replay(spark, tmp_path, n_files=3):
         .option("maxFilesPerTrigger", 1)
         .json(rep)
     )
-    stream_cells = sketches.cms_cells(
-        src.select(F.explode(TXT.words("text")).alias("tok")), "tok"
-    )
-    batch_cells = sketches.cms_cells(
-        docs.select(F.explode(TXT.words("text")).alias("tok")), "tok"
-    )
-    return stream_cells, batch_cells
+    cells, kwargs = _SKETCH_CELLS[mode]
+    toks = [r.select(F.explode(TXT.words("text")).alias("tok")) for r in (src, docs)]
+    return cells(toks[0]), cells(toks[1]), kwargs
 
 
 def test_cms_stream_multibatch_mergeability(spark, tmp_path):
@@ -586,9 +574,7 @@ def test_cms_stream_multibatch_mergeability(spark, tmp_path):
     equal the batch sketch whatever the micro-batching — the mergeability
     claim s_cms_stream makes, pinned against any lucky single-batch run.
     recentProgress proves ≥2 data-carrying micro-batches actually ran."""
-    from pyspark.sql import functions as F
-
-    stream_cells, batch_cells = _docs_cells_replay(spark, tmp_path)
+    stream_cells, batch_cells, _ = _docs_cells_replay(spark, tmp_path)
     sketch_stream = stream_cells.groupBy("row", "bucket").agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -616,21 +602,18 @@ def test_cms_stream_multibatch_mergeability(spark, tmp_path):
 
 
 def test_cms_delta_merge_equals_batch(spark, tmp_path):
-    """The foreachBatch delta-merge sketch (run_sketch_merge_stream) under
-    forced multi-batch ingestion equals the batch sketch, and _last_batch
-    proves the merge folded ≥2 micro-batches."""
-    from pyspark.sql import functions as F
-
-    stream_cells, batch_cells = _docs_cells_replay(spark, tmp_path)
+    """The foreachBatch merge sketch (run_sketch_merge_stream) under
+    forced multi-batch ingestion equals the batch sketch, and the
+    _LAST_BATCH sidecar proves the merge folded ≥2 micro-batches."""
+    stream_cells, batch_cells, _ = _docs_cells_replay(spark, tmp_path)
     target = str(tmp_path / "sketch_target")
     ckpt = str(tmp_path / "sketch_ckpt")
     runner.run_sketch_merge_stream(spark, stream_cells, target, ckpt)
 
-    merged = spark.read.parquet(target)
-    assert merged.agg(F.max("_last_batch")).collect()[0][0] >= 1
+    assert runner._applied_batch(target) >= 1
     got = {
         (r["row"], r["bucket"]): r["n"]
-        for r in merged.drop("_last_batch").collect()
+        for r in spark.read.parquet(target).collect()
     }
     want = {
         (r["row"], r["bucket"]): r["n"]
@@ -641,100 +624,51 @@ def test_cms_delta_merge_equals_batch(spark, tmp_path):
     assert got == want
 
 
-def test_cms_delta_merge_restart_and_redelivery(spark, tmp_path):
-    """Counter merges are not idempotent, so the merge must not
-    double-count on (a) a restart over an unchanged source with the same
+@pytest.mark.parametrize("mode", list(_SKETCH_CELLS))
+def test_cms_delta_merge_restart_and_redelivery(spark, tmp_path, mode):
+    """Counter merges are not idempotent, so no sketch merge may fold a
+    batch twice on (a) a restart over an unchanged source with the same
     checkpoint (offsets skip everything) or (b) full redelivery with a
-    FRESH checkpoint (the _last_batch guard skips already-applied batch
-    ids)."""
-    stream_cells, _ = _docs_cells_replay(spark, tmp_path)
-    target = str(tmp_path / "sketch_target")
-    runner.run_sketch_merge_stream(
-        spark, stream_cells, target, str(tmp_path / "ckpt1")
-    )
-    before = {
-        (r["row"], r["bucket"]): r["n"]
-        for r in spark.read.parquet(target).drop("_last_batch").collect()
-    }
-    # (a) restart, same checkpoint
-    runner.run_sketch_merge_stream(
-        spark, stream_cells, target, str(tmp_path / "ckpt1")
-    )
-    # (b) redelivery, fresh checkpoint: batch ids restart at 0 <= applied
-    runner.run_sketch_merge_stream(
-        spark, stream_cells, target, str(tmp_path / "ckpt2")
-    )
-    after = {
-        (r["row"], r["bucket"]): r["n"]
-        for r in spark.read.parquet(target).drop("_last_batch").collect()
-    }
-    assert after == before
-    # r14: the applied-batch guard reads a _LAST_BATCH sidecar written
-    # atomically with each table version (no per-batch Spark job); it must
-    # agree with the _last_batch column it replaced as the fast path
+    FRESH checkpoint: batch ids restart at 0, at or below the _LAST_BATCH
+    sidecar's id, so every batch is skipped and the table is not even
+    rewritten (same files). (c) A target without the sidecar has no known
+    applied batch, so the sink refuses it loudly, naming the sidecar."""
     import os
 
-    marker = os.path.join(target, "_LAST_BATCH")
-    assert os.path.exists(marker), "swap must carry the sidecar marker"
-    col_applied = (
-        spark.read.parquet(target).agg({"_last_batch": "max"}).collect()[0][0]
-    )
-    with open(marker) as fh:
-        assert int(fh.read().strip()) == col_applied
-    # (c) a pre-sidecar table (marker missing) must still be guarded via
-    # the fallback column read: delete the marker and redeliver again
-    os.remove(marker)
-    runner.run_sketch_merge_stream(
-        spark, stream_cells, target, str(tmp_path / "ckpt3")
-    )
-    after_c = {
-        (r["row"], r["bucket"]): r["n"]
-        for r in spark.read.parquet(target).drop("_last_batch").collect()
-    }
-    assert after_c == before
+    cells, _, kwargs = _docs_cells_replay(spark, tmp_path, mode)
+    target = str(tmp_path / "sketch_target")
+
+    def run(ckpt):
+        runner.run_sketch_merge_stream(
+            spark, cells, target, str(tmp_path / ckpt), **kwargs
+        )
+
+    def state():
+        rows = sorted(tuple(r) for r in spark.read.parquet(target).collect())
+        return rows, sorted(os.listdir(target)), runner._applied_batch(target)
+
+    run("ckpt1")
+    before = state()
+    assert before[2] >= 1  # ≥2 micro-batches folded
+    run("ckpt1")  # (a) restart, same checkpoint
+    run("ckpt2")  # (b) redelivery, fresh checkpoint
+    assert state() == before
+    os.remove(os.path.join(target, "_LAST_BATCH"))
+    with pytest.raises(ValueError, match="_LAST_BATCH"):
+        run("ckpt3")  # (c)
 
 
 def test_hll_delta_merge_equals_batch(spark, tmp_path):
-    """mode='max' delta-merge (HLL registers) under forced multi-batch
+    """mode='max' merge (HLL registers) under forced multi-batch
     ingestion equals the batch registers — the MAX-merge counterpart of
     the CMS sum-merge test."""
-    from pyspark.sql import functions as F
-
-    from udlang_spark.functions import text as TXT
-    from udlang_spark.kernel import ast as A
-    from udlang_spark.operators import sketches
-
-    docs = load_table(spark, "documents", SF_DIR_SMOKE)
-    rep = str(tmp_path / "docs_json")
-    json_lift.lower_json(
-        docs.select("doc_id", "text"), ("doc_id", "text")
-    ).select("json").repartition(3).write.mode("overwrite").text(rep)
-    doc_t = A.TRecord(
-        (A.TRecordField("doc_id", A.T_INT), A.TRecordField("text", A.T_STR))
-    )
-    src = (
-        spark.readStream.schema(json_lift.input_schema(doc_t))
-        .option("mode", "FAILFAST")
-        .option("maxFilesPerTrigger", 1)
-        .json(rep)
-    )
-    bucket, rank = sketches.hll_bucket_rank(F.col("tok"))
-    cells = src.select(F.explode(TXT.words("text")).alias("tok")).select(
-        bucket, rank
-    )
+    cells, bcells, kwargs = _docs_cells_replay(spark, tmp_path, "max")
     target = str(tmp_path / "hll_target")
     runner.run_sketch_merge_stream(
-        spark, cells, target, str(tmp_path / "hll_ckpt"),
-        cell_cols=("bucket",), mode="max", value_col="rank", out_col="r",
+        spark, cells, target, str(tmp_path / "hll_ckpt"), **kwargs
     )
-    merged = spark.read.parquet(target)
-    assert merged.agg(F.max("_last_batch")).collect()[0][0] >= 1
-    got = {
-        r["bucket"]: r["r"] for r in merged.drop("_last_batch").collect()
-    }
-    bcells = docs.select(F.explode(TXT.words("text")).alias("tok")).select(
-        bucket, rank
-    )
+    assert runner._applied_batch(target) >= 1
+    got = {r["bucket"]: r["r"] for r in spark.read.parquet(target).collect()}
     want = {
         r["bucket"]: r["r"]
         for r in bcells.groupBy("bucket").agg(F.max("rank").alias("r")).collect()
@@ -743,50 +677,22 @@ def test_hll_delta_merge_equals_batch(spark, tmp_path):
 
 
 def test_kmv_delta_merge_equals_batch(spark, tmp_path):
-    """mode='min_k' delta-merge (KMV k-minima) under forced multi-batch
+    """mode='min_k' merge (KMV k-minima) under forced multi-batch
     ingestion equals the batch k smallest distinct hashes EXACTLY — the
     MIN-K counterpart of the CMS sum-merge and HLL max-merge tests (the
-    global k-minima are each among their own batch's k-minima, so the
-    bounded per-batch delta loses nothing)."""
-    from pyspark.sql import functions as F
-
-    from udlang_spark.functions import text as TXT
-    from udlang_spark.kernel import ast as A
-    from udlang_spark.operators import sketches
-
-    k = 32
-    docs = load_table(spark, "documents", SF_DIR_SMOKE)
-    rep = str(tmp_path / "docs_json")
-    json_lift.lower_json(
-        docs.select("doc_id", "text"), ("doc_id", "text")
-    ).select("json").repartition(3).write.mode("overwrite").text(rep)
-    doc_t = A.TRecord(
-        (A.TRecordField("doc_id", A.T_INT), A.TRecordField("text", A.T_STR))
-    )
-    src = (
-        spark.readStream.schema(json_lift.input_schema(doc_t))
-        .option("mode", "FAILFAST")
-        .option("maxFilesPerTrigger", 1)
-        .json(rep)
-    )
-    cells = src.select(F.explode(TXT.words("text")).alias("tok")).select(
-        sketches.kmv_hash_col(F.col("tok")).alias("h")
-    )
+    global k-minima are each among the table's k-minima or the batch's
+    hashes, so the bounded state loses nothing)."""
+    cells, bcells, kwargs = _docs_cells_replay(spark, tmp_path, "min_k")
     target = str(tmp_path / "kmv_target")
     runner.run_sketch_merge_stream(
-        spark, cells, target, str(tmp_path / "kmv_ckpt"),
-        cell_cols=("h",), mode="min_k", k=k,
+        spark, cells, target, str(tmp_path / "kmv_ckpt"), **kwargs
     )
-    merged = spark.read.parquet(target)
-    assert merged.agg(F.max("_last_batch")).collect()[0][0] >= 1
-    got = sorted(r["h"] for r in merged.drop("_last_batch").collect())
-    assert len(got) <= k
-    bh = (
-        docs.select(F.explode(TXT.words("text")).alias("tok"))
-        .select(sketches.kmv_hash_col(F.col("tok")).alias("h"))
-        .distinct()
+    assert runner._applied_batch(target) >= 1
+    got = sorted(r["h"] for r in spark.read.parquet(target).collect())
+    assert len(got) <= kwargs["k"]
+    want = sorted(
+        r["h"] for r in bcells.distinct().orderBy("h").limit(kwargs["k"]).collect()
     )
-    want = sorted(r["h"] for r in bh.orderBy("h").limit(k).collect())
     assert got == want
 
 
@@ -811,7 +717,7 @@ def test_enrich_stream_equals_batch(spark, duck):
 
 
 def test_quantile_stream_histogram_equals_batch(spark, duck):
-    """The streaming delta-merged histogram answers quantiles exactly as
+    """The streaming merged histogram answers quantiles exactly as
     the batch sketch (shared quantile_probe_report): full-row equality of
     s_quantile_stream vs the t_quantile_sketch oracle."""
     from udlang_spark.queries import streaming as squeries
@@ -837,8 +743,6 @@ def test_interval_session_merges_on_touch_and_equals_islands(spark):
     intervals merge to max-end, (c) isolated intervals pass through.
     If a Spark upgrade ever changed the merge-on-touch semantics, this
     fails before the driver oracle does."""
-    from pyspark.sql import functions as F
-
     rows = [  # (user, ts_s, gap_s)
         (1, 0, 60), (1, 60, 60),      # touching -> one island [0,120)
         (1, 200, 60), (1, 230, 60),   # overlap  -> one island [200,290)
@@ -887,8 +791,6 @@ def test_interval_stream_equals_batch_islands(spark, duck):
     }
     assert got == want and len(got) > 100
     # rollup → q72 parity
-    from pyspark.sql import functions as F
-
     from udlang_spark.queries import relational as rel
 
     roll = {
@@ -961,10 +863,8 @@ def test_stream_shuffle_scope_applies_and_restores(spark, tmp_path):
     import glob
     import json
 
-    from pyspark.sql import functions as F
-
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    stream_cells, batch_cells = _docs_cells_replay(spark, tmp_path)
+    stream_cells, batch_cells, _ = _docs_cells_replay(spark, tmp_path)
     target = str(tmp_path / "sketch_target")
     ckpt = str(tmp_path / "sketch_ckpt")
     runner.run_sketch_merge_stream(spark, stream_cells, target, ckpt)
@@ -986,7 +886,7 @@ def test_stream_shuffle_scope_applies_and_restores(spark, tmp_path):
     # and the merged sketch still equals the batch sketch
     got = {
         (r["row"], r["bucket"]): r["n"]
-        for r in spark.read.parquet(target).drop("_last_batch").collect()
+        for r in spark.read.parquet(target).collect()
     }
     want = {
         (r["row"], r["bucket"]): r["n"]

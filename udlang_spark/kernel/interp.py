@@ -114,9 +114,10 @@ class Interp:
 
         # ~7 Python frames per kernel-level recursion; CPython 3.11 heap-
         # allocates pure-Python frames, so a high limit is safe here. The
-        # real guard is max_steps below.
-        if sys.getrecursionlimit() < 200_000:
-            sys.setrecursionlimit(200_000)
+        # real guard is max_steps below. The raise lasts for this call
+        # only: the rest of the process keeps its own limit.
+        prev_limit = sys.getrecursionlimit()
+        sys.setrecursionlimit(max(prev_limit, 200_000))
         self._steps = 0
         outs: list = []
         env: dict = dict(_NATIVES)
@@ -127,6 +128,8 @@ class Interp:
             # uncaught throw is fatal for the record, like the compiled
             # raise_error path
             raise InterpError(f"throw: {t.message!r}") from None
+        finally:
+            sys.setrecursionlimit(prev_limit)
         return outs
 
     # -- closure application --------------------------------------------

@@ -12,8 +12,9 @@ stub: this module actually parses bytes. Coverage:
 - audio (`decode_wav`): stdlib `wave` → float32 samples in [-1, 1].
 
 These run inside Arrow-batched mapInPandas workers (operators/multimodal.py),
-so they must import nothing beyond stdlib + numpy. PIL, when present, takes
-priority for formats it knows (see multimodal._real_decoder).
+so they must import nothing beyond stdlib + numpy. They are the whole real
+decode path: no optional decoder takes priority, so the decoded rows do
+not depend on what else is installed.
 """
 
 from __future__ import annotations

@@ -4,12 +4,12 @@ with typed metadata, processed via Arrow-batched mapInPandas.
 Two decode modes:
 - `decode_mode="fake"`: deterministic fake decode derived from the
   payload's md5 — the stable oracle-checkable path.
-- `decode_mode="real"`: an actual decoder. PIL is used when importable;
-  otherwise the stdlib-only parsers in operators/codecs.py handle
-  PNG/PPM/JPEG/GIF/BMP metadata, PPM+PNG pixels, and WAV audio. Formats
-  neither path can parse raise codecs.UnsupportedMedia — the ffmpeg/video
-  plug-in point. Everything Spark-side — schemas, partitioning, UDF
-  signatures, Arrow batch shapes — is identical in both modes.
+- `decode_mode="real"`: an actual decoder, the stdlib-only parsers in
+  operators/codecs.py: PNG/PPM/JPEG/GIF/BMP metadata, PPM+PNG pixels, and
+  WAV audio. Formats they cannot parse raise codecs.UnsupportedMedia —
+  the ffmpeg/video plug-in point. Everything Spark-side — schemas,
+  partitioning, UDF signatures, Arrow batch shapes — is identical in both
+  modes.
 
 Scale notes: binary payloads ride in the same parquet row-groups as their
 metadata; mapInPandas streams Arrow batches (no per-row Python overhead);
@@ -68,27 +68,6 @@ def _fake_decode(payload: bytes) -> tuple[int, int, int, str]:
     return (d[0] % 64 + 1, d[1] % 64 + 1, 3, "fake")
 
 
-def _real_sniff(payload: bytes) -> tuple[int, int, int, str]:
-    """Real metadata decode: PIL when importable and it recognizes the
-    bytes; the stdlib-only parsers in operators/codecs.py otherwise (which
-    also cover WAV, outside PIL's scope)."""
-    try:
-        from PIL import Image  # noqa: optional dependency
-    except ImportError:
-        Image = None
-    if Image is not None:
-        import io
-
-        try:
-            with Image.open(io.BytesIO(payload)) as im:
-                return im.width, im.height, len(im.getbands()), im.format.lower()
-        except Exception:
-            pass  # not a PIL-readable image — fall through to stdlib parsers
-    from udlang_spark.operators import codecs
-
-    return codecs.sniff(payload)
-
-
 def decode_images(
     df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id",
     decode_mode: str = "fake",
@@ -100,9 +79,11 @@ def decode_images(
     def decode(batches: Iterator) -> Iterator:
         import pandas as pd
 
+        from udlang_spark.operators import codecs
+
         for pdf in batches:
             if decode_mode == "real":
-                metas = [_real_sniff(bytes(p)) for p in pdf[payload_col]]
+                metas = [codecs.sniff(bytes(p)) for p in pdf[payload_col]]
             else:
                 metas = [_fake_decode(bytes(p)) for p in pdf[payload_col]]
             yield pd.DataFrame(

@@ -191,7 +191,7 @@ KMV_NUM = float((KMV_K - 1) * 2**KMV_BITS)
 
 def kmv_hash_col(tok):
     """48-bit KMV hash of one token — shared by the batch sketch and the
-    streaming min_k delta-merge twin (queries/streaming.s_kmv_stream)."""
+    streaming min_k merge twin (queries/streaming.s_kmv_stream)."""
     return F.conv(
         F.substring(F.md5(F.concat(F.lit("kmv:"), tok)), 1, 12), 16, 10
     ).cast("long")
@@ -264,7 +264,7 @@ def quantile_probe_report(
     spark: SparkSession, hist: DataFrame, li: DataFrame, with_exact: bool = False
 ) -> DataFrame:
     """Shared probe over a (bucket, n) histogram — used by the batch
-    sketch (queries/llm.t_quantile_sketch) and the streaming delta-merged
+    sketch (queries/llm.t_quantile_sketch) and the streaming merged
     histogram (queries/streaming.s_quantile_stream), so both answer
     quantiles identically; `li` supplies the total. with_exact=True
     additionally computes the exact interpolated percentile and the

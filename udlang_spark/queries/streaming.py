@@ -349,12 +349,12 @@ def s_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def s_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming count-min sketch, DELTA-MERGE form (the generalizable
-    pattern for stateful aggregates too big to re-emit): the stream plan is
-    STATELESS — each micro-batch's (row, bucket) cells are aggregated to a
-    batch-local delta and folded into a persisted sketch table via
-    foreachBatch (runner.run_sketch_merge_stream), the persisted table
-    being the state, exactly like the CDC apply. maxFilesPerTrigger=_REPLAY_MFT
+    """Streaming count-min sketch, MERGE form (the generalizable pattern
+    for stateful aggregates too big to re-emit): the stream plan is
+    STATELESS — each micro-batch's (row, bucket) cells are summed together
+    with the persisted sketch table via foreachBatch
+    (runner.run_sketch_merge_stream), the persisted table being the
+    state, exactly like the CDC apply. maxFilesPerTrigger=_REPLAY_MFT
     over the _REPLAY_FILES-file replay still forces ≥2 micro-batches per run (the
     r6 bench showed per-batch streaming overhead dominates this entry;
     deeper multi-batch accumulation is pinned in tests/test_streaming.py
@@ -370,21 +370,21 @@ def s_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = sketches.cms_cells(toks, "tok")
     target, ckpt = _fresh_sink("cms", sf_dir)
     runner.run_sketch_merge_stream(spark, cells, target, ckpt)
-    sketch = spark.read.parquet(target).drop("_last_batch")
+    sketch = spark.read.parquet(target)
     exact = sketches.cms_exact_witness(load_table(spark, "documents", sf_dir))
     return sketches.cms_probe_report(spark, sketch, exact)
 
 
 def s_quantile_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming histogram-quantile sketch: lineitem prices replay as a
-    stream; each micro-batch's bucket-count delta SUM-merges into the
-    persisted histogram (runner.run_sketch_merge_stream — the same
-    delta-merge as s_cms_merge), and the drained histogram answers
-    p50/p90/p99 exactly as t_quantile_sketch's batch sketch does (shared
-    probe helper), beside the batch-side exact witness. Completes the
-    streaming demonstrations of all three sketch algebras: counts (CMS),
-    registers (HLL), and histograms — every one micro-batching-invariant
-    because the merge is associative."""
+    stream; each micro-batch's buckets SUM-merge into the persisted
+    histogram (runner.run_sketch_merge_stream — the same merge as
+    s_cms_merge), and the drained histogram answers p50/p90/p99 exactly
+    as t_quantile_sketch's batch sketch does (shared probe helper), beside
+    the batch-side exact witness. Completes the streaming demonstrations
+    of all three sketch algebras: counts (CMS), registers (HLL), and
+    histograms — every one micro-batching-invariant because the merge is
+    associative."""
     fields = (("l_orderkey", ast.T_INT), ("l_extendedprice", ast.T_FLOAT))
     src = _replay_stream(
         spark, sf_dir, "udlang_stream_qsk", fields, table="lineitem", mft=True
@@ -394,7 +394,7 @@ def s_quantile_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     runner.run_sketch_merge_stream(
         spark, cells, target, ckpt, cell_cols=("bucket",)
     )
-    hist = spark.read.parquet(target).drop("_last_batch")
+    hist = spark.read.parquet(target)
     li = load_table(spark, "lineitem", sf_dir)
     return sketches.quantile_probe_report(spark, hist, li)
 
@@ -440,8 +440,8 @@ GROUP BY 1, 2
 
 
 def s_hll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming HyperLogLog: register (bucket → max rank) deltas merge
-    into a persisted register table via the same foreachBatch delta-merge
+    """Streaming HyperLogLog: each micro-batch's (bucket, rank) cells
+    merge into a persisted register table via the same foreachBatch merge
     as s_cms_merge, in mode='max' — MAX-merge is the HLL register
     combine, so the drained table equals the batch sketch under any
     micro-batching (maxFilesPerTrigger=_REPLAY_MFT over the _REPLAY_FILES replay still forces ≥2 batches).
@@ -459,7 +459,7 @@ def s_hll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, cells, target, ckpt,
         cell_cols=("bucket",), mode="max", value_col="rank", out_col="r",
     )
-    regs = spark.read.parquet(target).drop("_last_batch")
+    regs = spark.read.parquet(target)
     docs = load_table(spark, "documents", sf_dir)
     exact = docs.select(F.explode(TXT.words("text")).alias("tok")).agg(
         F.countDistinct("tok").alias("distinct_exact")
@@ -647,12 +647,13 @@ ORACLE_HLL_STREAM = _hll_stream_oracle()
 
 
 def s_kmv_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming KMV distinct sketch: mode='min_k' delta-merge — each
-    micro-batch's k smallest distinct token hashes fold into the
-    persisted k-minima table (the global k-minima are each among their
-    batch's k-minima, so the bounded state loses nothing under any
-    micro-batching). Completes the THIRD mergeable sketch algebra through
-    the same runner: SUM (s_cms_merge), MAX (s_hll_stream), MIN-K (this).
+    """Streaming KMV distinct sketch: mode='min_k' merge — the k smallest
+    distinct token hashes of the persisted k-minima table ∪ each
+    micro-batch replace the table (the global k-minima are each among the
+    table's k-minima or the batch's hashes, so the bounded state loses
+    nothing under any micro-batching). Completes the THIRD mergeable
+    sketch algebra through the same runner: SUM (s_cms_merge), MAX
+    (s_hll_stream), MIN-K (this).
     The drained k-set answers the distinct estimate exactly as the batch
     KMV (t_kmv_jaccard) does: (k−1)·2^48 / h_k, exact count below k."""
     src = _replay_stream(spark, sf_dir, "udlang_stream_kmv", _DOC_TEXT, mft=True)
@@ -664,7 +665,7 @@ def s_kmv_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, cells, target, ckpt,
         cell_cols=("h",), mode="min_k", k=sketches.KMV_K,
     )
-    kset = spark.read.parquet(target).drop("_last_batch")
+    kset = spark.read.parquet(target)
     agg = kset.agg(F.count("h").alias("k_eff"), F.max("h").alias("hk"))
     est = sketches.kmv_estimate(F.col("k_eff"), F.col("hk"))
     return agg.select("k_eff", est.alias("est_distinct"))
@@ -883,7 +884,7 @@ ORACLE: dict[str, str] = {
     "s_cdc_apply": ORACLE_CDC_APPLY,
     # the streaming sketches equal the batch sketch exactly (associative
     # integer counts), so the batch CMS oracle applies verbatim to both
-    # the complete-mode and the delta-merge form
+    # the complete-mode and the merge form
     "s_cms_stream": _llm.ORACLE_CMS_FREQ,
     "s_cms_merge": _llm.ORACLE_CMS_FREQ,
     "s_hll_stream": ORACLE_HLL_STREAM,
